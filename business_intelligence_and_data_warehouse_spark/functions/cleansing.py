@@ -24,12 +24,6 @@ def underscores_to_spaces(col: Column) -> Column:
     return F.regexp_replace(col, "_", " ")
 
 
-def empty_to_default(col: Column, default: str) -> Column:
-    """Empty-string -> default (reference uses literal 'unkown',
-    `etl for products with scd2.ktr:870-920`)."""
-    return F.when(F.trim(col) == "", F.lit(default)).otherwise(col)
-
-
 def canonicalize(col: Column, variants: dict[str, str]) -> Column:
     """Literal replacement chain (reference maps 5 'sao paulo' spelling
     variants to one canonical form)."""

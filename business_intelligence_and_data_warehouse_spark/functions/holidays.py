@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
-
 # (month, day, name, first_year) — first_year gates late additions
 _FIXED = (
     (1, 1, "Confraternizacao Universal", None),
@@ -59,12 +57,6 @@ def brazilian_holidays(start_year: int, end_year: int) -> list[tuple[dt.date, st
                 out.append((dt.date(year, month, day), name))
         out.append((easter_date(year) - dt.timedelta(days=2), "Sexta-feira Santa"))
     return sorted(out)
-
-
-def holiday_df(spark: SparkSession, start_year: int, end_year: int) -> DataFrame:
-    """Holiday lookup table as a (broadcastable) DataFrame."""
-    rows = [(d, n) for d, n in brazilian_holidays(start_year, end_year)]
-    return spark.createDataFrame(rows, "holiday_date date, holiday_name string")
 
 
 def holiday_values_sql(start_year: int, end_year: int) -> str:

@@ -65,10 +65,6 @@ def lang_pred_from_hits(hit_cols: dict[str, Column]) -> tuple[Column, Column]:
     return pred, max_hits
 
 
-def token_count_ws(col: Column) -> Column:
-    return F.size(tokens_ws(col))
-
-
 # word-ish / number / single punctuation — a BPE-style pre-tokenizer
 # upper bound on token count
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -94,12 +90,6 @@ def shingles_of_tokens(toks: Column, k: int) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def word_shingles(col: Column, k: int) -> Column:
-    """Array of k-word shingles over raw text (see
-    :func:`shingles_of_tokens` for the staged fast path)."""
-    return shingles_of_tokens(tokens_ws(col), k)
 
 
 def char_ngrams(col: Column, n: int, max_chars: int | None = None) -> Column:

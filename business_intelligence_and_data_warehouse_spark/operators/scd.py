@@ -29,19 +29,12 @@ from __future__ import annotations
 import functools
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 # Open-ended validity horizon (reference seeds effective_to=2099-12-31).
 HIGH_DATE = "2099-12-31"
-
-
-def _all_equal(left: DataFrame, right: DataFrame, cols: Sequence[str]) -> Column:
-    """Null-safe equality across a column list."""
-    return functools.reduce(
-        lambda a, b: a & b, [left[c].eqNullSafe(right[c]) for c in cols]
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 Three paths:
-* brute-force cosine top-k — the exact baseline; probe set × corpus,
-  partial top-k per partition via window rank;
+* brute-force cosine top-k — the exact baseline; the probe panel is
+  held in every task and scored against each corpus row in one pass,
+  per-batch top-k survivors then one window rank;
 * hyperplane-LSH bucketed ANN — the scale path for similarity *joins*:
   random-hyperplane sign bits, banded OR-blocking, verify candidates
   only;
@@ -359,20 +360,11 @@ def brute_force_topk(
     Deterministic ranking: cosine DESC, then corpus id ASC as the
     tiebreaker. Self-matches (same id) are excluded.
 
-    r13: a cap-bounded probe set rides the in-task panel scorer
-    (`_brute_panel_topk`) — one corpus pass, no probe×corpus pair
-    fan-out through the broadcast join + per-pair pandas UDF; larger
-    probe sets keep the join form."""
-    probes_n = _normed(probes, id_col, vec_col)
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        return _brute_panel_topk(
-            _normed(vectors, id_col, vec_col), panel, k
-        )
-    pairs = cosine_pairs(probes, vectors, id_col, vec_col).filter(
-        F.col("qid") != F.col("cid")
-    )
-    return _pairs_topk_window(pairs, k)
+    The probe set is collected once to the driver and held in every
+    task (:func:`_panel_topk`): one corpus pass scores each row against
+    every probe, with no probe×corpus pair fan-out through a join."""
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    return _panel_topk(_normed(vectors, id_col, vec_col), panel, k)
 
 
 def matryoshka_topk(
@@ -391,7 +383,7 @@ def matryoshka_topk(
     and memory bandwidth. Cosine over the truncated prefix
     renormalizes implicitly (the norm is the prefix norm), so this is
     `brute_force_topk` on sliced arrays — same snapped determinism,
-    same broadcast-probe no-shuffle plan, d/dim of the arithmetic.
+    same in-task probe-panel plan, d/dim of the arithmetic.
 
     At 100 TB this is a first-pass retriever: prefix top-k' (k' > k)
     shortlists candidates, the full-dim rerank touches only k' rows
@@ -540,12 +532,6 @@ def _corpus_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> tuple:
     return (row["n"], digest)
 
 
-# bound on the driver-side codebook copy for the vectorized encode
-# path (the production codebook is ~256 entries; 4096 leaves headroom
-# for test geometries while keeping the copy a few MB at any dim)
-_ENCODE_CB_CAP = 4096
-
-
 def _pq_encode_batched(
     vectors: DataFrame,
     cb_rows,
@@ -555,16 +541,17 @@ def _pq_encode_batched(
     vec_col: str,
 ) -> DataFrame:
     """(vid, j, code) corpus encode as ONE ``mapInArrow`` pass: each
-    task holds the (bounded) codebook as numpy arrays and computes all
+    task holds the collected codebook as numpy arrays and computes all
     ``num_subspaces`` snapped-L2 argmins per vector in vectorized
-    chunks — the same ``FLOOR((x-y)^2 * 1e6)`` int64 sums and
-    smaller-code tie-break as the broadcast-join form, with N rows
-    crossing the Python boundary instead of N·m·K.
+    chunks — ``FLOOR((x-y)^2 * 1e6)`` int64 sums, tie -> smaller code,
+    with N rows crossing the Python boundary instead of N·m·K joined
+    (subspace, codebook) rows.  An empty codebook encodes nothing.
 
-    Parity notes: float32 -> float64 widening is exact on both paths
-    (Spark's Row collect widens FloatType the same way numpy's astype
-    does); codebook rows are sorted by code ascending so numpy's
-    first-minimum argmin IS the ``min(struct(d, code))`` tie-break."""
+    Parity notes: float32 -> float64 widening is exact (Spark's Row
+    collect widens FloatType the same way numpy's astype does);
+    codebook rows are sorted by code ascending so numpy's
+    first-minimum argmin IS the oracle's ``min(struct(d, code))``
+    tie-break."""
     import numpy as _np
     import pyarrow as _pa
 
@@ -578,6 +565,8 @@ def _pq_encode_batched(
     )
 
     def encode(batches):
+        if not len(code_ids):
+            return
         cb_sub = [
             _np.ascontiguousarray(cbm[:, j * subdim:(j + 1) * subdim])
             for j in range(m)
@@ -641,8 +630,10 @@ def _pq_codes(
     lookup (qid, j, code, dd as scaled BIGINT).
 
     ``codebook_stride`` picks the codebook as ``vid % stride == 0``.
-    The encode join is corpus-subspace-rows × codebook, so the
-    codebook size MUST be bounded (callers default to ~256 entries by
+    The codebook is collected once and held in every encode task
+    (:func:`_pq_encode_batched`), and the encode scores every corpus
+    subspace against every entry, so the codebook size MUST be
+    bounded (callers default to ~256 entries by
     sizing stride = N/256): a stride fixed as the corpus grows makes
     the codebook N/stride entries and the encode pass O(N²·m/stride)
     — measured as a 4 GiB-heap OOM at 60k vectors (x30 ramp data) in
@@ -676,49 +667,17 @@ def _pq_codes(
             )
         ),
     )
-    # encode: nearest code per (vector, subspace), tie -> smaller code.
-    # r12: when the codebook is bounded (the production ~256-entry
-    # sizing; take() caps the driver copy), the whole per-vector argmin
-    # runs as ONE vectorized numpy pass per Arrow batch — N corpus rows
-    # cross the Python boundary instead of the N·m·K joined rows the
-    # broadcast-join + min(struct) form shipped through l2_dec_batch
-    # (guide §4.2: batch work into native code; §2.3: don't materialize
-    # a fan-out you immediately aggregate away).  Identical snapped
-    # arithmetic, identical tie-break (codes sorted ascending, argmin
-    # returns the first minimum) — hash-pinned by the PQ oracles.  An
-    # over-cap codebook (the legacy fixed-stride ramp form, N/stride
-    # entries) falls back to the join path rather than collecting an
-    # unbounded table.
-    cb_rows = cb_src.take(_ENCODE_CB_CAP + 1)
-    # len == 0 (empty corpus, or no id % stride == 0 rows) must take the
-    # join path: the batched encoder builds a (K, dim) matrix and a
-    # zero-row one is 1-D, so the subspace slice would raise in-task —
-    # the join form returns the same empty (vid, j, code) table instead
-    if 0 < len(cb_rows) <= _ENCODE_CB_CAP:
-        codes = _pq_encode_batched(
-            vectors, cb_rows, num_subspaces, subdim, id_col, vec_col
-        )
-    else:
-        sub = _subspace_rows(vectors, num_subspaces, subdim, id_col, vec_col)
-        codes = (
-            sub.join(F.broadcast(cb), "j")
-            .select(
-                "vid",
-                "j",
-                F.struct(
-                    l2_dec_batch(F.col("sub"), F.col("csub")).alias("d"),
-                    F.col("code").alias("code"),
-                ).alias("dc"),
-            )
-            .groupBy("vid", "j")
-            .agg(F.min("dc").alias("best"))
-            .select("vid", "j", F.col("best.code").alias("code"))
-        )
+    # encode: nearest code per (vector, subspace), tie -> smaller code,
+    # as ONE vectorized numpy pass per Arrow batch — N corpus rows cross
+    # the Python boundary instead of N·m·K (subspace, codebook) pairs
+    codes = _pq_encode_batched(
+        vectors, cb_src.collect(), num_subspaces, subdim, id_col, vec_col
+    )
     if codes_tag is not None:
         # serve the corpus encode from the per-process parquet memo:
         # first caller in a session materializes it, the rest of the
         # PQ family reads N·m narrow rows instead of re-running the
-        # broadcast-join + argmin encode pass
+        # encode pass
         spark = vectors.sparkSession
         key = (
             spark.sparkContext.applicationId,
@@ -789,9 +748,8 @@ def pq_topk(
     Scale design: this is the MEMORY-BANDWIDTH answer to ANN — after
     encode, a corpus vector is m codes (8 bytes at m=8), so the scan
     side of a query reads ~dim*4/m/1 fewer bytes than brute force.
-    The encode pass is the only corpus-wide work: subspace rows fan
-    out map-side (×m), the codebook join is a broadcast, and the
-    argmin is a partial-aggregated groupBy(vid, j) of narrow rows.
+    The encode pass is the only corpus-wide work: one map-side Arrow
+    pass against the collected codebook (:func:`_pq_encode_batched`).
     ADC joins the (P·m·K)-row distance table — tiny for bounded probe
     sets — as a broadcast against the code table, then one
     groupBy(qid, vid) partial-aggregated sum. No corpus self-join
@@ -848,7 +806,7 @@ def ivf_pq_topk(
     assignment, nprobe nearest cells per probe); scoring is exactly
     :func:`pq_topk`'s ADC (snapped squared-L2 over stride codebooks)
     restricted to the candidates — both halves reuse the factored
-    machinery (`_nearest_centroids`, `_pq_codes`), so the composition
+    machinery (`_ivf_candidates`, `_pq_codes`), so the composition
     cannot drift from its parts. The metric mix (cosine cells, L2
     scoring) is an approximation on unnormalized vectors — rerank the
     top-k' with :func:`cosine_for_pairs` when exact cosine order
@@ -857,10 +815,9 @@ def ivf_pq_topk(
     Output contract matches :func:`pq_topk`; a probe returns at most
     min(k, candidates-in-its-cells) rows.
     """
-    cand, _ = _ivf_candidates(
+    cand = _ivf_candidates(
         vectors, probes, centroid_stride, nprobe, id_col, vec_col
-    )
-    cand = cand.select("qid", F.col("cid").alias("vid"))
+    ).select("qid", F.col("cid").alias("vid"))
     # cells and codebook are DIFFERENT knobs: centroid_stride shapes
     # the coarse cells; codebook_size (when given) pins a bounded
     # ~256-entry codebook per subspace so the encode pass stays linear
@@ -917,62 +874,6 @@ def _as_prefix(normed: DataFrame, prefix: str) -> DataFrame:
     )
 
 
-def _nearest_centroids(
-    vectors_n: DataFrame, centroids_n: DataFrame, n: int
-) -> DataFrame:
-    """(vid, cvid) of each vector's n nearest centroids by cosine.
-
-    Both inputs are pre-normed (vid, vec, norm) tables — the caller
-    persists the corpus-side one so this assign pass and the later
-    verify pass share a single norm computation.  The centroid table
-    is tiny (cells << corpus) and broadcast, so the assignment is
-    map-side: each corpus row scores all centroids with array-native
-    dots and keeps its top n via a per-vid window — the same plan
-    shape IVF coarse quantization has on a 1000-executor cluster.
-    Ties break on centroid id for cross-engine determinism.
-    """
-    c = _as_prefix(vectors_n, "c")
-    p = _as_prefix(centroids_n, "q")
-    scored = c.join(F.broadcast(p)).select(
-        F.col("cid").alias("vid"),
-        F.col("qid").alias("cvid"),
-        _cosine(
-            dot_dec_batch(F.col("qvec"), F.col("cvec")),
-            F.col("qnorm"),
-            F.col("cnorm"),
-        ).alias("cosine"),
-    )
-    if n == 1:
-        # the corpus-sized case (training assign, index build, append):
-        # a partial-aggregated argmax shuffles ONE row per (mapper,
-        # vid) instead of sorting the full N·cells scored table in a
-        # window (guide §2.3 — aggregate before the shuffle).  Ordering
-        # is the window's exactly: max(struct(cosine, -cvid)) picks
-        # highest cosine, tie -> smaller cvid (bigger negation); a
-        # NULL cosine field sorts below every non-null struct, the
-        # DESC-NULLS-LAST the window form had.  -0.0 cannot occur (a
-        # zero snapped dot divides to +0.0), so the double ordering is
-        # unambiguous.
-        return (
-            scored.groupBy("vid")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("cosine").alias("cos"),
-                        (-F.col("cvid")).alias("neg"),
-                    )
-                ).alias("best")
-            )
-            .select("vid", (-F.col("best.neg")).alias("cvid"))
-        )
-    w = W.partitionBy("vid").orderBy(F.desc("cosine"), F.col("cvid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n)
-        .select("vid", "cvid")
-    )
-
-
 def _cosine_for_pairs_normed(pairs: DataFrame, normed: DataFrame) -> DataFrame:
     """:func:`cosine_for_pairs` over a pre-normed (and typically
     persisted) vector table — both join sides are renames of the same
@@ -995,28 +896,35 @@ def _cosine_for_pairs_normed(pairs: DataFrame, normed: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Collected-panel Arrow scorers (r13).  A SERVING probe batch is a small
-# panel by design (the declared serving/append/ingest queries probe a
-# FIXED 50-id panel at every scale), and a trained quantizer's centroid
-# set is √N-bounded — so both fit on the driver and inside every task.
-# Holding them in-task turns the IVF verify from a join pipeline
-# (candidates ⋈ probes ⋈ corpus → per-pair pandas UDF, which ships BOTH
-# vectors across the Python boundary per candidate pair — guide §4.2's
-# N·m·K lesson) into ONE corpus-side pass: each scanned row crosses the
-# Arrow boundary once, is scored against the in-task panel with the
-# identical snapped-numpy arithmetic `dot_dec_batch` uses, and only
-# per-batch top-k survivors flow into the final exact rank.  Over-cap
-# panels/centroid sets keep the join/window form (the fallbacks below)
-# — the caps are driver/task memory bounds, not correctness bounds.
-_PANEL_CAP = 1024
-_SCORER_CENTROID_CAP = 4096
+# Collected-panel Arrow scorers.  A probe batch is a small panel by
+# design (every registered query probes a FIXED 50-id panel or the 1%
+# ``vec_id % 100 == 0`` stride), and a centroid set is bounded by its
+# quantizer (√N trained cells; N/stride for the stride quantizer, whose
+# growth is its documented scale limit) — so both are collected ONCE to
+# the driver and held inside every task.  Each ANN operator is then ONE
+# corpus-side mapInArrow pass: each scanned row crosses the Arrow
+# boundary once, is assigned and scored against the in-task centroids
+# and panel with the identical snapped-numpy arithmetic
+# `dot_dec_batch` uses, and only per-batch top-k survivors flow into
+# the final exact rank.  A relational form of the same operators
+# (broadcast joins + windows) would broadcast the very same panel and
+# centroid rows, so it bounds nothing this path does not; it lives in
+# tests/ann_reference.py as the parity reference.
+# ---------------------------------------------------------------------------
+
+# float64 terms (probes × rows × dim) one numpy scoring step holds:
+# ~8 MB of temporaries whatever the panel size
+_TILE_TERMS = 1 << 20
 
 
-def _rows_matrix(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(ids, vec matrix float64, norms) from collected normed rows
-    (vid, vec, norm), sorted by vid ascending.  float32→float64 widen
-    is exact, so the matrix replays the JVM values bit for bit."""
-    rows = sorted(rows, key=lambda r: r["vid"])
+def _collect_normed(normed: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one driver copy of a probe panel or centroid set: a normed
+    (vid, vec, norm) table collected in one job, as (ids, float64 vec
+    matrix, norms) sorted by vid ascending.  float32→float64 widen is
+    exact, so the matrix replays the JVM values bit for bit."""
+    rows = sorted(
+        normed.select("vid", "vec", "norm").collect(), key=lambda r: r["vid"]
+    )
     ids = np.array([int(r["vid"]) for r in rows], dtype=np.int64)
     vecs = np.array([list(r["vec"]) for r in rows], dtype=np.float64)
     norms = np.array([float(r["norm"]) for r in rows], dtype=np.float64)
@@ -1024,17 +932,20 @@ def _rows_matrix(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def _snapped_cos_block(
-    qvec: np.ndarray, qnorm: float, cmat: np.ndarray, cnorms: np.ndarray
+    qmat: np.ndarray, qnorms: np.ndarray, cmat: np.ndarray, cnorms: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(cosine, isnull) of one probe against a vector block — the same
-    value chain as ``_cosine(dot_dec_batch(...), qnorm, cnorm)``:
-    float64 IEEE multiply, floor to scaled int64, exact integer row
-    sum, double divide, NULL where the norm product is exactly 0."""
+    """(cosine, isnull), shape (probes, rows), of probe rows against a
+    vector block — the same value chain as
+    ``_cosine(dot_dec_batch(...), qnorm, cnorm)``: float64 IEEE
+    multiply, floor to scaled int64, exact integer row sum, double
+    divide, NULL where the norm product is exactly 0."""
     d = (
-        np.floor(cmat * qvec * DOT_SCALE).astype(np.int64).sum(axis=1)
+        np.floor(cmat[None, :, :] * qmat[:, None, :] * DOT_SCALE)
+        .astype(np.int64)
+        .sum(axis=2)
         / DOT_SCALE
     )
-    prod = qnorm * cnorms
+    prod = qnorms[:, None] * cnorms[None, :]
     isnull = prod == 0.0
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = d / prod
@@ -1050,48 +961,35 @@ def _numpy_probe_cells(
     cnorms: np.ndarray,
     nprobe: int,
 ) -> dict[int, list[int]]:
-    """{probe id -> its nprobe nearest cell ids} — the numpy replica of
-    ``_nearest_centroids(probes_n, cents_n, nprobe)``: snapped cosine,
-    rank by (cosine DESC NULLS LAST, cvid ASC), first nprobe rows.
-    ``cvids`` must be ascending (``_rows_matrix`` guarantees it), so a
-    stable sort on descending filled cosine IS the window's order.
-    Parity is pinned by tests/test_selection.py."""
+    """{probe id -> its nprobe nearest cell ids}: snapped cosine, rank
+    by (cosine DESC NULLS LAST, cvid ASC), first nprobe rows.
+    ``cvids`` must be ascending (``_collect_normed`` guarantees it), so a
+    stable sort on descending filled cosine IS that order.  Parity with
+    the window form is pinned by tests/test_pipeline.py."""
     out: dict[int, list[int]] = {}
     for i in range(len(qids)):
-        cos, isnull = _snapped_cos_block(qmat[i], qnorms[i], cmat, cnorms)
-        filled = np.where(isnull, -np.inf, cos)
+        cos, isnull = _snapped_cos_block(
+            qmat[i:i + 1], qnorms[i:i + 1], cmat, cnorms
+        )
+        filled = np.where(isnull[0], -np.inf, cos[0])
         order = np.argsort(-filled, kind="stable")
         out[int(qids[i])] = [int(c) for c in cvids[order[:nprobe]]]
     return out
 
 
-def _emit_pairs_topk(qids, cids, cos, isnull, k: int):
-    """One Arrow record batch of the per-qid top-k of the given pair
-    arrays under the exact final order (cosine DESC NULLS LAST, cid
-    ASC).  Emitting only per-batch survivors is lossless: the global
-    top-k of a union is the top-k of per-chunk top-k's under a total
-    order, and the final window re-ranks exactly."""
-    import pyarrow as _pa
-
-    filled = np.where(isnull, -np.inf, cos)
-    order = np.lexsort((cids, -filled, qids))
-    qs = qids[order]
-    pos = np.arange(len(order))
-    starts = np.maximum.accumulate(
-        np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0)
-    )
-    keep = order[pos - starts < k]
-    return _pa.record_batch(
-        {
-            "qid": _pa.array(qids[keep], type=_pa.int64()),
-            "cid": _pa.array(cids[keep], type=_pa.int64()),
-            "cosine": _pa.array(
-                np.where(isnull, 0.0, cos)[keep],
-                type=_pa.float64(),
-                mask=isnull[keep],
-            ),
-        }
-    )
+def _cell_probes(panel, cents, nprobe: int) -> dict[int, np.ndarray]:
+    """{cell id -> indices of the panel probes whose ``nprobe`` nearest
+    centroids include it} — the probe→cell map every IVF pass shares.
+    Empty when either the panel or the centroid set is."""
+    qids = panel[0]
+    if not len(qids) or not len(cents[0]):
+        return {}
+    probe_cells = _numpy_probe_cells(*panel, *cents, nprobe)
+    out: dict[int, list[int]] = {}
+    for i, qid in enumerate(qids):
+        for cv in probe_cells[int(qid)]:
+            out.setdefault(cv, []).append(i)
+    return {c: np.array(p, dtype=np.int64) for c, p in out.items()}
 
 
 def _assign_block(
@@ -1101,43 +999,81 @@ def _assign_block(
     cmat: np.ndarray,
     cnorms: np.ndarray,
 ) -> np.ndarray:
-    """Nearest-centroid id per row of a corpus block — the numpy
-    replica of ``_nearest_centroids(..., 1)``: iterate centroids in
-    ASCENDING cvid with a strict > update, so ties keep the earlier
-    (smaller) cvid; NULL cosines (norm product 0) fill -inf so an
-    all-NULL row keeps the initial smallest cvid — exactly the
-    ``max(struct(cosine, -cvid))`` ordering of the JVM assign.  Parity
-    is pinned end-to-end in tests/test_pipeline.py."""
+    """Nearest-centroid id per row of a corpus block: iterate
+    centroids in ASCENDING cvid with a strict > update, so ties keep
+    the earlier (smaller) cvid; NULL cosines (norm product 0) fill -inf
+    so an all-NULL row keeps the initial smallest cvid — exactly the
+    oracle's ``row_number() OVER (ORDER BY cosine DESC, cvid) = 1``.
+    Parity is pinned end-to-end in tests/test_pipeline.py."""
     best = np.full(len(cm), -np.inf)
     bestc = np.full(len(cm), cvids[0], dtype=np.int64)
     for j in range(len(cvids)):
-        cos, isnull = _snapped_cos_block(cmat[j], cnorms[j], cm, cn)
-        filled = np.where(isnull, -np.inf, cos)
+        cos, isnull = _snapped_cos_block(
+            cmat[j:j + 1], cnorms[j:j + 1], cm, cn
+        )
+        filled = np.where(isnull[0], -np.inf, cos[0])
         upd = filled > best
         best = np.where(upd, filled, best)
         bestc[upd] = cvids[j]
     return bestc
 
 
-def _assign_cells_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
+def _batch_normed(batch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(vid, float64 (rows, dim) vec matrix, norm) arrays of one Arrow
+    batch of a normed table — flatten() honors list offsets (embedding
+    cells are non-null fixed-dim by contract), so the reshape is safe;
+    the widen is exact."""
+    vec = (
+        batch.column("vec")
+        .flatten()
+        .to_numpy(zero_copy_only=False)
+        .reshape(batch.num_rows, -1)
+        .astype(np.float64)
+    )
+    return (
+        batch.column("vid").to_numpy(zero_copy_only=False),
+        vec,
+        batch.column("norm").to_numpy(zero_copy_only=False),
+    )
+
+
+def _probed_groups(batch, cm, cn, cell_probes, cents):
+    """[(row indices, probe indices)] of one Arrow batch: its rows
+    grouped by cell — the batch's ``cvid`` column, or an in-task
+    assignment against ``cents`` when given — each group paired with
+    the probes that probe its cell."""
+    if not cell_probes:
+        return []
+    cv = (
+        _assign_block(cm, cn, *cents)
+        if cents is not None
+        else batch.column("cvid").to_numpy(zero_copy_only=False)
+    )
+    groups = []
+    for cell in np.unique(cv):
+        pidx = cell_probes.get(int(cell))
+        if pidx is not None:
+            groups.append((np.nonzero(cv == cell)[0], pidx))
+    return groups
+
+
+def _assign_cells_arrow(corpus_n: DataFrame, cents) -> DataFrame:
     """(vid, vec, norm, cvid) — the corpus with its nearest-centroid
-    assignment attached IN-TASK (one MapInArrow pass, no broadcast
-    join, no assignment groupBy, no corpus re-join): the row batch
-    passes through untouched with one appended int64 column."""
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
+    assignment attached IN-TASK (one MapInArrow pass, no join, no
+    assignment groupBy): the row batch passes through untouched with
+    one appended int64 column.  No centroids, no rows."""
 
     def assign(batches):
         import pyarrow as _pa
 
+        if not len(cents[0]):
+            return
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
+            _, cm, cn = _batch_normed(batch)
             yield batch.append_column(
-                "cvid", _pa.array(bestc, type=_pa.int64())
+                "cvid", _pa.array(_assign_block(cm, cn, *cents), type=_pa.int64())
             )
 
     src = corpus_n.select("vid", "vec", "norm")
@@ -1148,54 +1084,35 @@ def _assign_cells_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
 
 
 def _panel_candidates_arrow(
-    corpus_n: DataFrame,
-    cent_rows,
-    panel_rows,
-    nprobe: int,
+    corpus_n: DataFrame, panel, cents, nprobe: int
 ) -> DataFrame:
     """(qid, cid) IVF candidate pairs in ONE corpus pass: in-task
-    assignment + the in-task probe→cell map.  Replaces the assignment
-    groupBy, the probe-cell window, and the candidates join+distinct
-    (one cell per vid makes the pairs structurally unique; the
+    assignment + the in-task probe→cell map, self-matches excluded.
+    One cell per vid makes the pairs structurally unique (the
     disjointness contract is pinned in tests/test_pipeline.py)."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
-    probe_cells = _numpy_probe_cells(
-        qids, qmat, qnorms, cvids, cmat, cnorms, nprobe
-    )
-    cell_qids: dict[int, np.ndarray] = {}
-    for qid, cells in probe_cells.items():
-        for cv in cells:
-            cell_qids.setdefault(cv, []).append(qid)
-    cell_qids = {c: np.array(q, dtype=np.int64) for c, q in cell_qids.items()}
+    qids = panel[0]
+    cell_probes = _cell_probes(panel, cents, nprobe)
 
     def gen(batches):
         import pyarrow as _pa
 
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
+            cid, cm, cn = _batch_normed(batch)
             oq, oc = [], []
-            for cell in np.unique(bestc):
-                qs = cell_qids.get(int(cell))
-                if qs is None:
-                    continue
-                rows = cid[bestc == cell]
-                pairs_q = np.repeat(qs, len(rows))
-                pairs_c = np.tile(rows, len(qs))
+            for rows, pidx in _probed_groups(batch, cm, cn, cell_probes, cents):
+                qs, cs = np.unique(qids[pidx]), cid[rows]
+                pairs_q = np.repeat(qs, len(cs))
+                pairs_c = np.tile(cs, len(qs))
                 m = pairs_q != pairs_c
                 oq.append(pairs_q[m])
                 oc.append(pairs_c[m])
-            if oq and sum(len(a) for a in oq):
+            if oq:
                 yield _pa.record_batch(
                     {
-                        "qid": _pa.array(np.concatenate(oq)),
-                        "cid": _pa.array(np.concatenate(oc)),
+                        "qid": _pa.array(np.concatenate(oq), type=_pa.int64()),
+                        "cid": _pa.array(np.concatenate(oc), type=_pa.int64()),
                     }
                 )
 
@@ -1204,40 +1121,92 @@ def _panel_candidates_arrow(
     )
 
 
-def _brute_panel_topk(corpus_n: DataFrame, panel_rows, k: int) -> DataFrame:
-    """Exact panel top-k in ONE corpus pass: every scanned row scores
-    ALL in-task panel probes (self-matches excluded), per-batch top-k
-    survivors flow to the final exact rank — the `brute_force_topk`
-    semantics without the probe×corpus pair fan-out through the
-    broadcast join + per-pair pandas UDF."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
+def _tile_topk(panel, pidx, cid, cm, cn, k: int):
+    """Per-probe top-k survivors (qid, cid, cosine, isnull arrays) of
+    the probes ``pidx`` against one row block, self-matches excluded,
+    under the exact final order (cosine DESC NULLS LAST, cid ASC).
+
+    Probes are scored in tiles of at most ``_TILE_TERMS`` float64
+    terms (one probe per tile once a single probe's block exceeds it),
+    so task memory stays flat however large the panel.  Keeping only
+    per-tile survivors is lossless: under a total order the global
+    top-k of a union is the top-k of its parts' top-k's, and the final
+    window re-ranks exactly."""
+    qids, qmat, qnorms = panel
+    pstep = max(1, _TILE_TERMS // max(1, cm.size))
+    out = []
+    for lo in range(0, len(pidx), pstep):
+        p = pidx[lo:lo + pstep]
+        cos, isnull = _snapped_cos_block(qmat[p], qnorms[p], cm, cn)
+        q = np.repeat(qids[p], len(cid))
+        c = np.tile(cid, len(p))
+        m = q != c
+        q, c = q[m], c[m]
+        cos, isnull = cos.ravel()[m], isnull.ravel()[m]
+        filled = np.where(isnull, -np.inf, cos)
+        order = np.lexsort((c, -filled, q))
+        qs = q[order]
+        pos = np.arange(len(order))
+        starts = np.maximum.accumulate(
+            np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0)
+        )
+        keep = order[pos - starts < k]
+        out.append((q[keep], c[keep], cos[keep], isnull[keep]))
+    return out
+
+
+def _panel_topk(
+    scan: DataFrame, panel, k: int, cell_probes=None, cents=None
+) -> DataFrame:
+    """Exact per-probe top-k of a collected probe panel in ONE
+    MapInArrow pass over ``scan`` (vid, vec, norm[, cvid]) — the one
+    in-task scorer brute-force and IVF top-k share.  They differ only
+    in where a scanned row's cell comes from:
+
+    * ``cell_probes`` None — no cells: every probe scores every row;
+    * ``cents`` given — the row's nearest centroid, assigned in-task
+      (ties → smaller cvid, all-NULL → smallest cvid);
+    * otherwise — the scan's ``cvid`` column (a prebuilt index).
+
+    With cells, a row is scored only by the probes that probe its
+    cell (``cell_probes``, from :func:`_cell_probes`).  Output
+    (query_id, neighbor_id, rank, cosine), self-matches excluded,
+    ranked (cosine DESC, neighbor_id ASC)."""
+    every = np.arange(len(panel[0]))
+    cols = ["vid", "vec", "norm"]
+    if cell_probes is not None and cents is None:
+        cols.append("cvid")
 
     def score(batches):
+        import pyarrow as _pa
+
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            oq, oc, ocos, onull = [], [], [], []
-            for i in range(len(qids)):
-                cos, isnull = _snapped_cos_block(qmat[i], qnorms[i], cm, cn)
-                m = cid != qids[i]
-                oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
-                oc.append(cid[m])
-                ocos.append(cos[m])
-                onull.append(isnull[m])
-            if oq and sum(len(a) for a in oq):
-                yield _emit_pairs_topk(
-                    np.concatenate(oq),
-                    np.concatenate(oc),
-                    np.concatenate(ocos),
-                    np.concatenate(onull),
-                    k,
+            cid, cm, cn = _batch_normed(batch)
+            groups = (
+                [(slice(None), every)]
+                if cell_probes is None
+                else _probed_groups(batch, cm, cn, cell_probes, cents)
+            )
+            kept = []
+            for rows, pidx in groups:
+                kept += _tile_topk(panel, pidx, cid[rows], cm[rows], cn[rows], k)
+            if kept:
+                q, c, cos, isnull = (np.concatenate(a) for a in zip(*kept))
+                yield _pa.record_batch(
+                    {
+                        "qid": _pa.array(q, type=_pa.int64()),
+                        "cid": _pa.array(c, type=_pa.int64()),
+                        "cosine": _pa.array(
+                            np.where(isnull, 0.0, cos),
+                            type=_pa.float64(),
+                            mask=isnull,
+                        ),
+                    }
                 )
 
-    pairs = corpus_n.select("vid", "vec", "norm").mapInArrow(
+    pairs = scan.select(*cols).mapInArrow(
         score, "qid long, cid long, cosine double"
     )
     return _pairs_topk_window(pairs, k)
@@ -1259,148 +1228,6 @@ def _pairs_topk_window(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _batch_vec_matrix(batch, name: str, n_rows: int) -> np.ndarray:
-    """float64 (rows, dim) matrix of a list<float> column — flatten()
-    honors list offsets (embedding cells are non-null fixed-dim by
-    contract), so the reshape is safe; the widen is exact."""
-    return (
-        batch.column(name)
-        .flatten()
-        .to_numpy(zero_copy_only=False)
-        .reshape(n_rows, -1)
-        .astype(np.float64)
-    )
-
-
-def _panel_cells_topk(
-    cells: DataFrame,
-    panel_rows,
-    cent_rows,
-    k: int,
-    nprobe: int,
-) -> DataFrame:
-    """Serving-probe top-k over a prebuilt cell table with the panel
-    held in-task: probe→cell choice runs in driver numpy (the
-    `_nearest_centroids` replica), the cells scan STATICALLY prunes to
-    the probed cell partitions (PartitionFilters — stronger than the
-    r12 DPP subquery: no subquery job at all), and one MapInArrow pass
-    scores each cell row against exactly the probes that probed its
-    cell.  Zero joins; the only exchange is the final tiny rank."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
-    probe_cells = _numpy_probe_cells(
-        qids, qmat, qnorms, cvids, cmat, cnorms, nprobe
-    )
-    cell_probes: dict[int, list[int]] = {}
-    for i, qid in enumerate(qids):
-        for cv in probe_cells[int(qid)]:
-            cell_probes.setdefault(cv, []).append(i)
-    scan = cells.filter(
-        F.col("cvid").isin(sorted(cell_probes))
-    ).select("cvid", "vid", "vec", "norm")
-
-    def score(batches):
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            cv = batch.column("cvid").to_numpy(zero_copy_only=False)
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            oq, oc, ocos, onull = [], [], [], []
-            for cell in np.unique(cv):
-                pidx = cell_probes.get(int(cell))
-                if not pidx:
-                    continue
-                rows = np.nonzero(cv == cell)[0]
-                csub, cnsub, cidsub = cm[rows], cn[rows], cid[rows]
-                for i in pidx:
-                    cos, isnull = _snapped_cos_block(
-                        qmat[i], qnorms[i], csub, cnsub
-                    )
-                    m = cidsub != qids[i]
-                    oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
-                    oc.append(cidsub[m])
-                    ocos.append(cos[m])
-                    onull.append(isnull[m])
-            if oq and sum(len(a) for a in oq):
-                yield _emit_pairs_topk(
-                    np.concatenate(oq),
-                    np.concatenate(oc),
-                    np.concatenate(ocos),
-                    np.concatenate(onull),
-                    k,
-                )
-
-    pairs = scan.mapInArrow(score, "qid long, cid long, cosine double")
-    return _pairs_topk_window(pairs, k)
-
-
-def _corpus_panel_topk(
-    corpus_n: DataFrame,
-    cent_rows,
-    panel_rows,
-    k: int,
-    nprobe: int,
-) -> DataFrame:
-    """One-pass IVF top-k with centroids AND panel held in-task: each
-    scanned corpus row is assigned to its nearest centroid (the numpy
-    replica of `_nearest_centroids(..., 1)`: snapped cosine argmax,
-    ties → smaller cvid, all-NULL → smallest cvid) and, when that cell
-    is probed, scored against the cell's probes — so the whole verify
-    is ONE MapInArrow scan of the pinned normed corpus with no
-    assignment groupBy, no candidate join+distinct, and no per-pair
-    vector shuffle (the old path's three exchanges)."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
-    probe_cells = _numpy_probe_cells(
-        qids, qmat, qnorms, cvids, cmat, cnorms, nprobe
-    )
-    cell_probes: dict[int, list[int]] = {}
-    for i, qid in enumerate(qids):
-        for cv in probe_cells[int(qid)]:
-            cell_probes.setdefault(cv, []).append(i)
-    scan = corpus_n.select("vid", "vec", "norm")
-
-    def score(batches):
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
-            oq, oc, ocos, onull = [], [], [], []
-            for cell in np.unique(bestc):
-                pidx = cell_probes.get(int(cell))
-                if not pidx:
-                    continue
-                rows = np.nonzero(bestc == cell)[0]
-                csub, cnsub, cidsub = cm[rows], cn[rows], cid[rows]
-                for i in pidx:
-                    cos, isnull = _snapped_cos_block(
-                        qmat[i], qnorms[i], csub, cnsub
-                    )
-                    m = cidsub != qids[i]
-                    oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
-                    oc.append(cidsub[m])
-                    ocos.append(cos[m])
-                    onull.append(isnull[m])
-            if oq and sum(len(a) for a in oq):
-                yield _emit_pairs_topk(
-                    np.concatenate(oq),
-                    np.concatenate(oc),
-                    np.concatenate(ocos),
-                    np.concatenate(onull),
-                    k,
-                )
-
-    pairs = scan.mapInArrow(score, "qid long, cid long, cosine double")
-    return _pairs_topk_window(pairs, k)
-
-
 def _ivf_candidates(
     vectors: DataFrame,
     probes: DataFrame,
@@ -1408,45 +1235,20 @@ def _ivf_candidates(
     nprobe: int,
     id_col: str,
     vec_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(candidates, corpus_n) — the IVF candidate-generation core
-    shared by :func:`ivf_topk` (exact-cosine verify) and
-    :func:`ivf_pq_topk` (ADC scoring): stride centroids, cell
-    assignment, nprobe probe cells, deduplicated (qid, cid) pairs
-    with self-matches excluded. Factored so the Spark side cannot
-    drift between the two, mirroring the shared `_O_IVF_CAND` oracle
-    fragment. The pinned normed corpus is returned for callers whose
-    scoring pass needs it (the IVF verify); the pin is ledger-managed
-    like every other.
-
-    r13: panel-sized probe batches against cap-bounded centroid sets
-    generate candidates in ONE in-task pass (_panel_candidates_arrow)
-    — no assignment groupBy, no probe-cell window, no join+distinct;
-    over-cap inputs keep the join form."""
+) -> DataFrame:
+    """(qid, cid) — the IVF candidate-generation core :func:`ivf_pq_topk`
+    scores with ADC: stride centroids, cell assignment, nprobe probe
+    cells, unique (qid, cid) pairs with self-matches excluded — the
+    same cells :func:`ivf_topk` scans, mirroring the shared
+    `_O_IVF_CAND` oracle fragment.  Panel and centroids are collected
+    once and the candidates come out of ONE in-task corpus pass
+    (:func:`_panel_candidates_arrow`)."""
     from .caching import pin
 
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
-    probes_n = _normed(probes, id_col, vec_col)
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return (
-                _panel_candidates_arrow(corpus_n, cent_rows, panel, nprobe),
-                corpus_n,
-            )
-    assign = _nearest_centroids(corpus_n, cents_n, 1)
-    probe_cells = _nearest_centroids(
-        probes_n, cents_n, nprobe
-    ).withColumnRenamed("vid", "qid")
-    candidates = (
-        probe_cells.join(assign, "cvid")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", F.col("vid").alias("cid"))
-        .distinct()
-    )
-    return candidates, corpus_n
+    cents = _collect_normed(corpus_n.filter(F.col("vid") % centroid_stride == 0))
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    return _panel_candidates_arrow(corpus_n, panel, cents, nprobe)
 
 
 def ivf_topk(
@@ -1466,10 +1268,7 @@ def ivf_topk(
 
     Same output contract as :func:`brute_force_topk`
     (query_id, neighbor_id, rank, cosine; self-matches excluded), but
-    per-probe work is ~nprobe/cells of the corpus. At 100 TB the cell
-    assignment is the only corpus-wide pass and it broadcasts just the
-    centroid set; the probe-side join shuffles on cell id, which is
-    uniformly loaded when ids are hash-distributed. Note the stride
+    per-probe work is ~nprobe/cells of the corpus. Note the stride
     quantizer's centroid count grows as corpus/stride, making the
     assign pass quadratic at scale — the PRODUCTION path is
     :func:`ivf_topk_trained`, whose Lloyd-trained quantizer sizes
@@ -1477,40 +1276,28 @@ def ivf_topk(
     fixed-stride form stays registered as the simpler scale-ramp
     subject.
 
-    The normed corpus is persisted ONCE and consumed by all three
-    norm-hungry branches (cell assign, centroid set, pair verify) —
-    without the pin each branch re-derives the map-side norm over the
-    whole corpus, a ~2× constant-factor regression measured at sf0.1.
-
-    r13: when the probe panel and centroid set are cap-bounded, the
-    whole verify collapses to :func:`_corpus_panel_topk` — ONE
-    MapInArrow pass over the pinned corpus (in-task assignment +
-    panel scoring), no assignment groupBy, no candidate join+distinct,
-    no per-pair vector shuffle.  Over-cap inputs (e.g. this stride
-    quantizer's corpus/stride centroid growth at extreme scale) keep
-    the join/window form below.
+    The normed corpus is persisted ONCE and consumed by both the
+    centroid collect and the scoring pass — without the pin each
+    re-derives the map-side norm over the whole corpus.  Centroids and
+    probe panel are collected once and held in-task, so the whole
+    search is :func:`_panel_topk` — ONE MapInArrow pass over the pinned
+    corpus (in-task assignment + panel scoring), no join, no per-pair
+    vector shuffle.
     """
     from .caching import pin
 
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    probes_n = _normed(probes, id_col, vec_col)
-    panel = probes_n.take(_PANEL_CAP + 1)
-    cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return _corpus_panel_topk(corpus_n, cent_rows, panel, k, nprobe)
-    candidates, corpus_n = _ivf_candidates(
-        vectors, probes, centroid_stride, nprobe, id_col, vec_col
+    cents = _collect_normed(corpus_n.filter(F.col("vid") % centroid_stride == 0))
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    return _panel_topk(
+        corpus_n, panel, k, _cell_probes(panel, cents, nprobe), cents
     )
-    pairs = _cosine_for_pairs_normed(candidates, corpus_n)
-    return _pairs_topk_window(pairs, k)
 
 
 def _centroid_arrays(cq: DataFrame) -> DataFrame:
     """(vid, vec, norm) array form of a long-form QUANTIZED centroid
     table (cvid, pos, cq BIGINT on the 1e6 grid) — the normed shape
-    :func:`_nearest_centroids` consumes.  Component values are
+    :func:`_collect_normed` reads.  Component values are
     ``cq / 1e6`` doubles: both engines derive them with the same IEEE
     long→double divide, so the arrays (and every downstream snapped
     dot) replay bit-identically in the SQL oracle."""
@@ -1533,18 +1320,16 @@ def _centroid_arrays(cq: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_update_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
+def _lloyd_update_arrow(corpus_n: DataFrame, cents) -> DataFrame:
     """One Lloyd update as in-task assignment + PARTIAL per-cell sums
     (guide §2.3 — aggregate before the exchange): each task assigns its
-    corpus rows to the in-closure centroids (`_assign_block`, the
-    proven `_nearest_centroids` replica), accumulates exact int64
-    component sums + member counts per cell across ALL its batches,
-    and emits one cells×dim partial block — so the shuffle carries
-    tasks×cells×dim tiny rows instead of the old corpus-wide
-    elq⋈assign join (N·dim rows through a vid-keyed exchange).  The
-    final floor(SUM/COUNT) is the byte-identical old expression over
-    byte-identical exact sums."""
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
+    corpus rows to the collected centroids (`_assign_block`),
+    accumulates exact int64 component sums + member counts per cell
+    across ALL its batches, and emits one cells×dim partial block — so
+    the shuffle carries tasks×cells×dim tiny rows, never a corpus-wide
+    (vid, pos) join.  The final floor(SUM/COUNT) runs over exact sums,
+    so it is order-independent and matches the oracle's per-cell mean
+    byte for byte.  ``cents`` must be non-empty."""
 
     def agg(batches):
         import pyarrow as _pa
@@ -1552,12 +1337,10 @@ def _lloyd_update_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
         sums: dict[int, np.ndarray] = {}
         counts: dict[int, int] = {}
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
+            _, cm, cn = _batch_normed(batch)
+            bestc = _assign_block(cm, cn, *cents)
             # the same floor(val·1e6) quantization the exploded elq
             # table carried — exact int64 sums are order-independent
             q = np.floor(cm * DOT_SCALE).astype(np.int64)
@@ -1613,10 +1396,10 @@ def train_ivf_centroids(
 ) -> DataFrame:
     """Deterministic Lloyd-trained coarse quantizer with ≈√N cells —
     the PRODUCTION centroid builder (the stride quantizer's centroid
-    count grows as corpus/stride; √N cells keep both the broadcast
-    and the O(N·cells) assign pass bounded, measured 2.6× faster at
+    count grows as corpus/stride; √N cells keep both the in-task
+    centroid copy and the O(N·cells) assign pass bounded, measured 2.6× faster at
     x10 in SCALE.md).  Returns the trained centroid set in normed
-    array form (vid, vec, norm) for :func:`_nearest_centroids`.
+    array form (vid, vec, norm), the shape every IVF pass collects.
 
     Every arithmetic step is snapped so a SQL oracle replays the
     trained centroids bit for bit — unlike ``pyspark.ml`` KMeans
@@ -1634,16 +1417,17 @@ def train_ivf_centroids(
       vocabulary-sized pass inside the trainer, which at 100 TB runs
       on a bounded sample anyway (see below);
     * assignment: snapped-cosine argmax (ties → smaller centroid id),
-      the same broadcast map-side pass as serving;
+      the same in-task assignment as serving (`_assign_block`);
     * update: per (cell, pos), ``cq = FLOOR(SUM(q)/COUNT)`` over the
       members' floor-quantized components ``q = FLOOR(val·1e6)`` —
       exact BIGINT sums, one correctly-rounded double divide, so
       means are order-independent and engine-identical.
 
-    The corpus size ``N`` is one driver-side scalar count (the
-    trainer's only sync point, like the BPE trainer's per-merge row);
-    each of the ``iters`` Lloyd rounds is one broadcast assign + one
-    (cell, pos)-keyed aggregate — at 100 TB train on a bounded sample
+    The corpus size ``N`` is one driver-side scalar count; each of the
+    ``iters`` Lloyd rounds collects the current ≈√N centroids (one
+    job) and runs :func:`_lloyd_update_arrow` — one corpus pass of
+    in-task assignment + partial per-cell sums, then a (cell, pos)-keyed
+    aggregate of those partials — at 100 TB train on a bounded sample
     (pass ``vectors.sample(...)``; assignment quality needs only
     representative density, not every row).  Cells that empty out
     during an update simply drop (k only ever shrinks by ties).
@@ -1663,66 +1447,27 @@ def train_ivf_centroids(
         .filter((F.col("rn") - 1) % stride == 0)
         .select("vid")
     )
-    # r13 fast path: with √N cells under the cap, each Lloyd round is
-    # ONE job — `_lloyd_update_arrow` (in-task assignment + partial
-    # per-cell sums) collected via a k0-row take of its array form —
-    # instead of the broadcast-scored assignment window + the exploded
-    # corpus join + the (cvid, pos) aggregate.  Seeds quantize the
-    # SAME floor(val·1e6) components the exploded path carried; the
-    # byte-identity of every step is argued at each helper and pinned
-    # by the trained-family oracles.
-    if k0 < _SCORER_CENTROID_CAP:
-        cq = (
-            corpus_n.join(F.broadcast(seed_ids), "vid")
-            .select(
-                F.col("vid").alias("cvid"),
-                F.posexplode("vec").alias("pos0", "val"),
-            )
-            .select(
-                "cvid",
-                (F.col("pos0") + 1).alias("pos"),
-                F.floor(F.col("val").cast("double") * DOT_SCALE)
-                .cast("long")
-                .alias("cq"),
-            )
+    # seeds quantize the SAME floor(val·1e6) components the Lloyd
+    # update sums, so every round's means are exact integer arithmetic
+    cq = (
+        corpus_n.join(F.broadcast(seed_ids), "vid")
+        .select(
+            F.col("vid").alias("cvid"),
+            F.posexplode("vec").alias("pos0", "val"),
         )
-        fast = True
-        for _ in range(iters):
-            cent_rows = _centroid_arrays(cq).take(_SCORER_CENTROID_CAP + 1)
-            if len(cent_rows) > _SCORER_CENTROID_CAP:  # pragma: no cover
-                fast = False
-                break
-            if not cent_rows:
-                break
-            cq = _lloyd_update_arrow(corpus_n, cent_rows)
-        if fast:
-            return _centroid_arrays(cq)
-    el = corpus_n.select(
-        "vid", F.posexplode("vec").alias("pos0", "val")
-    ).select("vid", (F.col("pos0") + 1).alias("pos"), F.col("val").cast("double").alias("val"))
-    elq = pin(
-        el.select(
-            "vid", "pos", F.floor(F.col("val") * DOT_SCALE).cast("long").alias("q")
+        .select(
+            "cvid",
+            (F.col("pos0") + 1).alias("pos"),
+            F.floor(F.col("val").cast("double") * DOT_SCALE)
+            .cast("long")
+            .alias("cq"),
         )
-    )
-    cq = elq.join(F.broadcast(seed_ids), "vid").select(
-        F.col("vid").alias("cvid"), "pos", F.col("q").alias("cq")
     )
     for _ in range(iters):
-        cents_n = pin(_centroid_arrays(cq))
-        assign = _nearest_centroids(corpus_n, cents_n, 1)
-        cq = pin(
-            elq.join(assign, "vid")
-            .groupBy("cvid", "pos")
-            .agg(
-                F.floor(
-                    F.sum("q").cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                )
-                .cast("long")
-                .alias("cq")
-            )
-        )
+        cents = _collect_normed(_centroid_arrays(cq))
+        if not len(cents[0]):
+            break
+        cq = _lloyd_update_arrow(corpus_n, cents)
     return _centroid_arrays(cq)
 
 
@@ -1741,8 +1486,8 @@ def ivf_topk_trained(
     (:func:`train_ivf_centroids`) — the production one-shot form.
     Same output contract as :func:`ivf_topk` (query_id, neighbor_id,
     rank, cosine; self-matches excluded); per-probe work is
-    ~nprobe·√N corpus rows, and the centroid broadcast stays √N-sized
-    at any corpus scale (the structural fix to the stride quantizer's
+    ~nprobe·√N corpus rows, and the in-task centroid copy stays
+    √N-sized at any corpus scale (the structural fix to the stride quantizer's
     corpus/stride centroid growth).
 
     ``nprobe_frac`` overrides ``nprobe`` with ``ceil(frac · √N)`` — a
@@ -1765,7 +1510,11 @@ def ivf_topk_trained(
 
     ``n`` short-circuits the corpus count when the caller already
     knows it (a memoized ``table_count`` or a fingerprint row count) —
-    one fewer count job per invocation, same value by contract."""
+    one fewer count job per invocation, same value by contract.
+
+    The trained centroids and the probe panel are collected once and
+    held in-task: the search is ONE MapInArrow pass over the pinned
+    corpus (:func:`_panel_topk` — in-task assignment + panel scoring)."""
     from .caching import pin
 
     if n is None:
@@ -1774,34 +1523,16 @@ def ivf_topk_trained(
         nprobe = math.ceil(nprobe_frac * max(1, math.floor(math.sqrt(n))))
     assert nprobe is not None
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents_n = pin(
+    cents = _collect_normed(
         train_ivf_centroids(
             vectors, iters=iters, id_col=id_col, vec_col=vec_col,
             corpus_n=corpus_n, n=n,
         )
     )
-    probes_n = _normed(probes, id_col, vec_col)
-    # r13: trained centroids are √N-bounded and a probe batch is a
-    # panel — when both fit the caps the verify is ONE MapInArrow pass
-    # over the pinned corpus (see _corpus_panel_topk); the join/window
-    # form below remains for over-cap inputs
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return _corpus_panel_topk(corpus_n, cent_rows, panel, k, nprobe)
-    assign = _nearest_centroids(corpus_n, cents_n, 1)
-    probe_cells = _nearest_centroids(
-        probes_n, cents_n, nprobe
-    ).withColumnRenamed("vid", "qid")
-    candidates = (
-        probe_cells.join(assign, "cvid")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", F.col("vid").alias("cid"))
-        .distinct()
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    return _panel_topk(
+        corpus_n, panel, k, _cell_probes(panel, cents, nprobe), cents
     )
-    pairs = _cosine_for_pairs_normed(candidates, corpus_n)
-    return _pairs_topk_window(pairs, k)
 
 
 def build_ivf_index(
@@ -1821,8 +1552,8 @@ def build_ivf_index(
     one-shot; a serving workload builds the index once and probes it
     many times.  Partitioning the cell table by ``cvid`` is the load-
     bearing choice: a probe's scan prunes to its ``nprobe`` cell
-    directories (dynamic partition pruning against the tiny probe-cell
-    set), so probe cost is O(corpus · nprobe / cells) **in IO**, not
+    directories (a static partition filter on the probed cell ids,
+    see :func:`ivf_probe_index`), so probe cost is O(corpus · nprobe / cells) **in IO**, not
     just in compute — at 100 TB that is the difference between reading
     ~a few hundred GB and the whole corpus per probe batch.
 
@@ -1838,17 +1569,10 @@ def build_ivf_index(
         if centroids_n is not None
         else corpus_n.filter(F.col("vid") % centroid_stride == 0)
     )
-    # r13: cap-bounded centroid sets assign IN-TASK — one corpus pass
-    # straight into the partitioned write, instead of the broadcast
-    # scoring + assignment groupBy + corpus re-join (two exchanges)
-    cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-    if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-        assigned = _assign_cells_arrow(corpus_n, cent_rows)
-    else:
-        assign = _nearest_centroids(corpus_n, cents_n, 1)
-        assigned = corpus_n.join(assign, "vid")
+    # the collected centroids assign IN-TASK — one corpus pass straight
+    # into the partitioned write, no join and no exchange
     (
-        assigned
+        _assign_cells_arrow(corpus_n, _collect_normed(cents_n))
         # `src` labels the LOAD that wrote each row: 'base' for the
         # initial build, one label per append — the second partition
         # level that makes incremental ingest idempotent (see
@@ -2099,65 +1823,29 @@ def ivf_probe_index(
 ) -> DataFrame:
     """PROBE-MANY half: same output contract as :func:`ivf_topk`
     (query_id, neighbor_id, rank, cosine; self-matches excluded), but
-    against a prebuilt :func:`build_ivf_index` — the centroid read is
-    tiny, the per-probe cell choice broadcasts, and the cells scan
-    partition-prunes to the probed cells (plan-gated in
-    tests/test_plans.py).
-
-    r13: a serving probe batch is a PANEL by design (the declared
-    serving queries probe a fixed 50-id set at every scale), so when
-    panel and centroid set fit the caps the probe runs as
-    :func:`_panel_cells_topk` — probe→cell choice in driver numpy, the
-    cells scan statically pruned to the probed partitions
-    (PartitionFilters, no DPP subquery job), one MapInArrow scoring
-    pass, zero joins.  Over-cap batches keep the r12 DPP join form
-    below."""
-    cents_n = spark.read.parquet(index_dir + "/centroids")
-    probes_n = _normed(probes, id_col, vec_col)
-    cells = spark.read.parquet(index_dir + "/cells")
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return _panel_cells_topk(cells, panel, cent_rows, k, nprobe)
-    probe_cells = _nearest_centroids(probes_n, cents_n, nprobe).withColumnRenamed(
-        "vid", "qid"
-    )
-    # candidates CARRY the cell id: the verify join below keys on
-    # (cvid, cid), so the WIDE cells scan (the one reading the vector
-    # payload) partition-prunes to the probed cells exactly like the
-    # narrow candidate scan — before r12 it joined on cid alone and
-    # read every cell's vectors (full-index IO per probe batch at
-    # 100 TB; the narrow scan pruned, the heavy one did not).  A vid
-    # lives in exactly one cell (disjoint-id append contract), so the
-    # (qid, cvid, cid) distinct collapses the same pairs as before.
-    candidates = (
-        probe_cells.join(cells.select("cvid", "vid"), "cvid")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", "cvid", F.col("vid").alias("cid"))
-        .distinct()
-    )
-    q = _as_prefix(probes_n, "q").select("qid", "qvec", "qnorm")
-    c = cells.select(
-        "cvid",
-        F.col("vid").alias("cid"),
-        F.col("vec").alias("cvec"),
-        F.col("norm").alias("cnorm"),
-    )
-    pairs = (
-        candidates.join(q, "qid")
-        .join(c, ["cvid", "cid"])
-        .select(
-            "qid",
-            "cid",
-            _cosine(
-                dot_dec_batch(F.col("qvec"), F.col("cvec")),
-                F.col("qnorm"),
-                F.col("cnorm"),
-            ).alias("cosine"),
+    against a prebuilt :func:`build_ivf_index`.  The centroid set and
+    the probe panel are collected once; the probe→cell choice runs in
+    driver numpy (:func:`_cell_probes`), the cells scan is STATICALLY
+    pruned to the probed cell partitions (PartitionFilters — no
+    dynamic-pruning subquery job), and one MapInArrow pass
+    (:func:`_panel_topk`) scores each cell row against exactly the
+    probes that probed its cell.  Zero joins; the only exchange is the
+    final tiny rank (plan-gated in tests/test_plans.py)."""
+    cents = _collect_normed(spark.read.parquet(index_dir + "/centroids"))
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    cell_probes = _cell_probes(panel, cents, nprobe)
+    if cell_probes:
+        cells = spark.read.parquet(index_dir + "/cells").filter(
+            F.col("cvid").isin(sorted(cell_probes))
         )
-    )
-    return _pairs_topk_window(pairs, k)
+    else:
+        # no probed cell (no probes, or no centroids): nothing to scan —
+        # and an index built over no centroids has no cell files for
+        # Spark to infer a schema from
+        cells = spark.createDataFrame(
+            [], "vid long, vec array<double>, norm double, cvid long"
+        )
+    return _panel_topk(cells, panel, k, cell_probes)
 
 
 def ivf_index_append(
@@ -2174,8 +1862,8 @@ def ivf_index_append(
     add-after-train).
 
     The append never reads, rewrites, or re-sorts existing cells: cost
-    is one O(batch · cells) broadcast assignment (the same map-side
-    pass serving uses) plus one cell-partitioned parquet append, so
+    is one O(batch · cells) in-task assignment against the collected
+    centroids (the same pass the build uses) plus one cell-partitioned parquet append, so
     continuously-arriving embeddings ingest at BATCH cost while every
     previously-indexed byte stays in place.  Centroids are frozen, not
     retrained — assignment depends only on the centroid set, so
@@ -2201,18 +1889,10 @@ def ivf_index_append(
     """
     import uuid as _uuid
 
-    cents_n = spark.read.parquet(index_dir + "/centroids")
-    batch_n = _normed(new_vectors, id_col, vec_col)
-    # r13: same in-task assignment as build_ivf_index — one batch pass
-    cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-    if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-        assigned = _assign_cells_arrow(batch_n, cent_rows)
-    else:
-        assign = _nearest_centroids(batch_n, cents_n, 1)
-        assigned = batch_n.join(assign, "vid")
+    cents = _collect_normed(spark.read.parquet(index_dir + "/centroids"))
     label = src if src is not None else _uuid.uuid4().hex[:12]
     (
-        assigned
+        _assign_cells_arrow(_normed(new_vectors, id_col, vec_col), cents)
         .withColumn("src", F.lit(label))
         .write.mode("append" if src is None else "overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -2877,18 +2557,18 @@ def semantic_dedup_pairs(
     O(n · stride), not O(n²).
 
     Honest scale caveat: the stride centroid set itself grows as
-    n/stride, so the ASSIGN pass here is O(n²/stride) and the centroid
-    broadcast is unbounded — fine at test scale and for the DuckDB
+    n/stride, so the ASSIGN pass here is O(n²/stride) and the collected
+    centroid copy is unbounded — fine at test scale and for the DuckDB
     oracle, but a 100 TB run must swap in a BOUNDED centroid set:
     :func:`train_ivf_centroids` (the oracle-replayable Lloyd trainer
     that fixed exactly this for :func:`ivf_topk` — √N cells make
-    assignment O(n·√n) with a √N-row broadcast), or
+    assignment O(n·√n) with a √N-row in-task copy), or
     analytics/predictive.kmeans_embedding_clusters when oracle parity
     isn't needed. Everything downstream of `assign` is unchanged
     either way.
 
-    Plan shape: one persisted normed corpus feeds centroid scoring,
-    cell assignment, and the pair verify (same single-norm-pass rule
+    Plan shape: one persisted normed corpus feeds the centroid
+    collect, the in-task cell assignment, and the pair verify (same single-norm-pass rule
     as :func:`ivf_topk`); the within-cell self-join shuffles on the
     cell id (hot-cell caveat and its sub-clustering fix as documented
     for blocking in operators/dedup.py).
@@ -2896,19 +2576,10 @@ def semantic_dedup_pairs(
     from .caching import pin
 
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
-    # r13: cap-bounded centroid sets assign in-task (one corpus pass,
-    # no broadcast scoring + groupBy); the within-cell pair join below
-    # is unchanged either way
-    cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-    if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-        # both self-join sides read the SAME exchange of this subtree
-        # (ReuseExchange), so no pin — the measured same-exchange rule
-        assign = _assign_cells_arrow(corpus_n, cent_rows).select(
-            "vid", "cvid"
-        )
-    else:
-        assign = _nearest_centroids(corpus_n, cents_n, 1)
+    cents = _collect_normed(corpus_n.filter(F.col("vid") % centroid_stride == 0))
+    # both self-join sides read the SAME exchange of this subtree
+    # (ReuseExchange), so no pin — the measured same-exchange rule
+    assign = _assign_cells_arrow(corpus_n, cents).select("vid", "cvid")
     a, b = assign.alias("a"), assign.alias("b")
     pairs = a.join(
         b,
@@ -3154,7 +2825,7 @@ def ivf_assignment_drift(
     * retrain √N Lloyd centroids over the CURRENT indexed corpus
       (same deterministic trainer serving uses);
     * re-assign every indexed vector to the retrained cells
-      (one broadcast map-side pass, the serving plan shape);
+      (one in-task assignment pass, the index-build plan shape);
     * count the vectors whose retrained cell population differs from
       their frozen cell population — computed as a CELL-PAIR
       confusion table so the metric is stable under arbitrary
@@ -3172,7 +2843,7 @@ def ivf_assignment_drift(
     in round 11; pytest-pinned now).
 
     Scale: the retrain is the trainer's documented bounded cost (√N
-    cells, iters broadcast-assign passes); the confusion table is
+    cells, iters in-task assign passes); the confusion table is
     cells×cells AT MOST and in practice near-diagonal; nothing
     corpus-sized shuffles except the one (cell,cell) keyed count.
     """
@@ -3190,8 +2861,8 @@ def ivf_assignment_drift(
     cents2 = train_ivf_centroids(
         raw, iters=iters, id_col=id_col, vec_col=vec_col, n=n
     )
-    assign2 = _nearest_centroids(corpus_n, cents2, 1).withColumnRenamed(
-        "cvid", "retrained_cvid"
+    assign2 = _assign_cells_arrow(corpus_n, _collect_normed(cents2)).select(
+        "vid", F.col("cvid").alias("retrained_cvid")
     )
     pairs = cells.select("vid", "frozen_cvid").join(assign2, "vid")
     confusion = pairs.groupBy("frozen_cvid", "retrained_cvid").agg(

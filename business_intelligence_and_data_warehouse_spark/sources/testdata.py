@@ -67,14 +67,6 @@ def sf_of(sf_dir: str) -> float:
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def clear_table_cache() -> int:
-    """Drop every memoized table plan; returns how many were cached."""
-    n = len(_TABLE_CACHE)
-    _TABLE_CACHE.clear()
-    _COUNT_CACHE.clear()
-    return n
-
-
 # (applicationId, abs sf_dir, table) -> row count.  The testdata dirs
 # are immutable for the life of a session (same invariant _TABLE_CACHE
 # relies on), so a count can never go stale; memoizing it lets sizing

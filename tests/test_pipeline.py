@@ -1206,24 +1206,25 @@ def _tricky_vecs(spark):
 
 
 def test_numpy_probe_cells_matches_nearest_centroids(spark):
-    """The driver-numpy probe->cell choice must replicate
-    `_nearest_centroids` bit for bit, including the NULL-cosine
-    (zero-norm) and cosine-tie orderings, at n=1 and n>1."""
+    """The driver-numpy probe->cell choice must replicate the window
+    form of nearest-centroid ranking bit for bit, including the
+    NULL-cosine (zero-norm) and cosine-tie orderings, at n=1 and n>1."""
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
-        _nearest_centroids,
+        _collect_normed,
         _normed,
         _numpy_probe_cells,
-        _rows_matrix,
     )
+
+    from .ann_reference import nearest_centroids
 
     vecs = _tricky_vecs(spark)
     corpus_n = _normed(vecs, "vec_id", "embedding")
     cents_n = corpus_n.filter(F.col("vid") % 3 == 0)
-    qids, qmat, qnorms = _rows_matrix(corpus_n.collect())
-    cvids, cmat, cnorms = _rows_matrix(cents_n.collect())
+    panel = _collect_normed(corpus_n)
+    cents = _collect_normed(cents_n)
     for n in (1, 2):
-        got = _numpy_probe_cells(qids, qmat, qnorms, cvids, cmat, cnorms, n)
-        jvm = _nearest_centroids(corpus_n, cents_n, n).collect()
+        got = _numpy_probe_cells(*panel, *cents, n)
+        jvm = nearest_centroids(corpus_n, cents_n, n).collect()
         want: dict[int, list[int]] = {}
         for r in jvm:
             want.setdefault(int(r.vid), []).append(int(r.cvid))
@@ -1231,58 +1232,126 @@ def test_numpy_probe_cells_matches_nearest_centroids(spark):
 
 
 def test_panel_scorer_matches_join_path(spark, tmp_path):
-    """End-to-end pin: the collected-panel Arrow fast paths of
-    ivf_topk / ivf_topk_trained / ivf_probe_index must return
-    EXACTLY the rows of the join/window fallback (forced via the
-    panel cap) on the edge-case corpus."""
-    import pytest
-
-    from business_intelligence_and_data_warehouse_spark.operators import (
-        similarity as sim,
-    )
+    """End-to-end pin: the in-task Arrow scorers of brute_force_topk /
+    ivf_topk / ivf_topk_trained / build_ivf_index + ivf_probe_index
+    must return EXACTLY the rows of the join/window reference forms
+    (tests/ann_reference.py) on the edge-case corpus."""
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _normed,
+        brute_force_topk,
         build_ivf_index,
         ivf_probe_index,
         ivf_topk,
         ivf_topk_trained,
+        train_ivf_centroids,
     )
+
+    from . import ann_reference as ref
 
     vecs = _tricky_vecs(spark)
     probes = vecs.filter("vec_id in (1, 2, 4)")
     index_dir = str(tmp_path / "ivf")
     build_ivf_index(vecs, index_dir, centroid_stride=3)
+    corpus_n = _normed(vecs, "vec_id", "embedding")
+    stride_cents = corpus_n.filter(F.col("vid") % 3 == 0)
+    trained_cents = train_ivf_centroids(vecs, iters=1)
 
-    def run():
-        return [
-            sorted(
-                tuple(r)
-                for r in ivf_topk(
-                    vecs, probes, k=5, centroid_stride=3, nprobe=2
-                ).collect()
-            ),
-            sorted(
-                tuple(r)
-                for r in ivf_topk_trained(
-                    vecs, probes, k=5, iters=1, nprobe=2
-                ).collect()
-            ),
-            sorted(
-                tuple(r)
-                for r in ivf_probe_index(
-                    spark, index_dir, probes, k=5, nprobe=2
-                ).collect()
-            ),
-        ]
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
 
-    fast = run()
-    mp = pytest.MonkeyPatch()
-    try:
-        mp.setattr(sim, "_PANEL_CAP", 0)
-        slow = run()
-    finally:
-        mp.undo()
-    assert fast == slow
-    assert all(len(x) > 0 for x in fast)
+    pairs = [
+        (
+            brute_force_topk(vecs, probes, k=5),
+            ref.brute_force_topk(vecs, probes, k=5),
+        ),
+        (
+            ivf_topk(vecs, probes, k=5, centroid_stride=3, nprobe=2),
+            ref.ivf_topk(
+                ref.assign_cells(corpus_n, stride_cents),
+                probes, stride_cents, k=5, nprobe=2,
+            ),
+        ),
+        (
+            ivf_topk_trained(vecs, probes, k=5, iters=1, nprobe=2),
+            ref.ivf_topk(
+                ref.assign_cells(corpus_n, trained_cents),
+                probes, trained_cents, k=5, nprobe=2,
+            ),
+        ),
+        (
+            ivf_probe_index(spark, index_dir, probes, k=5, nprobe=2),
+            ref.ivf_topk(
+                spark.read.parquet(index_dir + "/cells"),
+                probes,
+                spark.read.parquet(index_dir + "/centroids"),
+                k=5,
+                nprobe=2,
+            ),
+        ),
+    ]
+    for fast, slow in pairs:
+        got, want = rows(fast), rows(slow)
+        assert got == want
+        assert got
+
+
+def test_ann_empty_inputs_return_empty_frames(spark, tmp_path):
+    """Empty probe sets and empty centroid sets (a stride that selects
+    no row, or an empty corpus) run the one in-task path and return an
+    empty frame with the operator's usual schema — never an error."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        brute_force_topk,
+        build_ivf_index,
+        ivf_index_append,
+        ivf_probe_index,
+        ivf_topk,
+        ivf_topk_trained,
+        semantic_dedup_pairs,
+    )
+
+    vecs = _tricky_vecs(spark)
+    none = vecs.filter("vec_id < 0")
+    no_zero = vecs.filter("vec_id > 0")  # stride 100 selects no row
+    probes = vecs.filter("vec_id in (1, 4)")
+
+    def index(name, corpus, stride):
+        d = str(tmp_path / name)
+        build_ivf_index(corpus, d, centroid_stride=stride)
+        return d
+
+    full = index("full", vecs, 3)
+    no_cents = index("no_cents", no_zero, 100)
+    empty = index("empty", none, 3)
+    ivf_index_append(
+        spark,
+        no_cents,
+        spark.createDataFrame(
+            [(100, [0.3, 0.3, 0.9])], "vec_id long, embedding array<float>"
+        ),
+    )
+    cases = [
+        (brute_force_topk(vecs, probes, k=3),
+         [brute_force_topk(vecs, none, k=3)]),
+        (ivf_topk(vecs, probes, k=3, centroid_stride=3),
+         [ivf_topk(vecs, none, k=3, centroid_stride=3),
+          ivf_topk(no_zero, probes, k=3, centroid_stride=100),
+          ivf_topk(none, probes, k=3, centroid_stride=3)]),
+        (ivf_topk_trained(vecs, probes, k=3, iters=1),
+         [ivf_topk_trained(vecs, none, k=3, iters=1),
+          ivf_topk_trained(none, probes, k=3, iters=1)]),
+        (ivf_probe_index(spark, full, probes, k=3),
+         [ivf_probe_index(spark, full, none, k=3),
+          ivf_probe_index(spark, no_cents, probes, k=3),
+          ivf_probe_index(spark, empty, probes, k=3)]),
+        (semantic_dedup_pairs(vecs, centroid_stride=3, threshold=0.0),
+         [semantic_dedup_pairs(no_zero, centroid_stride=100),
+          semantic_dedup_pairs(none, centroid_stride=3)]),
+    ]
+    for nonempty, empties in cases:
+        assert nonempty.collect()
+        for e in empties:
+            assert e.schema == nonempty.schema
+            assert e.collect() == []
 
 
 def test_ivf_cells_stay_vid_disjoint_across_append(spark, tmp_path):

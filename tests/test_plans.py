@@ -17,12 +17,15 @@ from business_intelligence_and_data_warehouse_spark.plans.queries import QUERIES
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF_DIR)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+def _explain(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     return df._jdf.queryExecution().explainString(mode)
+
+
+def plan_of(spark, name: str) -> str:
+    return _explain(QUERIES[name](spark, SF_DIR))
 
 
 def scan_blocks(plan: str) -> list[str]:
@@ -70,23 +73,41 @@ def test_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_brute_force_topk_broadcasts_probes(spark, monkeypatch):
-    # r13 fast path: a panel probe set scores in-task — ONE MapInArrow
-    # corpus pass, no join of any kind
+def _large_panel(spark):
+    """(corpus, probes): a synthetic 1,100-probe panel — over the 1,024
+    rows the in-task scorers used to cap — against a 200-row corpus
+    that shares the panel's first 200 ids (self-matches excluded)."""
+    rows = [
+        (i, [float((i * 37 + j * 11) % 23 - 11) for j in range(8)])
+        for i in range(1100)
+    ]
+    probes = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return probes.filter("vec_id < 200"), probes
+
+
+def test_brute_force_topk_broadcasts_probes(spark):
+    # the probe panel is held in-task: ONE MapInArrow corpus pass, no
+    # join of any kind — at the registered panel and at 1,100 probes,
+    # where the in-task rows must equal the join/window reference
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
+    from .ann_reference import brute_force_topk as reference
+
     plan = plan_of(spark, "sim_embedding_topk")
     assert "MapInArrow" in plan, plan
     assert "Join" not in plan, plan
-    # over-cap fallback: probe × corpus stays a broadcast nested-loop
-    # on the probe set; an unbroadcast CartesianProduct would shuffle
-    # the corpus
-    from business_intelligence_and_data_warehouse_spark.operators import (
-        similarity as sim,
+    corpus, probes = _large_panel(spark)
+    df = brute_force_topk(corpus, probes, k=3)
+    plan = _explain(df)
+    assert "MapInArrow" in plan, plan
+    assert "Join" not in plan, plan
+    got = sorted(tuple(r) for r in df.collect())
+    assert len({r[0] for r in got}) == 1100
+    assert got == sorted(
+        tuple(r) for r in reference(corpus, probes, k=3).collect()
     )
-
-    monkeypatch.setattr(sim, "_PANEL_CAP", 0)
-    plan = plan_of(spark, "sim_embedding_topk")
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_jaccard_df_cap_broadcasts_stop_set(spark):
@@ -504,6 +525,17 @@ def test_no_collect_in_query_code_paths():
         # (count + bit_xor digest), the content-address every memo key
         # and ingest load label folds in
         ("operators/similarity.py", "row = fp_agg.collect()[0]"),
+        # bounded: the ANN scorers' one driver copy of a probe panel
+        # (the fixed 50-id panel or the 1% vec_id % 100 stride) or a
+        # centroid set (≈√N trained cells; N/stride stride cells) —
+        # the rows every in-task scoring/assignment pass holds
+        (
+            "operators/similarity.py",
+            'normed.select("vid", "vec", "norm").collect()',
+        ),
+        # bounded: the PQ codebook (~256 entries under the production
+        # codebook_size sizing) every encode task holds
+        ("operators/similarity.py", "vectors, cb_src.collect(), num_subspaces"),
     }
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
@@ -520,17 +552,14 @@ def test_no_collect_in_query_code_paths():
     )
 
 
-def test_ivf_probe_scan_partition_prunes(spark, tmp_path, monkeypatch):
+def test_ivf_probe_scan_partition_prunes(spark, tmp_path):
     """The probe-many half of the IVF index must read ONLY the probed
-    cell partitions.  r13 fast path (panel-sized probe batch): the
-    cells scan carries a STATIC PartitionFilters IN-set on cvid (no
-    subquery job at all) and the verify is one MapInArrow pass with no
-    joins.  Over-cap fallback (forced via the cap): the r12 dynamic
-    partition-pruning join form — without either, every probe batch
-    re-reads the whole corpus index."""
-    from business_intelligence_and_data_warehouse_spark.operators import (
-        similarity as sim,
-    )
+    cell partitions: the cells scan carries a STATIC PartitionFilters
+    IN-set on cvid (no subquery job at all) and the verify is one
+    MapInArrow pass with no joins — at the registered 1% panel and at
+    a 1,100-probe panel, whose rows must equal the join/window
+    reference.  Without the filter every probe batch re-reads the
+    whole corpus index."""
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
         build_ivf_index,
         ivf_probe_index,
@@ -539,21 +568,31 @@ def test_ivf_probe_scan_partition_prunes(spark, tmp_path, monkeypatch):
         load_table,
     )
 
+    from .ann_reference import ivf_topk as reference
+
     emb = load_table(spark, SF_DIR, "embeddings")
     index_dir = str(tmp_path / "ivf")
     build_ivf_index(emb, index_dir, centroid_stride=25)
-    probes = emb.filter("vec_id % 100 = 0")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
+    corpus, big = _large_panel(spark)
+    big_dir = str(tmp_path / "ivf_big")
+    build_ivf_index(corpus, big_dir, centroid_stride=10)
+    for d, probes in (
+        (index_dir, emb.filter("vec_id % 100 = 0")),
+        (big_dir, big),
+    ):
+        df = ivf_probe_index(spark, d, probes, k=10, nprobe=4)
+        plan = _explain(df)
+        assert "PartitionFilters" in plan, plan
+        assert re.search(r"PartitionFilters: \[cvid#\d+ IN", plan), plan
+        assert "MapInArrow" in plan, plan
+        assert "Join" not in plan, plan
+    got = sorted(tuple(r) for r in df.collect())
+    assert len({r[0] for r in got}) == 1100
+    want = reference(
+        spark.read.parquet(big_dir + "/cells"),
+        big,
+        spark.read.parquet(big_dir + "/centroids"),
+        k=10,
+        nprobe=4,
     )
-    df = ivf_probe_index(spark, index_dir, probes, k=10, nprobe=4)
-    plan = df._jdf.queryExecution().explainString(mode)
-    assert "PartitionFilters" in plan, plan
-    assert re.search(r"PartitionFilters: \[cvid#\d+ IN", plan), plan
-    assert "MapInArrow" in plan, plan
-    assert "Join" not in plan, plan
-    # the over-cap fallback keeps the r12 DPP-pruned join form
-    monkeypatch.setattr(sim, "_PANEL_CAP", 0)
-    df = ivf_probe_index(spark, index_dir, probes, k=10, nprobe=4)
-    plan = df._jdf.queryExecution().explainString(mode)
-    assert "dynamicpruning" in plan.lower(), plan
+    assert got == sorted(tuple(r) for r in want.collect())
