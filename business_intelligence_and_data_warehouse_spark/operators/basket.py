@@ -44,19 +44,15 @@ def basket_pair_lift(
     basket_col: str,
     item_col: str,
     min_pair_count: int = 2,
-    gather_storage: str | None = None,
 ) -> DataFrame:
     """(item_a, item_b, n_baskets_a, n_baskets_b, n_baskets_both,
     support, confidence_a_to_b, lift) for every unordered item pair
     co-occurring in >= min_pair_count baskets.
 
-    ``gather_storage``: None (default) does NOT persist the
-    basket-array gather — its three consumers (pairs, frequencies,
-    total) land in one plan where AQE reuses the identical exchanges
-    and column-prunes the rest (an explicit pin measured 2x slower at
-    sf0.1).  Pass a StorageLevel name ("DISK_ONLY") when the fact
-    scan itself dominates (a 100-TB fact re-scanned per pruned
-    variant) — the curation survivor_storage trade-off."""
+    The basket-array gather is not persisted: its three consumers
+    (pairs, frequencies, total) land in one plan where AQE reuses the
+    identical exchanges and column-prunes the rest (an explicit pin
+    measured 2x slower at sf0.1)."""
     baskets = (
         facts.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
@@ -64,12 +60,6 @@ def basket_pair_lift(
         .groupBy("basket")
         .agg(F.sort_array(F.collect_set("item")).alias("arr"))
     )
-    if gather_storage is not None:
-        from pyspark import StorageLevel
-
-        from .caching import pin
-
-        baskets = pin(baskets, getattr(StorageLevel, gather_storage))
     # 1-row basket total: broadcast scalar, no driver-side action
     totals = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
     freq = (

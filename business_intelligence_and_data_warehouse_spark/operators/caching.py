@@ -33,14 +33,15 @@ from pyspark.storagelevel import StorageLevel
 _PINNED: list[DataFrame] = []
 
 
-def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
-    """Persist ``df`` and remember it for the next ``release_pinned``."""
-    df.persist(level if level is not None else StorageLevel.MEMORY_AND_DISK)
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) and remember it for the next
+    ``release_pinned``."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     _PINNED.append(df)
     return df
 
 
-def eager_pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+def eager_pin(df: DataFrame) -> DataFrame:
     """``pin`` plus an immediate materialization of the cached blocks.
 
     For a pinned table whose first consumers are CONCURRENT — e.g. the
@@ -53,7 +54,7 @@ def eager_pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     k builds into cache reads.  Only worth it for tables that are
     BOUNDED by construction (sketch grids, panels) — corpus-sized pins
     should stay lazy and let their first real consumer pay the pass."""
-    out = pin(df, level)
+    out = pin(df)
     out.count()
     return out
 

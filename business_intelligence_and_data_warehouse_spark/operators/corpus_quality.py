@@ -204,8 +204,6 @@ def contamination_bloom_report(
     n_hashes: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_storage: str | None = "MEMORY_AND_DISK",
-    probe_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Train-side decontamination THROUGH a Bloom filter over the eval
     split's shingles, with exact verification of the positives and
@@ -226,28 +224,27 @@ def contamination_bloom_report(
 
     The per-doc shingle table feeds three consumers through unlike
     paths (eval-set distinct → bloom build, eval-set broadcast for
-    the verify, train probe), so it is pinned by default — the
-    re-derived subtree is the corpus tokenize, the scan-bound case
-    ``_maybe_pin`` documents. Measured sf0.1 interleaved best-of-3:
-    pinned 2.17s vs unpinned 2.08s — a wash warm at this SF (same as
-    the multi-signal tokens pin), kept because at crawl scale the two
-    saved corpus scans dominate; ``shingle_storage=None`` opts out.
+    the verify, train probe), so it is pinned — the re-derived
+    subtree is the corpus tokenize, which is scan-bound at crawl
+    scale. Measured sf0.1 interleaved best-of-3: pinned 2.17s vs
+    unpinned 2.08s — a wash warm at this SF (same as the multi-signal
+    tokens pin), kept because at crawl scale the two saved corpus
+    scans dominate.
     """
-    from .dedup import _maybe_pin
+    from .caching import eager_pin, pin
     from .sketches import bloom_build, bloom_probe
 
     toked = docs.select(
         F.col(id_col).alias("doc_id"),
         tokens_ws(normalize_text(F.col(text_col))).alias("toks"),
     )
-    sh = _maybe_pin(
+    sh = pin(
         toked.select(
             "doc_id",
             F.explode(
                 F.array_distinct(shingles_of_tokens(F.col("toks"), k))
             ).alias("s"),
-        ),
-        shingle_storage,
+        )
     )
     is_eval = F.col("doc_id") % eval_stride == 0
     eval_set = sh.filter(is_eval).select("s").distinct()
@@ -261,8 +258,6 @@ def contamination_bloom_report(
     # each re-ran the full eval-side build aggregate (4× the eval
     # corpus scan at 100 TB); one bounded materialization job turns
     # them into cache reads
-    from .caching import eager_pin
-
     bloom = eager_pin(bloom_build(eval_set, "s", m_bits, n_hashes))
     probed = bloom_probe(
         sh.filter(~is_eval), "s", bloom, m_bits, n_hashes, "bloom_hit"
@@ -277,11 +272,8 @@ def contamination_bloom_report(
     # its k word-joins re-execute per consumer without a pin (measured
     # sf0.1 interleaved best-of-3: unpinned 8.1s vs pinned 3.3s vs the
     # unpruned single-pass 2.9s — the pruned shape costs ~15% here and
-    # wins at scale where the verify join dominates);
-    # probe_storage=None opts out (e.g. when materializing the
-    # corpus-scale probed table is worse than re-scanning the pinned
-    # shingles).
-    probed = _maybe_pin(probed, probe_storage)
+    # wins at scale where the verify join dominates).
+    probed = pin(probed)
     totals = probed.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.sum(F.col("bloom_hit").cast("long")).alias("n_bloom_hits"),

@@ -165,7 +165,6 @@ def curate_corpus(
     jaccard_threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    survivor_storage: str | None = None,
     k: int = 3,
     bands: int = 4,
     rows_per_band: int = 2,
@@ -177,25 +176,18 @@ def curate_corpus(
     funnel:  (stage, n_docs) — documents remaining after each stage,
     5 rows ('0_input' .. '4_near_dedup').
 
-    `survivor_storage`: None (default) does NOT persist the exact-dedup
-    survivor set — when a caller collects ONE of the two outputs, every
-    survivor consumer lands in a single plan and ReuseExchange shares
-    the flag pipeline's content-hash exchange (an explicit persist
-    measured ~25% slower). Pass a StorageLevel name ("DISK_ONLY" at TB
-    scale) when driving curated AND funnel as separate actions — then
-    the flag lineage would otherwise recompute once per action."""
+    The exact-dedup survivor set is not persisted: when a caller
+    collects ONE of the two outputs, every survivor consumer lands in
+    a single plan and ReuseExchange shares the flag pipeline's
+    content-hash exchange (an explicit persist measured ~25% slower).
+    Driving curated AND funnel as separate actions recomputes the flag
+    lineage once per action."""
     flagged = flag_stages(
         docs, target_lang, min_quality, min_tokens, id_col, text_col
     )
     survivors = flagged.filter(F.col("pass_exact")).select(
         "doc_id", "text", "lang_pred", "n_tokens", "quality"
     )
-    if survivor_storage is not None:
-        from pyspark import StorageLevel
-
-        from .caching import pin
-
-        survivors = pin(survivors, getattr(StorageLevel, survivor_storage))
     # LSH geometry travels WITH the threshold: at (b=4, r=2) the
     # candidate probability is 1-(1-J^r)^b ~= 68% at J=0.5 and only
     # ~31% at J=0.3 — misses are DETERMINISTIC (fixed md5

@@ -25,8 +25,15 @@ Scale design (100 TB):
   exactly `bands` (band, signature) rows.
 
 Hashing uses md5 (engine-portable, oracle-checkable). At production
-scale xxhash64 halves the hash cost; swap `_hash_expr` if cross-engine
-verification is not needed.
+scale xxhash64 halves the hash cost where cross-engine verification is
+not needed.
+
+Persist discipline: under the per-invocation cache ledger
+(``caching.pin``), ReuseExchange already shares identical single-plan
+exchanges, so an unconditional persist measured 10-25% pure overhead
+across the dedup battery at sf0.1.  A table is pinned only where its
+consumers read DIFFERENT exchanges or the re-derived subtree is
+scan-bound.
 """
 
 from __future__ import annotations
@@ -42,21 +49,6 @@ from ..functions.text import (
     shingles_of_tokens,
     tokens_ws,
 )
-
-
-def _maybe_pin(df: DataFrame, storage: str | None) -> DataFrame:
-    """Persist only when the caller opts in.  Under the per-invocation
-    cache ledger, ReuseExchange already shares identical single-plan
-    exchanges, so an unconditional persist measured 10-25% pure
-    overhead across the dedup battery at sf0.1 (round-3 A/B with pin
-    patched to identity).  Pass a StorageLevel name when consumers run
-    as SEPARATE ACTIONS, or when the re-derived subtree is scan-bound
-    (a 100-TB corpus re-tokenized per consumer)."""
-    if storage is None:
-        return df
-    from pyspark import StorageLevel
-
-    return pin(df, getattr(StorageLevel, storage))
 
 
 # ---------------------------------------------------------------------------
@@ -124,7 +116,6 @@ def jaccard_pairs(
     shingles: DataFrame,
     threshold: float,
     max_df: int | None = 50,
-    capped_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Document pairs with shingle-set Jaccard >= threshold.
 
@@ -148,9 +139,8 @@ def jaccard_pairs(
     # of the candidate self-join. The self-join sides share one
     # exchange via ReuseExchange, but the sizes aggregate's exchange
     # DIFFERS — so unlike the MinHash path the persist pays here
-    # (interleaved A/B at sf0.1: pinned ~2.9s vs unpinned ~3.3s);
-    # capped_storage=None opts out, "DISK_ONLY" for TB corpora.
-    shingles = _maybe_pin(shingles, capped_storage)
+    # (interleaved A/B at sf0.1: pinned ~2.9s vs unpinned ~3.3s).
+    shingles = pin(shingles)
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -225,7 +215,6 @@ def minhash_lsh_candidates(
     shingles: DataFrame,
     bands: int = 4,
     rows_per_band: int = 2,
-    sig_storage: str | None = None,
 ) -> DataFrame:
     """Candidate pairs from banded MinHash signatures.
 
@@ -235,11 +224,9 @@ def minhash_lsh_candidates(
     """
     # One narrow row per doc derived through the signature
     # aggregation; the band self-join's two sides are identical
-    # exchanges that ReuseExchange shares within the plan, so the
-    # persist is opt-in (sig_storage) for scan-bound corpora.
-    sigs = _maybe_pin(
-        minhash_signatures(shingles, bands * rows_per_band), sig_storage
-    )
+    # exchanges that ReuseExchange shares within the plan, so it
+    # stays unpinned.
+    sigs = minhash_signatures(shingles, bands * rows_per_band)
     band_rows = sigs.select(
         "doc_id",
         F.explode(
@@ -314,7 +301,6 @@ def minhash_lsh_dedup(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_storage: str | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> band join ->
     verify ONLY the candidate pairs with exact Jaccard >= threshold.
@@ -323,17 +309,13 @@ def minhash_lsh_dedup(
     all-pairs shingle self-join — a stop-shingle shared by f documents
     would otherwise contribute f² verify rows regardless of banding.
 
-    ``shingle_storage``: None (default) relies on ReuseExchange — the
-    band self-join sides and the verify join read IDENTICAL exchanges
-    of the shingle/signature subtrees, so a forced persist measured
+    The shingle table is not pinned: the band self-join sides and the
+    verify join read IDENTICAL exchanges of the shingle/signature
+    subtrees, which ReuseExchange shares, so a persist measured
     ~15-20% slower at sf0.1 under the cache ledger (interleaved A/B:
-    unpinned ~1.7s vs pinned ~2.0s).  At TB corpus scale pass
-    ``"DISK_ONLY"`` — the shingle table is the widest intermediate,
-    and re-deriving it where exchanges differ is scan-bound there.
+    unpinned ~1.7s vs pinned ~2.0s).
     """
-    shingles = _maybe_pin(
-        shingle_table(docs, k, id_col, text_col), shingle_storage
-    )
+    shingles = shingle_table(docs, k, id_col, text_col)
     candidates = minhash_lsh_candidates(shingles, bands, rows_per_band)
     return jaccard_for_pairs(candidates, shingles).filter(
         F.col("jaccard") >= threshold
@@ -344,7 +326,6 @@ def containment_pairs(
     shingles: DataFrame,
     threshold: float = 0.8,
     max_df: int | None = 50,
-    capped_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Document pairs where the SMALLER document's shingle set is
     mostly contained in the other: max-containment
@@ -362,7 +343,7 @@ def containment_pairs(
     measure is exact on the capped vocabulary; integer counts ->
     exact doubles both engines)."""
     shingles, _stop = _df_capped(shingles, max_df)
-    shingles = _maybe_pin(shingles, capped_storage)
+    shingles = pin(shingles)
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -454,8 +435,8 @@ def simhash_from_tokens(toks_table: DataFrame, num_bits: int = 32) -> DataFrame:
     the token's UTF-8 bytes is the same digest F.md5 computes, and the
     integer vote sums are exact in any order.  A document with an
     EMPTY token array stays absent from the output, exactly as the
-    exploded form dropped it.  Parity with the retired JVM form is
-    pinned in tests/test_pipeline.py."""
+    exploded form dropped it.  Parity with the retired JVM form
+    (tests/dedup_reference.py) is pinned in tests/test_pipeline.py."""
     if not 1 <= num_bits <= 32:
         raise ValueError(
             f"num_bits must be in [1, 32] (md5-nibble vote bits), "
@@ -526,47 +507,6 @@ def simhash_from_tokens(toks_table: DataFrame, num_bits: int = 32) -> DataFrame:
     return out
 
 
-def _simhash_from_tokens_jvm(
-    toks_table: DataFrame, num_bits: int = 32
-) -> DataFrame:
-    """The retired exploded-JVM signature pass, kept as the parity
-    subject for the Arrow form's equality pin (and as the reference
-    statement of the bit layout the SQL oracles replay)."""
-    if not 1 <= num_bits <= 32:
-        raise ValueError(
-            f"num_bits must be in [1, 32] (md5-nibble vote bits), "
-            f"got {num_bits}"
-        )
-    toks = toks_table.select("doc_id", F.explode("toks").alias("tok"))
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    # Stage the digest as a bound column so the num_bits vote
-    # expressions share ONE md5 evaluation per (doc, token) row instead
-    # of hashing the token once per bit (the HOF-staging rule, SCALE.md).
-    tf = tf.withColumn("h", F.md5(F.col("tok")))
-    # Stage the digest's hex as FOUR 32-bit integer slices, then read
-    # each vote bit with shiftright+AND: integer ops per bit instead of
-    # a per-bit substring + UTF8 string compare — bit-identical
-    # signatures (hex digit j's high bit == bit (7 - j%8)*4 + 3 of
-    # slice j//8), measured ~1.7x faster on the cold first run at
-    # sf0.1 (4.9s -> 2.9s; warm 2.4 -> 2.2).
-    for k in range((num_bits + 7) // 8):
-        tf = tf.withColumn(
-            f"_s{k}",
-            F.conv(F.substring("h", k * 8 + 1, 8), 16, 10).cast("long"),
-        )
-    votes = []
-    for j in range(num_bits):
-        k, pos = j // 8, (7 - j % 8) * 4 + 3
-        bit = F.shiftright(F.col(f"_s{k}"), pos).bitwiseAND(F.lit(1))
-        votes.append(F.sum((bit * 2 - 1) * F.col("tf")).alias(f"v{j}"))
-    sums = tf.groupBy("doc_id").agg(*votes)
-    sig = None
-    for j in range(num_bits):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig + bit
-    return sums.select("doc_id", sig.cast("long").alias("simhash"))
-
-
 def simhash_near_dups(
     docs: DataFrame,
     num_bits: int = 32,
@@ -574,7 +514,6 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_blocks: int = 4,
-    sig_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Pairs of documents within a Hamming ball of the SimHash.
 
@@ -609,18 +548,17 @@ def simhash_near_dups(
     # MinHash band join the two sides here explode DIFFERENT column
     # sets (block vs complement sub-block), so their exchanges are NOT
     # identical and ReuseExchange cannot share them — measured: pinned
-    # ~3.0s vs unpinned ~5.0s at sf0.1. Persist stays the default;
-    # sig_storage=None opts out. Block+sub rows are emitted in a
-    # single map-side pass (inline explode), not a union over the
+    # ~3.0s vs unpinned ~5.0s at sf0.1. Block+sub rows are emitted in
+    # a single map-side pass (inline explode), not a union over the
     # same subtree.
     if max_hamming > num_blocks - 1:
-        # validate BEFORE the pin: raising after _maybe_pin would leak
+        # validate BEFORE the pin: raising after it would leak
         # a ledger-registered persist that lingers until the next query
         raise ValueError(
             f"pigeonhole blocking with {num_blocks} blocks is only exact "
             f"for max_hamming <= {num_blocks - 1}, got {max_hamming}"
         )
-    sigs = _maybe_pin(simhash(docs, num_bits, id_col, text_col), sig_storage)
+    sigs = pin(simhash(docs, num_bits, id_col, text_col))
     return simhash_pairs_from_sigs(sigs, num_bits, max_hamming, num_blocks)
 
 
@@ -709,7 +647,6 @@ def multi_signal_dedup(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokens_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Per-document dedup report combining the three text signals —
     exact content hash, MinHash-LSH verified Jaccard, SimHash Hamming
@@ -721,9 +658,9 @@ def multi_signal_dedup(
     This is the 100-TB shape of running the dedup family: the corpus
     scan + normalize + tokenize is the dominant shared cost, and the
     standalone operators each repeat it — a real curation run computes
-    the token table once (`tokens_storage`, DISK_ONLY at crawl scale)
-    and derives shingles (MinHash/Jaccard side) and token TF votes
-    (SimHash side) and the content hash from the same blocks.  Each
+    the token table once and derives shingles (MinHash/Jaccard side)
+    and token TF votes (SimHash side) and the content hash from the
+    same blocks.  Each
     signal's own shuffle/blocking design is unchanged (the per-signal
     operators are called on the shared tables, not reimplemented).
 
@@ -732,9 +669,8 @@ def multi_signal_dedup(
     for exact+minhash+simhash back-to-back — 1.27x at this SF, where
     the shared scan is cheap; at crawl scale the composite's two
     saved corpus scans+normalizes dominate.  The tokens pin itself
-    was a wash warm (2.0 pinned vs 2.1 unpinned best-of-3) but is the
-    right default: at crawl scale the re-derived subtree is
-    scan-bound, the case _maybe_pin documents.
+    was a wash warm (2.0 pinned vs 2.1 unpinned best-of-3) but stays:
+    at crawl scale the re-derived subtree is scan-bound.
     """
     if max_hamming > 3:
         # the SimHash stage runs with the default 4 blocks; validate
@@ -744,11 +680,10 @@ def multi_signal_dedup(
             "multi_signal_dedup's SimHash stage uses 4 pigeonhole "
             f"blocks (exact for max_hamming <= 3), got {max_hamming}"
         )
-    toks = _maybe_pin(
+    toks = pin(
         token_table(docs, id_col, text_col).withColumn(
             "content_hash", _content_hash()
-        ),
-        tokens_storage,
+        )
     )
     # exact groups from the shared token array (concat_ws(" ", toks)
     # rebuilds exactly the normalized text: normalize collapses all
@@ -848,7 +783,6 @@ def repeated_ngram_report(
     flag_share: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokens_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Per-document report of content covered by k-grams that repeat
     ACROSS documents — the substring-level dedup signal of Lee et al.,
@@ -872,12 +806,12 @@ def repeated_ngram_report(
     construction. The island merge runs in doc-partitioned windows,
     and both follow-up groupBys reuse that partitioning (no extra
     exchange). Per-doc cost is linear in tokens; nothing is quadratic
-    in corpus size. The token table is PINNED (``tokens_storage``) —
-    three consumers read it (positional grams, per-doc distinct grams,
-    the doc base) and each would otherwise re-run the normalize scan
+    in corpus size. The token table is PINNED — three consumers read
+    it (positional grams, per-doc distinct grams, the doc base) and
+    each would otherwise re-run the normalize scan
     (sf0.1 interleaved best-of-3: 1.77s pinned vs 2.54s not).
     """
-    toks = _maybe_pin(token_table(docs, id_col, text_col), tokens_storage)
+    toks = pin(token_table(docs, id_col, text_col))
     base = toks.select("doc_id", F.size("toks").cast("int").alias("n_tokens"))
     dp = _cross_doc_dup_positions(toks, k, min_docs)
     w_prev = (
@@ -955,7 +889,6 @@ def trim_repeated_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokens_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Remove cross-document duplicated k-gram spans from every
     document — the TRANSFORM half of Lee et al.'s substring dedup
@@ -977,11 +910,11 @@ def trim_repeated_spans(
     corpus tokens; the per-doc collect is bounded by document length,
     the same bound `documents.text` itself already imposes on a row.
     Four consumers read the token table (base, positional grams,
-    distinct grams, the position-word explode) — it is PINNED
-    (``tokens_storage``) so the corpus normalize scan runs once
-    (sf0.1 interleaved best-of-3: 2.35s pinned vs 2.93s not).
+    distinct grams, the position-word explode) — it is PINNED so the
+    corpus normalize scan runs once (sf0.1 interleaved best-of-3:
+    2.35s pinned vs 2.93s not).
     """
-    toks = _maybe_pin(token_table(docs, id_col, text_col), tokens_storage)
+    toks = pin(token_table(docs, id_col, text_col))
     base = toks.select("doc_id", F.size("toks").cast("int").alias("n_tokens"))
     dp = _cross_doc_dup_positions(toks, k, min_docs)
     covered = dp.select(
@@ -1021,7 +954,6 @@ def maximal_dup_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokens_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """MAXIMAL duplicated passages per document — one row per maximal
     contiguous run of tokens covered by cross-document duplicated
@@ -1048,7 +980,7 @@ def maximal_dup_spans(
     doc-partitioned island windows, span text re-assembled by a
     ``slice`` of the pinned token array (never a global sort).
     """
-    toks = _maybe_pin(token_table(docs, id_col, text_col), tokens_storage)
+    toks = pin(token_table(docs, id_col, text_col))
     dp = _cross_doc_dup_positions(toks, k, min_docs)
     w_prev = (
         W_.partitionBy("doc_id")
@@ -1253,8 +1185,6 @@ def incremental_dedup(
     max_df: int | None = 50,
     id_col: str = "doc_id",
     text_col: str = "text",
-    capped_storage: str | None = None,
-    tokens_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Per NEW document: ``(doc_id, verdict, match_id, jaccard)`` with
     verdict ``exact_dup`` (normalized text already in the corpus,
@@ -1275,9 +1205,8 @@ def incremental_dedup(
     :func:`jaccard_pairs`. Sizes on both sides use the capped
     vocabulary, keeping the score a true Jaccard on the filtered
     space. At 100 TB the corpus shingle table is the dominant cost:
-    pin it via ``capped_storage`` when classifying several batches in
-    one session, and materialize it as a bucketed table (bucketed on
-    ``s``) to amortize across loads.
+    materialize it as a bucketed table (bucketed on ``s``) to amortize
+    across loads (:func:`build_dedup_index`).
 
     Determinism: integer counts -> exact double division; best match
     breaks score ties on smallest corpus id via row_number.
@@ -1293,13 +1222,9 @@ def incremental_dedup(
     # candidate join, sizes), and unpinned each re-scans+normalizes —
     # free under a warm local page cache (A/B: 2.24s vs 2.28s warm at
     # sf0.1) but 2.8x on the cold first pass (7.7s vs 2.7s), which is
-    # the crawl-scale shape.  DISK_ONLY for TB corpora.
-    toks_new = _maybe_pin(
-        token_table(new_docs, id_col, text_col), tokens_storage
-    )
-    toks_ex = _maybe_pin(
-        token_table(existing_docs, id_col, text_col), tokens_storage
-    )
+    # the crawl-scale shape.
+    toks_new = pin(token_table(new_docs, id_col, text_col))
+    toks_ex = pin(token_table(existing_docs, id_col, text_col))
     new_h = toks_new.select("doc_id", _content_hash().alias("content_hash"))
     ex_canon = (
         toks_ex.select(
@@ -1320,7 +1245,6 @@ def incremental_dedup(
         # not shift the stop set), then applied to both sides
         sh_ex, stop = _df_capped(sh_ex, max_df)
         sh_new = sh_new.join(F.broadcast(stop), "s", "left_anti")
-    sh_ex = _maybe_pin(sh_ex, capped_storage)
     sizes_new = sh_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_new"))
     sizes_ex = (
         sh_ex.groupBy("doc_id")

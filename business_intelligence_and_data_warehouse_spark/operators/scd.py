@@ -1,9 +1,9 @@
 """Slowly-changing-dimension operators (SCD Type 1 and Type 2).
 
 Spark has no built-in dimension-maintenance operator, and this engine's
-warehouse layer is plain parquet (no Delta MERGE in this environment),
-so both SCD classes are implemented as deterministic batch rewrites —
-the "pure-Spark rewrite" path of SURVEY §2.3-J4/J5.
+warehouse layer is plain parquet (no Delta MERGE), so both SCD classes
+are implemented as deterministic batch rewrites — the "pure-Spark
+rewrite" path of SURVEY §2.3-J4/J5.
 
 Reference semantics being reproduced:
 
@@ -69,97 +69,6 @@ def scd1_upsert(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__priority")
     )
-
-
-def _scd1_merge_clauses(nat_key: Sequence[str]) -> str:
-    """The ON fragment a Delta ``MERGE ... WHEN MATCHED UPDATE SET *
-    WHEN NOT MATCHED INSERT *`` would use for the SCD1 upsert — shared
-    by the jar-free twin so the condition logic is exercised in CI
-    while the Delta writer jar is absent (same contract as
-    :func:`_delta_merge_clauses` for SCD2)."""
-    return " AND ".join(f"t.{k} = s.{k}" for k in nat_key)
-
-
-def scd1_upsert_via_merge_semantics(
-    dim: DataFrame,
-    batch: DataFrame,
-    nat_key: Sequence[str],
-    order_col: str | None = None,
-) -> DataFrame:
-    """Jar-free MERGE twin of :func:`scd1_upsert`: reduces the batch
-    to one winner per key (the MERGE source must be key-unique — the
-    same pre-dedup a Delta route needs to avoid
-    ``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET``), then applies
-    ``WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN INSERT *``
-    over t/s-aliased frames with the shared ON fragment.  ``dim`` must
-    be key-unique (it is a dimension) and the natural key NON-NULL on
-    both sides: the MERGE ON predicate is ``t.k = s.k`` — the real
-    Delta semantics, where a NULL key never matches — while the
-    batch rewrite's window groups NULL keys together, so NULL keys
-    are the one place twin and rewrite legitimately diverge.
-    Equivalence with the batch-rewrite :func:`scd1_upsert` is
-    property-tested in tests/test_warehouse.py.
-
-    The tie-break basis for the in-batch dedup is DIM column order
-    (``scd1_upsert`` ties on its union frame, whose column order is
-    the existing side's), so the two forms pick identical winners
-    whatever order the batch's columns arrive in."""
-    nat_key = list(nat_key)
-    for df, who in (
-        (dim, "scd1_upsert_via_merge_semantics dim"),
-        (batch, "scd1_upsert_via_merge_semantics batch"),
-    ):
-        clash = [c for c in ("_m", "__rn") if c in df.columns]
-        if clash:
-            raise ValueError(
-                f"{who}: input already has reserved column(s) {clash}; "
-                "rename them before calling"
-            )
-    key_cond = _scd1_merge_clauses(nat_key)
-    order = [F.desc(order_col)] if order_col is not None else []
-    order += [F.col(c) for c in dim.columns if c not in nat_key]
-    if not order:  # key-only schema: rows per key are identical
-        order = [F.col(k) for k in nat_key]
-    w = W.partitionBy(*nat_key).orderBy(*order)
-    s_unique = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    t = dim.alias("t")
-    s = s_unique.withColumn("_m", F.lit(True)).alias("s")
-    attrs = [c for c in dim.columns if c not in nat_key]
-    joined = t.join(s, F.expr(key_cond), "left")
-    matched = F.col("_m").isNotNull()
-    updated = joined.select(
-        *[F.col(f"t.{k}").alias(k) for k in nat_key],
-        *[
-            F.when(matched, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            for c in attrs
-        ],
-    )
-    inserts = s_unique.alias("s").join(
-        dim.alias("t"), F.expr(key_cond), "left_anti"
-    )
-    cols = [*nat_key, *attrs]
-    return updated.select(*cols).unionByName(inserts.select(*cols))
-
-
-def tombstone_delete_via_merge_semantics(
-    table: DataFrame,
-    tombstones: DataFrame,
-    key_col: str,
-) -> DataFrame:
-    """Jar-free MERGE twin of the tombstone sweep: ``MERGE ... WHEN
-    MATCHED THEN DELETE`` over the shared ON fragment — returns the
-    post-merge table content (the survivor set).  Equivalence with
-    the marker-join path (operators/retention.propagate_deletes) is
-    property-tested in tests/test_warehouse.py; only the Delta writer
-    itself stays unexercised while the jar is absent."""
-    key_cond = _scd1_merge_clauses([key_col])
-    t = table.alias("t")
-    s = tombstones.select(F.col(key_col)).distinct().alias("s")
-    return t.join(s, F.expr(key_cond), "left_anti").select(*table.columns)
 
 
 # ---------------------------------------------------------------------------
@@ -281,166 +190,6 @@ def scd2_merge(
         .unionByName(corrected_versions)
         .unionByName(first_versions)
     )
-
-
-def _delta_merge_clauses(
-    nat_key: Sequence[str], tracked: Sequence[str], load_date: str
-) -> tuple[str, str, str, str]:
-    """The exact ON/WHEN SQL fragments the Delta MERGE route executes
-    — returned as (key_cond, open_cond, close_cond, correct_cond) over
-    ``t``/``s`` aliases.  Shared by :func:`scd2_merge_delta` and the
-    jar-free simulation :func:`scd2_merge_via_merge_semantics`, so the
-    MERGE-condition logic is exercised in CI even while the Delta jar
-    is absent (only the writer differs)."""
-    key_cond = " AND ".join(f"t.{k} = s.{k}" for k in nat_key)
-    open_cond = f"t.effective_to = DATE'{HIGH_DATE}'"
-    changed_cond = "NOT (" + " AND ".join(
-        f"t.{c} <=> s.{c}" for c in tracked
-    ) + ")"
-    close_cond = f"{changed_cond} AND t.effective_from < DATE'{load_date}'"
-    correct_cond = f"{changed_cond} AND t.effective_from = DATE'{load_date}'"
-    return key_cond, open_cond, close_cond, correct_cond
-
-
-def scd2_merge_via_merge_semantics(
-    dim: DataFrame,
-    batch: DataFrame,
-    nat_key: Sequence[str],
-    tracked: Sequence[str],
-    load_date: str,
-) -> DataFrame:
-    """Jar-free twin of :func:`scd2_merge_delta`: applies the SAME
-    merge clauses (shared fragment strings, evaluated over t/s-aliased
-    DataFrames) as a pure-Spark transformation and returns the post-
-    merge dimension content instead of rewriting a Delta table.
-
-    Semantics mirror the two whenMatchedUpdate clauses + append pass:
-    matched-open-changed rows started before ``load_date`` get their
-    window closed; ones started ON ``load_date`` get tracked
-    attributes replaced in place; successor/new versions come from the
-    batch-rewrite classification against the pre-merge snapshot.
-    Equivalence with :func:`scd2_merge` is property-tested in
-    tests/test_warehouse.py (parquet-backed dim — the writer is the
-    only part of the Delta route left unexercised)."""
-    nat_key = list(nat_key)
-    tracked = list(tracked)
-    key_cond, open_cond, close_cond, correct_cond = _delta_merge_clauses(
-        nat_key, tracked, load_date
-    )
-    t = dim.alias("t")
-    s = batch.withColumn("_m", F.lit(True)).alias("s")
-    joined = t.join(s, F.expr(key_cond) & F.expr(open_cond), "left")
-    matched = F.col("_m").isNotNull()
-    close = matched & F.expr(close_cond)
-    correct = matched & F.expr(correct_cond)
-    updated = joined.select(
-        *[F.col(f"t.{k}").alias(k) for k in nat_key],
-        *[
-            F.when(correct, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            for c in tracked
-        ],
-        F.col("t.effective_from").alias("effective_from"),
-        F.when(close, F.to_date(F.lit(load_date)))
-        .otherwise(F.col("t.effective_to"))
-        .alias("effective_to"),
-        F.col("t.version").alias("version"),
-    )
-    # append pass: identical to scd2_merge_delta's insert computation,
-    # with `dim` already being the pre-merge snapshot (no time travel
-    # needed — this path never mutates in place)
-    pre = scd2_merge(dim, batch, nat_key, tracked, load_date)
-    open_on_load = (
-        F.col("effective_from") == F.to_date(F.lit(load_date))
-    ) & (F.col("effective_to") == F.to_date(F.lit(HIGH_DATE)))
-    inserts = pre.filter(open_on_load).join(
-        dim.filter(open_on_load).select(*nat_key), nat_key, "left_anti"
-    )
-    cols = [*nat_key, *tracked, "effective_from", "effective_to", "version"]
-    return updated.select(*cols).unionByName(inserts.select(*cols))
-
-
-def scd2_merge_delta(
-    spark,
-    dim_path: str,
-    batch: DataFrame,
-    nat_key: Sequence[str],
-    tracked: Sequence[str],
-    load_date: str,
-) -> None:
-    """Route one SCD2 load through ``DeltaTable.merge`` — the ACID
-    in-place path for production lakes (the batch rewrite
-    :func:`scd2_merge` is the plan-equivalent fallback this engine
-    uses when the Delta runtime is absent; see
-    sources/warehouse.delta_available).
-
-    Two passes over the Delta table at ``dim_path``:
-
-    1. MERGE on (natural key, open window): a changed key whose open
-       version started before ``load_date`` gets its window CLOSED
-       (`effective_to = load_date`); one that started ON ``load_date``
-       gets its attributes REPLACED in place (the same-day-correction
-       rule of :func:`scd2_merge`, which avoids zero-length windows).
-    2. Append the successor/new versions, classified against the
-       pre-merge snapshot PINNED BY VERSION (Delta time travel), so
-       the classification can never observe pass 1's updates — not
-       even after a cache eviction recomputes its lineage.
-
-    Equivalence with :func:`scd2_merge` is property-tested in
-    tests/test_warehouse.py::test_scd2_delta_merge_equivalence —
-    skipped (with reason) until the Delta jar is on the classpath.
-    """
-    from delta.tables import DeltaTable  # caller gates on delta_available
-
-    nat_key = list(nat_key)
-    tracked = list(tracked)
-    dt = DeltaTable.forPath(spark, dim_path)
-
-    # Freeze the PRE-merge snapshot BY VERSION, not by cache: the MERGE
-    # below rewrites the table in place, and a cached DataFrame whose
-    # blocks are evicted would silently recompute its lineage against
-    # the POST-merge snapshot — the classification must never observe
-    # its own updates. versionAsOf is a durable pin (Delta time travel).
-    version = dt.history(1).select("version").first()[0]
-    dim = (
-        spark.read.format("delta")
-        .option("versionAsOf", version)
-        .load(dim_path)
-    )
-    pre = scd2_merge(dim, batch, nat_key, tracked, load_date)
-
-    key_cond, open_cond, close_cond, correct_cond = _delta_merge_clauses(
-        nat_key, tracked, load_date
-    )
-    (
-        dt.alias("t")
-        .merge(batch.alias("s"), f"({key_cond}) AND {open_cond}")
-        .whenMatchedUpdate(
-            condition=close_cond,
-            set={"effective_to": f"DATE'{load_date}'"},
-        )
-        .whenMatchedUpdate(
-            condition=correct_cond,
-            set={c: f"s.{c}" for c in tracked},
-        )
-        .execute()
-    )
-    # successor + first versions = exactly the rows of the batch
-    # rewrite that opened on load_date with the batch's attributes,
-    # minus keys whose PRE-merge open version also started on
-    # load_date (unchanged same-day rows and same-day corrections —
-    # the latter were updated in place by pass 1)
-    inserts = pre.filter(
-        (F.col("effective_from") == F.to_date(F.lit(load_date)))
-        & (F.col("effective_to") == F.to_date(F.lit(HIGH_DATE)))
-    ).join(
-        dim.filter(
-            (F.col("effective_from") == F.to_date(F.lit(load_date)))
-            & (F.col("effective_to") == F.to_date(F.lit(HIGH_DATE)))
-        ).select(*nat_key),
-        nat_key,
-        "left_anti",
-    )
-    inserts.write.format("delta").mode("append").save(dim_path)
 
 
 def scd2_asof_lookup(

@@ -46,7 +46,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens_ws
-from .dedup import _maybe_pin, token_table
+from .caching import pin
+from .dedup import token_table
 from .split import _hex_val
 
 LOG_SCALE = 1_000_000  # FLOOR(ln * 1e6) — the log-space snap
@@ -70,7 +71,6 @@ def bigram_lm_scores(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokens_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """(doc_id, n_bigrams, lm_score) — mean add-one-smoothed bigram
     log-probability per document under the corpus's own bigram LM.
@@ -82,18 +82,18 @@ def bigram_lm_scores(
     (no bigram evidence), mirroring SQL aggregate semantics.
 
     Plan shape: bigram and unigram positions explode map-side from one
-    PINNED tokenize pass (``tokens_storage``, the multi_signal_dedup
-    knob — three subtrees read it: the bigram positions twice (count
-    pass + scored join) plus the unigram explode, and without the pin
-    each re-runs the normalize regex over the corpus); two count groupBys
-    (bigram-keyed, unigram-keyed); positions join the count tables on
-    those keys and aggregate back to one row per document. The
+    PINNED tokenize pass (three subtrees read it: the bigram positions
+    twice (count pass + scored join) plus the unigram explode, and
+    without the pin each re-runs the normalize regex over the corpus);
+    two count groupBys (bigram-keyed, unigram-keyed); positions join
+    the count tables on those keys and aggregate back to one row per
+    document. The
     unigram join key is Zipf-skewed — AQE skew splitting is the
     mitigation at scale, not salting, since the skew is
     data-dependent and the join is a plain equi-join.
     Pin A/B (sf0.1, interleaved best-of-3): 1.15s pinned vs 1.36s not.
     """
-    toks = _maybe_pin(token_table(docs, id_col, text_col), tokens_storage)
+    toks = pin(token_table(docs, id_col, text_col))
     # (doc_id, w1, bg) bigram positions, built map-side so w1 (the
     # conditioning unigram) rides along without re-splitting bg later
     pos = toks.select(
@@ -221,7 +221,6 @@ def dsir_weights(
     num_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    occ_storage: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """(doc_id, n_tokens, dsir_logweight) — per-document hashed-unigram
     importance weight toward the rows where ``is_target`` holds.
@@ -245,7 +244,7 @@ def dsir_weights(
     ``F.col("lang") == "en"``); target rows also contribute to the
     source distribution, matching the paper's raw/target split.
 
-    The bucketed-occurrence table is PINNED (``occ_storage``) — the
+    The bucketed-occurrence table is PINNED — the
     bucket-statistics aggregate and the per-document counts both read
     it, and it is far narrower than the corpus text (doc id + bool +
     one int per token), so caching it beats re-running the
@@ -266,7 +265,7 @@ def dsir_weights(
             % num_buckets
         ).alias("b"),
     )
-    occ = _maybe_pin(occ, occ_storage)
+    occ = pin(occ)
     stats = occ.groupBy("b").agg(
         F.sum(F.when(F.col("is_t"), 1).otherwise(0)).alias("tc"),
         F.count(F.lit(1)).alias("sc"),

@@ -66,7 +66,7 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ReuseExchange cannot share them), so it is pinned: sf0.1
     interleaved best-of-3 measured pinned 0.77s vs unpinned 1.00s.
     """
-    from ..operators.dedup import _maybe_pin
+    from ..operators.caching import pin
     from ..operators.vocab import (
         induce_vocab_from_occ,
         occurrences,
@@ -74,7 +74,7 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    occ = _maybe_pin(occurrences(docs), "MEMORY_AND_DISK")
+    occ = pin(occurrences(docs))
     return oov_report_from_occ(
         occ, induce_vocab_from_occ(occ, _VOCAB_V)
     ).orderBy("doc_id")

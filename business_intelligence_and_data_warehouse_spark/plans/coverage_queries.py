@@ -75,23 +75,14 @@ def churn_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in history length; the explode is a map-side 6× fan-out
     regardless of how many months of history exist.
     """
-    return _churn_rolling(spark, sf_dir, active_storage=None)
+    return _churn_rolling(spark, sf_dir)
 
 
-def _churn_rolling(
-    spark: SparkSession, sf_dir: str, active_storage: str | None = None
-) -> DataFrame:
-    """Query body with the A/B knob: ``active_storage`` persists the
-    expanded active set at the named StorageLevel (None = rely on
-    ReuseExchange).  Interleaved best-of-3 at sf0.1 under the r3 cache
-    ledger (none/pin alternating, warm session): unpinned best 1.1s vs
-    pinned best 2.6s — the three consumers still read the
-    explode+distinct through identical exchanges, so ReuseExchange
-    shares them and a pin is 2x+ pure cache-write overhead; the knob
-    stays None and exists for scan-bound inputs (a 100-TB orders scan
-    re-read per consumer).  The r2->r3 bench delta (1.87->2.57s) was
-    the ledger removing cross-invocation cache leaks, not a plan
-    regression — the plan is already the one we'd want."""
+def _churn_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Query body shared with :func:`whatif_churn_scenarios`.  The
+    r2->r3 bench delta (1.87->2.57s) was the cache ledger removing
+    cross-invocation cache leaks, not a plan regression — the plan is
+    already the one we'd want."""
     orders = load_table(spark, sf_dir, "orders")
     pairs = (
         orders.select(
@@ -103,8 +94,9 @@ def _churn_rolling(
     months = pairs.select("m").distinct()
     # `active` feeds three consumers (counts, the shifted prev set, and
     # the churn anti-join) — all inside ONE output plan, so Catalyst's
-    # ReuseExchange shares the explode+distinct exchange; an explicit
-    # persist measured slightly slower (cache write vs free reuse).
+    # ReuseExchange shares the explode+distinct exchange and it stays
+    # unpinned: interleaved best-of-3 at sf0.1 measured unpinned 1.1s
+    # vs pinned 2.6s (pure cache-write overhead).
     active = (
         pairs.select(
             F.explode(
@@ -115,12 +107,6 @@ def _churn_rolling(
         .join(months, "m", "left_semi")
         .distinct()
     )
-    if active_storage is not None:
-        from pyspark import StorageLevel
-
-        from ..operators.caching import pin
-
-        active = pin(active, getattr(StorageLevel, active_storage))
     counts = active.groupBy("m").agg(F.count(F.lit(1)).alias("n_active"))
     prev = active.select(F.add_months("m", 1).alias("m"), "c").join(
         months, "m", "left_semi"

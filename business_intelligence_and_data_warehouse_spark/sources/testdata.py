@@ -90,28 +90,22 @@ def table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     return n
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, use_cache: bool = True
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown testdata table {name!r}; have {TABLES}")
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    if use_cache:
-        # evict entries from OTHER sessions first (hit or miss): their
-        # DataFrames reference stopped SparkContexts and can never hit
-        # again, so a process that cycles many sessions would otherwise
-        # accumulate dead plans (single-session processes lose nothing
-        # — their app id matches every cached key; the dict is tiny)
-        app_id = key[0]
-        for stale in [k for k in _TABLE_CACHE if k[0] != app_id]:
-            del _TABLE_CACHE[stale]
-        cached = _TABLE_CACHE.get(key)
-        if cached is not None:
-            return cached
-    df = _read_table(spark, sf_dir, name)
-    if use_cache:
-        _TABLE_CACHE[key] = df
-    return df
+    # evict entries from OTHER sessions first (hit or miss): their
+    # DataFrames reference stopped SparkContexts and can never hit
+    # again, so a process that cycles many sessions would otherwise
+    # accumulate dead plans (single-session processes lose nothing
+    # — their app id matches every cached key; the dict is tiny)
+    app_id = key[0]
+    for stale in [k for k in _TABLE_CACHE if k[0] != app_id]:
+        del _TABLE_CACHE[stale]
+    cached = _TABLE_CACHE.get(key)
+    if cached is None:
+        cached = _TABLE_CACHE[key] = _read_table(spark, sf_dir, name)
+    return cached
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

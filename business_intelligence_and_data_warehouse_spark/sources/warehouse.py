@@ -9,9 +9,8 @@ inserts (SURVEY §4); the Spark-native equivalents are:
   difference between an O(data) network step and none at 100 TB.
 
 Delta/Iceberg are the production table formats for this layer
-(ACID + MERGE + Z-order); their jars are not in this environment, so
-tables use the session catalog's parquet with an import-guarded Delta
-hook.
+(ACID + MERGE + Z-order); their jars are not part of this project, so
+tables are the session catalog's parquet.
 """
 
 from __future__ import annotations
@@ -37,49 +36,14 @@ def save_bucketed(
     writer.saveAsTable(table)
 
 
-def delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake runtime is USABLE in this session: jar
-    on the classpath AND the session configured with Delta's SQL
-    extension/catalog.  The classpath check alone is a false positive
-    on images that bundle the jars but build a vanilla session —
-    `saveAsTable(format='delta')` would then raise instead of the
-    intended graceful parquet fallback (r10 review finding)."""
-    try:
-        # py4j resolves missing packages lazily, so force a class load
-        spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-    except Exception:
-        return False
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    return "io.delta.sql.DeltaSparkSessionExtension" in ext
-
-
 def write_table(
     df: DataFrame,
     table: str,
     partition_cols: tuple[str, ...] = (),
-    fmt: str | None = None,
+    fmt: str = "parquet",
 ) -> None:
-    """Warehouse table write: Delta when available, else parquet.
-
-    Even with ``delta_available`` true, the write falls back to parquet
-    if the Delta path fails for an environment reason — the contract is
-    "the table lands", not "Delta or bust" (an explicit ``fmt`` is
-    honored verbatim and never falls back)."""
-    if fmt is not None:
-        _write_table_as(df, table, partition_cols, fmt)
-        return
-    if delta_available(df.sparkSession):
-        try:
-            _write_table_as(df, table, partition_cols, "delta")
-            return
-        except Exception:
-            pass  # fall through: the parquet table is the contract
-    _write_table_as(df, table, partition_cols, "parquet")
-
-
-def _write_table_as(
-    df: DataFrame, table: str, partition_cols: tuple[str, ...], fmt: str
-) -> None:
+    """Overwrite the managed table ``table`` with ``df`` in format
+    ``fmt``, partitioned by ``partition_cols``."""
     writer = df.write.format(fmt).mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

@@ -3,6 +3,8 @@ be live; invoking any registered query releases the previous one's."""
 
 from __future__ import annotations
 
+import pytest
+
 from business_intelligence_and_data_warehouse_spark.operators.caching import (
     _PINNED,
     eager_pin,
@@ -54,3 +56,39 @@ def test_query_invocation_releases_previous_pins(spark, sf_dir):
     # any next query invocation must drop the previous pins first
     QUERIES["q1a_yoy_growth"](spark, sf_dir).count()
     assert all(p not in _PINNED for p in pinned_before)
+
+
+# Ledgered pins per query once it is built and collected.  Each count is
+# the sum of the fixed pin / no-pin choices at the operator sites the
+# query reaches (dedup, corpus_quality, selection, basket, curation, the
+# churn body), so a site that starts or stops persisting changes it.
+_PIN_SITES = {
+    "dedup_ngram_jaccard": 1,
+    "dedup_containment": 1,
+    "dedup_minhash_lsh": 0,
+    "dedup_clusters": 1,
+    "dedup_simhash": 1,
+    "dedup_multi_signal": 2,
+    "dedup_incremental": 2,
+    "dedup_lsh_recall_report": 3,
+    "dedup_repeated_ngrams": 1,
+    "dedup_max_dup_spans": 1,
+    "corpus_curation": 0,
+    "corpus_curation_funnel": 0,
+    "pipeline_curate_pack": 0,
+    "corpus_vocab_coverage": 1,
+    "text_lm_perplexity": 1,
+    "dsir_importance_weights": 1,
+    "text_substring_trim": 1,
+    "contamination_bloom": 3,
+    "basket_pair_lift": 0,
+    "churn_rolling_window": 0,
+    "whatif_churn_scenarios": 0,
+    "stream_dedup_neardup": 0,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PIN_SITES))
+def test_query_pins_expected_sites(spark, sf_dir, name):
+    QUERIES[name](spark, sf_dir).collect()
+    assert len(_PINNED) == _PIN_SITES[name]

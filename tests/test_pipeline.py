@@ -877,9 +877,7 @@ def test_incremental_dedup_consistent_with_standalone_operators(spark, sf_dir):
 
     # near tier: jaccard_pairs over the union, restricted to cross
     # (new, existing) pairs, must reproduce the best match + score
-    pairs = jaccard_pairs(
-        shingle_table(docs, 3), 0.5, max_df=None, capped_storage=None
-    ).collect()
+    pairs = jaccard_pairs(shingle_table(docs, 3), 0.5, max_df=None).collect()
     best = {}
     for r in pairs:
         a, b = r["doc_a"], r["doc_b"]
@@ -1393,10 +1391,11 @@ def test_simhash_arrow_matches_jvm_form(spark):
     absent — on unicode, repeated-token and single-token docs, at
     32 and narrower widths."""
     from business_intelligence_and_data_warehouse_spark.operators.dedup import (
-        _simhash_from_tokens_jvm,
         simhash_from_tokens,
         token_table,
     )
+
+    from .dedup_reference import simhash_from_tokens_jvm
 
     docs = _docs(
         spark,
@@ -1425,7 +1424,7 @@ def test_simhash_arrow_matches_jvm_form(spark):
         }
         want = {
             r.doc_id: r.simhash
-            for r in _simhash_from_tokens_jvm(toks, bits).collect()
+            for r in simhash_from_tokens_jvm(toks, bits).collect()
         }
         assert got == want, (bits, got, want)
     assert 7 not in got  # empty token array stays absent

@@ -331,8 +331,7 @@ def test_basket_pairs_share_gather_and_topk(spark):
     # the only nested loop is the 1-row totals scalar, and top-k is a
     # TakeOrdered, not a global sort
     # (static explain pre-AQE shows the gather subtree per consumer —
-    # identical exchanges dedupe at runtime, the rest column-prune;
-    # see the operator's gather_storage knob for scan-bound inputs)
+    # identical exchanges dedupe at runtime, the rest column-prune)
     plan = plan_of(spark, "basket_pair_lift")
     assert "CartesianProduct" not in plan, plan
     assert "Generate" in plan, plan

@@ -198,49 +198,6 @@ def test_scd2_invariants_hold_for_any_batch_sequence(spark, batches):
     assert again.count() == len(rows)
 
 
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(batch=_BATCH, same_day=st.booleans())
-def test_merge_semantics_twin_matches_batch_rewrite(spark, batch, same_day):
-    """Property form of the jar-free Delta MERGE twin: for ANY batch
-    (changes, no-ops, new keys) against a dimension that already holds
-    history — including open versions that started ON the load date
-    (the same-day-correction clause) — the shared-clause execution
-    must equal scd2_merge exactly."""
-    from business_intelligence_and_data_warehouse_spark.operators.scd import (
-        scd2_merge_via_merge_semantics,
-    )
-
-    dim = scd2_initial_load(
-        spark.createDataFrame(
-            [(1, "z", "z"), (2, "y", "y")], "k int, seg string, attr string"
-        ),
-        "2016-01-01",
-    )
-    # a prior load gives keys real history; optionally ON the same day
-    # as the final load so the correction clause gets exercised
-    prior = spark.createDataFrame(
-        [(1, "p", "p"), (3, "q", "q")], "k int, seg string, attr string"
-    )
-    load2 = "2017-05-10"
-    dim = scd2_merge(
-        dim, prior, ["k"], ["seg", "attr"], load2 if same_day else "2017-01-15"
-    )
-    bdf = spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in batch.items()],
-        "k int, seg string, attr string",
-    )
-    want = scd2_merge(dim, bdf, ["k"], ["seg", "attr"], load2)
-    got = scd2_merge_via_merge_semantics(dim, bdf, ["k"], ["seg", "attr"], load2)
-    cols = sorted(want.columns)
-    assert sorted(tuple(r) for r in got.select(*cols).collect()) == sorted(
-        tuple(r) for r in want.select(*cols).collect()
-    )
-
-
 def test_snapshot_diff_reports_removed_keys(spark):
     """The registry query's oracle can never produce 'removed' (SCD2
     merges don't delete); the generic classifier must still report a

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from business_intelligence_and_data_warehouse_spark.sources.testdata import load_table
 from business_intelligence_and_data_warehouse_spark.sources.warehouse import (
-    delta_available,
     save_bucketed,
     write_table,
 )
@@ -62,12 +61,6 @@ def test_partitioned_table_prunes(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS orders_by_year")
 
 
-def test_delta_gate_reports_unavailable(spark):
-    # this environment ships no Delta jars; the gate must say so rather
-    # than fail at write time
-    assert delta_available(spark) is False
-
-
 def test_orc_round_trip_preserves_values_and_prunes(spark, sf_dir, tmp_path):
     """ORC sink/source: values round-trip exactly and the scan pushes
     filters (S-family: a second columnar format besides parquet)."""
@@ -89,99 +82,6 @@ def test_orc_round_trip_preserves_values_and_prunes(spark, sf_dir, tmp_path):
     plan = back.filter(back.o_orderkey == 7)._jdf.queryExecution().toString()
     assert "orc" in plan.lower()
     assert "PushedFilters" in plan or "pushed" in plan.lower()
-
-
-def test_scd2_delta_merge_equivalence(spark, tmp_path):
-    """DeltaTable.merge routing must produce the same dimension as the
-    batch rewrite. Runs only when the Delta runtime lands on the
-    classpath; until then the import-guarded path stays documented and
-    this test records the skip reason."""
-    import pytest
-
-    if not delta_available(spark):
-        pytest.skip("Delta jar not on classpath (delta_available=False)")
-
-    from business_intelligence_and_data_warehouse_spark.operators.scd import (
-        scd2_initial_load,
-        scd2_merge,
-        scd2_merge_delta,
-    )
-
-    dim0 = scd2_initial_load(
-        spark.createDataFrame(
-            [(1, "a", "x"), (2, "b", "y")], "k int, attr string, extra string"
-        ),
-        effective_from="2024-01-01",
-    )
-    path = str(tmp_path / "dim_delta")
-    dim0.write.format("delta").save(path)
-    batch = spark.createDataFrame(
-        [(1, "a2", "x"), (3, "c", "z")], "k int, attr string, extra string"
-    )
-    expected = scd2_merge(dim0, batch, ["k"], ["attr", "extra"], "2024-06-01")
-    scd2_merge_delta(spark, path, batch, ["k"], ["attr", "extra"], "2024-06-01")
-    got = spark.read.format("delta").load(path)
-    cols = sorted(got.columns)
-    assert sorted(
-        tuple(r) for r in got.select(*cols).collect()
-    ) == sorted(tuple(r) for r in expected.select(*cols).collect())
-
-
-def test_scd2_merge_semantics_equivalence_jar_free(spark, tmp_path):
-    """The Delta route's MERGE-condition logic, exercised WITHOUT the
-    jar: scd2_merge_via_merge_semantics evaluates the SAME ON/WHEN
-    fragment strings (shared _delta_merge_clauses) over a
-    parquet-backed dimension and must reproduce the batch rewrite
-    exactly — same-day corrections, window closes, unchanged
-    pass-throughs, and new keys included.  Only the Delta writer
-    itself stays untested until a jar lands."""
-    from business_intelligence_and_data_warehouse_spark.operators.scd import (
-        scd2_initial_load,
-        scd2_merge,
-        scd2_merge_via_merge_semantics,
-    )
-
-    dim0 = scd2_initial_load(
-        spark.createDataFrame(
-            [(1, "a", "x"), (2, "b", "y"), (4, "d", None)],
-            "k int, attr string, extra string",
-        ),
-        effective_from="2024-01-01",
-    )
-    # parquet-backed temp catalog: the simulation reads a real table
-    path = str(tmp_path / "dim_pq")
-    dim0.write.parquet(path)
-    dim = spark.read.parquet(path)
-
-    def check(dim_df, batch_rows, load_date):
-        batch = spark.createDataFrame(
-            batch_rows, "k int, attr string, extra string"
-        )
-        want = scd2_merge(dim_df, batch, ["k"], ["attr", "extra"], load_date)
-        got = scd2_merge_via_merge_semantics(
-            dim_df, batch, ["k"], ["attr", "extra"], load_date
-        )
-        cols = sorted(want.columns)
-        assert sorted(
-            tuple(r) for r in got.select(*cols).collect()
-        ) == sorted(tuple(r) for r in want.select(*cols).collect())
-        return got
-
-    # load 1: change (k=1), unchanged (k=2), new key (k=3), null attr
-    # change (k=4 None -> 'z')
-    after1 = check(
-        dim, [(1, "a2", "x"), (2, "b", "y"), (3, "c", "z"), (4, "d", "z")],
-        "2024-06-01",
-    )
-    # load 2 ON THE SAME DAY: same-day correction must replace in
-    # place (no zero-length window), and a fresh change must close
-    after1_pq = str(tmp_path / "dim_pq2")
-    after1.write.parquet(after1_pq)
-    check(
-        spark.read.parquet(after1_pq),
-        [(1, "a3", "x"), (2, "b2", "y")],
-        "2024-06-01",
-    )
 
 
 def test_compact_parquet_reduces_files_and_preserves_rows(spark, sf_dir, tmp_path):
@@ -237,94 +137,23 @@ def test_compact_parquet_failure_leaves_source_intact(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(src).collect())) == n_before
 
 
-def test_scd1_merge_semantics_equivalence_jar_free(spark, tmp_path):
-    """The SCD1 upsert's MERGE form (WHEN MATCHED UPDATE SET * / WHEN
-    NOT MATCHED INSERT *, shared ON fragment) must reproduce the
-    batch-rewrite scd1_upsert exactly: in-batch last-wins dedup,
-    incoming-beats-existing, untouched keys passed through."""
-    import random
-
-    from business_intelligence_and_data_warehouse_spark.operators.scd import (
-        scd1_upsert,
-        scd1_upsert_via_merge_semantics,
-    )
-
-    rng = random.Random(41)
-    dim_rows = [(k, f"v{k}", k * 10) for k in range(30)]
-    path = str(tmp_path / "scd1_dim")
-    spark.createDataFrame(dim_rows, "k int, attr string, ord int").write.parquet(
-        path
-    )
-    dim = spark.read.parquet(path)
-    # batch: updates for some keys (with in-batch duplicates at
-    # different ord), brand-new keys, and keys it never touches
-    batch_rows = []
-    for k in list(range(0, 20, 3)) + list(range(100, 108)):
-        for _ in range(rng.randrange(1, 4)):
-            batch_rows.append((k, f"n{k}_{rng.randrange(9)}", rng.randrange(999)))
-    batch = spark.createDataFrame(batch_rows, "k int, attr string, ord int")
-
-    want = scd1_upsert(dim, batch, ["k"], order_col="ord")
-    got = scd1_upsert_via_merge_semantics(dim, batch, ["k"], order_col="ord")
-    cols = sorted(want.columns)
-    assert sorted(tuple(r) for r in got.select(*cols).collect()) == sorted(
-        tuple(r) for r in want.select(*cols).collect()
-    )
-
-
-def test_tombstone_merge_semantics_equivalence_and_del_guard(spark):
-    """MERGE ... WHEN MATCHED THEN DELETE == the marker-join survivor
-    set of propagate_deletes, on the root table; and the marker path
-    rejects inputs that already carry the reserved '_del' column."""
+def test_propagate_deletes_rejects_reserved_del_column(spark):
+    """The marker-join delete path rejects inputs that already carry
+    its reserved '_del' column."""
     import pytest as _pytest
 
     from business_intelligence_and_data_warehouse_spark.operators.retention import (
         propagate_deletes,
-    )
-    from business_intelligence_and_data_warehouse_spark.operators.scd import (
-        tombstone_delete_via_merge_semantics,
     )
 
     root = spark.createDataFrame(
         [(k, f"c{k}") for k in range(40)], "custkey int, name string"
     )
     ts = spark.createDataFrame([(k,) for k in range(0, 40, 7)], "custkey int")
-    cleaned, _audit = propagate_deletes(root, "customer", "custkey", ts, [])
-    want = sorted(tuple(r) for r in cleaned["customer"].collect())
-    got = sorted(
-        tuple(r)
-        for r in tombstone_delete_via_merge_semantics(root, ts, "custkey").collect()
-    )
-    assert got == want
     with _pytest.raises(ValueError, match="_del"):
         propagate_deletes(
             root.withColumn("_del", F.lit(0)), "customer", "custkey", ts, []
         )
-
-
-def test_scd1_merge_twin_null_keys_follow_merge_semantics(spark):
-    """Documented divergence pin: the MERGE ON predicate t.k = s.k
-    never matches NULL (real Delta semantics), so a NULL-key dim row
-    and a NULL-key batch row BOTH survive the twin — while the batch
-    rewrite's window groups NULLs and keeps one.  The docstring
-    declares non-null keys as the equivalence contract; this test
-    keeps the divergence intentional rather than accidental."""
-    from business_intelligence_and_data_warehouse_spark.operators.scd import (
-        scd1_upsert,
-        scd1_upsert_via_merge_semantics,
-    )
-
-    dim = spark.createDataFrame([(None, "old"), (1, "d1")], "k int, attr string")
-    batch = spark.createDataFrame([(None, "new"), (1, "b1")], "k int, attr string")
-    def rows(df):
-        return sorted(
-            map(tuple, df.collect()), key=lambda t: (t[0] is not None, t)
-        )
-
-    twin = rows(scd1_upsert_via_merge_semantics(dim, batch, ["k"]))
-    rewrite = rows(scd1_upsert(dim, batch, ["k"]))
-    assert twin == [(None, "new"), (None, "old"), (1, "b1")]
-    assert rewrite == [(None, "new"), (1, "b1")]
 
 
 def test_compact_parquet_preserves_hive_partition_layout(spark, tmp_path):
