@@ -4,9 +4,18 @@ Usage: python tools/profile_queries.py q1,q2,... [SF_DIR]
 
 For each query: one warm run, then one measured run (noop sink) inside
 a job group — reports wall seconds, Spark job count, stage count, task
-count for the MEASURED run.  High job counts at tiny SF mean the query
-wall is dominated by job-submission floors (driver-side sync points),
-the same sync points that serialize a cluster at 100 TB.
+count, and the generated classes compiled (``compiles``, from
+``CodegenMetrics``) and the time spent compiling them (``compile_ms``,
+from ``CodeGenerator.compileTime``) for the MEASURED run.  High job
+counts at tiny SF mean the query wall is dominated by job-submission
+floors (driver-side sync points), the same sync points that serialize
+a cluster at 100 TB.
+
+A warm-then-measured pair cannot see generated-code cache eviction
+across a pass: one query's classes fit any cache, so its measured run
+compiles (almost) nothing even when a pass of many queries evicts every
+class before its next use.  Run the whole pass twice (as the benchmark
+does) to see that.
 """
 
 from __future__ import annotations
@@ -44,6 +53,12 @@ def main() -> None:
         shuffle_partitions=shuffle_partitions_for(data_bytes, cpus),
     )
     sc = spark.sparkContext
+    jvm = sc._jvm
+    codegen_metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    code_generator = getattr(
+        getattr(jvm.org.apache.spark.sql.catalyst.expressions.codegen, "CodeGenerator$"),
+        "MODULE$",
+    )
     QUERIES["q1a_yoy_growth"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
@@ -55,9 +70,13 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             group = f"profile:{name}"
             sc.setJobGroup(group, name)
+            compiles0 = codegen_metrics.METRIC_COMPILATION_TIME().getCount()
+            compile_ns0 = code_generator.compileTime()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
+            compiles = codegen_metrics.METRIC_COMPILATION_TIME().getCount() - compiles0
+            compile_ms = (code_generator.compileTime() - compile_ns0) / 1e6
             sc.setJobGroup(None, None)
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
@@ -77,6 +96,8 @@ def main() -> None:
                 "jobs": len(job_ids),
                 "stages": n_stages,
                 "tasks": n_tasks,
+                "compiles": compiles,
+                "compile_ms": round(compile_ms, 1),
             }
             print(f"{name}: {out[name]}", flush=True)
         except Exception as exc:  # noqa: BLE001
