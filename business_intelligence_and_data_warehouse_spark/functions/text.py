@@ -137,11 +137,6 @@ def punct_ratio(col: Column) -> Column:
     )
 
 
-def uniq_token_ratio(col: Column) -> Column:
-    toks = tokens_ws(col)
-    return F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1))
-
-
 # ---------------------------------------------------------------------------
 # PII redaction (training-data hygiene)
 # ---------------------------------------------------------------------------

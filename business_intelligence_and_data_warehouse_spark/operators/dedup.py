@@ -112,6 +112,36 @@ def shingles_from_tokens(toks: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _capped_overlap(shingles: DataFrame, max_df: int | None) -> DataFrame:
+    """Every doc pair (doc_a < doc_b) sharing a shingle under the
+    df cap, with its common count ``n_common`` and both set sizes
+    (``sa.n``, ``sb.n``) over the same capped vocabulary — the shared
+    body of :func:`jaccard_pairs` and :func:`containment_pairs`, which
+    each project and filter their own measure."""
+    shingles, _stop = _df_capped(shingles, max_df)
+    # The capped shingle table feeds the size aggregate AND both sides
+    # of the candidate self-join. The self-join sides share one
+    # exchange via ReuseExchange, but the sizes aggregate's exchange
+    # DIFFERS — so unlike the MinHash path the persist pays here
+    # (interleaved A/B at sf0.1: pinned ~2.9s vs unpinned ~3.3s).
+    shingles = pin(shingles)
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a = shingles.alias("a")
+    b = shingles.alias("b")
+    common = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.alias("sa")
+    sb = sizes.alias("sb")
+    return common.join(sa, F.col("doc_a") == F.col("sa.doc_id")).join(
+        sb, F.col("doc_b") == F.col("sb.doc_id")
+    )
+
+
 def jaccard_pairs(
     shingles: DataFrame,
     threshold: float,
@@ -134,28 +164,8 @@ def jaccard_pairs(
     max_df grows. Identical semantics, opposite — and tiny —
     broadcast side.
     """
-    shingles, _stop = _df_capped(shingles, max_df)
-    # The capped shingle table feeds the size aggregate AND both sides
-    # of the candidate self-join. The self-join sides share one
-    # exchange via ReuseExchange, but the sizes aggregate's exchange
-    # DIFFERS — so unlike the MinHash path the persist pays here
-    # (interleaved A/B at sf0.1: pinned ~2.9s vs unpinned ~3.3s).
-    shingles = pin(shingles)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
     return (
-        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        _capped_overlap(shingles, max_df)
         .select(
             "doc_a",
             "doc_b",
@@ -338,31 +348,12 @@ def containment_pairs(
 
     Output: (doc_a, doc_b, n_common, containment, jaccard) with
     doc_a < doc_b — both measures off ONE common-count join so callers
-    can threshold either.  Same df-capped blocking and pin rationale
-    as :func:`jaccard_pairs` (the cap bounds the quadratic; the
-    measure is exact on the capped vocabulary; integer counts ->
-    exact doubles both engines)."""
-    shingles, _stop = _df_capped(shingles, max_df)
-    shingles = pin(shingles)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
+    can threshold either.  Same df-capped blocking as
+    :func:`jaccard_pairs` (:func:`_capped_overlap`: the cap bounds the
+    quadratic; the measure is exact on the capped vocabulary; integer
+    counts -> exact doubles both engines)."""
     return (
-        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        _capped_overlap(shingles, max_df)
         .select(
             "doc_a",
             "doc_b",
@@ -394,19 +385,9 @@ def simhash(
 
     Each token votes +tf/-tf per bit according to one bit of its md5;
     the signature takes the majority sign per bit. Near-duplicate
-    documents differ in few bits (Hamming distance).
-
-    Formulation A/B (r4, full near-dup query, best-of-4 interleaved at
-    sf0.1): this tf-groupBy form 2.26s beat BOTH zero-shuffle
-    alternatives — per-occurrence ±1 votes folded map-side over the
-    token array with HOF ``aggregate`` (4.13s: 32 interpreted lambda
-    folds per row lose to codegen'd aggregates by far more than two
-    exchanges cost) and per-occurrence votes through one groupBy
-    (2.77s: skipping the tf stage re-hashes every occurrence and runs
-    the 32 conditional sums over ~tf× more rows).  The tf stage is
-    doing real work: it shrinks the row set BEFORE the md5 and the
-    vote sums, and both its exchanges partial-aggregate map-side — so
-    the extra shuffle is narrow while the saved CPU is not.
+    documents differ in few bits (Hamming distance).  Tokenizes the
+    raw documents, then computes every signature in one in-task Arrow
+    pass (:func:`simhash_from_tokens`) — no exchange.
     """
     return simhash_from_tokens(
         token_table(docs, id_col, text_col), num_bits

@@ -2063,18 +2063,12 @@ def hyperplane_params(bit: int) -> tuple[int, int]:
     return c, s
 
 
-def _hyperplane_component(bit: int, pos: Column) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-9, 9] —
-    see :func:`hyperplane_params`. Identical across engines and
-    executors; no stored model."""
-    c, s = hyperplane_params(bit)
-    return ((F.lit(c) + pos * s) % 1013 % 19) - 9
-
-
 def _hyperplane_matrix(dim: int, num_bits: int) -> np.ndarray:
-    """(dim, num_bits) int64 hyperplane components — the vectorized
-    form of :func:`_hyperplane_component` (same integer mix, 1-based
-    positions; all operands positive so numpy `%` == Spark `%`)."""
+    """(dim, num_bits) int64 hyperplane components in [-9, 9] —
+    ``(c + pos * s) % 1013 % 19 - 9`` with (c, s) from
+    :func:`hyperplane_params` and 1-based positions: deterministic
+    across engines and executors, no stored model (all operands
+    positive, so numpy `%` equals the SQL oracle's `%`)."""
     pos = np.arange(1, dim + 1, dtype=np.int64)[:, None]
     cs = np.array(
         [hyperplane_params(b) for b in range(num_bits)], dtype=np.int64

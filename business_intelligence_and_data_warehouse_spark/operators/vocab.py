@@ -1,4 +1,4 @@
-"""Vocabulary induction and out-of-vocabulary reporting — the
+"""Vocabulary induction, out-of-vocabulary reporting and BPE — the
 tokenizer-prep pass of a training-data pipeline.
 
 Reference parity: the reference has no text surface; this belongs to
@@ -48,16 +48,6 @@ def induce_vocab_from_occ(occ: DataFrame, v: int = 500) -> DataFrame:
     return dfreq.orderBy(F.desc("df"), "w").limit(v)
 
 
-def induce_vocab(
-    docs: DataFrame,
-    v: int = 500,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`induce_vocab_from_occ` over a raw document table."""
-    return induce_vocab_from_occ(occurrences(docs, id_col, text_col), v)
-
-
 def oov_report_from_occ(occ: DataFrame, vocab: DataFrame) -> DataFrame:
     """Per-document OOV stats against ``vocab`` (a (w, ...) table)
     from an occurrence table: (doc_id, n_tokens, n_oov, oov_rate)."""
@@ -72,16 +62,6 @@ def oov_report_from_occ(occ: DataFrame, vocab: DataFrame) -> DataFrame:
         F.sum(oov).alias("n_oov"),
         (F.sum(oov).cast("double") / F.count(F.lit(1))).alias("oov_rate"),
     )
-
-
-def oov_report(
-    docs: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`oov_report_from_occ` over a raw document table."""
-    return oov_report_from_occ(occurrences(docs, id_col, text_col), vocab)
 
 
 def word_frequencies(
@@ -130,32 +110,8 @@ def bpe_pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def bpe_apply_merge(symbols, a: str, b: str):
-    """Greedy left-to-right BPE merge of pair (a, b) over a symbol
-    array column — the re-segmentation step between merge iterations,
-    expressed as ONE ``aggregate`` fold (no Python, no loop jobs):
-    append each symbol, but when the accumulator ends in ``a`` and the
-    incoming symbol is ``b``, replace the tail with ``a||b``.  Matches
-    the reference trainer's non-overlapping greedy semantics
-    ("aaa" + (a,a) -> [aa, a]); property-tested against a pure-Python
-    fold in tests/test_tokenizer_prep.py."""
-    merged = a + b
-    return F.aggregate(
-        symbols,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 # ---------------------------------------------------------------------------
-# full BPE: train a merge list, then encode the corpus with it
+# full BPE: train a merge list
 # ---------------------------------------------------------------------------
 
 # New symbols live in the Unicode PRIVATE-USE blocks, allocated in
@@ -192,24 +148,6 @@ _BMP_MERGES = 0xF8FF - BPE_SYMBOL_BASE + 1  # 6,400
 _PLANE_MERGES = 0xFFFD + 1  # 65,534 usable codepoints per PUA-A/B plane
 BPE_MAX_MERGES = _BMP_MERGES + 2 * _PLANE_MERGES  # 137,468
 
-# Practical budget for bpe_encode_words' nested-replace EXPRESSION
-# form (one replace() per merge): Catalyst's recursive expression
-# analysis overflows the default driver thread stack past ~320 nested
-# calls (measured on this JVM: 256 OK, 320 StackOverflowError).
-# Production budgets encode via the broadcast encoded-word-map join
-# instead (bpe_encode_32k, save/load_bpe_tokenizer).
-BPE_ENCODE_EXPR_MERGES = 256
-
-# One-character class matching any private-use codepoint (all three
-# blocks) — the symbol alphabet; corpus words must not contain these.
-# \x{...} escapes are Java-regex syntax (Spark rlike); this pattern is
-# NOT valid for Python's `re`.
-_PUA_RE = (
-    "[\\uE000-\\uF8FF"
-    "\\x{F0000}-\\x{FFFFD}"
-    "\\x{100000}-\\x{10FFFD}]"
-)
-
 
 def bpe_new_symbol(rank: int, offset: int = 0) -> str:
     """The single private-use character standing for merge ``rank``
@@ -240,172 +178,47 @@ def bpe_train(
     (rank, a, b, new_symbol, pair_count) in training order, and the
     word table with ``w`` carrying the fully re-segmented symbol
     string (one char per symbol) plus the original word in ``w0``.
+    Training stops early once every word is a single symbol.
 
-    Scale shape (100 TB): the corpus is scanned ONCE into the
-    vocabulary-sized (w, freq) table (``word_frequencies``), which is
-    pinned here; every training iteration is then one pair-count
-    aggregate over word TYPES weighted by frequency plus a ONE-ROW
-    collect — the trainer's inherent synchronization point (each merge
-    decision feeds the next iteration's re-segmentation; the classic
-    Sennrich/GPT-2 trainer loop).  Nothing corpus-sized moves after
-    the first scan, and the driver state is N five-tuples.
+    Scale shape (100 TB): the corpus-sized work is ONE distributed
+    scan aggregating the corpus into the vocabulary-sized
+    (word-type, freq) table (``word_frequencies``).  That table is
+    then collected: word TYPES number in the millions even for
+    web-scale corpora (bounded by the vocabulary, not the corpus),
+    which is the same single-node working set every production BPE
+    trainer uses (Sennrich's subword-nmt, HuggingFace tokenizers both
+    train over aggregated counts on one machine).  The merge loop
+    itself is inherently sequential — each decision feeds the next
+    re-segmentation — so it runs driver-side with the classic
+    incremental algorithm: a lazy max-heap over pair counts and
+    per-merge updates restricted to the words containing the merged
+    pair, O(touched chars) per merge instead of a full recount.  A
+    per-merge Spark job would pay one scheduling round per merge
+    (SCALE.md: 664 s vs 10.8 s at x100).
 
-    Tie-break: highest pair_count, then (a, b) ascending — fully
-    deterministic, mirrored by the DuckDB oracle's ORDER BY.
+    Decisions (property-pinned against the pure-Python trainer in
+    tests/test_tokenizer_prep.py, and replayed by the DuckDB oracle's
+    CTE ladder): pair counts weight every adjacent position (including
+    overlapping, e.g. "aaa" counts (a,a) twice) by word frequency;
+    ties break (count desc, a asc, b asc) — Python tuple comparison
+    over codepoints equals both engines' binary string collation,
+    including for supplementary-plane symbols, because UTF-8 byte
+    order is codepoint order; re-segmentation is Python's
+    non-overlapping left-to-right ``str.replace``, the same semantics
+    as Spark's and DuckDB's ``replace``.
 
     Contract guards: ``n_merges + symbol_offset`` must fit the
     private-use symbol space (≤ 137,468 — BMP PUA plus supplementary
     planes 15/16), and no input word may contain a private-use
     codepoint (it would collide with merge symbols and corrupt pair
-    counts) — validated with ONE vocabulary-sized check over the
-    already-pinned word table, raising ``ValueError`` with an
-    offending sample.
-
-    Budget note: sync rounds are BATCHED (r12) — each round is one
-    pair-count aggregate + one bounded top-K collect, and applies every
-    top pair that provably cannot be reordered by the earlier merges in
-    the batch (non-interacting symbols, counts strictly above the first
-    interacting pair — see the in-loop proof), so the number of
-    cluster-wide sync points drops from ``n_merges`` to roughly
-    ``n_merges / batch-width``.  Decisions are EXACTLY the sequential
-    trainer's (property-pinned against the pure-Python trainer and
-    :func:`bpe_train_local`).  For word tables small enough to collect,
-    :func:`bpe_train_local` remains the cheapest production path.
-    """
-    from .caching import pin
-
-    if n_merges + symbol_offset > BPE_MAX_MERGES:
-        raise ValueError(
-            f"n_merges={n_merges}+offset {symbol_offset} exceeds the "
-            f"{BPE_MAX_MERGES}-symbol private-use space (BMP PUA + "
-            "planes 15/16); larger vocabularies need a multi-char "
-            "symbol encoding"
-        )
-    work = pin(words.select(F.col("w").alias("w0"), "w", "freq"))
-    tainted = work.filter(F.col("w").rlike(_PUA_RE)).select("w").limit(3)
-    bad = [r.w for r in tainted.collect()]
-    if bad:
-        raise ValueError(
-            "BPE input words contain private-use codepoints (the merge "
-            f"symbol alphabet); pre-strip them: {bad!r}"
-        )
-    merges: list[tuple[int, str, str, str, int]] = []
-    rank = 1
-    # r12 optimization: BATCHED merge rounds.  The sequential loop paid
-    # one pair-count aggregate + one-row collect PER MERGE — 0.16-0.20s
-    # of pure sync per merge at x300 (SCALE.md), ~85 min of sync alone
-    # for a 32k-merge train in the regime where this fallback is the
-    # only option.  Each sync round now collects the top `scan`+1 pairs
-    # once and applies the maximal SAFELY-SEQUENTIAL prefix:
-    #
-    #   * walk the (count desc, a, b) order, accumulating pairs that
-    #     share no symbol with any earlier accepted pair; stop at the
-    #     first interacting pair OR the first SELF-pair (a == b)
-    #     (count = c_stop);
-    #   * keep only accepted pairs with count STRICTLY > c_stop and
-    #     > the (scan+1)-th count (the bound on everything unscanned).
-    #
-    # Rank-identity proof: merging (x, y) with x ≠ y -> XY changes the
-    # count of a pair (a, b) only if {a, b} ∩ {x, y} ≠ ∅ (XY is a fresh
-    # private-use symbol, never equal to a or b, so adjacencies of
-    # untouched symbols are preserved verbatim), and every pair CREATED
-    # by the merge — (w, XY) or (XY, z) — has count ≤ the old count of
-    # the interacting pair (w, x) / (y, z) it replaces, hence ≤ c_stop.
-    # A SELF-pair (x, x) breaks that bound: over a symbol run of ≥ 3
-    # ("xxx" -> "Zx") the created pairs (Z, x) / (Z, Z) replace
-    # occurrences of the accepted pair ITSELF, so their counts derive
-    # from its count (> c_stop) and can outrank remaining batch pairs
-    # (r12 advisor repro: {'xxx':100,'pq':60} — sequential picks (Z,x)
-    # at rank 2, the unguarded batch picked (p,q)).  A self-pair
-    # therefore TERMINATES the batch like an interacting pair; when it
-    # is the top row, the rows[0] fallback reproduces the exact
-    # sequential pick (one merge, then a fresh recount).
-    # So at each sequential step inside the batch the true trainer's
-    # candidate set is {remaining batch pairs, counts > c_stop} ∪
-    # {changed/new/unscanned pairs, counts ≤ c_stop}: it picks exactly
-    # the batch pairs, in exactly this (count desc, a, b) order.
-    # Equality is pinned against the pure-Python sequential trainer in
-    # tests/test_tokenizer_prep.py and against bpe_train_local.
-    scan = max(16, min(1024, 2 * n_merges))
-    while rank <= n_merges:
-        rows = (
-            bpe_pair_counts(work)
-            .orderBy(F.desc("pair_count"), "a", "b")
-            .limit(scan + 1).collect()
-        )
-        if not rows:  # every word is a single symbol; nothing to merge
-            break
-        c_unseen = int(rows[scan].pair_count) if len(rows) > scan else -1
-        accepted: list[tuple[str, str, int]] = []
-        touched: set[str] = set()
-        c_stop = c_unseen
-        for r in rows[:scan]:
-            if r.a == r.b or r.a in touched or r.b in touched:
-                c_stop = max(c_stop, int(r.pair_count))
-                break
-            accepted.append((r.a, r.b, int(r.pair_count)))
-            touched.add(r.a)
-            touched.add(r.b)
-        safe = [t for t in accepted if t[2] > c_stop]
-        if not safe:
-            # the top pair always equals the sequential pick
-            safe = [(rows[0].a, rows[0].b, int(rows[0].pair_count))]
-        for a, b, cnt in safe[: n_merges - rank + 1]:
-            new = bpe_new_symbol(rank, symbol_offset)
-            merges.append((rank, a, b, new, cnt))
-            work = work.withColumn(
-                "w", F.replace(F.col("w"), F.lit(a + b), F.lit(new))
-            )
-            if rank % 64 == 0:
-                # truncate lineage: each merge stacks one `replace`
-                # onto the plan, and past a few hundred ranks analysis
-                # time per iteration (and eventually the driver's plan
-                # tree) blows up — the standard iterative-algorithm
-                # checkpoint.  The table is vocabulary-sized, so
-                # materializing it is cheap (this is what makes the
-                # r11 distributed-depth equality pin vs
-                # bpe_train_local runnable at 3k+ ranks).
-                work = work.localCheckpoint(eager=True)
-            rank += 1
-    return merges, work
-
-
-def bpe_train_local(
-    words: DataFrame, n_merges: int, symbol_offset: int = 0
-) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Train ``n_merges`` BPE merges with the same decisions, symbol
-    allocation, guards, and return contract as :func:`bpe_train`, but
-    with the merge loop running DRIVER-SIDE over the collected
-    (w, freq) table — the production path for large budgets (32k-100k
-    merges), where per-iteration Spark jobs would dominate.
-
-    Scale shape (100 TB): the corpus-sized work is unchanged — ONE
-    distributed scan aggregates the corpus into the vocabulary-sized
-    (word-type, freq) table.  That table is then collected: word TYPES
-    number in the millions even for web-scale corpora (bounded by the
-    vocabulary, not the corpus), which is the same single-node
-    working set every production BPE trainer uses (Sennrich's
-    subword-nmt, HuggingFace tokenizers both train over aggregated
-    counts on one machine).  The merge loop itself is inherently
-    sequential — each decision feeds the next re-segmentation — so no
-    engine distributes it; what matters at scale is that the loop
-    touches only the word table, which this does with the classic
-    incremental algorithm: a lazy max-heap over pair counts and
-    per-merge updates restricted to the words containing the merged
-    pair, O(touched chars) per merge instead of a full recount.
-
-    Decision parity with :func:`bpe_train` (property-pinned in
-    tests/test_tokenizer_prep.py): pair counts weight every adjacent
-    position (including overlapping, e.g. "aaa" counts (a,a) twice) by
-    word frequency; ties break (count desc, a asc, b asc) — Python
-    tuple comparison over codepoints equals both engines' binary
-    string collation, including for supplementary-plane symbols,
-    because UTF-8 byte order is codepoint order; re-segmentation is
-    Python's non-overlapping left-to-right ``str.replace``, the same
-    semantics as Spark's and DuckDB's ``replace``.
+    counts); both raise ``ValueError``, the second with an offending
+    sample.
     """
     import heapq
+    import re
     from collections import Counter
+
+    import pyarrow as pa
 
     if n_merges + symbol_offset > BPE_MAX_MERGES:
         raise ValueError(
@@ -418,7 +231,7 @@ def bpe_train_local(
     # vocabulary-sized bounded collect (word TYPES, not the corpus) —
     # the trainer's whole working set; see the scale note above
     rows = words.select("w", "freq").collect()
-    taint_re = __import__("re").compile(
+    taint_re = re.compile(
         "[\uE000-\uF8FF"
         "\U000F0000-\U000FFFFD"
         "\U00100000-\U0010FFFD]"
@@ -470,53 +283,19 @@ def bpe_train_local(
                 counts[p] += d
                 heapq.heappush(heap, (-counts[p], p[0], p[1]))
         counts[(a, b)] = 0
+    # an Arrow table goes to the JVM as record batches; a list of
+    # tuples would run a Python-worker job to unpickle it, which starts
+    # a second worker pool next to the one Arrow UDFs use
     encoded = spark.createDataFrame(
-        [(r.w, seg, f) for r, (seg, f) in zip(rows, work)],
-        "w0 string, w string, freq bigint",
+        pa.table(
+            {
+                "w0": pa.array([r.w for r in rows], pa.string()),
+                "w": pa.array([seg for seg, _ in work], pa.string()),
+                "freq": pa.array([f for _, f in work], pa.int64()),
+            }
+        )
     )
     return merges, encoded
-
-
-def bpe_encode_words(
-    words: DataFrame,
-    merges: list[tuple[int, str, str, str, int]],
-    word_col: str = "w",
-    out_col: str = "enc",
-) -> DataFrame:
-    """Apply a trained merge list to a word table: ``out_col`` is the
-    symbol string (one char per symbol) after every merge, applied in
-    rank order — the tokenizer-APPLICATION step.  A chain of literal
-    ``replace`` expressions, entirely codegen'd JVM-side: no Python,
-    no loop jobs, no shuffle (narrow projection over whatever
-    partitioning ``words`` already has).
-
-    PRACTICAL CAP — this form builds one nested ``replace()``
-    expression per merge, and Catalyst's recursive analysis overflows
-    the driver thread stack well before the symbol space runs out
-    (measured on this JVM: 256 nested replaces analyze fine, 320
-    StackOverflowError).  The guard is therefore
-    ``BPE_ENCODE_EXPR_MERGES`` (256), NOT the 137,468-symbol space
-    cap: production budgets (32k) must encode via the broadcast
-    encoded-word-map pattern instead — train once, broadcast the
-    (word → symbol-string) table, join (exactly what
-    plans/corpus_queries.bpe_encode_32k and the persisted-artifact
-    path save_bpe_tokenizer/load_bpe_tokenizer do).
-
-    Callers must not feed words containing private-use codepoints
-    (this narrow projection adds no validation job; train is where
-    the corpus-side check runs)."""
-    if len(merges) > BPE_ENCODE_EXPR_MERGES:
-        raise ValueError(
-            f"{len(merges)} merges exceed the {BPE_ENCODE_EXPR_MERGES}"
-            "-merge nested-replace expression budget (Catalyst stack "
-            "overflow past ~320 measured); for production budgets "
-            "broadcast-join the trained encoded-word map instead "
-            "(see save_bpe_tokenizer/load_bpe_tokenizer)"
-        )
-    enc = F.col(word_col)
-    for _rank, a, b, new, _cnt in merges:
-        enc = F.replace(enc, F.lit(a + b), F.lit(new))
-    return words.withColumn(out_col, enc)
 
 
 # ---------------------------------------------------------------------------
@@ -546,11 +325,9 @@ def save_bpe_tokenizer(
       ``merges.txt`` carries);
     * ``words/`` — parquet (w0, w, freq): the fully re-segmented
       training vocabulary, i.e. the word → symbol-string ENCODED MAP.
-      This is the apply-side fast path: encoding a corpus is one
-      broadcast join of this vocabulary-sized table against the
-      occurrence scan — no nested-replace expression, no training
-      jobs (the only plan shape that works past
-      ``BPE_ENCODE_EXPR_MERGES``);
+      Encoding a corpus is one broadcast join of this
+      vocabulary-sized table against the occurrence scan — no
+      training jobs on the apply side;
     * ``meta.json`` — build params validated at load (format version,
       budget, symbol_offset, n_merges, n_words).
 
@@ -595,7 +372,7 @@ def load_bpe_tokenizer(
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame, dict]:
     """Load a :func:`save_bpe_tokenizer` artifact and return
     ``(merges, encoded_words, meta)`` with the same shapes
-    ``bpe_train_local`` returns — the apply-many half: callers
+    :func:`bpe_train` returns — the apply-many half: callers
     broadcast-join ``encoded_words`` (w0 → w symbol string) against
     their occurrence scan and never touch a trainer.
 

@@ -223,9 +223,9 @@ ORDER BY rank
 def bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iteration-1 BPE merge statistics: the top adjacent character
     pairs over the corpus word-frequency table, rank 1 being the pair
-    a BPE trainer would merge first (Sennrich-style; the iterative
-    re-segmentation fold is operators/vocab.bpe_apply_merge,
-    property-tested against a pure-Python greedy reference).
+    a BPE trainer would merge first (Sennrich-style; the full trainer
+    is operators/vocab.bpe_train, property-tested against a
+    pure-Python reference).
 
     Scale shape: the corpus is scanned ONCE into the (word, freq)
     vocabulary table; pair counting and every later merge iteration
@@ -257,14 +257,49 @@ def bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_MERGES = 8
 
 
+def _bpe_doc_stats(docs: DataFrame, encoded: DataFrame) -> DataFrame:
+    """Per-document (n_words, n_chars, n_tokens, compression_ratio)
+    under a trained tokenizer's encoded word map ``encoded``
+    (w0 = original word, w = its symbol string after every merge).
+
+    Scale shape: the word map is VOCABULARY-sized, so it broadcasts to
+    the one (doc_id, w) occurrence scan and per-doc stats are one
+    aggregate — documents are never re-segmented.  At 100 TB that is
+    one corpus scan for the word table and one for the occurrence
+    join.  Exactness: token/char counts are integers; the ratio is one
+    int/int IEEE division, identical in both engines."""
+    from ..operators.vocab import occurrences
+
+    encmap = encoded.select(
+        F.col("w0").alias("w"), F.length("w").alias("n_sym")
+    )
+    return (
+        occurrences(docs)
+        .join(F.broadcast(encmap), "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum(F.length("w")).alias("n_chars"),
+            F.sum("n_sym").alias("n_tokens"),
+            (
+                F.sum(F.length("w")) / F.sum("n_sym")
+            ).alias("compression_ratio"),
+        )
+        .orderBy("doc_id")
+    )
+
+
 def _o_bpe_ctes(n: int, offset: int = 0, materialized: bool = False) -> str:
-    """DuckDB replay of the full BPE trainer (operators/vocab.bpe_train):
+    """DuckDB replay of the BPE trainer (operators/vocab.bpe_train):
     iteration i counts adjacent symbol pairs over the CURRENT
     re-segmentation of the (word, freq) vocabulary, picks the top pair
     (count desc, then a, b — the trainer's tie-break), and re-segments
-    by literal replace with the rank-i private-use symbol.  Because
-    every symbol is exactly one character, greedy left-to-right merge
-    IS non-overlapping string replace in both engines.
+    by literal replace with the rank-i private-use symbol.  The
+    trainer updates its counts incrementally where this replay
+    recounts every level in full; the decisions are the same.
+    Because every symbol is exactly one character, greedy
+    left-to-right merge IS non-overlapping string replace in both
+    engines.
 
     ``materialized`` emits AS MATERIALIZED on every CTE — REQUIRED for
     deep ladders: each level references w{i-1} twice (p{i} and w{i}),
@@ -302,7 +337,7 @@ def _o_bpe_ctes(n: int, offset: int = 0, materialized: bool = False) -> str:
         # needle as a no-op and returns s unchanged (verified on 1.0.0;
         # note this differs from e.g. Python's str.replace, which would
         # interleave x between every character), so the iteration
-        # passes words through untouched, mirroring the Spark trainer's
+        # passes words through untouched, mirroring the trainer's
         # loop break.  ('' rather than a sentinel PUA char: under a
         # symbol offset ANY PUA codepoint can be a live merge symbol,
         # so a sentinel would false-replace past exhaustion.)  Kept as
@@ -342,8 +377,8 @@ ORDER BY rank
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained BPE merge list itself: N=8 (a, b) -> new_symbol
     merges in training order with their pair counts — the artifact a
-    tokenizer ships.  The Spark trainer (operators/vocab.bpe_train) is
-    the corpus-scanned-once / vocabulary-iterated Sennrich loop; the
+    tokenizer ships.  The trainer (operators/vocab.bpe_train) scans
+    the corpus once and runs the Sennrich loop over word types; the
     oracle replays the SAME N iterations as chained CTEs, so the merge
     decisions (including tie-breaks) hash-match across engines.
     Integer counts and single-character symbols throughout — nothing
@@ -383,36 +418,14 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder.
 
     Scale shape: training touches the corpus once (see ``bpe_train``);
-    encoding never re-segments documents at all — the (word -> encoded
-    symbol string) table is VOCABULARY-sized, so it broadcasts, and
-    per-doc stats are one aggregate over the (doc_id, w) occurrence
-    scan.  At 100 TB that is: one corpus scan for the word table, one
-    for the occurrence join — the merge loop costs corpus nothing.
-    Exactness: token/char counts are integers; the ratio is one
-    int/int IEEE division, identical in both engines.
+    encoding never re-segments documents at all (see
+    :func:`_bpe_doc_stats`) — the merge loop costs corpus nothing.
     """
-    from ..operators.vocab import bpe_train, occurrences, word_frequencies
+    from ..operators.vocab import bpe_train, word_frequencies
 
     docs = load_table(spark, sf_dir, "documents")
-    merges, encoded = bpe_train(word_frequencies(docs), _BPE_MERGES)
-    # encoded: (w0 = original word, w = symbol string after all merges)
-    encmap = encoded.select(
-        F.col("w0").alias("w"), F.length("w").alias("n_sym")
-    )
-    occ = occurrences(docs)
-    return (
-        occ.join(F.broadcast(encmap), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum(F.length("w")).alias("n_chars"),
-            F.sum("n_sym").alias("n_tokens"),
-            (
-                F.sum(F.length("w")) / F.sum("n_sym")
-            ).alias("compression_ratio"),
-        )
-        .orderBy("doc_id")
-    )
+    _merges, encoded = bpe_train(word_frequencies(docs), _BPE_MERGES)
+    return _bpe_doc_stats(docs, encoded)
 
 
 # ---------------------------------------------------------------------------
@@ -451,7 +464,7 @@ ORDER BY rank
 def bpe_train_32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training at a PRODUCTION merge budget (32,000) — the merge
     list a real tokenizer would ship, trained by the driver-side
-    incremental trainer (operators/vocab.bpe_train_local): one
+    incremental trainer (operators/vocab.bpe_train): one
     distributed corpus scan into the vocabulary-sized (word, freq)
     table, then the classic lazy-heap pair-count loop over word types,
     with symbols allocated from rank 6,351 so the run crosses the
@@ -462,16 +475,16 @@ def bpe_train_32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE ladder (one pair-count + argmax + re-segment per level;
     AS MATERIALIZED keeps DuckDB's plan linear in depth where default
     inlining is exponential).  Beyond vocabulary exhaustion both
-    sides terminate identically: the Spark trainer's loop breaks, and
+    sides terminate identically: the trainer's loop stops, and
     each exhausted oracle level's empty argmax COALESCEs to a no-op
     replace and contributes no merge row.  Decision parity (counts,
     tie-breaks, greedy replace, supplementary-symbol collation) is
-    additionally property-pinned against the distributed trainer in
+    additionally property-pinned against the pure-Python trainer in
     tests/test_tokenizer_prep.py."""
-    from ..operators.vocab import bpe_train_local, word_frequencies
+    from ..operators.vocab import bpe_train, word_frequencies
 
     docs = load_table(spark, sf_dir, "documents")
-    merges, _ = bpe_train_local(
+    merges, _ = bpe_train(
         word_frequencies(docs), _BPE_BIG_BUDGET, symbol_offset=_BPE_BIG_OFFSET
     )
     return spark.createDataFrame(
@@ -517,29 +530,13 @@ def bpe_encode_32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     every word is ONE symbol, so n_tokens == n_words and the
     compression ratio degenerates to avg word length, which the hash
     oracle checks exactly rather than assumes."""
-    from ..operators.vocab import bpe_train_local, occurrences, word_frequencies
+    from ..operators.vocab import bpe_train, word_frequencies
 
     docs = load_table(spark, sf_dir, "documents")
-    _merges, encoded = bpe_train_local(
+    _merges, encoded = bpe_train(
         word_frequencies(docs), _BPE_BIG_BUDGET, symbol_offset=_BPE_BIG_OFFSET
     )
-    encmap = encoded.select(
-        F.col("w0").alias("w"), F.length("w").alias("n_sym")
-    )
-    occ = occurrences(docs)
-    return (
-        occ.join(F.broadcast(encmap), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum(F.length("w")).alias("n_chars"),
-            F.sum("n_sym").alias("n_tokens"),
-            (
-                F.sum(F.length("w")) / F.sum("n_sym")
-            ).alias("compression_ratio"),
-        )
-        .orderBy("doc_id")
-    )
+    return _bpe_doc_stats(docs, encoded)
 
 
 @query_fn("bpe_encode_indexed", oracle=_O_BPE_ENCODE_32K)
@@ -557,13 +554,11 @@ def bpe_encode_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returned plan is the production encode shape, pytest-gated in
     tests/test_tokenizer_prep.py: ONE documents scan joined (broadcast)
     against the vocabulary-sized words parquet of the artifact — no
-    nested-replace expression (past BPE_ENCODE_EXPR_MERGES), no
     training jobs, no corpus-sized shuffle other than the per-doc
     aggregate."""
     from ..operators.vocab import (
-        bpe_train_local,
+        bpe_train,
         load_bpe_tokenizer,
-        occurrences,
         save_bpe_tokenizer,
         word_frequencies,
     )
@@ -571,27 +566,11 @@ def bpe_encode_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok_dir = _fresh_result_dir("bpe_tokenizer_32k")
-    merges, encoded = bpe_train_local(
+    merges, encoded = bpe_train(
         word_frequencies(docs), _BPE_BIG_BUDGET, symbol_offset=_BPE_BIG_OFFSET
     )
     save_bpe_tokenizer(
         merges, encoded, tok_dir, _BPE_BIG_BUDGET, symbol_offset=_BPE_BIG_OFFSET
     )
     _merges, words, _meta = load_bpe_tokenizer(spark, tok_dir)
-    encmap = words.select(
-        F.col("w0").alias("w"), F.length("w").alias("n_sym")
-    )
-    occ = occurrences(docs)
-    return (
-        occ.join(F.broadcast(encmap), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum(F.length("w")).alias("n_chars"),
-            F.sum("n_sym").alias("n_tokens"),
-            (
-                F.sum(F.length("w")) / F.sum("n_sym")
-            ).alias("compression_ratio"),
-        )
-        .orderBy("doc_id")
-    )
+    return _bpe_doc_stats(docs, words)

@@ -36,7 +36,6 @@ from ..functions.text import (
     rolling_min_fingerprint,
     token_count_bpe_ish,
     tokens_ws,
-    uniq_token_ratio,
 )
 from ..operators.dedup import (
     exact_dedup,

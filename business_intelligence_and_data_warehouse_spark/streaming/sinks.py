@@ -22,12 +22,12 @@ with the highest (order key).  The classic exactly-once recipe:
   versioned directory first, the current-pointer file is updated
   last, so a crash mid-write never corrupts the readable snapshot.
 
-Scale notes (100 TB): the parquet rewrite is O(|snapshot|) per batch
-— the honest fallback. With Delta/Iceberg present, the handler body
-becomes `DeltaTable.merge` (file-level pruning + transaction log,
-O(|touched files|)); the import-guarded hook in sources/warehouse.py
-is the seam. The merge shuffle is keyed on the upsert key — the
-minimum any keyed merge needs.
+Scale notes (100 TB): the plain store rewrites the whole snapshot per
+batch, O(|snapshot|); with ``bucket_count`` set, `_BucketStore`
+rewrites only the key-hash buckets a batch touched, O(|touched
+buckets|) — the file-level pruning a Delta/Iceberg MERGE would give,
+without a table-format jar. The merge shuffle is keyed on the upsert
+key — the minimum any keyed merge needs.
 """
 
 from __future__ import annotations

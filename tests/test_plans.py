@@ -494,17 +494,10 @@ def test_no_collect_in_query_code_paths():
         ("streaming/sinks.py", ").collect()[0]"),
         # bounded: the dedup index's ONE-ROW build-params record
         ("operators/dedup.py", 'parquet(index_dir + "/meta").collect()'),
-        # bounded: the BPE trainer's per-sync-round merge pick — at
-        # most scan+1 <= 1025 tiny rows (r12 batched trainer; was the
-        # one-row-per-merge pick, the trainer's inherent sync point)
-        ("operators/vocab.py", ".limit(scan + 1).collect()"),
         # bounded: the driver-side BPE trainer's vocabulary-sized
         # (word-type, freq) working set — the single-node trainer
         # shape every production BPE implementation uses
         ("operators/vocab.py", 'words.select("w", "freq").collect()'),
-        # bounded: the PUA-contamination guard's <=3-row sample (the
-        # upstream plan is .limit(3)) quoted in its error message
-        ("operators/vocab.py", "bad = [r.w for r in tainted.collect()]"),
         # bounded: loading a persisted tokenizer's merge LIST — at most
         # the 137,468-symbol budget, the same vocabulary-sized driver
         # working set the trainer itself holds
@@ -514,8 +507,8 @@ def test_no_collect_in_query_code_paths():
         # the ANN sink's one-row digest
         ("streaming/sinks.py", 'batch.select("_bucket").distinct()'),
         # bounded: greedy MMR's per-step top-1 pick — the selection's
-        # inherent sync point (k one-row reduces, like the BPE
-        # trainer's per-merge pick); driver state is k rows
+        # inherent sync point (k one-row reduces); driver state is k
+        # rows
         (
             "operators/similarity.py",
             'scored.orderBy(F.desc("score"), F.col("vid")).limit(1).collect()',

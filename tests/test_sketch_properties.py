@@ -204,7 +204,7 @@ def test_random_projection_signs_match_python_md5(spark, n, d_out):
 
 
 # ---------------------------------------------------------------------------
-# round-6 operators: quantile sketch, domain quota, BPE fold, counting IVM
+# round-6 operators: quantile sketch, domain quota, counting IVM
 # ---------------------------------------------------------------------------
 
 
@@ -275,28 +275,6 @@ def test_domain_quota_greedy_prefix_property(spark, toks, cap):
             break
         want.append(i)
     assert kept == sorted(want)
-
-
-@settings(**_SETTINGS)
-@given(
-    syms=st.lists(st.sampled_from(["a", "b", "c"]), min_size=0, max_size=20),
-    pair=st.tuples(st.sampled_from(["a", "b", "c"]), st.sampled_from(["a", "b", "c"])),
-)
-def test_bpe_fold_matches_python_greedy_property(spark, syms, pair):
-    from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        bpe_apply_merge,
-    )
-
-    a, b = pair
-    out = []
-    for s in syms:
-        if out and out[-1] == a and s == b:
-            out[-1] = a + b
-        else:
-            out.append(s)
-    df = spark.createDataFrame([(syms,)], "syms array<string>")
-    got = df.select(bpe_apply_merge(F.col("syms"), a, b).alias("m")).first().m
-    assert got == out
 
 
 @settings(**_SETTINGS)

@@ -1,5 +1,6 @@
-"""Semantics tests for the round-5 tokenizer-prep batch: vocabulary
-induction/OOV, char entropy, and JL random projection."""
+"""Semantics tests for the tokenizer-prep operators: vocabulary
+induction/OOV, char entropy, JL random projection, and the BPE trainer
+and tokenizer artifact."""
 
 from __future__ import annotations
 
@@ -14,8 +15,9 @@ from business_intelligence_and_data_warehouse_spark.operators.similarity import 
     random_projection,
 )
 from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-    induce_vocab,
-    oov_report,
+    induce_vocab_from_occ,
+    occurrences,
+    oov_report_from_occ,
 )
 from business_intelligence_and_data_warehouse_spark.sources.testdata import (
     load_table,
@@ -29,7 +31,7 @@ def test_vocab_cut_is_deterministic_at_the_df_boundary(spark):
         [(1, "zeta"), (2, "alpha"), (3, "mid"), (4, "beta"), (5, "q"), (6, "x")],
         ["doc_id", "text"],
     )
-    got = [r.w for r in induce_vocab(docs, 3).collect()]
+    got = [r.w for r in induce_vocab_from_occ(occurrences(docs), 3).collect()]
     assert got == ["alpha", "beta", "mid"]
 
 
@@ -38,7 +40,10 @@ def test_oov_counts_occurrences_not_types(spark):
         [(1, "aa aa bb"), (2, "bb cc cc cc")], ["doc_id", "text"]
     )
     vocab = spark.createDataFrame([("aa",), ("bb",)], ["w"])
-    rows = {r.doc_id: r for r in oov_report(docs, vocab).collect()}
+    rows = {
+        r.doc_id: r
+        for r in oov_report_from_occ(occurrences(docs), vocab).collect()
+    }
     assert rows[1].n_tokens == 3 and rows[1].n_oov == 0
     # cc occurs 3 times -> 3 OOV occurrences, not 1 OOV type
     assert rows[2].n_tokens == 4 and rows[2].n_oov == 3
@@ -108,124 +113,67 @@ def test_random_projection_preserves_norms_in_expectation(spark, sf_dir):
     assert 0.7 <= mean <= 1.4, mean
 
 
-def test_bpe_apply_merge_matches_python_greedy(spark):
-    """The one-fold merge re-segmentation must match the classic
-    greedy left-to-right reference on overlap/cascade edge cases."""
-    from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        bpe_apply_merge,
-    )
-
-    def py_merge(syms, a, b):
-        out = []
-        for s in syms:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        return out
-
-    cases = [
-        ["a", "a", "a"],
-        ["a", "a", "a", "a"],
-        ["a", "b", "a", "b"],
-        ["b", "a", "b"],
-        ["a", "a", "b"],
-        ["x", "y"],
-        [],
-        ["a"],
-        ["a", "b", "b", "a", "a", "b"],
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "syms array<string>")
-    for a, b in [("a", "a"), ("a", "b"), ("b", "a")]:
-        got = [
-            r.m
-            for r in df.select(
-                bpe_apply_merge(F.col("syms"), a, b).alias("m")
-            ).collect()
-        ]
-        want = [py_merge(c, a, b) for c in cases]
-        assert got == want, (a, b, got, want)
-
-
 def test_bpe_two_iterations_converge_with_python_trainer(spark):
-    """Two full BPE iterations (count -> pick -> re-segment -> count)
-    driven through the Spark operators must match a pure-Python BPE
-    trainer on the same tiny corpus."""
+    """Two BPE iterations (count -> pick -> re-segment -> count): the
+    Spark pair counts must match a pure-Python count on the same tiny
+    corpus before and after the first merge."""
     from collections import Counter
 
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        bpe_apply_merge,
+        bpe_new_symbol,
         bpe_pair_counts,
         word_frequencies,
     )
 
+    texts = ["low lower lowest low low", "new newer newest new"]
     docs = spark.createDataFrame(
-        [(1, "low lower lowest low low"), (2, "new newer newest new")],
-        "doc_id long, text string",
+        list(enumerate(texts, 1)), "doc_id long, text string"
     )
     words = word_frequencies(docs)
 
     # python reference
-    freqs = Counter()
-    for _, text in [(1, "low lower lowest low low"), (2, "new newer newest new")]:
-        freqs.update(text.split())
-    segs = {w: list(w) for w in freqs}
+    freqs = Counter(w for t in texts for w in t.split())
+    enc = {w: w for w in freqs}
 
     def py_counts():
         c = Counter()
         for w, f in freqs.items():
-            for x, y in zip(segs[w], segs[w][1:]):
+            for x, y in zip(enc[w], enc[w][1:]):
                 c[(x, y)] += f
-        return c
+        return dict(c)
 
-    def py_best(c):
-        return min(c.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+    def got_counts(table):
+        return {
+            (r.a, r.b): r.pair_count
+            for r in bpe_pair_counts(table).collect()
+        }
 
-    # iteration 1: compare counts, merge best
-    got1 = {
-        (r.a, r.b): r.pair_count for r in bpe_pair_counts(words).collect()
-    }
+    # iteration 1: compare counts, merge the best pair
     want1 = py_counts()
-    assert got1 == dict(want1)
-    a1, b1 = py_best(want1)
-    seg_df = words.select(
-        "w", "freq",
-        F.split(F.col("w"), "(?!$)").alias("syms"),
-    ).select("w", "freq", bpe_apply_merge(F.col("syms"), a1, b1).alias("syms"))
-    for w in segs:
-        out = []
-        for s in segs[w]:
-            if out and out[-1] == a1 and s == b1:
-                out[-1] = a1 + b1
-            else:
-                out.append(s)
-        segs[w] = out
+    assert got_counts(words) == want1
+    (a1, b1), _ = min(want1.items(), key=lambda kv: (-kv[1], kv[0]))
+    sym = bpe_new_symbol(1)
+    enc = {w: e.replace(a1 + b1, sym) for w, e in enc.items()}
 
     # iteration 2: counts over the re-segmented symbols must agree
-    pairs2 = (
-        seg_df.filter(F.size("syms") >= 2)
-        .select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1), "
-                    "i -> struct(syms[i-1] AS a, syms[i] AS b))"
-                )
-            ).alias("p"),
-        )
-        .groupBy("p.a", "p.b")
-        .agg(F.sum("freq").alias("pair_count"))
+    merged = words.withColumn(
+        "w", F.replace(F.col("w"), F.lit(a1 + b1), F.lit(sym))
     )
-    got2 = {(r.a, r.b): r.pair_count for r in pairs2.collect()}
-    assert got2 == dict(py_counts())
+    assert got_counts(merged) == py_counts()
 
 
-def _py_bpe_train(freqs: dict[str, int], n: int):
+def _py_bpe_train(freqs: dict[str, int], n: int, symbol_offset: int = 0):
     """Pure-Python Sennrich BPE trainer: count adjacent symbol pairs
     over (word, freq), merge the top pair (count desc, then a, b) via
-    greedy left-to-right str.replace, repeat.  Single-char symbols
-    throughout (merged symbols get private-use chars), so replace IS
-    the greedy merge."""
+    greedy left-to-right str.replace, repeat — a full recount per
+    merge, the parity subject for the package's incremental trainer.
+    Single-char symbols throughout (merged symbols get private-use
+    chars, allocated like the package's), so replace IS the greedy
+    merge."""
+    from business_intelligence_and_data_warehouse_spark.operators.vocab import (
+        bpe_new_symbol,
+    )
+
     enc = {w: w for w in freqs}
     merges = []
     for rank in range(1, n + 1):
@@ -240,15 +188,14 @@ def _py_bpe_train(freqs: dict[str, int], n: int):
         (a, b), cnt = min(
             counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
         )
-        new = chr(0xE000 + rank - 1)
+        new = bpe_new_symbol(rank, symbol_offset)
         merges.append((rank, a, b, new, cnt))
         enc = {w: e.replace(a + b, new) for w, e in enc.items()}
     return merges, enc
 
 
 def test_bpe_full_train_and_encode_match_python_trainer(spark, sf_dir):
-    """End-to-end: 8 distributed merge iterations + the corpus encode
-    must match the pure-Python trainer on the REAL documents table —
+    """End-to-end: 8 merge iterations + the corpus encode must match the pure-Python trainer on the REAL documents table —
     merge list, per-word re-segmentation, and per-doc token counts."""
     from collections import Counter
 
@@ -275,35 +222,15 @@ def test_bpe_full_train_and_encode_match_python_trainer(spark, sf_dir):
     )
 
 
-def test_bpe_encode_words_applies_merges_in_rank_order(spark):
-    """Cascading merges: rank-2 merges a rank-1 symbol with a raw
-    char, so applying out of order would diverge."""
-    from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        bpe_encode_words,
-    )
-
-    s1, s2 = chr(0xE000), chr(0xE001)
-    merges = [(1, "a", "b", s1, 9), (2, s1, "c", s2, 5)]
-    words = spark.createDataFrame(
-        [("abc",), ("abab",), ("cab",), ("abcabc",)], "w string"
-    )
-    got = {r.w: r.enc for r in bpe_encode_words(words, merges).collect()}
-    assert got == {
-        "abc": s2,
-        "abab": s1 + s1,
-        "cab": "c" + s1,
-        "abcabc": s2 + s2,
-    }
-
-
 import pytest as _pytest
 
 
-@_pytest.mark.parametrize("seed", [7, 42, 1234])
+@_pytest.mark.parametrize("seed", [7, 42, 99, 1234])
 def test_bpe_trainer_matches_python_on_random_corpora(spark, seed):
-    """Seeded random corpora (adversarial shapes: repeated chars,
-    shared prefixes, single-char words) — the distributed trainer must
-    track the Python reference exactly, merges AND encodings."""
+    """Seeded random corpora (adversarial shapes: ties, overlapping
+    pairs, repeated chars, shared prefixes, single-char words) — the
+    trainer must track the Python reference exactly, merges AND
+    encodings."""
     import random
 
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
@@ -338,7 +265,7 @@ def test_bpe_oracle_survives_vocabulary_collapse():
     """If the vocabulary runs out of pairs before all 8 merges, later
     oracle iterations must pass words through unchanged (an empty
     merge pick must NOT null every encoding via replace(enc, NULL, x))
-    — mirroring the Spark trainer's loop break."""
+    — mirroring the trainer's loop stop."""
     import duckdb
     import pandas as pd
 
@@ -382,6 +309,13 @@ def test_bpe_train_breaks_on_vocabulary_collapse(spark):
     got = {r.w0: r.w for r in words.collect()}
     assert got == {"a": "a", "aa": merges[0][3]}
 
+    # an empty corpus trains nothing and keeps the word-map schema
+    merges, words = bpe_train(word_frequencies(docs.limit(0)), 8)
+    assert merges == [] and words.count() == 0
+    assert words.schema.simpleString() == (
+        "struct<w0:string,w:string,freq:bigint>"
+    )
+
 
 def test_bpe_symbol_space_guards(spark):
     """ADVICE r7 + round-9 budget lift: the merge-symbol alphabet is
@@ -395,7 +329,6 @@ def test_bpe_symbol_space_guards(spark):
 
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
         BPE_MAX_MERGES,
-        bpe_encode_words,
         bpe_new_symbol,
         bpe_train,
         word_frequencies,
@@ -431,74 +364,17 @@ def test_bpe_symbol_space_guards(spark):
     with pytest.raises(ValueError, match="private-use"):
         bpe_train(word_frequencies(tainted), 4)
 
-    fake_merges = [(r, "a", "a", bpe_new_symbol(r), 1) for r in range(1, 3)]
-    words = spark.createDataFrame([("aa",)], "w string")
-    # within budget: fine
-    assert bpe_encode_words(words, fake_merges).count() == 1
-    # the expression form's guard is the MEASURED Catalyst nested-
-    # replace depth (256; StackOverflowError observed at 320), not the
-    # 137,468-symbol space — production budgets must broadcast-join
-    # the encoded word map instead (bpe_encode_32k / the persisted
-    # tokenizer artifact)
-    from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        BPE_ENCODE_EXPR_MERGES,
-    )
-
-    assert BPE_ENCODE_EXPR_MERGES == 256
-    with pytest.raises(ValueError, match="nested-replace"):
-        bpe_encode_words(
-            words, [(0, "a", "a", "x", 1)] * (BPE_ENCODE_EXPR_MERGES + 1)
-        )
-
-
-def test_bpe_local_trainer_matches_distributed(spark):
-    """Round-9 production-budget path: bpe_train_local (driver-side
-    incremental trainer) must make IDENTICAL decisions to the
-    distributed bpe_train loop — merges, symbols, counts, and final
-    encodings — on adversarial corpora (ties, overlapping pairs,
-    shared prefixes)."""
-    import random
-
-    from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        bpe_train,
-        bpe_train_local,
-        word_frequencies,
-    )
-
-    rng = random.Random(99)
-    alphabet = "abcde"
-    words = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 8)))
-        for _ in range(60)
-    ] + ["aaaa", "ababab", "a", "aa"]
-    texts = [
-        " ".join(rng.choice(words) for _ in range(rng.randint(3, 20)))
-        for _ in range(30)
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    wf = word_frequencies(docs)
-    dist_merges, dist_words = bpe_train(wf, 6)
-    loc_merges, loc_words = bpe_train_local(wf, 6)
-    assert loc_merges == dist_merges
-    assert (
-        {r.w0: r.w for r in loc_words.collect()}
-        == {r.w0: r.w for r in dist_words.collect()}
-    )
-
 
 def test_bpe_batched_trainer_self_pair_terminates_batch(spark):
-    """r12 advisor (high): a SELF-pair merge (x,x)->Z over a symbol run
-    of >= 3 creates pairs (Z,x)/(Z,Z) whose counts derive from the
-    accepted pair's OWN count (> c_stop), so they can outrank remaining
-    batch pairs — the batch walk must terminate at a self-pair instead
-    of accepting past it.  Repro corpora: {'xxx':100,'pq':60} diverged
-    at rank 2 (sequential (Z,x,100) vs the unguarded batch's (p,q,60));
-    'xxxx' exercises the created (Z,Z) pair."""
+    """Self-pair corpora: a merge (x,x)->Z over a symbol run of >= 3
+    creates pairs (Z,x)/(Z,Z) whose counts derive from the merged
+    pair's OWN count, so they can outrank every other remaining pair —
+    {'xxx':100,'pq':60} must pick (Z,x,100) at rank 2, not (p,q,60);
+    'xxxx' exercises the created (Z,Z) pair.  (These corpora once
+    broke a batched trainer; the incremental trainer's per-merge count
+    updates must get them right too.)"""
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
         bpe_train,
-        bpe_train_local,
     )
 
     for freqs, n in [
@@ -509,28 +385,23 @@ def test_bpe_batched_trainer_self_pair_terminates_batch(spark):
         wf = spark.createDataFrame(
             list(freqs.items()), "w string, freq bigint"
         )
-        dist_merges, dist_words = bpe_train(wf, n)
-        loc_merges, loc_words = bpe_train_local(wf, n)
-        assert dist_merges == loc_merges, freqs
-        assert (
-            {r.w0: r.w for r in dist_words.collect()}
-            == {r.w0: r.w for r in loc_words.collect()}
-        ), freqs
+        got_merges, got_words = bpe_train(wf, n)
+        want_merges, want_enc = _py_bpe_train(freqs, n)
+        assert got_merges == want_merges, freqs
+        assert {r.w0: r.w for r in got_words.collect()} == want_enc, freqs
 
 
-def test_bpe_distributed_equals_local_at_ramp_depth(spark):
-    """VERDICT r10 item 2: the oracle ladder validates BPE training to
-    sf0.01 exhaustion (~89 merges); ranks beyond that rested on
-    shallow property tests.  This pin trains BOTH trainers to full
-    vocabulary exhaustion on a ramp corpus (x100: 3,273 merges) and
-    asserts the merge lists are identical rank-by-rank — same pairs,
-    same symbols, same counts — plus identical final encodings.
+def test_bpe_trainer_equals_python_at_ramp_depth(spark):
+    """The oracle ladder validates BPE training to sf0.01 exhaustion
+    (~89 merges); this pin trains to full vocabulary exhaustion on a
+    ramp corpus (x100: 3,273 merges) and asserts the merge list equals
+    the pure-Python recount trainer's rank-by-rank — same pairs, same
+    symbols, same counts — plus identical final encodings.
 
-    Ramp-marked: needs the multi-GB `.scaleramp` corpora and ~10 min
-    of distributed per-merge jobs, so it only runs when
+    Ramp-marked: needs the multi-GB `.scaleramp` corpora and minutes
+    of full per-merge recounts in the reference, so it only runs when
     SPARK_GRAFT_RAMP_TESTS=1 (dir/budget overridable via
-    SPARK_GRAFT_BPE_RAMP_DIR / _BUDGET).  The measured run is recorded
-    in SCALE.md (round-11 BPE depth-equality row)."""
+    SPARK_GRAFT_BPE_RAMP_DIR / _BUDGET)."""
     import os
     import time
 
@@ -538,14 +409,14 @@ def test_bpe_distributed_equals_local_at_ramp_depth(spark):
 
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
         bpe_train,
-        bpe_train_local,
         word_frequencies,
     )
 
     if not os.environ.get("SPARK_GRAFT_RAMP_TESTS"):
         pytest.skip("ramp-scale pin; set SPARK_GRAFT_RAMP_TESTS=1 to run")
     ramp = os.environ.get(
-        "SPARK_GRAFT_BPE_RAMP_DIR", "/root/repo/.scaleramp/x100"
+        "SPARK_GRAFT_BPE_RAMP_DIR",
+        os.path.join(os.path.dirname(__file__), "..", ".scaleramp", "x100"),
     )
     if not os.path.isdir(ramp):
         pytest.skip(f"ramp corpus missing: {ramp} (tools/scale_ramp.py gen)")
@@ -554,68 +425,68 @@ def test_bpe_distributed_equals_local_at_ramp_depth(spark):
     wf = word_frequencies(docs)
 
     t0 = time.perf_counter()
-    loc_merges, loc_words = bpe_train_local(wf, budget, symbol_offset=6350)
-    t_loc = time.perf_counter() - t0
+    got_merges, got_words = bpe_train(wf, budget, symbol_offset=6350)
+    t_got = time.perf_counter() - t0
+    freqs = {r.w: int(r.freq) for r in wf.collect()}
     t0 = time.perf_counter()
-    dist_merges, dist_words = bpe_train(wf, budget, symbol_offset=6350)
-    t_dist = time.perf_counter() - t0
+    want_merges, want_enc = _py_bpe_train(freqs, budget, symbol_offset=6350)
+    t_want = time.perf_counter() - t0
 
-    depth = len(loc_merges)
+    depth = len(want_merges)
     assert depth >= 1000, f"corpus exhausted at {depth} < 1000 ranks"
     # rank-by-rank: first divergence (if any) reported precisely
-    for r_loc, r_dist in zip(loc_merges, dist_merges):
-        assert r_loc == r_dist, f"diverged at rank {r_loc[0]}: {r_loc} != {r_dist}"
-    assert len(dist_merges) == depth
-    assert (
-        {r.w0: r.w for r in loc_words.collect()}
-        == {r.w0: r.w for r in dist_words.collect()}
-    )
+    for r_got, r_want in zip(got_merges, want_merges):
+        assert r_got == r_want, f"diverged at rank {r_want[0]}: {r_got} != {r_want}"
+    assert len(got_merges) == depth
+    assert {r.w0: r.w for r in got_words.collect()} == want_enc
     print(
         f"BPE depth-equality: {depth} ranks identical "
-        f"(local {t_loc:.1f}s, distributed {t_dist:.1f}s)"
+        f"(trainer {t_got:.1f}s, Python reference {t_want:.1f}s)"
     )
 
 
 def test_bpe_supplementary_symbols_cross_engine(spark):
     """Symbol allocation straddling the BMP -> plane-15 boundary
     (offset 6,398: ranks 1-2 take the last BMP PUA codepoints, ranks
-    3+ take supplementary ones).  Both trainers must agree — which
-    exercises Spark's substring/length/replace over surrogate-pair
-    codepoints inside pair counting and re-segmentation — and the
-    re-encoded symbol strings must count supplementary symbols as ONE
-    character."""
+    3+ take supplementary ones).  The trainer must match the Python
+    reference across the boundary, and Spark must count the
+    re-encoded symbol strings' supplementary symbols as ONE character
+    each."""
     from pyspark.sql import functions as F
 
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
         bpe_train,
-        bpe_train_local,
         word_frequencies,
     )
 
+    texts = ["abcd abcd abcd ab", "abc cd ab abcd"]
     docs = spark.createDataFrame(
-        [(1, "abcd abcd abcd ab"), (2, "abc cd ab abcd")],
-        "doc_id long, text string",
+        list(enumerate(texts, 1)), "doc_id long, text string"
     )
-    wf = word_frequencies(docs)
-    dist_merges, dist_words = bpe_train(wf, 4, symbol_offset=6_398)
-    loc_merges, loc_words = bpe_train_local(wf, 4, symbol_offset=6_398)
-    assert loc_merges == dist_merges
-    assert len(dist_merges) == 4
-    cps = [ord(m[3]) for m in dist_merges]
+    got_merges, got_words = bpe_train(
+        word_frequencies(docs), 4, symbol_offset=6_398
+    )
+    freqs: dict[str, int] = {}
+    for w in " ".join(texts).split():
+        freqs[w] = freqs.get(w, 0) + 1
+    want_merges, want_enc = _py_bpe_train(freqs, 4, symbol_offset=6_398)
+    assert got_merges == want_merges
+    assert len(got_merges) == 4
+    cps = [ord(m[3]) for m in got_merges]
     assert cps[0] == 0xF8FE and cps[1] == 0xF8FF  # BMP tail
     assert cps[2] == 0xF0000 and cps[3] == 0xF0001  # plane-15 head
-    dist_map = {r.w0: r.w for r in dist_words.collect()}
-    assert dist_map == {r.w0: r.w for r in loc_words.collect()}
+    got_map = {r.w0: r.w for r in got_words.collect()}
+    assert got_map == want_enc
     # 'abcd' collapses under 4 merges into symbols including
     # supplementary ones; Spark must measure its symbol string by
     # codepoints (JVM-side length == Python len)
     jvm_lens = {
-        r.w0: r.n for r in dist_words.select(
+        r.w0: r.n for r in got_words.select(
             "w0", F.length("w").alias("n")
         ).collect()
     }
-    assert jvm_lens == {w0: len(w) for w0, w in dist_map.items()}
-    assert any(ord(c) >= 0xF0000 for w in dist_map.values() for c in w)
+    assert jvm_lens == {w0: len(w) for w0, w in got_map.items()}
+    assert any(ord(c) >= 0xF0000 for w in got_map.values() for c in w)
 
 
 def test_supplementary_codepoint_semantics(spark):
@@ -658,7 +529,7 @@ def test_bpe_tokenizer_artifact_roundtrip(spark, tmp_path):
     import pytest
 
     from business_intelligence_and_data_warehouse_spark.operators.vocab import (
-        bpe_train_local,
+        bpe_train,
         load_bpe_tokenizer,
         save_bpe_tokenizer,
         word_frequencies,
@@ -668,7 +539,7 @@ def test_bpe_tokenizer_artifact_roundtrip(spark, tmp_path):
         [(1, "low lower lowest low low"), (2, "new newer newest new")],
         "doc_id long, text string",
     )
-    merges, encoded = bpe_train_local(word_frequencies(docs), 12)
+    merges, encoded = bpe_train(word_frequencies(docs), 12)
     tok_dir = str(tmp_path / "tok")
     save_bpe_tokenizer(merges, encoded, tok_dir, budget=12)
 
