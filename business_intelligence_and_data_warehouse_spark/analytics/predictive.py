@@ -16,8 +16,11 @@ no SQL oracle — it is exposed as a rows-only check.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 CHURN_DAYS = 90
 LOG_DEC = "decimal(18,6)"
@@ -297,7 +300,8 @@ def churn_random_forest(
     )
     imp = model.featureImportances.toArray()
     top = sorted(zip(feature_cols, imp), key=lambda t: -t[1])[:3]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 train.count(),
@@ -310,8 +314,16 @@ def churn_random_forest(
                 ", ".join(f"{name}={w:.3f}" for name, w in top),
             )
         ],
-        "n_train long, n_test long, auc double, accuracy double, "
-        "precision double, recall double, f1 double, top_features string",
+        [
+            ("n_train", pa.int64()),
+            ("n_test", pa.int64()),
+            ("auc", pa.float64()),
+            ("accuracy", pa.float64()),
+            ("precision", pa.float64()),
+            ("recall", pa.float64()),
+            ("f1", pa.float64()),
+            ("top_features", pa.string()),
+        ],
     )
 
 
@@ -386,9 +398,16 @@ def churn_roc_points(
     # (0,0) anchor: a threshold above every score predicts nothing
     # positive; the (1,1) endpoint is the min-score row (score >= min
     # always holds), already present
-    anchor = spark.createDataFrame(
+    anchor = local_frame(
+        spark,
         [(2.0, 0.0, 0.0, 0, 0)],
-        "threshold double, fpr double, tpr double, cum_pos long, cum_neg long",
+        [
+            ("threshold", pa.float64()),
+            ("fpr", pa.float64()),
+            ("tpr", pa.float64()),
+            ("cum_pos", pa.int64()),
+            ("cum_neg", pa.int64()),
+        ],
     )
     return anchor.unionByName(curve).orderBy(F.desc("threshold"))
 

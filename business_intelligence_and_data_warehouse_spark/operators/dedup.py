@@ -1,20 +1,28 @@
 """Deduplication operators for large-scale document pipelines.
 
-Five dedup families, each expressed as DataFrame compositions (no
-Python row path):
+Five dedup families:
 
 * exact           — hash-groupBy over normalized text (md5)
-* MinHash + LSH   — shingle -> per-band min-hash -> band-bucket join
-                    -> verified Jaccard
-* SimHash         — token-majority bit signature + Hamming-ball join
+* MinHash + LSH   — per-document band keys -> band-key self-join ->
+                    exact Jaccard of the candidate pairs
+* SimHash         — token-majority bit signature + pigeonhole-key
+                    self-join -> Hamming filter
 * n-gram Jaccard  — shingle-set similarity join with a document-
                     frequency cap (prefix-filter style) on the join key
 * embedding cosine— near-duplicate pairs over an embedding column
                     (see operators/similarity.py for the math)
 
+The MinHash and SimHash signatures come from ONE in-task Arrow pass
+over each document's token array (:func:`doc_signatures`): a
+document's tokens already sit together in one cell, so shingling,
+hashing and the signature minima are per-row work, not a shuffle.  The
+df-capped n-gram family needs corpus-wide shingle document
+frequencies, which no per-document pass can supply, so it stays on
+exploded (doc, shingle) rows.
+
 Scale design (100 TB):
-* the only shuffles are keyed on content hashes / shingles / band
-  signatures — uniformly distributed by construction;
+* the only shuffles are keyed on content hashes / shingles / band and
+  block keys — uniformly distributed by construction;
 * the shingle self-join is the classic quadratic trap: a stop-shingle
   appearing in f documents contributes f^2 candidate pairs. The
   `max_df` cap drops shingles with document frequency > max_df from
@@ -22,7 +30,7 @@ Scale design (100 TB):
   still uses the full shingle sets, so precision is exact and only
   recall of pathologically-common-content pairs is affected.
 * MinHash banding keeps candidate generation linear: a document emits
-  exactly `bands` (band, signature) rows.
+  exactly `bands` band keys.
 
 Hashing uses md5 (engine-portable, oracle-checkable). At production
 scale xxhash64 halves the hash cost where cross-engine verification is
@@ -37,6 +45,8 @@ scan-bound.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W_
@@ -71,7 +81,7 @@ def exact_dedup(
 
 
 # ---------------------------------------------------------------------------
-# shingle machinery shared by Jaccard + MinHash
+# shingle machinery of the df-capped Jaccard family
 # ---------------------------------------------------------------------------
 
 def shingle_table(
@@ -178,160 +188,6 @@ def jaccard_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
-def minhash_signatures(shingles: DataFrame, num_hashes: int) -> DataFrame:
-    """num_hashes min-hash values per document.
-
-    Hash family: DISJOINT 8-hex-digit (32-bit) slices of md5 digests —
-    4 independent hash functions per digest evaluation, so the
-    dominant CPU pass of the pipeline (hashing every (doc, shingle)
-    row) runs num_hashes/4 times, not num_hashes times (2 digests for
-    the default 8 hashes — a 4× hashing cut vs the salted-per-hash
-    form; md5 bits are independent across slice ranges). Past 4 hashes
-    per digest, additional salted digests are sliced the same way.
-
-    Slice width matters: a 16-bit slice min degenerates once documents
-    carry shingle counts approaching 2^16 (most large docs would share
-    min 0, re-creating hot band buckets); 32-bit slices push that
-    regime to ~4B shingles per document — beyond any real document.
-    The min is lexicographic over fixed-width hex — identical to the
-    32-bit integer min, and bit-identical across engines.
-    """
-    n_digests = (num_hashes + 3) // 4
-    staged = shingles.select(
-        "doc_id",
-        *[
-            (
-                F.md5(F.col("s"))
-                if d == 0
-                else F.md5(F.concat(F.lit(f"{d}|"), F.col("s")))
-            ).alias(f"d{d}")
-            for d in range(n_digests)
-        ],
-    )
-    mins = [
-        F.min(
-            F.substring(F.col(f"d{h // 4}"), (h % 4) * 8 + 1, 8)
-        ).alias(f"mh{h}")
-        for h in range(num_hashes)
-    ]
-    return staged.groupBy("doc_id").agg(*mins)
-
-
-def minhash_lsh_candidates(
-    shingles: DataFrame,
-    bands: int = 4,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Candidate pairs from banded MinHash signatures.
-
-    A document emits `bands` (band, signature) rows where the signature
-    concatenates `rows_per_band` min-hashes; any shared band signature
-    makes a candidate pair. Collision probability 1-(1-J^r)^b.
-    """
-    # One narrow row per doc derived through the signature
-    # aggregation; the band self-join's two sides are identical
-    # exchanges that ReuseExchange shares within the plan, so it
-    # stays unpinned.
-    sigs = minhash_signatures(shingles, bands * rows_per_band)
-    band_rows = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"mh{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
-    x = band_rows.alias("x")
-    y = band_rows.alias("y")
-    return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-
-def jaccard_for_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for an explicit (doc_a, doc_b) pair
-    set — cost is O(|pairs| × shingles-per-doc), independent of how
-    common any shingle is in the corpus (the verify step of every
-    LSH/blocking pipeline; never all-pairs)."""
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    common = (
-        pairs.join(a, pairs.doc_a == F.col("a.doc_id"))
-        .join(b, (pairs.doc_b == F.col("b.doc_id")) & (F.col("a.s") == F.col("b.s")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common")
-                / (F.col("sa.n") + F.col("sb.n") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-    )
-
-
-def minhash_lsh_dedup(
-    docs: DataFrame,
-    k: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 2,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Full near-dup pipeline: shingle -> minhash -> band join ->
-    verify ONLY the candidate pairs with exact Jaccard >= threshold.
-
-    Verification is per-candidate (``jaccard_for_pairs``), never the
-    all-pairs shingle self-join — a stop-shingle shared by f documents
-    would otherwise contribute f² verify rows regardless of banding.
-
-    The shingle table is not pinned: the band self-join sides and the
-    verify join read IDENTICAL exchanges of the shingle/signature
-    subtrees, which ReuseExchange shares, so a persist measured
-    ~15-20% slower at sf0.1 under the cache ledger (interleaved A/B:
-    unpinned ~1.7s vs pinned ~2.0s).
-    """
-    shingles = shingle_table(docs, k, id_col, text_col)
-    candidates = minhash_lsh_candidates(shingles, bands, rows_per_band)
-    return jaccard_for_pairs(candidates, shingles).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
 def containment_pairs(
     shingles: DataFrame,
     threshold: float = 0.8,
@@ -371,6 +227,256 @@ def containment_pairs(
 
 
 # ---------------------------------------------------------------------------
+# per-document signatures: ONE Arrow pass for MinHash and SimHash
+# ---------------------------------------------------------------------------
+
+def doc_signatures(
+    toks_table: DataFrame,
+    *,
+    k: int | None = None,
+    bands: int = 4,
+    rows_per_band: int = 2,
+    num_bits: int | None = None,
+    max_hamming: int = 3,
+    num_blocks: int = 4,
+) -> DataFrame:
+    """Every per-document dedup signature of a (doc_id, toks) table in
+    ONE in-task ``mapInArrow`` pass — no exchange.  A document's tokens
+    already sit together in its array cell, so shingling, hashing and
+    the signature minima are per-row work, not a shuffle.
+
+    One row per input document:
+
+    * ``k`` set — ``sh``: the DISTINCT k-shingles (space-joined tokens;
+      empty when the document has fewer than k tokens), and ``mh``: the
+      ``bands`` MinHash band keys (NULL without shingles).  Band key b
+      is the 4-byte big-endian ``b`` followed by the band's
+      ``rows_per_band`` minima, 4 bytes each.  Hash h is the 32-bit
+      word ``h % 4`` of md5(s) (``h < 4``) or of md5(f"{h // 4}|" + s):
+      four hash functions per digest, and the integer minimum of a
+      word is the minimum of its 8-hex slice, so the keys are
+      bit-identical to the SQL oracle's ``min(substr(md5(s), ...))``.
+      32-bit words keep the minimum non-degenerate for any real
+      per-document shingle count (16-bit minima collapse toward 0 near
+      2^16 shingles and re-create hot band buckets).
+    * ``num_bits`` set — ``simhash``: the tf-weighted SimHash (vote bit
+      j is the high bit of hex digit j of md5(token); the signature bit
+      is set where the vote sum is > 0), and ``hk``: its two-level
+      pigeonhole keys (see :func:`simhash_near_dups`), each
+      (block j, block value, sub-block s, sub-block value) packed into
+      one long.  Both are NULL for a NULL or empty token array.
+      ``num_bits`` is capped at 32: the vote bits read md5 hex nibbles,
+      and bits past 32 would read past the digest.
+
+    Consumers pair documents by self-joining the exploded key column
+    (:func:`_key_pairs`).  Parity with the exploded JVM forms is pinned
+    in tests/test_pipeline.py against tests/dedup_reference.py.
+
+    The pass keeps its input's partitioning.  It does not probe it: on
+    a shuffled input ``rdd.getNumPartitions()`` runs the input's
+    shuffle stages while the plan is being built.
+    """
+    if num_bits is not None and not 1 <= num_bits <= 32:
+        raise ValueError(
+            f"num_bits must be in [1, 32] (md5-nibble vote bits), "
+            f"got {num_bits}"
+        )
+    if max_hamming > num_blocks - 1:
+        raise ValueError(
+            f"pigeonhole blocking with {num_blocks} blocks is only exact "
+            f"for max_hamming <= {num_blocks - 1}, got {max_hamming}"
+        )
+    n_hashes = bands * rows_per_band
+    width = (num_bits or 0) // num_blocks
+    n_sub = max_hamming + 1
+    sub_width = max(((num_bits or 0) - width) // n_sub, 1)
+
+    def sign(batches):
+        import hashlib
+
+        import numpy as np
+        import pyarrow as pa
+
+        md5 = hashlib.md5
+        salts = [b""] + [
+            f"{d}|".encode() for d in range(1, (n_hashes + 3) // 4)
+        ]
+        votes_of: dict[str, np.ndarray] = {}
+        weights = 1 << np.arange(num_bits or 0, dtype=np.int64)
+
+        def votes(tok: str) -> np.ndarray:
+            got = votes_of.get(tok)
+            if got is None:
+                dg = np.frombuffer(
+                    md5(tok.encode("utf-8")).digest(), np.uint8
+                )[: (num_bits + 1) // 2]
+                nibs = np.empty(len(dg) * 2, dtype=np.int64)
+                nibs[0::2] = dg >> 4
+                nibs[1::2] = dg & 15
+                got = ((nibs[:num_bits] >> 3) & 1) * 2 - 1
+                votes_of[tok] = got
+            return got
+
+        def band_keys(sh: list[str]) -> list[bytes] | None:
+            if not sh:
+                return None
+            words = np.frombuffer(
+                b"".join(
+                    md5(salt + e).digest()
+                    for e in (s.encode("utf-8") for s in sh)
+                    for salt in salts
+                ),
+                ">u4",
+            ).reshape(len(sh), -1)
+            # a reduction returns native byte order: back to big-endian
+            mins = words[:, :n_hashes].min(axis=0).astype(">u4")
+            r = rows_per_band
+            return [
+                b.to_bytes(4, "big") + mins[b * r : (b + 1) * r].tobytes()
+                for b in range(bands)
+            ]
+
+        def hamming_keys(sig: int) -> list[int]:
+            out = []
+            for j in range(num_blocks):
+                block = (sig >> (j * width)) & ((1 << width) - 1)
+                comp = ((sig >> ((j + 1) * width)) << (j * width)) | (
+                    sig & ((1 << (j * width)) - 1)
+                )
+                for s in range(n_sub):
+                    sub = (comp >> (s * sub_width)) & ((1 << sub_width) - 1)
+                    out.append(
+                        (((j * n_sub + s) << width | block) << sub_width) | sub
+                    )
+            return out
+
+        for batch in batches:
+            toks_col = batch.column("toks").to_pylist()
+            cols = {"doc_id": batch.column("doc_id").cast(pa.int64())}
+            if k is not None:
+                shs = [
+                    list(
+                        dict.fromkeys(
+                            " ".join(t[i : i + k])
+                            for i in range(len(t) - k + 1)
+                        )
+                    )
+                    if t and len(t) >= k
+                    else []
+                    for t in toks_col
+                ]
+                cols["sh"] = pa.array(shs, pa.list_(pa.string()))
+                cols["mh"] = pa.array(
+                    [band_keys(sh) for sh in shs], pa.list_(pa.binary())
+                )
+            if num_bits is not None:
+                sigs, keys = [], []
+                for t in toks_col:
+                    if not t:
+                        sigs.append(None)
+                        keys.append(None)
+                        continue
+                    v = np.zeros(num_bits, dtype=np.int64)
+                    for tok, c in Counter(t).items():
+                        v += votes(tok) * c
+                    sig = int(weights[v > 0].sum())
+                    sigs.append(sig)
+                    keys.append(hamming_keys(sig))
+                cols["simhash"] = pa.array(sigs, pa.int64())
+                cols["hk"] = pa.array(keys, pa.list_(pa.int64()))
+            yield pa.record_batch(cols)
+
+    schema = ["doc_id long"]
+    if k is not None:
+        schema += ["sh array<string>", "mh array<binary>"]
+    if num_bits is not None:
+        schema += ["simhash long", "hk array<long>"]
+    return toks_table.select("doc_id", "toks").mapInArrow(
+        sign, ", ".join(schema)
+    )
+
+
+def _key_pairs(sigs: DataFrame, keys: str, *payload: str) -> DataFrame:
+    """Each document pair (x.doc_id < y.doc_id) sharing a key of the
+    ``keys`` array, ONCE: a pair is kept only at the first key position
+    where the two arrays agree, so no pair distinct (and its exchange)
+    follows.  ``x.<col>`` / ``y.<col>`` carry ``payload``.
+
+    The join runs on one key column, and the ``merge`` hint fixes its
+    strategy: both sides are the same exchange, and left to itself AQE
+    broadcasts whichever side's stage has finished when it re-plans,
+    so the build side flipped from run to run and each flip compiled
+    new join code.  A sort-merge join has no build side and spills a
+    hot key instead of holding it in one hash map, at any scale."""
+    rows = sigs.select(
+        "doc_id", keys, *payload, F.posexplode(keys).alias("_pos", "_key")
+    )
+    x = rows.alias("x")
+    y = rows.alias("y").hint("merge")
+    # equal keys sit at equal positions (each key embeds its band or
+    # block index); reading _pos on BOTH sides keeps the two sides'
+    # columns identical, so they share one exchange
+    return x.join(
+        y,
+        (F.col("x._key") == F.col("y._key"))
+        & (F.col("x.doc_id") < F.col("y.doc_id"))
+        & ~F.arrays_overlap(
+            F.slice(F.col(f"x.{keys}"), 1, F.col("x._pos")),
+            F.slice(F.col(f"y.{keys}"), 1, F.col("y._pos")),
+        ),
+    )
+
+
+def minhash_band_pairs(sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for every MinHash candidate pair — a
+    shared band key — with its EXACT shingle-set Jaccard
+    |A ∩ B| / (|A| + |B| - |A ∩ B|) over the two ``sh`` arrays
+    (integer sizes -> exact doubles, engine-parity safe).  A candidate
+    sharing no shingle scores 0."""
+    common = F.size(F.array_intersect("x.sh", "y.sh"))
+    return _key_pairs(sigs, "mh", "sh").select(
+        F.col("x.doc_id").alias("doc_a"),
+        F.col("y.doc_id").alias("doc_b"),
+        (
+            common / (F.size("x.sh") + F.size("y.sh") - common)
+        ).alias("jaccard"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# MinHash + LSH
+# ---------------------------------------------------------------------------
+
+def minhash_lsh_dedup(
+    docs: DataFrame,
+    k: int = 3,
+    bands: int = 4,
+    rows_per_band: int = 2,
+    threshold: float = 0.5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """MinHash-LSH near-dup pairs (doc_a, doc_b, jaccard), doc_a < doc_b,
+    with exact shingle-set Jaccard >= threshold.
+
+    Each document emits `bands` band keys, each over `rows_per_band`
+    min-hashes (:func:`doc_signatures`); any shared band key makes a
+    candidate pair (collision probability 1-(1-J^r)^b), and ONLY the
+    candidates are verified, over the pair's two shingle arrays — never
+    the all-pairs shingle self-join, where a stop-shingle shared by f
+    documents would contribute f² rows regardless of banding.  One
+    exchange: the band-key self-join.
+    """
+    sigs = doc_signatures(
+        token_table(docs, id_col, text_col),
+        k=k,
+        bands=bands,
+        rows_per_band=rows_per_band,
+    )
+    return minhash_band_pairs(sigs).filter(F.col("jaccard") >= threshold)
+
+
+# ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
 
@@ -380,112 +486,20 @@ def simhash(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Term-frequency-weighted SimHash signature (num_bits <= 32,
-    one bit per md5 hex digit).
+    """Term-frequency-weighted SimHash signature (doc_id, simhash),
+    num_bits <= 32, one bit per md5 hex digit.
 
     Each token votes +tf/-tf per bit according to one bit of its md5;
     the signature takes the majority sign per bit. Near-duplicate
-    documents differ in few bits (Hamming distance).  Tokenizes the
-    raw documents, then computes every signature in one in-task Arrow
-    pass (:func:`simhash_from_tokens`) — no exchange.
+    documents differ in few bits (Hamming distance).  Computed in the
+    one Arrow pass of :func:`doc_signatures`; a document with an empty
+    or NULL token array has no signature and no row.
     """
-    return simhash_from_tokens(
-        token_table(docs, id_col, text_col), num_bits
+    return (
+        doc_signatures(token_table(docs, id_col, text_col), num_bits=num_bits)
+        .filter(F.col("simhash").isNotNull())
+        .select("doc_id", "simhash")
     )
-
-
-def simhash_from_tokens(toks_table: DataFrame, num_bits: int = 32) -> DataFrame:
-    """SimHash signatures from a pre-tokenized (doc_id, toks) table —
-    the shared-tokenize entry point (:func:`simhash` wraps it for raw
-    documents).
-
-    ``num_bits`` is capped at 32: the vote bits read the high bit of
-    each md5 hex nibble, so bits past 32 would read PAST the digest —
-    silently degenerate signatures whose downstream blocking join
-    collapses into hot buckets (r10 review finding: fail loud
-    instead).
-
-    r13: computed as ONE in-task Arrow pass — a document's tokens are
-    already together in its array cell, so tf counting, the md5 vote
-    bits, the ±tf vote sums and the sign bits all happen in the task
-    (zero exchanges; was explode → (doc, tok) tf exchange → md5+conv →
-    (doc) vote exchange).  A per-task token→bits memo hashes each
-    distinct token once per task, where the JVM form re-hashed it once
-    per (doc, token).  Bit parity with the SQL-oracle form: vote bit j
-    IS the high bit of hex digit j of md5(token) — hashlib md5 over
-    the token's UTF-8 bytes is the same digest F.md5 computes, and the
-    integer vote sums are exact in any order.  A document with an
-    EMPTY token array stays absent from the output, exactly as the
-    exploded form dropped it.  Parity with the retired JVM form
-    (tests/dedup_reference.py) is pinned in tests/test_pipeline.py."""
-    if not 1 <= num_bits <= 32:
-        raise ValueError(
-            f"num_bits must be in [1, 32] (md5-nibble vote bits), "
-            f"got {num_bits}"
-        )
-
-    def sig(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        n_nib = num_bits
-        memo: dict[str, np.ndarray] = {}
-
-        def pm1(tok: str) -> np.ndarray:
-            got = memo.get(tok)
-            if got is None:
-                dg = np.frombuffer(
-                    hashlib.md5(tok.encode("utf-8")).digest(), np.uint8
-                )[: (n_nib + 1) // 2]
-                nibs = np.empty(len(dg) * 2, dtype=np.int64)
-                nibs[0::2] = dg >> 4
-                nibs[1::2] = dg & 15
-                got = ((nibs[:n_nib] >> 3) & 1) * 2 - 1
-                memo[tok] = got
-            return got
-
-        weights = (1 << np.arange(num_bits, dtype=np.int64))
-        for batch in batches:
-            ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            toks_col = batch.column("toks").to_pylist()
-            out_ids, out_sigs = [], []
-            for i in range(len(ids)):
-                toks_i = toks_col[i]
-                if not toks_i:
-                    continue
-                votes = np.zeros(num_bits, dtype=np.int64)
-                tf: dict[str, int] = {}
-                for t in toks_i:
-                    tf[t] = tf.get(t, 0) + 1
-                for t, c in tf.items():
-                    votes += pm1(t) * c
-                out_ids.append(ids[i])
-                out_sigs.append(int(weights[votes > 0].sum()))
-            if out_ids:
-                yield pa.record_batch(
-                    {
-                        "doc_id": pa.array(out_ids, type=pa.int64()),
-                        "simhash": pa.array(out_sigs, type=pa.int64()),
-                    }
-                )
-
-    out = toks_table.select("doc_id", "toks").mapInArrow(
-        sig, "doc_id long, simhash long"
-    )
-    # The Arrow pass inherits the scan's partitioning.  When that is
-    # narrower than the cluster (one small parquet file locally), the
-    # downstream blocking join's whole map side would serialize on the
-    # same few tasks — measured 3.1-3.3 s vs 1.7-1.8 s at sf0.1 for
-    # simhash_pairs_from_sigs.  A keyed repartition of the NARROW
-    # (doc_id, simhash) rows restores parallelism; at scale the scan
-    # already has >= cores partitions and this branch is a no-op
-    # (scale-adaptive, not a local[32] constant).
-    sc = toks_table.sparkSession.sparkContext
-    if out.rdd.getNumPartitions() < sc.defaultParallelism:
-        out = out.repartition("doc_id")
-    return out
 
 
 def simhash_near_dups(
@@ -496,7 +510,8 @@ def simhash_near_dups(
     text_col: str = "text",
     num_blocks: int = 4,
 ) -> DataFrame:
-    """Pairs of documents within a Hamming ball of the SimHash.
+    """Pairs of documents (doc_a, doc_b, hamming) within a Hamming ball
+    of the SimHash.
 
     Candidate generation is TWO-LEVEL pigeonhole blocking. Level 1:
     a pair within Hamming distance d <= num_blocks - 1 shares at least
@@ -517,91 +532,25 @@ def simhash_near_dups(
     covered 65% of documents, making the single-level join
     quasi-quadratic (6.4M candidate rows from 5k docs). Sub-blocking
     the complement divides the hot bucket by the sub-block's
-    selectivity while never losing a pair. Each document still emits
-    a fixed num_blocks × (max_hamming + 1) rows — linear.
-
-    The Hamming filter runs BEFORE the pair distinct, so the distinct
-    (needed because a pair can match several block/sub combos)
-    deduplicates only true near-dups, not the full candidate stream.
+    selectivity while never losing a pair. Each document emits a fixed
+    num_blocks × (max_hamming + 1) keys — linear — packed one long each
+    by :func:`doc_signatures`, so the candidate join is one self-join
+    on one key column.
     """
-    # The signature table is tiny (one row per doc: id + long) but its
-    # lineage is the whole tokenize/tf/vote pipeline, and unlike the
-    # MinHash band join the two sides here explode DIFFERENT column
-    # sets (block vs complement sub-block), so their exchanges are NOT
-    # identical and ReuseExchange cannot share them — measured: pinned
-    # ~3.0s vs unpinned ~5.0s at sf0.1. Block+sub rows are emitted in
-    # a single map-side pass (inline explode), not a union over the
-    # same subtree.
-    if max_hamming > num_blocks - 1:
-        # validate BEFORE the pin: raising after it would leak
-        # a ledger-registered persist that lingers until the next query
-        raise ValueError(
-            f"pigeonhole blocking with {num_blocks} blocks is only exact "
-            f"for max_hamming <= {num_blocks - 1}, got {max_hamming}"
-        )
-    sigs = pin(simhash(docs, num_bits, id_col, text_col))
-    return simhash_pairs_from_sigs(sigs, num_bits, max_hamming, num_blocks)
-
-
-def simhash_pairs_from_sigs(
-    sigs: DataFrame,
-    num_bits: int = 32,
-    max_hamming: int = 3,
-    num_blocks: int = 4,
-) -> DataFrame:
-    """The blocked Hamming-ball pair join over an existing
-    (doc_id, simhash) signature table — factored out so shared-
-    tokenize pipelines (:func:`multi_signal_dedup`) can feed it
-    without re-tokenizing.  See :func:`simhash_near_dups` for the
-    two-level pigeonhole design notes; callers pin ``sigs`` (its two
-    explode sides exchange on different keys)."""
-    if max_hamming > num_blocks - 1:
-        raise ValueError(
-            f"pigeonhole blocking with {num_blocks} blocks is only exact "
-            f"for max_hamming <= {num_blocks - 1}, got {max_hamming}"
-        )
-    width = num_bits // num_blocks
-    n_sub = max_hamming + 1
-    sub_width = max((num_bits - width) // n_sub, 1)
-    sig = F.col("simhash")
-
-    def _block_val(j: int) -> Column:
-        return (sig / F.lit(2 ** (j * width))).cast("long") % (2**width)
-
-    def _comp_val(j: int) -> Column:
-        """The (num_bits - width) complement bits with block j removed,
-        re-packed contiguously (low part + shifted-down high part)."""
-        low = sig % (2 ** (j * width))
-        high = (sig / F.lit(2 ** ((j + 1) * width))).cast("long")
-        return (high * F.lit(2 ** (j * width)) + low).cast("long")
-
-    block_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("blk"),
-                _block_val(j).alias("block"),
-                F.lit(s).alias("sub"),
-                (
-                    (_comp_val(j) / F.lit(2 ** (s * sub_width))).cast("long")
-                    % (2**sub_width)
-                ).alias("subval"),
-            )
-            for j in range(num_blocks)
-            for s in range(n_sub)
-        ]
+    sigs = doc_signatures(
+        token_table(docs, id_col, text_col),
+        num_bits=num_bits,
+        max_hamming=max_hamming,
+        num_blocks=num_blocks,
     )
-    blocks = sigs.select("doc_id", "simhash", F.inline(block_structs))
-    x = blocks.alias("x")
-    y = blocks.alias("y")
+    return _hamming_pairs(sigs, max_hamming)
+
+
+def _hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the pairs sharing a pigeonhole key
+    and within ``max_hamming`` bits."""
     return (
-        x.join(
-            y,
-            (F.col("x.blk") == F.col("y.blk"))
-            & (F.col("x.block") == F.col("y.block"))
-            & (F.col("x.sub") == F.col("y.sub"))
-            & (F.col("x.subval") == F.col("y.subval"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
+        _key_pairs(sigs, "hk", "simhash")
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),
@@ -610,7 +559,6 @@ def simhash_pairs_from_sigs(
             ).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )
 
 
@@ -638,20 +586,11 @@ def multi_signal_dedup(
 
     This is the 100-TB shape of running the dedup family: the corpus
     scan + normalize + tokenize is the dominant shared cost, and the
-    standalone operators each repeat it — a real curation run computes
-    the token table once and derives shingles (MinHash/Jaccard side)
-    and token TF votes (SimHash side) and the content hash from the
-    same blocks.  Each
-    signal's own shuffle/blocking design is unchanged (the per-signal
-    operators are called on the shared tables, not reimplemented).
-
-    Measured at sf0.1 (interleaved same-context A/B, warm best-of-3,
-    late r4 after the _degree explode fix): composite 5.3s vs 6.75s
-    for exact+minhash+simhash back-to-back — 1.27x at this SF, where
-    the shared scan is cheap; at crawl scale the composite's two
-    saved corpus scans+normalizes dominate.  The tokens pin itself
-    was a wash warm (2.0 pinned vs 2.1 unpinned best-of-3) but stays:
-    at crawl scale the re-derived subtree is scan-bound.
+    standalone operators each repeat it.  Here the token table is
+    computed once; the content hash comes from it, and ONE
+    :func:`doc_signatures` pass derives both the MinHash band keys and
+    the SimHash keys from it.  The pair sets are exactly those of
+    :func:`minhash_lsh_dedup` and :func:`simhash_near_dups`.
     """
     if max_hamming > 3:
         # the SimHash stage runs with the default 4 blocks; validate
@@ -666,48 +605,57 @@ def multi_signal_dedup(
             "content_hash", _content_hash()
         )
     )
+    # pinned: the band-key and the Hamming-key self-joins read it
+    # through two different exchanges, and each would re-run the
+    # Python pass
+    sigs = pin(
+        doc_signatures(
+            toks,
+            k=k,
+            bands=bands,
+            rows_per_band=rows_per_band,
+            num_bits=num_bits,
+            max_hamming=max_hamming,
+        )
+    )
+    near = minhash_band_pairs(sigs).filter(F.col("jaccard") >= threshold)
+    ham = _hamming_pairs(sigs, max_hamming)
+    # both pair sets are duplicate-free, so one aggregate over both
+    # endpoints of both sets counts each document's two degrees
+    degrees = (
+        near.select("doc_a", "doc_b", F.lit(True).alias("_near"))
+        .unionByName(ham.select("doc_a", "doc_b", F.lit(False).alias("_near")))
+        .select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"), "_near")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.when(F.col("_near"), 1)).alias("n_near_dup_neighbors"),
+            F.count(F.when(~F.col("_near"), 1)).alias("n_hamming_neighbors"),
+        )
+    )
     # exact groups from the shared token array (concat_ws(" ", toks)
     # rebuilds exactly the normalized text: normalize collapses all
-    # whitespace runs to single spaces before the split)
-    exg = toks.groupBy("content_hash").agg(
-        F.count(F.lit(1)).alias("n_exact_copies"),
-        F.min("doc_id").alias("keeper"),
-    )
-    shingles = shingles_from_tokens(toks, k)
-    candidates = minhash_lsh_candidates(shingles, bands, rows_per_band)
-    near = jaccard_for_pairs(candidates, shingles).filter(
-        F.col("jaccard") >= threshold
-    )
-    sigs = pin(simhash_from_tokens(toks, num_bits))
-    ham = simhash_pairs_from_sigs(sigs, num_bits, max_hamming)
-
-    def _degree(pairs: DataFrame, alias: str) -> DataFrame:
-        # explode both endpoints map-side: ONE consumer of the pair
-        # subtree. The union-of-two-projections form read `pairs`
-        # through two branches, and the near-pair pipeline ends in a
-        # join+filter with NO trailing exchange — each branch re-ran
-        # the whole verify join (measured at sf0.1: composite 8.3s
-        # union-degree vs 4.7s explode-degree, 1.8x).
-        return (
-            pairs.select(
-                F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-            )
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias(alias))
-        )
-
-    nd = _degree(near, "n_near_dup_neighbors")
-    hd = _degree(ham, "n_hamming_neighbors")
+    # whitespace runs to single spaces before the split), as a window
+    # rather than a group aggregate joined back: AQE broadcast
+    # whichever side of that join finished first, so its build side
+    # flipped between runs.  The degree join is pinned to sort-merge
+    # for the same reason.  NULL text has no content hash and no row.
+    group = W_.partitionBy("content_hash")
     return (
-        toks.select("doc_id", "content_hash")
-        .join(exg, "content_hash")
-        .join(nd, "doc_id", "left")
-        .join(hd, "doc_id", "left")
+        toks.filter(F.col("content_hash").isNotNull())
+        .select(
+            "doc_id",
+            "content_hash",
+            F.count(F.lit(1)).over(group).alias("n_exact_copies"),
+            (F.col("doc_id") == F.min("doc_id").over(group)).alias(
+                "is_canonical"
+            ),
+        )
+        .join(degrees.hint("merge"), "doc_id", "left")
         .select(
             "doc_id",
             "content_hash",
             "n_exact_copies",
-            (F.col("doc_id") == F.col("keeper")).alias("is_canonical"),
+            "is_canonical",
             F.coalesce("n_near_dup_neighbors", F.lit(0)).alias(
                 "n_near_dup_neighbors"
             ),

@@ -48,10 +48,13 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as _pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.functions import pandas_udf
+
+from ..session import local_frame
 
 try:
     # Ship worker-side functions BY VALUE (see operators/multimodal.py:
@@ -273,13 +276,19 @@ def mmr_select(
                 "score": float(r["score"]),
             }
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (s["rank"], s["vid"], s["rel"], s["maxsim"], s["score"])
             for s in selected
         ],
-        f"rank int, {id_col} long, relevance double, "
-        "max_sim_selected double, mmr_score double",
+        [
+            ("rank", _pa.int32()),
+            (id_col, _pa.int64()),
+            ("relevance", _pa.float64()),
+            ("max_sim_selected", _pa.float64()),
+            ("mmr_score", _pa.float64()),
+        ],
     )
 
 
@@ -1976,12 +1985,17 @@ def compact_ivf_index(spark, index_dir: str) -> tuple[int, int]:
             stacklevel=2,
         )
         load_seq = {}
-    order = spark.createDataFrame(
+    order = local_frame(
+        spark,
         [
             (lbl, int(load_seq.get(lbl, -1)), float(m))
             for lbl, m in load_mtime.items()
         ],
-        "src string, __load_seq long, __load_mtime double",
+        [
+            ("src", _pa.string()),
+            ("__load_seq", _pa.int64()),
+            ("__load_mtime", _pa.float64()),
+        ],
     )
     cells = spark.read.parquet(cells_path).join(F.broadcast(order), "src")
     before = cells.count()

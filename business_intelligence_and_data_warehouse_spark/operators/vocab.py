@@ -305,6 +305,26 @@ def bpe_train(
 _BPE_ARTIFACT_VERSION = 1
 
 
+def merges_frame(spark, merges: list[tuple]) -> DataFrame:
+    """The trained merge list as a (rank, a, b, new_symbol, pair_count)
+    DataFrame, in training order."""
+    import pyarrow as pa
+
+    from ..session import local_frame
+
+    return local_frame(
+        spark,
+        merges,
+        [
+            ("rank", pa.int32()),
+            ("a", pa.string()),
+            ("b", pa.string()),
+            ("new_symbol", pa.string()),
+            ("pair_count", pa.int64()),
+        ],
+    )
+
+
 def save_bpe_tokenizer(
     merges: list[tuple[int, str, str, str, int]],
     encoded: DataFrame,
@@ -341,10 +361,7 @@ def save_bpe_tokenizer(
     import os as _os
 
     spark = encoded.sparkSession
-    merges_df = spark.createDataFrame(
-        merges or [],
-        "rank int, a string, b string, new_symbol string, pair_count bigint",
-    )
+    merges_df = merges_frame(spark, merges or [])
     merges_df.coalesce(1).write.mode("overwrite").parquet(
         tokenizer_dir.rstrip("/") + "/merges"
     )

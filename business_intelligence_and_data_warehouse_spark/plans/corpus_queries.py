@@ -384,13 +384,11 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer counts and single-character symbols throughout — nothing
     float-dependent.
     """
-    from ..operators.vocab import bpe_train, word_frequencies
+    from ..operators.vocab import bpe_train, merges_frame, word_frequencies
 
     docs = load_table(spark, sf_dir, "documents")
     merges, _ = bpe_train(word_frequencies(docs), _BPE_MERGES)
-    return spark.createDataFrame(
-        merges, "rank int, a string, b string, new_symbol string, pair_count bigint"
-    ).orderBy("rank")
+    return merges_frame(spark, merges).orderBy("rank")
 
 
 @query_fn(
@@ -481,16 +479,13 @@ def bpe_train_32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks, greedy replace, supplementary-symbol collation) is
     additionally property-pinned against the pure-Python trainer in
     tests/test_tokenizer_prep.py."""
-    from ..operators.vocab import bpe_train, word_frequencies
+    from ..operators.vocab import bpe_train, merges_frame, word_frequencies
 
     docs = load_table(spark, sf_dir, "documents")
     merges, _ = bpe_train(
         word_frequencies(docs), _BPE_BIG_BUDGET, symbol_offset=_BPE_BIG_OFFSET
     )
-    return spark.createDataFrame(
-        merges,
-        "rank int, a string, b string, new_symbol string, pair_count bigint",
-    ).orderBy("rank")
+    return merges_frame(spark, merges).orderBy("rank")
 
 
 # Shared by bpe_encode_32k and bpe_encode_indexed: the artifact

@@ -194,7 +194,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 4 disjoint 32-bit (8-hex) slices per md5 digest as the hash family;
 # hashes 4-7 read the salted second digest
-# (must mirror operators/dedup.minhash_signatures exactly)
+# (must mirror the band keys of operators/dedup.doc_signatures exactly)
 _MH = ",\n  ".join(
     f"MIN(substr(md5({'s' if h < 4 else chr(39) + '1|' + chr(39) + ' || s'}),"
     f" {(h % 4) * 8 + 1}, 8)) AS mh{h}"
@@ -2371,31 +2371,35 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     1−(1−J²)⁴ ≥ 68%; the measured number is what the knobs actually
     buy on THIS corpus.
 
-    One pinned shingle table feeds the signature, truth, and verify
-    passes (unlike exchanges — the shared-tokenize rule); ``cand`` is
-    pinned because it feeds BOTH aggregate branches plus the verify
-    probe; ``truth`` has a single consumer and stays unpinned (the
-    ledger rule: persists pay only across separate actions or unlike
-    exchanges).
+    One pinned token table feeds the truth shingles and the one
+    signature pass (the shared-tokenize rule); ``cand`` — every
+    candidate pair with its exact uncapped Jaccard — is pinned because
+    it feeds BOTH aggregate branches; ``truth`` has a single consumer
+    and stays unpinned (the ledger rule: persists pay only across
+    separate actions or unlike exchanges).
     """
     from ..operators.caching import pin
-    from ..operators.dedup import jaccard_for_pairs, minhash_lsh_candidates
+    from ..operators.dedup import (
+        doc_signatures,
+        minhash_band_pairs,
+        shingles_from_tokens,
+        token_table,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = pin(shingle_table(docs, 3))
-    cand = pin(minhash_lsh_candidates(sh, 4, 2))
-    truth = jaccard_pairs(sh, _JACCARD_T, max_df=_MAX_DF).select(
-        "doc_a", "doc_b"
+    toks = pin(token_table(docs))
+    truth = jaccard_pairs(
+        shingles_from_tokens(toks, 3), _JACCARD_T, max_df=_MAX_DF
+    ).select("doc_a", "doc_b")
+    # a candidate pair with NO shared shingle (possible only via a
+    # minhash collision) scores 0 and counts unverified
+    cand = pin(
+        minhash_band_pairs(
+            doc_signatures(toks, k=3, bands=4, rows_per_band=2)
+        )
     )
-    # two aggregate branches instead of four count actions: truth
-    # carries its hit marker (cand ⊇ hits), candidates carry their
-    # exact verify value (a candidate pair with NO shared shingle —
-    # possible only via minhash collision — is a left-join miss and
-    # correctly counts unverified)
-    verified_vals = jaccard_for_pairs(cand, sh)
     cand_stats = (
-        cand.join(verified_vals, ["doc_a", "doc_b"], "left")
-        .groupBy()
+        cand.groupBy()
         .agg(
             F.count(F.lit(1)).alias("n_candidates"),
             F.sum(

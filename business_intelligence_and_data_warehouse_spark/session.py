@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Entries of Spark's generated-code cache (the static
 # spark.sql.codegen.cache.maxEntries, default 100).  One pass of the
@@ -27,6 +27,23 @@ from pyspark.sql import SparkSession
 # (the cache evicts within each of its 4 segments) and the test
 # battery's larger plan set.
 CODEGEN_CACHE_ENTRIES = 2000
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples) with ``schema``, a
+    list of (column name, pyarrow type) pairs.
+
+    It is built from a ``pyarrow.Table``, which goes to the JVM as
+    record batches and plans as a ``LocalTableScan``; a list of tuples
+    would run a Python-worker job to unpickle it, which starts a second
+    worker pool next to the one Arrow UDFs use.  Empty ``rows`` keep the
+    schema."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(
+        pa.table({name: pa.array(c, t) for (name, t), c in zip(schema, cols)})
+    )
 
 
 def shuffle_partitions_for(
@@ -177,6 +194,10 @@ def get_spark(
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
         )
+        # generated class names without the whole-stage-codegen id: AQE
+        # numbers stages in the order concurrent stages finish, so with
+        # the id an identical plan re-ran as new, uncached classes
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # per-task scan-slice bound — see max_partition_bytes_for
         .config(
             "spark.sql.files.maxPartitionBytes",

@@ -87,8 +87,8 @@ def test_eager_pin_materializes_blocks_up_front(spark, sf_dir):
 
 def test_query_invocation_releases_previous_pins(spark, sf_dir):
     release_pinned()
-    # dedup_simhash pins its signature table
-    QUERIES["dedup_simhash"](spark, sf_dir).count()
+    # dedup_multi_signal pins its token and signature tables
+    QUERIES["dedup_multi_signal"](spark, sf_dir).count()
     assert len(_PINNED) >= 1
     pinned_before = list(_PINNED)
     # any next query invocation must drop the previous pins first
@@ -105,7 +105,7 @@ _PIN_SITES = {
     "dedup_containment": 1,
     "dedup_minhash_lsh": 0,
     "dedup_clusters": 1,
-    "dedup_simhash": 1,
+    "dedup_simhash": 0,
     "dedup_multi_signal": 2,
     "dedup_incremental": 2,
     "dedup_lsh_recall_report": 3,

@@ -719,17 +719,28 @@ def test_minhash_slices_extend_past_one_digest(spark):
     """num_hashes > 4 rolls over to salted digests: hash h reads the
     8-hex (32-bit) slice (h%4) of digest md5(f'{h//4}|' + s) (digest 0
     unsalted). 32-bit slices keep the min non-degenerate for any real
-    per-document shingle count."""
+    per-document shingle count.  Checked on the JVM reference's hex
+    minima and on the kernel's band keys (3 bands x 4 rows)."""
     import hashlib
 
     from business_intelligence_and_data_warehouse_spark.operators.dedup import (
-        minhash_signatures,
+        doc_signatures,
     )
+
+    from .dedup_reference import minhash_signatures
 
     sh = spark.createDataFrame(
         [(1, "alpha"), (1, "beta"), (2, "alpha")], "doc_id long, s string"
     )
     out = {r.doc_id: r for r in minhash_signatures(sh, 12).collect()}
+    toks = spark.createDataFrame(
+        [(1, ["alpha", "beta", "alpha"]), (2, ["alpha"])],
+        "doc_id long, toks array<string>",
+    )
+    keys = {
+        r.doc_id: r.mh
+        for r in doc_signatures(toks, k=1, bands=3, rows_per_band=4).collect()
+    }
 
     def slices(salt, s):
         base = (f"{salt}|" + s) if salt else s
@@ -737,9 +748,12 @@ def test_minhash_slices_extend_past_one_digest(spark):
         return [d[8 * i : 8 * i + 8] for i in range(4)]
 
     for doc, words in ((1, ["alpha", "beta"]), (2, ["alpha"])):
+        exp = [min(slices(h // 4, w)[h % 4] for w in words) for h in range(12)]
         for h in range(12):
-            exp = min(slices(h // 4, w)[h % 4] for w in words)
-            assert out[doc][f"mh{h}"] == exp, (doc, h)
+            assert out[doc][f"mh{h}"] == exp[h], (doc, h)
+        for b in range(3):
+            want = b.to_bytes(4, "big") + bytes.fromhex("".join(exp[4 * b : 4 * b + 4]))
+            assert bytes(keys[doc][b]) == want, (doc, b)
 
 
 def test_multi_signal_matches_standalone_operators(spark, sf_dir):
@@ -1093,9 +1107,11 @@ def test_dedup_contract_edges_null_text_and_guards(spark):
         release_pinned,
     )
     from business_intelligence_and_data_warehouse_spark.operators.dedup import (
+        doc_signatures,
         incremental_dedup,
         multi_signal_dedup,
         simhash_near_dups,
+        token_table,
     )
 
     corpus = _docs(spark, [(1, ""), (2, "real words here")])
@@ -1112,11 +1128,15 @@ def test_dedup_contract_edges_null_text_and_guards(spark):
 
     docs = _docs(spark, [(1, "a b c"), (2, "a b c")])
     with pytest.raises(ValueError, match="num_bits"):
-        simhash_near_dups(docs, num_bits=64).collect()
+        simhash_near_dups(docs, num_bits=64)
+    with pytest.raises(ValueError, match="num_bits"):
+        doc_signatures(token_table(docs), num_bits=0)
 
     release_pinned()
     with pytest.raises(ValueError, match="max_hamming"):
         multi_signal_dedup(docs, max_hamming=4)
+    with pytest.raises(ValueError, match="max_hamming"):
+        simhash_near_dups(docs, max_hamming=4)
     assert not _PINNED, "validation must run before any pin registers"
 
 
@@ -1385,17 +1405,17 @@ def test_ivf_cells_stay_vid_disjoint_across_append(spark, tmp_path):
 
 
 def test_simhash_arrow_matches_jvm_form(spark):
-    """r13: the in-task Arrow signature pass must replicate the
-    retired exploded-JVM form bit for bit — md5 high-nibble vote
-    bits, tf-weighted votes, strict >0 sign, empty-token-array docs
-    absent — on unicode, repeated-token and single-token docs, at
-    32 and narrower widths."""
+    """The signature kernel's SimHash must replicate the exploded-JVM
+    form and the standalone Arrow pass bit for bit — md5 high-nibble
+    vote bits, tf-weighted votes, strict >0 sign, no signature for an
+    empty token array — on unicode, repeated-token and single-token
+    docs, at 32 and narrower widths."""
     from business_intelligence_and_data_warehouse_spark.operators.dedup import (
-        simhash_from_tokens,
+        doc_signatures,
         token_table,
     )
 
-    from .dedup_reference import simhash_from_tokens_jvm
+    from .dedup_reference import simhash_from_tokens, simhash_from_tokens_jvm
 
     docs = _docs(
         spark,
@@ -1410,8 +1430,8 @@ def test_simhash_arrow_matches_jvm_form(spark):
         ],
     )
     toks = token_table(docs)
-    # force a truly EMPTY token array alongside the real ones: both
-    # forms must drop it (the exploded form produced no row for it)
+    # force a truly EMPTY token array alongside the real ones: every
+    # form must drop it (the exploded form produced no row for it)
     toks = toks.withColumn(
         "toks",
         F.when(F.col("doc_id") == 7, F.array().cast("array<string>"))
@@ -1420,11 +1440,168 @@ def test_simhash_arrow_matches_jvm_form(spark):
     for bits in (32, 16, 9):
         got = {
             r.doc_id: r.simhash
-            for r in simhash_from_tokens(toks, bits).collect()
+            for r in doc_signatures(toks, num_bits=bits).collect()
+            if r.simhash is not None
         }
         want = {
             r.doc_id: r.simhash
             for r in simhash_from_tokens_jvm(toks, bits).collect()
         }
-        assert got == want, (bits, got, want)
+        arrow = {
+            r.doc_id: r.simhash
+            for r in simhash_from_tokens(toks, bits).collect()
+        }
+        assert got == want == arrow, (bits, got, want)
     assert 7 not in got  # empty token array stays absent
+
+
+def _parity_corpus(spark):
+    """Near-duplicate clusters over a small mixed-script vocabulary,
+    plus NULL text, empty text, documents shorter than any shingle
+    width, and documents repeating one shingle."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(24)] + [
+        "café", "naïve", "straße", "日本語", "テキスト", "über",
+    ]
+    rows, did = [], 0
+    for _ in range(14):
+        base = [rng.choice(vocab) for _ in range(rng.randint(6, 18))]
+        for _ in range(rng.randint(1, 4)):
+            words = list(base)
+            for _ in range(rng.randint(0, 3)):
+                words[rng.randrange(len(words))] = rng.choice(vocab)
+            rows.append((did, " ".join(words)))
+            did += 1
+    rows += [
+        (did, None),
+        (did + 1, ""),
+        (did + 2, "   "),
+        (did + 3, "café"),
+        (did + 4, "w1 w2"),
+        (did + 5, "a b a b a b a b"),
+        (did + 6, "a b a b a b"),
+        (did + 7, "日本語 テキスト 日本語 テキスト"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_signature_kernel_minhash_matches_jvm_reference(spark):
+    """Band keys, candidate pairs and their Jaccard from the kernel
+    equal the exploded JVM forms (hex minima, banded struct join,
+    two-way shingle verify) on a corpus with NULL/empty/short docs and
+    repeated and non-ASCII shingles, for several band geometries —
+    including 1 and 9 hashes, which do not fill whole digests."""
+    from business_intelligence_and_data_warehouse_spark.operators.dedup import (
+        doc_signatures,
+        minhash_band_pairs,
+        shingles_from_tokens,
+        token_table,
+    )
+
+    from .dedup_reference import (
+        jaccard_for_pairs,
+        minhash_lsh_candidates,
+        minhash_signatures,
+    )
+
+    toks = token_table(_parity_corpus(spark)).cache()
+    for k, bands, rows in ((3, 4, 2), (2, 3, 4), (1, 1, 1), (2, 3, 3)):
+        sh = shingles_from_tokens(toks, k)
+        sigs = doc_signatures(toks, k=k, bands=bands, rows_per_band=rows)
+        got_sh = {r.doc_id: sorted(r.sh) for r in sigs.collect()}
+        want_sh: dict = {}
+        for r in sh.collect():
+            want_sh.setdefault(r.doc_id, []).append(r.s)
+        assert {d: v for d, v in got_sh.items() if v} == {
+            d: sorted(v) for d, v in want_sh.items()
+        }
+        hexes = {
+            r.doc_id: r
+            for r in minhash_signatures(sh, bands * rows).collect()
+        }
+        keys = {r.doc_id: r.mh for r in sigs.collect() if r.mh is not None}
+        assert set(keys) == set(hexes)
+        for d, mh in keys.items():
+            assert [bytes(x) for x in mh] == [
+                b.to_bytes(4, "big")
+                + bytes.fromhex(
+                    "".join(hexes[d][f"mh{b * rows + i}"] for i in range(rows))
+                )
+                for b in range(bands)
+            ], (k, bands, rows, d)
+        cand = minhash_lsh_candidates(sh, bands, rows)
+        want_cand = {(r.doc_a, r.doc_b) for r in cand.collect()}
+        want_j = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in jaccard_for_pairs(cand, sh).collect()
+        }
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in minhash_band_pairs(sigs).collect()
+        }
+        assert set(got) == want_cand, (k, bands, rows)
+        assert got == {p: want_j.get(p, 0.0) for p in want_cand}
+        assert any(j == 1.0 for j in got.values())
+    toks.unpersist()
+
+
+def test_signature_kernel_simhash_pairs_match_jvm_reference(spark):
+    """SimHash values and the packed-key Hamming pairs from the kernel
+    equal the JVM signature form and the struct-explode block join, at
+    1, 17 and 32 bits and two block geometries."""
+    from business_intelligence_and_data_warehouse_spark.operators.dedup import (
+        _hamming_pairs,
+        doc_signatures,
+        token_table,
+    )
+
+    from .dedup_reference import simhash_from_tokens_jvm, simhash_pairs_from_sigs
+
+    toks = token_table(_parity_corpus(spark)).cache()
+    for bits in (1, 17, 32):
+        ref_sigs = simhash_from_tokens_jvm(toks, bits)
+        want_sig = {r.doc_id: r.simhash for r in ref_sigs.collect()}
+        for blocks, max_h in ((4, 3), (2, 1)):
+            sigs = doc_signatures(
+                toks, num_bits=bits, max_hamming=max_h, num_blocks=blocks
+            )
+            got_sig = {
+                r.doc_id: r.simhash
+                for r in sigs.collect()
+                if r.simhash is not None
+            }
+            assert got_sig == want_sig, bits
+            want = sorted(
+                map(tuple, simhash_pairs_from_sigs(
+                    ref_sigs, bits, max_h, blocks
+                ).collect())
+            )
+            got = sorted(map(tuple, _hamming_pairs(sigs, max_h).collect()))
+            assert got == want, (bits, blocks, max_h)
+            assert want
+    toks.unpersist()
+
+
+def test_dedup_builders_start_no_job_on_shuffled_input(spark):
+    """Building the kernel-fed operators runs nothing: over a shuffled
+    input, a partition-count probe would execute the input's shuffle
+    stages while the plan is built (one extra job per build)."""
+    from business_intelligence_and_data_warehouse_spark.operators.dedup import (
+        minhash_lsh_dedup,
+        multi_signal_dedup,
+        simhash_near_dups,
+    )
+
+    sc = spark.sparkContext
+    shuffled = _parity_corpus(spark).repartition(3, "doc_id")
+    group = "dedup-build-probe"
+    sc.setJobGroup(group, "plan construction only")
+    try:
+        minhash_lsh_dedup(shuffled)
+        simhash_near_dups(shuffled)
+        multi_signal_dedup(shuffled)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
