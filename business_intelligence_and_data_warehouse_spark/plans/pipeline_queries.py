@@ -128,11 +128,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by 3-gram shingle Jaccard >= 0.5 (prefix-filtered)."""
     docs = load_table(spark, sf_dir, "documents")
     shingles = shingle_table(docs, 3)
-    # Warm runs sometimes compile a few classes (0-8 per benchmark pass):
-    # consecutive final adaptive plans differ only in whole-stage-codegen
-    # ids, which AQE assigns in the order concurrent stages finish and
-    # which are part of the generated class name.  Spark's scheduling,
-    # not this body; each new order is compiled once and cached.
+    # Consecutive final adaptive plans differ only in whole-stage-codegen
+    # ids, which AQE assigns in the order concurrent stages finish;
+    # session.get_spark keeps the id out of the generated class names,
+    # so warm runs compile nothing.
     return jaccard_pairs(shingles, _JACCARD_T, max_df=_MAX_DF).orderBy(
         "doc_a", "doc_b"
     )
@@ -406,12 +405,10 @@ def dedup_multi_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import multi_signal_dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    # Warm runs still compile 0-10 classes: between consecutive runs AQE
-    # flips the build side (BuildLeft <-> BuildRight) of the SimHash
-    # block self-join and the MinHash band self-join.  Both sides are
-    # the same small relation, and the side AQE broadcasts follows which
-    # side's stage has finished when it re-plans, so each flip is new
-    # join code.  Spark's scheduling, not this body, causes it.
+    # Consecutive warm runs execute one final plan (ids masked): both key
+    # self-joins and the degree join are sort-merge joins, which have no
+    # build side for AQE to flip, and the exact groups are a window, not
+    # a join.
     return multi_signal_dedup(
         docs, k=3, bands=4, rows_per_band=2, threshold=_JACCARD_T,
         num_bits=_SIMHASH_BITS, max_hamming=3,
@@ -2498,11 +2495,10 @@ def pipeline_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.packing import pack_sequences
 
-    # The first warm passes compile some classes (6-30), later ones none:
-    # consecutive final adaptive plans differ only in whole-stage-codegen
-    # ids, which AQE assigns in the order concurrent stages finish and
-    # which are part of the generated class name.  Each new order is
-    # compiled once and then cached; Spark's scheduling, not this body.
+    # Consecutive final adaptive plans differ only in whole-stage-codegen
+    # ids, which AQE assigns in the order concurrent stages finish;
+    # session.get_spark keeps the id out of the generated class names,
+    # so warm runs compile nothing.
     docs = load_table(spark, sf_dir, "documents")
     # thresholds passed explicitly: the oracle bakes in these module
     # constants, so relying on curate_corpus's defaults would couple

@@ -652,13 +652,11 @@ def q4a_multi_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey")
         .distinct()
     )
-    # A warm run still compiles a few classes (2-10 per benchmark pass,
-    # 12-17 at sf0.001).  The final adaptive plans of two consecutive
-    # runs differ only in their whole-stage-codegen ids: the three
-    # branches' shuffle stages run concurrently, AQE numbers each later
-    # stage in the order the earlier ones finish, and the id is part of
-    # the generated class name, so another finishing order is new code.
-    # Spark's stage scheduling causes it, not this body.
+    # The final adaptive plans of consecutive runs differ only in their
+    # whole-stage-codegen ids: the three branches' shuffle stages run
+    # concurrently and AQE numbers each later stage in the order the
+    # earlier ones finish.  session.get_spark keeps the id out of the
+    # generated class names, so warm runs compile nothing.
     return (
         part.join(late, part.p_partkey == late.l_partkey, "left_semi")
         .join(discounted, part.p_partkey == discounted.l_partkey, "left_semi")
