@@ -48,10 +48,12 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W_
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .caching import pin
 from ..functions.text import (
     fingerprint_md5,
@@ -1228,8 +1230,7 @@ def build_dedup_index(
         sh, stop = _df_capped(sh, max_df)
         stop.write.mode("overwrite").parquet(index_dir + "/stop")
     else:
-        stop_schema = "s string"
-        docs.sparkSession.createDataFrame([], stop_schema).write.mode(
+        local_frame(docs.sparkSession, [], [("s", pa.string())]).write.mode(
             "overwrite"
         ).parquet(index_dir + "/stop")
     sh = pin(sh)
@@ -1242,9 +1243,10 @@ def build_dedup_index(
         .write.mode("overwrite")
         .parquet(index_dir + "/sizes")
     )
-    docs.sparkSession.createDataFrame(
+    local_frame(
+        docs.sparkSession,
         [(int(k), -1 if max_df is None else int(max_df))],
-        "k int, max_df int",
+        [("k", pa.int32()), ("max_df", pa.int32())],
     ).write.mode("overwrite").parquet(index_dir + "/meta")
 
 
