@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens_ws
+from ..session import local_frame
 
 
 def occurrences(
@@ -283,17 +284,10 @@ def bpe_train(
                 counts[p] += d
                 heapq.heappush(heap, (-counts[p], p[0], p[1]))
         counts[(a, b)] = 0
-    # an Arrow table goes to the JVM as record batches; a list of
-    # tuples would run a Python-worker job to unpickle it, which starts
-    # a second worker pool next to the one Arrow UDFs use
-    encoded = spark.createDataFrame(
-        pa.table(
-            {
-                "w0": pa.array([r.w for r in rows], pa.string()),
-                "w": pa.array([seg for seg, _ in work], pa.string()),
-                "freq": pa.array([f for _, f in work], pa.int64()),
-            }
-        )
+    encoded = local_frame(
+        spark,
+        [(r.w, seg, f) for r, (seg, f) in zip(rows, work)],
+        [("w0", pa.string()), ("w", pa.string()), ("freq", pa.int64())],
     )
     return merges, encoded
 
@@ -309,8 +303,6 @@ def merges_frame(spark, merges: list[tuple]) -> DataFrame:
     """The trained merge list as a (rank, a, b, new_symbol, pair_count)
     DataFrame, in training order."""
     import pyarrow as pa
-
-    from ..session import local_frame
 
     return local_frame(
         spark,

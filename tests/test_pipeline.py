@@ -752,7 +752,9 @@ def test_minhash_slices_extend_past_one_digest(spark):
         for h in range(12):
             assert out[doc][f"mh{h}"] == exp[h], (doc, h)
         for b in range(3):
-            want = b.to_bytes(4, "big") + bytes.fromhex("".join(exp[4 * b : 4 * b + 4]))
+            want = b.to_bytes(4, "big") + bytes.fromhex(
+                "".join(exp[4 * b : 4 * b + 4])
+            )
             assert bytes(keys[doc][b]) == want, (doc, b)
 
 
