@@ -410,6 +410,13 @@ def _key_pairs(sigs: DataFrame, keys: str, *payload: str) -> DataFrame:
     so the build side flipped from run to run and each flip compiled
     new join code.  A sort-merge join has no build side and spills a
     hot key instead of holding it in one hash map, at any scale."""
+    # Bytes at x10 (benchmark `llm_pipeline --scale 0.1`, 5,000
+    # documents, seed 777, 4 cores, one traced warm pass): the
+    # dedup_multi_signal exchanges write 38.1 MB of the pass's 58.0 MB
+    # (engine.shuffle_write_mb; 3.8 MB at x1, so linear in the corpus)
+    # and the operation takes 4.0-4.8 s.  The MinHash side's rows carry
+    # each document's `sh` array once per band, so joining the pair
+    # set back to one copy of `sh` would move fewer of those bytes.
     rows = sigs.select(
         "doc_id", keys, *payload, F.posexplode(keys).alias("_pos", "_key")
     )

@@ -45,6 +45,7 @@ from __future__ import annotations
 import math
 import re
 import sys
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -373,7 +374,7 @@ def brute_force_topk(
     task (:func:`_panel_topk`): one corpus pass scores each row against
     every probe, with no probe×corpus pair fan-out through a join."""
     panel = _collect_normed(_normed(probes, id_col, vec_col))
-    return _panel_topk(_normed(vectors, id_col, vec_col), panel, k)
+    return _panel_topk(_normed(vectors, id_col, vec_col), _cosine_scorer(panel), k)
 
 
 def matryoshka_topk(
@@ -424,68 +425,24 @@ def matryoshka_topk(
     return brute_force_topk(trunc(vectors), trunc(probes), k, id_col, vec_col)
 
 
-def l2_dec_batch(a: Column, b: Column) -> Column:
-    """Snapped squared-L2 distance between two array columns, as a
-    scaled BIGINT: per-element ``FLOOR((x-y)^2 * 1e6)`` summed exactly
-    (the :func:`dot_dec` determinism argument applied to differences —
-    float32→float64 widen and subtract are exact, the square is one
-    IEEE multiply). Arrow-batched for the encode/ADC hot loops."""
-
-    @pandas_udf("long")
-    def l2_udf(av: pd.Series, bv: pd.Series) -> pd.Series:
-        if len(av) == 0:
-            return pd.Series([], dtype="int64")
-        am = np.stack(av.to_numpy()).astype(np.float64)
-        bm = np.stack(bv.to_numpy()).astype(np.float64)
-        d = (am - bm)
-        return pd.Series(np.floor(d * d * DOT_SCALE).astype(np.int64).sum(axis=1))
-
-    return l2_udf(a, b)
-
-
 # ---------------------------------------------------------------------------
 # product quantization (PQ) + asymmetric-distance top-k
 # ---------------------------------------------------------------------------
 
-def _subspace_rows(
-    vectors: DataFrame,
-    num_subspaces: int,
-    subdim: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(vid, j, sub) — the vector split into its m subspace slices,
-    built map-side with one inline explode (bounded fan-out m)."""
-    return vectors.select(
-        F.col(id_col).alias("vid"),
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice(
-                            F.col(vec_col), j * subdim + 1, subdim
-                        ).alias("sub"),
-                    )
-                    for j in range(num_subspaces)
-                ]
-            )
-        ),
-    )
-
-
-# Per-process memo of MATERIALIZED corpus code tables, keyed by
-# (applicationId, caller tag, dim, m, stride, id_col, vec_col).  The
-# four PQ-family registry queries (sim_ann_pq, sim_ann_ivfpq,
-# sim_ann_ivfpq_fixed, sim_pq_recall_report) all encode the SAME
-# corpus under the SAME fixed-256 codebook; without this each paid the
-# full encode pass (~36s of the sf0.1 battery tail sat in the family,
-# r9 verdict item 5).  The encode is deterministic in (corpus, params)
-# — reuse cannot change a row — and the memo lives on DISK (not the
-# pin ledger, which release_pinned clears at every query boundary), in
-# dirs removed at interpreter exit.  This is the r4 shared-tokenize
-# pattern applied across the family: build once, read many.
-_PQ_CODES_MEMO: dict[tuple, str] = {}
+# Per-process memo of ENCODED corpora, keyed by (applicationId, corpus
+# fingerprint, dim, m, stride, id_col, vec_col) and holding (collected
+# codebook, parquet path of the encoded normed corpus).  The five
+# PQ-family registry queries (sim_ann_pq, sim_ann_ivfpq,
+# sim_ann_ivfpq_fixed, sim_ann_ivfpq_rerank, sim_pq_recall_report) all
+# encode the SAME corpus under the SAME fixed-256 codebook; without
+# this each paid the full encode pass (~36s of the sf0.1 battery tail
+# sat in the family, r9 verdict item 5).  The encode is deterministic
+# in (corpus, params) — reuse cannot change a row — and the memo lives
+# on DISK (not the pin ledger, which release_pinned clears at every
+# query boundary), in dirs removed at interpreter exit.  This is the
+# r4 shared-tokenize pattern applied across the family: build once,
+# read many.
+_PQ_CODES_MEMO: dict[tuple, tuple] = {}
 
 
 def _pq_memo_dir() -> str:
@@ -541,178 +498,142 @@ def _corpus_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> tuple:
     return (row["n"], digest)
 
 
-def _pq_encode_batched(
-    vectors: DataFrame,
-    cb_rows,
-    num_subspaces: int,
-    subdim: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(vid, j, code) corpus encode as ONE ``mapInArrow`` pass: each
-    task holds the collected codebook as numpy arrays and computes all
-    ``num_subspaces`` snapped-L2 argmins per vector in vectorized
-    chunks — ``FLOOR((x-y)^2 * 1e6)`` int64 sums, tie -> smaller code,
-    with N rows crossing the Python boundary instead of N·m·K joined
-    (subspace, codebook) rows.  An empty codebook encodes nothing.
-
-    Parity notes: float32 -> float64 widening is exact (Spark's Row
-    collect widens FloatType the same way numpy's astype does);
-    codebook rows are sorted by code ascending so numpy's
-    first-minimum argmin IS the oracle's ``min(struct(d, code))``
-    tie-break."""
-    import numpy as _np
-    import pyarrow as _pa
-
-    m = num_subspaces
-    ordered = sorted(cb_rows, key=lambda r: r["code"])
-    code_ids = _np.array([r["code"] for r in ordered], dtype=_np.int64)
-    cbm = _np.array([list(r["v"]) for r in ordered], dtype=_np.float64)
-
-    src = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-    )
+def _pq_encode(corpus_n: DataFrame, cbm: np.ndarray, m: int, sd: int) -> DataFrame:
+    """``corpus_n`` (vid, vec, norm) with a ``codes`` array column
+    appended IN-TASK, as :func:`_assign_cells_arrow` appends ``cvid``:
+    per subspace, the index of the nearest codebook row ``cbm`` under
+    snapped squared L2 (:func:`_snapped_l2`), ties → the smaller
+    index.  Codebook rows ascend by id, so numpy's first-minimum
+    argmin IS the oracle's ``min(struct(d, code))``.  One MapInArrow
+    pass, one row per vector; an empty codebook encodes nothing."""
 
     def encode(batches):
-        if not len(code_ids):
+        import pyarrow as _pa
+
+        if not len(cbm):
             return
-        cb_sub = [
-            _np.ascontiguousarray(cbm[:, j * subdim:(j + 1) * subdim])
-            for j in range(m)
-        ]
+        # chunk rows so the (rows, K, subdim) temporaries stay ~8 MB
+        step = max(1, _TILE_TERMS // (len(cbm) * sd))
         for batch in batches:
-            vids = batch.column("vid").to_numpy(zero_copy_only=False)
-            n_rows = len(vids)
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            # flatten() honors list offsets (embedding cells are
-            # non-null fixed-dim by contract), so the reshape is safe
-            x = (
-                batch.column("vec")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n_rows, -1)
-                .astype(_np.float64)
-            )
-            out_codes = _np.empty((n_rows, m), dtype=_np.int64)
-            # chunk rows so the (rows, K, subdim) temp stays ~tens of MB
-            step = max(1, (8 << 20) // max(1, len(code_ids) * subdim * 8))
-            for lo in range(0, n_rows, step):
-                hi = min(n_rows, lo + step)
+            x = _batch_arrays(batch)["vec"]
+            codes = np.empty((len(x), m), dtype=np.int32)
+            for lo in range(0, len(x), step):
                 for j in range(m):
-                    d = (
-                        x[lo:hi, None, j * subdim:(j + 1) * subdim]
-                        - cb_sub[j][None, :, :]
-                    )
-                    dist = (
-                        _np.floor(d * d * DOT_SCALE)
-                        .astype(_np.int64)
-                        .sum(axis=2)
-                    )
-                    out_codes[lo:hi, j] = code_ids[dist.argmin(axis=1)]
-            yield _pa.record_batch(
-                {
-                    "vid": _np.repeat(vids, m),
-                    "j": _np.tile(
-                        _np.arange(m, dtype=_np.int32), n_rows
-                    ),
-                    "code": out_codes.reshape(-1),
-                }
+                    s = slice(j * sd, (j + 1) * sd)
+                    codes[lo:lo + step, j] = _snapped_l2(
+                        x[lo:lo + step, None, s], cbm[None, :, s]
+                    ).argmin(axis=1)
+            yield batch.append_column(
+                "codes",
+                _pa.ListArray.from_arrays(
+                    np.arange(0, codes.size + 1, m, dtype=np.int32),
+                    codes.ravel(),
+                ),
             )
 
-    return src.mapInArrow(encode, "vid long, j int, code long")
+    src = corpus_n.select("vid", "vec", "norm")
+    vec_type = dict(src.dtypes)["vec"]
+    return src.mapInArrow(
+        encode, f"vid long, vec {vec_type}, norm double, codes array<int>"
+    )
 
 
-def _pq_codes(
+def _pq_encoded(
     vectors: DataFrame,
-    probes: DataFrame,
     dim: int,
     num_subspaces: int,
     codebook_stride: int,
     id_col: str,
     vec_col: str,
-    codes_tag: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(codes, dtable) — the two PQ artifacts :func:`pq_topk` and
-    :func:`ivf_pq_topk` share: ``codes`` is the encoded corpus
-    (vid, j, code), ``dtable`` the probe-to-codebook subdistance
-    lookup (qid, j, code, dd as scaled BIGINT).
+    memo: bool,
+):
+    """(codebook, encoded) — what :func:`pq_topk` and
+    :func:`ivf_pq_topk` share: the codebook rows ``vid % stride == 0``
+    collected once (:func:`_collect_normed`), and the normed corpus
+    (vid, vec, norm, codes) encoded against them (:func:`_pq_encode`).
+    ``memo`` serves both from ``_PQ_CODES_MEMO``: the first call in a
+    session writes the encoded corpus to parquet, later calls on the
+    same corpus content and parameters read it and skip the codebook
+    collect.
 
-    ``codebook_stride`` picks the codebook as ``vid % stride == 0``.
-    The codebook is collected once and held in every encode task
-    (:func:`_pq_encode_batched`), and the encode scores every corpus
-    subspace against every entry, so the codebook size MUST be
-    bounded (callers default to ~256 entries by
-    sizing stride = N/256): a stride fixed as the corpus grows makes
-    the codebook N/stride entries and the encode pass O(N²·m/stride)
-    — measured as a 4 GiB-heap OOM at 60k vectors (x30 ramp data) in
-    the round-8 scale ramp, the same structural quadratic the trained
-    √N coarse quantizer fixed for IVF cells.  The flip side at TOY
-    corpora: 256 entries exceed N/old-stride below N=6400, so the
-    bench SF pays a measured constant factor (~2.8× on sim_ann_pq at
-    2000 vectors, interleaved best-of-2: 3.7s vs 10.3s) for the corpus-independent codebook — the same
-    honest trade as the recall-targeted 0.7·√N probe budget."""
+    The codebook is held in every encode task and scored against every
+    corpus subspace, so its size MUST be bounded (callers default to
+    ~256 entries by sizing stride = N/256): a stride fixed as the
+    corpus grows makes the codebook N/stride entries and the encode
+    pass O(N²·m/stride) — measured as a 4 GiB-heap OOM at 60k vectors
+    (x30 ramp data) in the round-8 scale ramp, the same structural
+    quadratic the trained √N coarse quantizer fixed for IVF cells.
+    The flip side at TOY corpora: 256 entries exceed N/old-stride
+    below N=6400, so the bench SF pays a measured constant factor
+    (~2.8× on sim_ann_pq at 2000 vectors, interleaved best-of-2: 3.7s
+    vs 10.3s) for the corpus-independent codebook — the same honest
+    trade as the recall-targeted 0.7·√N probe budget."""
     if dim % num_subspaces != 0:
         raise ValueError(
             f"dim {dim} not divisible by num_subspaces {num_subspaces}"
         )
-    subdim = dim // num_subspaces
-    cb_src = vectors.filter(F.col(id_col) % codebook_stride == 0).select(
-        F.col(id_col).alias("code"), F.col(vec_col).alias("v")
+    sd = dim // num_subspaces
+    corpus_n = _normed(vectors, id_col, vec_col)
+
+    def build():
+        cb = _collect_normed(corpus_n.filter(F.col("vid") % codebook_stride == 0))
+        return cb, _pq_encode(corpus_n, cb[1], num_subspaces, sd)
+
+    if not memo:
+        return build()
+    spark = vectors.sparkSession
+    key = (
+        spark.sparkContext.applicationId,
+        _corpus_fingerprint(vectors, id_col, vec_col),
+        dim,
+        num_subspaces,
+        codebook_stride,
+        id_col,
+        vec_col,
     )
-    cb = cb_src.select(
-        "code",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice(
-                            F.col("v"), j * subdim + 1, subdim
-                        ).alias("csub"),
-                    )
-                    for j in range(num_subspaces)
-                ]
-            )
-        ),
-    )
-    # encode: nearest code per (vector, subspace), tie -> smaller code,
-    # as ONE vectorized numpy pass per Arrow batch — N corpus rows cross
-    # the Python boundary instead of N·m·K (subspace, codebook) pairs
-    codes = _pq_encode_batched(
-        vectors, cb_src.collect(), num_subspaces, subdim, id_col, vec_col
-    )
-    if codes_tag is not None:
-        # serve the corpus encode from the per-process parquet memo:
-        # first caller in a session materializes it, the rest of the
-        # PQ family reads N·m narrow rows instead of re-running the
-        # encode pass
-        spark = vectors.sparkSession
-        key = (
-            spark.sparkContext.applicationId,
-            codes_tag,
-            _corpus_fingerprint(vectors, id_col, vec_col),
-            dim,
-            num_subspaces,
-            codebook_stride,
-            id_col,
-            vec_col,
+    if key not in _PQ_CODES_MEMO:
+        cb, encoded = build()
+        path = _pq_memo_dir()
+        encoded.write.mode("overwrite").parquet(path)
+        _PQ_CODES_MEMO[key] = (cb, path)
+    cb, path = _PQ_CODES_MEMO[key]
+    return cb, spark.read.parquet(path)
+
+
+def _adc_scorer(panel, cbm: np.ndarray, m: int, sd: int) -> "_Scorer":
+    """The ADC block scorer over a (vid, codes) scan: the probe
+    distance table — (probes, m, K) snapped squared-L2 distances of
+    each probe's subspace slices to each codebook row's, as int64 —
+    is computed ONCE on the driver, and a row's approximate distance
+    to a probe is the sum of its m table lookups, over 1e6."""
+    qids, pmat, _ = panel
+    dt = np.zeros((len(qids), m, len(cbm)), dtype=np.int64)
+    if len(qids) and len(cbm):
+        dt = np.stack(
+            [
+                _snapped_l2(
+                    pmat[:, None, j * sd:(j + 1) * sd],
+                    cbm[None, :, j * sd:(j + 1) * sd],
+                )
+                for j in range(m)
+            ],
+            axis=1,
         )
-        path = _PQ_CODES_MEMO.get(key)
-        if path is None:
-            path = _pq_memo_dir()
-            codes.write.mode("overwrite").parquet(path)
-            _PQ_CODES_MEMO[key] = path
-        codes = spark.read.parquet(path)
-    # ADC lookup table: probe-to-codebook subdistances (P * m * K rows)
-    psub = _subspace_rows(probes, num_subspaces, subdim, id_col, vec_col)
-    dtable = psub.join(F.broadcast(cb), "j").select(
-        F.col("vid").alias("qid"),
-        "j",
-        "code",
-        l2_dec_batch(F.col("sub"), F.col("csub")).alias("dd"),
+
+    def key(p, b):
+        codes = b["codes"]
+        d = dt[p, 0][:, codes[:, 0]]
+        for j in range(1, m):
+            d += dt[p, j][:, codes[:, j]]
+        return d / DOT_SCALE
+
+    return _Scorer(
+        qids, ("codes",), key,
+        lambda key, q, c, b: {"approx_dist": key},
+        "approx_dist double", "approx_dist",
     )
-    return codes, dtable
 
 
 def pq_topk(
@@ -743,11 +664,12 @@ def pq_topk(
     ``centroid_stride`` pins the stride directly instead (unit tests
     use stride 1 for the lossless-codebook identity); a FIXED stride
     makes the codebook N/stride entries and the encode quadratic —
-    the round-8 ramp OOM, see :func:`_pq_codes`.  ``n`` short-circuits
+    the round-8 ramp OOM, see :func:`_pq_encoded`.  ``n`` short-circuits
     the corpus count when the caller already knows it.  ``codes_tag``
     (a stable corpus identity, e.g. the sf_dir) opts the corpus encode
     into the per-process parquet memo so a family of queries over the
-    same corpus shares ONE encode pass (see ``_PQ_CODES_MEMO``).
+    same corpus shares ONE encode pass (see ``_PQ_CODES_MEMO``; the
+    memo is keyed by corpus content, so any tag serves).
 
     Output: (query_id, neighbor_id, rank, approx_dist) — approx
     squared-L2, ascending, ties on neighbor id. Distances snap
@@ -755,40 +677,25 @@ def pq_topk(
     encode assignments and ADC ranks are bit-identical cross-engine.
 
     Scale design: this is the MEMORY-BANDWIDTH answer to ANN — after
-    encode, a corpus vector is m codes (8 bytes at m=8), so the scan
-    side of a query reads ~dim*4/m/1 fewer bytes than brute force.
-    The encode pass is the only corpus-wide work: one map-side Arrow
-    pass against the collected codebook (:func:`_pq_encode_batched`).
-    ADC joins the (P·m·K)-row distance table — tiny for bounded probe
-    sets — as a broadcast against the code table, then one
-    groupBy(qid, vid) partial-aggregated sum. No corpus self-join
-    anywhere.
+    encode, a corpus vector is m codes, so the scan side of a query
+    reads (vid, codes) only.  The encode is the only corpus-wide
+    float work: one map-side Arrow pass against the collected codebook
+    (:func:`_pq_encode`).  The probe distance table is built once on
+    the driver and held in every task, and the search is ONE
+    MapInArrow pass of table lookups (:func:`_panel_topk`) — no
+    distance-table or code join, and no corpus self-join anywhere.
     """
     if centroid_stride is None:
         if n is None:
             n = vectors.count()
         centroid_stride = max(1, n // codebook_size)
-    codes, dtable = _pq_codes(
-        vectors, probes, dim, num_subspaces, centroid_stride, id_col, vec_col,
-        codes_tag=codes_tag,
+    cb, encoded = _pq_encoded(
+        vectors, dim, num_subspaces, centroid_stride, id_col, vec_col,
+        memo=codes_tag is not None,
     )
-    approx = (
-        codes.join(F.broadcast(dtable), ["j", "code"])
-        .groupBy("qid", "vid")
-        .agg((F.sum("dd").cast("double") / DOT_SCALE).alias("approx_dist"))
-        .filter(F.col("vid") != F.col("qid"))
-    )
-    w = W.partitionBy("qid").orderBy("approx_dist", F.col("vid"))
-    return (
-        approx.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("vid").alias("neighbor_id"),
-            "rank",
-            "approx_dist",
-        )
-    )
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    scorer = _adc_scorer(panel, cb[1], num_subspaces, dim // num_subspaces)
+    return _panel_topk(encoded, scorer, k)
 
 
 def ivf_pq_topk(
@@ -803,7 +710,6 @@ def ivf_pq_topk(
     n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codes_tag: str | None = None,
 ) -> DataFrame:
     """IVF-PQ (the FAISS ``IVFADC`` architecture): coarse cells prune
     WHICH vectors a probe scores, PQ codes make each score a table
@@ -811,52 +717,39 @@ def ivf_pq_topk(
     because per-query cost becomes (nprobe/cells of the corpus) rows
     × (m lookups each) with the corpus stored as m-byte codes.
 
-    Candidate generation is exactly :func:`ivf_topk`'s (cosine cell
-    assignment, nprobe nearest cells per probe); scoring is exactly
-    :func:`pq_topk`'s ADC (snapped squared-L2 over stride codebooks)
-    restricted to the candidates — both halves reuse the factored
-    machinery (`_ivf_candidates`, `_pq_codes`), so the composition
-    cannot drift from its parts. The metric mix (cosine cells, L2
-    scoring) is an approximation on unnormalized vectors — rerank the
-    top-k' with :func:`cosine_for_pairs` when exact cosine order
-    matters, as FAISS users rerank ADC shortlists.
+    Candidate generation is exactly :func:`ivf_topk`'s (stride
+    centroids, in-task cosine cell assignment, nprobe nearest cells
+    per probe); scoring is exactly :func:`pq_topk`'s ADC restricted to
+    those cells — one :func:`_panel_topk` pass over the encoded normed
+    corpus (vid, vec, norm, codes).  The encoded corpus feeds both the
+    centroid collect and that pass, so it is always served from the
+    parquet memo (see :func:`_pq_encoded`) instead of a pin.  The
+    metric mix (cosine cells, L2 scoring) is an approximation on
+    unnormalized vectors — rerank the top-k' with
+    :func:`cosine_for_pairs` when exact cosine order matters, as FAISS
+    users rerank ADC shortlists.
 
     Output contract matches :func:`pq_topk`; a probe returns at most
     min(k, candidates-in-its-cells) rows.
     """
-    cand = _ivf_candidates(
-        vectors, probes, centroid_stride, nprobe, id_col, vec_col
-    ).select("qid", F.col("cid").alias("vid"))
     # cells and codebook are DIFFERENT knobs: centroid_stride shapes
     # the coarse cells; codebook_size (when given) pins a bounded
     # ~256-entry codebook per subspace so the encode pass stays linear
-    # in the corpus (see _pq_codes) instead of inheriting the cell
+    # in the corpus (see _pq_encoded) instead of inheriting the cell
     # stride
     cb_stride = centroid_stride
     if codebook_size is not None:
         if n is None:
             n = vectors.count()
         cb_stride = max(1, n // codebook_size)
-    codes, dtable = _pq_codes(
-        vectors, probes, dim, num_subspaces, cb_stride, id_col, vec_col,
-        codes_tag=codes_tag,
+    cb, encoded = _pq_encoded(
+        vectors, dim, num_subspaces, cb_stride, id_col, vec_col, memo=True
     )
-    scored = (
-        cand.join(codes, "vid")
-        .join(F.broadcast(dtable), ["qid", "j", "code"])
-        .groupBy("qid", "vid")
-        .agg((F.sum("dd").cast("double") / DOT_SCALE).alias("approx_dist"))
-    )
-    w = W.partitionBy("qid").orderBy("approx_dist", F.col("vid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("vid").alias("neighbor_id"),
-            "rank",
-            "approx_dist",
-        )
+    cents = _collect_normed(encoded.filter(F.col("vid") % centroid_stride == 0))
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    scorer = _adc_scorer(panel, cb[1], num_subspaces, dim // num_subspaces)
+    return _panel_topk(
+        encoded, scorer, k, _cell_probes(panel, cents, nprobe), cents
     )
 
 
@@ -905,20 +798,25 @@ def _cosine_for_pairs_normed(pairs: DataFrame, normed: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Collected-panel Arrow scorers.  A probe batch is a small panel by
-# design (every registered query probes a FIXED 50-id panel or the 1%
-# ``vec_id % 100 == 0`` stride), and a centroid set is bounded by its
-# quantizer (√N trained cells; N/stride for the stride quantizer, whose
-# growth is its documented scale limit) — so both are collected ONCE to
-# the driver and held inside every task.  Each ANN operator is then ONE
-# corpus-side mapInArrow pass: each scanned row crosses the Arrow
-# boundary once, is assigned and scored against the in-task centroids
-# and panel with the identical snapped-numpy arithmetic
-# `dot_dec_batch` uses, and only per-batch top-k survivors flow into
-# the final exact rank.  A relational form of the same operators
-# (broadcast joins + windows) would broadcast the very same panel and
-# centroid rows, so it bounds nothing this path does not; it lives in
-# tests/ann_reference.py as the parity reference.
+# Collected-panel Arrow scorers: ONE in-task top-k kernel for every
+# metric.  A probe batch is a small panel by design (every registered
+# query probes a FIXED 50-id panel or the 1% ``vec_id % 100 == 0``
+# stride), and a centroid set or PQ codebook is bounded by its
+# quantizer (√N trained cells, ~256 codebook rows; N/stride for the
+# stride quantizer, whose growth is its documented scale limit) — so
+# each is collected ONCE to the driver and held inside every task.
+# Every top-k operator is then ONE corpus-side mapInArrow pass
+# (:func:`_panel_topk`): each scanned row crosses the Arrow boundary
+# once, is assigned to its cell if the operator has cells, and is
+# scored against the in-task panel by the operator's block scorer
+# (:class:`_Scorer` — snapped cosine, snapped squared L2, int8 integer
+# dot, sign-bit Hamming, or ADC table lookup), and only per-tile top-k
+# survivors flow into the one shared exact rank
+# (:func:`_pairs_topk_window`).  A relational form of the same
+# operators (broadcast joins, pair UDFs, windows) would broadcast the
+# very same panel, centroid and codebook rows, so it bounds nothing
+# this path does not; those forms live in tests/ann_reference.py as
+# the parity references.
 # ---------------------------------------------------------------------------
 
 # float64 terms (probes × rows × dim) one numpy scoring step holds:
@@ -927,38 +825,46 @@ _TILE_TERMS = 1 << 20
 
 
 def _collect_normed(normed: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The one driver copy of a probe panel or centroid set: a normed
-    (vid, vec, norm) table collected in one job, as (ids, float64 vec
-    matrix, norms) sorted by vid ascending.  float32→float64 widen is
-    exact, so the matrix replays the JVM values bit for bit."""
+    """The one driver copy of a probe panel, centroid set or codebook:
+    a normed (vid, vec, norm) table collected in one job, as (ids,
+    float64 (rows, dim) vec matrix, norms) sorted by vid ascending.
+    float32→float64 widen is exact, so the matrix replays the JVM
+    values bit for bit."""
     rows = sorted(
         normed.select("vid", "vec", "norm").collect(), key=lambda r: r["vid"]
     )
     ids = np.array([int(r["vid"]) for r in rows], dtype=np.int64)
-    vecs = np.array([list(r["vec"]) for r in rows], dtype=np.float64)
+    vecs = np.array(
+        [list(r["vec"]) for r in rows] or np.empty((0, 0)), dtype=np.float64
+    )
     norms = np.array([float(r["norm"]) for r in rows], dtype=np.float64)
     return ids, vecs, norms
 
 
-def _snapped_cos_block(
-    qmat: np.ndarray, qnorms: np.ndarray, cmat: np.ndarray, cnorms: np.ndarray
+def _snapped_cos(
+    q: np.ndarray, qn: np.ndarray, c: np.ndarray, cn: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(cosine, isnull), shape (probes, rows), of probe rows against a
-    vector block — the same value chain as
+    """(cosine, isnull) of vector pairs broadcast over the leading axes
+    (the last axis is the vector) — the same value chain as
     ``_cosine(dot_dec_batch(...), qnorm, cnorm)``: float64 IEEE
-    multiply, floor to scaled int64, exact integer row sum, double
-    divide, NULL where the norm product is exactly 0."""
-    d = (
-        np.floor(cmat[None, :, :] * qmat[:, None, :] * DOT_SCALE)
-        .astype(np.int64)
-        .sum(axis=2)
-        / DOT_SCALE
-    )
-    prod = qnorms[:, None] * cnorms[None, :]
+    multiply, floor to scaled int64, exact integer sum, double divide,
+    NULL where the norm product is exactly 0."""
+    d = np.floor(c * q * DOT_SCALE).astype(np.int64).sum(axis=-1) / DOT_SCALE
+    prod = qn * cn
     isnull = prod == 0.0
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = d / prod
     return cos, isnull
+
+
+def _snapped_l2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Snapped squared-L2 distance of vector pairs broadcast over the
+    leading axes, as scaled int64: per-element ``FLOOR((x-y)^2 * 1e6)``
+    summed exactly (the :func:`dot_dec` determinism argument applied
+    to differences — the float32→float64 widen and the subtract are
+    exact, the square is one IEEE multiply)."""
+    d = a - b
+    return np.floor(d * d * DOT_SCALE).astype(np.int64).sum(axis=-1)
 
 
 def _numpy_probe_cells(
@@ -977,10 +883,8 @@ def _numpy_probe_cells(
     the window form is pinned by tests/test_pipeline.py."""
     out: dict[int, list[int]] = {}
     for i in range(len(qids)):
-        cos, isnull = _snapped_cos_block(
-            qmat[i:i + 1], qnorms[i:i + 1], cmat, cnorms
-        )
-        filled = np.where(isnull[0], -np.inf, cos[0])
+        cos, isnull = _snapped_cos(qmat[i], qnorms[i], cmat, cnorms)
+        filled = np.where(isnull, -np.inf, cos)
         order = np.argsort(-filled, kind="stable")
         out[int(qids[i])] = [int(c) for c in cvids[order[:nprobe]]]
     return out
@@ -1017,46 +921,45 @@ def _assign_block(
     best = np.full(len(cm), -np.inf)
     bestc = np.full(len(cm), cvids[0], dtype=np.int64)
     for j in range(len(cvids)):
-        cos, isnull = _snapped_cos_block(
-            cmat[j:j + 1], cnorms[j:j + 1], cm, cn
-        )
-        filled = np.where(isnull[0], -np.inf, cos[0])
+        cos, isnull = _snapped_cos(cmat[j], cnorms[j], cm, cn)
+        filled = np.where(isnull, -np.inf, cos)
         upd = filled > best
         best = np.where(upd, filled, best)
         bestc[upd] = cvids[j]
     return bestc
 
 
-def _batch_normed(batch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(vid, float64 (rows, dim) vec matrix, norm) arrays of one Arrow
-    batch of a normed table — flatten() honors list offsets (embedding
-    cells are non-null fixed-dim by contract), so the reshape is safe;
-    the widen is exact."""
-    vec = (
-        batch.column("vec")
-        .flatten()
-        .to_numpy(zero_copy_only=False)
-        .reshape(batch.num_rows, -1)
-        .astype(np.float64)
-    )
-    return (
-        batch.column("vid").to_numpy(zero_copy_only=False),
-        vec,
-        batch.column("norm").to_numpy(zero_copy_only=False),
-    )
+def _batch_arrays(batch) -> dict[str, np.ndarray]:
+    """Every column of one Arrow batch as numpy: a list column as a
+    (rows, width) matrix — float lists widened to float64 (exact), int
+    lists kept integral — and a scalar column as is.  flatten() honors
+    list offsets (vector cells are non-null fixed-width by contract),
+    so the reshape is safe."""
+    import pyarrow as _pa
+
+    out = {}
+    for name, col in zip(batch.schema.names, batch.columns):
+        if _pa.types.is_list(col.type):
+            flat = col.flatten().to_numpy(zero_copy_only=False)
+            if _pa.types.is_floating(col.type.value_type):
+                flat = flat.astype(np.float64)
+            out[name] = flat.reshape(batch.num_rows, -1)
+        else:
+            out[name] = col.to_numpy(zero_copy_only=False)
+    return out
 
 
-def _probed_groups(batch, cm, cn, cell_probes, cents):
-    """[(row indices, probe indices)] of one Arrow batch: its rows
-    grouped by cell — the batch's ``cvid`` column, or an in-task
-    assignment against ``cents`` when given — each group paired with
-    the probes that probe its cell."""
+def _probed_groups(arrays, cell_probes, cents):
+    """[(row indices, probe indices)] of one batch's column arrays: its
+    rows grouped by cell — the ``cvid`` column, or an in-task
+    assignment of (vec, norm) against ``cents`` when given — each
+    group paired with the probes that probe its cell."""
     if not cell_probes:
         return []
     cv = (
-        _assign_block(cm, cn, *cents)
+        _assign_block(arrays["vec"], arrays["norm"], *cents)
         if cents is not None
-        else batch.column("cvid").to_numpy(zero_copy_only=False)
+        else arrays["cvid"]
     )
     groups = []
     for cell in np.unique(cv):
@@ -1080,9 +983,10 @@ def _assign_cells_arrow(corpus_n: DataFrame, cents) -> DataFrame:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            _, cm, cn = _batch_normed(batch)
+            a = _batch_arrays(batch)
             yield batch.append_column(
-                "cvid", _pa.array(_assign_block(cm, cn, *cents), type=_pa.int64())
+                "cvid",
+                _pa.array(_assign_block(a["vec"], a["norm"], *cents), type=_pa.int64()),
             )
 
     src = corpus_n.select("vid", "vec", "norm")
@@ -1092,99 +996,169 @@ def _assign_cells_arrow(corpus_n: DataFrame, cents) -> DataFrame:
     )
 
 
-def _panel_candidates_arrow(
-    corpus_n: DataFrame, panel, cents, nprobe: int
-) -> DataFrame:
-    """(qid, cid) IVF candidate pairs in ONE corpus pass: in-task
-    assignment + the in-task probe→cell map, self-matches excluded.
-    One cell per vid makes the pairs structurally unique (the
-    disjointness contract is pinned in tests/test_pipeline.py)."""
-    qids = panel[0]
-    cell_probes = _cell_probes(panel, cents, nprobe)
+class _Scorer(NamedTuple):
+    """One metric of the in-task top-k kernel :func:`_panel_topk`.
 
-    def gen(batches):
-        import pyarrow as _pa
+    ``qids`` are the panel's probe ids, ascending, and ``cols`` the
+    scan columns the metric reads besides ``vid``.  ``block`` turns one
+    row group's column arrays (``vid`` plus ``cols``) into its scoring
+    block; it may derive columns and drop rows.  ``key(p, block)``
+    scores the probes at panel positions ``p`` against the block as a
+    (probes, rows) array ranked ASCENDING, NaN last.  ``emit(key, qid,
+    cid, block)`` turns the surviving pairs' keys into the output value
+    columns (numpy; NaN is NULL), whose DDL is ``schema``.  The final
+    rank orders by the value column ``rank_by`` (DESC when ``desc``),
+    which must be the key's order."""
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cid, cm, cn = _batch_normed(batch)
-            oq, oc = [], []
-            for rows, pidx in _probed_groups(batch, cm, cn, cell_probes, cents):
-                qs, cs = np.unique(qids[pidx]), cid[rows]
-                pairs_q = np.repeat(qs, len(cs))
-                pairs_c = np.tile(cs, len(qs))
-                m = pairs_q != pairs_c
-                oq.append(pairs_q[m])
-                oc.append(pairs_c[m])
-            if oq:
-                yield _pa.record_batch(
-                    {
-                        "qid": _pa.array(np.concatenate(oq), type=_pa.int64()),
-                        "cid": _pa.array(np.concatenate(oc), type=_pa.int64()),
-                    }
-                )
+    qids: np.ndarray
+    cols: tuple
+    key: Callable
+    emit: Callable
+    schema: str
+    rank_by: str
+    desc: bool = False
+    block: Callable = dict
 
-    return corpus_n.select("vid", "vec", "norm").mapInArrow(
-        gen, "qid long, cid long"
+
+def _cosine_scorer(panel) -> _Scorer:
+    """Snapped cosine over (vec, norm), DESC NULLS LAST."""
+    qids, qmat, qnorms = panel
+
+    def key(p, b):
+        cos, isnull = _snapped_cos(
+            qmat[p][:, None, :], qnorms[p][:, None], b["vec"][None], b["norm"][None]
+        )
+        return np.where(isnull, np.nan, -cos)
+
+    return _Scorer(
+        qids, ("vec", "norm"), key,
+        lambda key, q, c, b: {"cosine": -key},
+        "cosine double", "cosine", desc=True,
     )
 
 
-def _tile_topk(panel, pidx, cid, cm, cn, k: int):
-    """Per-probe top-k survivors (qid, cid, cosine, isnull arrays) of
-    the probes ``pidx`` against one row block, self-matches excluded,
-    under the exact final order (cosine DESC NULLS LAST, cid ASC).
+def _l2_scorer(panel) -> _Scorer:
+    """Snapped squared L2 over ``vec``, ascending."""
+    qids, qmat, _ = panel
+    return _Scorer(
+        qids, ("vec",),
+        lambda p, b: _snapped_l2(qmat[p][:, None, :], b["vec"][None]) / DOT_SCALE,
+        lambda key, q, c, b: {"dist": key},
+        "dist double", "dist",
+    )
 
-    Probes are scored in tiles of at most ``_TILE_TERMS`` float64
-    terms (one probe per tile once a single probe's block exceeds it),
-    so task memory stays flat however large the panel.  Keeping only
+
+def _int8(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(kept rows, int64 codes) — :func:`quantize_int8`'s
+    ``floor(x / max|x| * 127)`` on the same float64 values.  All-zero
+    rows (NULL scale) carry no direction and are dropped, as the
+    oracle's ``vmax != 0`` predicate drops them."""
+    vmax = np.abs(mat).max(axis=1, initial=0.0)
+    keep = vmax != 0
+    return keep, np.floor(mat[keep] / vmax[keep, None] * Q_LEVELS).astype(np.int64)
+
+
+def _int8_scorer(panel) -> _Scorer:
+    """Integer inner product of int8-quantized ``vec``, descending."""
+    keep, pq = _int8(panel[1])
+
+    def block(a):
+        rows, q = _int8(a["vec"])
+        return {"vid": a["vid"][rows], "q": q}
+
+    return _Scorer(
+        panel[0][keep], ("vec",),
+        lambda p, b: -(pq[p] @ b["q"].T),
+        lambda key, q, c, b: {"dot_q": -key},
+        "dot_q long", "dot_q", desc=True, block=block,
+    )
+
+
+def _hamming_scorer(panel, dim: int) -> _Scorer:
+    """Hamming distance of the sign bits of the first ``dim``
+    components, ascending, with each survivor's snapped cosine as the
+    rerank annotation — computed for the survivors only."""
+    qids, qmat, qnorms = panel
+    qsign = qmat[:, :dim] >= 0
+
+    def block(a):
+        return {**a, "sign": a["vec"][:, :dim] >= 0, "at": np.argsort(a["vid"])}
+
+    def emit(key, q, c, b):
+        pi = np.searchsorted(qids, q)
+        ri = b["at"][np.searchsorted(b["vid"], c, sorter=b["at"])]
+        cos, isnull = _snapped_cos(qmat[pi], qnorms[pi], b["vec"][ri], b["norm"][ri])
+        return {
+            "hamming": key.astype(np.int32),
+            "cosine": np.where(isnull, np.nan, cos),
+        }
+
+    return _Scorer(
+        qids, ("vec", "norm"),
+        lambda p, b: (qsign[p][:, None, :] != b["sign"][None]).sum(axis=2),
+        emit, "hamming int, cosine double", "hamming", block=block,
+    )
+
+
+def _tile_topk(scorer: _Scorer, pidx, blk, k: int) -> list[dict]:
+    """Per-probe top-k survivors of the probes ``pidx`` against one
+    scoring block, self-matches excluded, under the exact final order
+    (key ASC, cid ASC), as dicts of output columns (qid, cid, then the
+    scorer's values).
+
+    Probes are scored in tiles of at most ``_TILE_TERMS`` block terms
+    (one probe per tile once a single probe's block exceeds it), so
+    task memory stays flat however large the panel.  Keeping only
     per-tile survivors is lossless: under a total order the global
     top-k of a union is the top-k of its parts' top-k's, and the final
     window re-ranks exactly."""
-    qids, qmat, qnorms = panel
-    pstep = max(1, _TILE_TERMS // max(1, cm.size))
+    cid = blk["vid"]
+    pstep = max(1, _TILE_TERMS // max(1, max(a.size for a in blk.values())))
     out = []
     for lo in range(0, len(pidx), pstep):
         p = pidx[lo:lo + pstep]
-        cos, isnull = _snapped_cos_block(qmat[p], qnorms[p], cm, cn)
-        q = np.repeat(qids[p], len(cid))
+        key = scorer.key(p, blk).ravel()
+        q = np.repeat(scorer.qids[p], len(cid))
         c = np.tile(cid, len(p))
         m = q != c
-        q, c = q[m], c[m]
-        cos, isnull = cos.ravel()[m], isnull.ravel()[m]
-        filled = np.where(isnull, -np.inf, cos)
-        order = np.lexsort((c, -filled, q))
+        q, c, key = q[m], c[m], key[m]
+        order = np.lexsort((c, key, q))
         qs = q[order]
         pos = np.arange(len(order))
         starts = np.maximum.accumulate(
             np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0)
         )
         keep = order[pos - starts < k]
-        out.append((q[keep], c[keep], cos[keep], isnull[keep]))
+        q, c, key = q[keep], c[keep], key[keep]
+        out.append({"qid": q, "cid": c, **scorer.emit(key, q, c, blk)})
     return out
 
 
 def _panel_topk(
-    scan: DataFrame, panel, k: int, cell_probes=None, cents=None
+    scan: DataFrame, scorer: _Scorer, k: int, cell_probes=None, cents=None
 ) -> DataFrame:
     """Exact per-probe top-k of a collected probe panel in ONE
-    MapInArrow pass over ``scan`` (vid, vec, norm[, cvid]) — the one
-    in-task scorer brute-force and IVF top-k share.  They differ only
-    in where a scanned row's cell comes from:
+    MapInArrow pass over ``scan`` — the one in-task kernel every
+    top-k operator shares, whatever its metric (``scorer``).  They
+    differ only in where a scanned row's cell comes from:
 
     * ``cell_probes`` None — no cells: every probe scores every row;
     * ``cents`` given — the row's nearest centroid, assigned in-task
-      (ties → smaller cvid, all-NULL → smallest cvid);
+      from its (vec, norm) (ties → smaller cvid, all-NULL → smallest
+      cvid);
     * otherwise — the scan's ``cvid`` column (a prebuilt index).
 
     With cells, a row is scored only by the probes that probe its
     cell (``cell_probes``, from :func:`_cell_probes`).  Output
-    (query_id, neighbor_id, rank, cosine), self-matches excluded,
-    ranked (cosine DESC, neighbor_id ASC)."""
-    every = np.arange(len(panel[0]))
-    cols = ["vid", "vec", "norm"]
-    if cell_probes is not None and cents is None:
-        cols.append("cvid")
+    (query_id, neighbor_id, rank, <scorer values>), self-matches
+    excluded, ranked (scorer order, neighbor_id ASC)."""
+    every = np.arange(len(scorer.qids))
+    cols = ["vid", *scorer.cols]
+    if cell_probes is not None:
+        cols += ["cvid"] if cents is None else [
+            c for c in ("vec", "norm") if c not in cols
+        ]
+    keys = ["vid", *scorer.cols]
 
     def score(batches):
         import pyarrow as _pa
@@ -1192,39 +1166,39 @@ def _panel_topk(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            cid, cm, cn = _batch_normed(batch)
+            arrays = _batch_arrays(batch)
             groups = (
                 [(slice(None), every)]
                 if cell_probes is None
-                else _probed_groups(batch, cm, cn, cell_probes, cents)
+                else _probed_groups(arrays, cell_probes, cents)
             )
             kept = []
             for rows, pidx in groups:
-                kept += _tile_topk(panel, pidx, cid[rows], cm[rows], cn[rows], k)
+                blk = scorer.block({n: arrays[n][rows] for n in keys})
+                kept += _tile_topk(scorer, pidx, blk, k)
             if kept:
-                q, c, cos, isnull = (np.concatenate(a) for a in zip(*kept))
                 yield _pa.record_batch(
                     {
-                        "qid": _pa.array(q, type=_pa.int64()),
-                        "cid": _pa.array(c, type=_pa.int64()),
-                        "cosine": _pa.array(
-                            np.where(isnull, 0.0, cos),
-                            type=_pa.float64(),
-                            mask=isnull,
-                        ),
+                        n: _pa.array(
+                            np.concatenate([d[n] for d in kept]), from_pandas=True
+                        )
+                        for n in kept[0]
                     }
                 )
 
     pairs = scan.select(*cols).mapInArrow(
-        score, "qid long, cid long, cosine double"
+        score, f"qid long, cid long, {scorer.schema}"
     )
-    return _pairs_topk_window(pairs, k)
+    rank_by = F.desc(scorer.rank_by) if scorer.desc else F.col(scorer.rank_by)
+    return _pairs_topk_window(pairs, k, rank_by)
 
 
-def _pairs_topk_window(pairs: DataFrame, k: int) -> DataFrame:
+def _pairs_topk_window(pairs: DataFrame, k: int, *order: Column) -> DataFrame:
     """The shared exact final rank: (query_id, neighbor_id, rank,
-    cosine), rank = row_number over (cosine DESC, cid) per qid."""
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.col("cid"))
+    <value columns>), rank = row_number over (``order``, cid) per
+    qid."""
+    w = W.partitionBy("qid").orderBy(*order, F.col("cid"))
+    values = [c for c in pairs.columns if c not in ("qid", "cid")]
     return (
         pairs.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
@@ -1232,32 +1206,9 @@ def _pairs_topk_window(pairs: DataFrame, k: int) -> DataFrame:
             F.col("qid").alias("query_id"),
             F.col("cid").alias("neighbor_id"),
             "rank",
-            "cosine",
+            *values,
         )
     )
-
-
-def _ivf_candidates(
-    vectors: DataFrame,
-    probes: DataFrame,
-    centroid_stride: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(qid, cid) — the IVF candidate-generation core :func:`ivf_pq_topk`
-    scores with ADC: stride centroids, cell assignment, nprobe probe
-    cells, unique (qid, cid) pairs with self-matches excluded — the
-    same cells :func:`ivf_topk` scans, mirroring the shared
-    `_O_IVF_CAND` oracle fragment.  Panel and centroids are collected
-    once and the candidates come out of ONE in-task corpus pass
-    (:func:`_panel_candidates_arrow`)."""
-    from .caching import pin
-
-    corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents = _collect_normed(corpus_n.filter(F.col("vid") % centroid_stride == 0))
-    panel = _collect_normed(_normed(probes, id_col, vec_col))
-    return _panel_candidates_arrow(corpus_n, panel, cents, nprobe)
 
 
 def ivf_topk(
@@ -1299,7 +1250,7 @@ def ivf_topk(
     cents = _collect_normed(corpus_n.filter(F.col("vid") % centroid_stride == 0))
     panel = _collect_normed(_normed(probes, id_col, vec_col))
     return _panel_topk(
-        corpus_n, panel, k, _cell_probes(panel, cents, nprobe), cents
+        corpus_n, _cosine_scorer(panel), k, _cell_probes(panel, cents, nprobe), cents
     )
 
 
@@ -1348,8 +1299,9 @@ def _lloyd_update_arrow(corpus_n: DataFrame, cents) -> DataFrame:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            _, cm, cn = _batch_normed(batch)
-            bestc = _assign_block(cm, cn, *cents)
+            a = _batch_arrays(batch)
+            cm = a["vec"]
+            bestc = _assign_block(cm, a["norm"], *cents)
             # the same floor(val·1e6) quantization the exploded elq
             # table carried — exact int64 sums are order-independent
             q = np.floor(cm * DOT_SCALE).astype(np.int64)
@@ -1540,7 +1492,7 @@ def ivf_topk_trained(
     )
     panel = _collect_normed(_normed(probes, id_col, vec_col))
     return _panel_topk(
-        corpus_n, panel, k, _cell_probes(panel, cents, nprobe), cents
+        corpus_n, _cosine_scorer(panel), k, _cell_probes(panel, cents, nprobe), cents
     )
 
 
@@ -1851,10 +1803,17 @@ def ivf_probe_index(
         # no probed cell (no probes, or no centroids): nothing to scan —
         # and an index built over no centroids has no cell files for
         # Spark to infer a schema from
-        cells = spark.createDataFrame(
-            [], "vid long, vec array<double>, norm double, cvid long"
+        cells = local_frame(
+            spark,
+            [],
+            [
+                ("vid", _pa.int64()),
+                ("vec", _pa.list_(_pa.float64())),
+                ("norm", _pa.float64()),
+                ("cvid", _pa.int64()),
+            ],
         )
-    return _panel_topk(cells, panel, k, cell_probes)
+    return _panel_topk(cells, _cosine_scorer(panel), k, cell_probes)
 
 
 def ivf_index_append(
@@ -2444,7 +2403,7 @@ def lsh_ann_probe(
     # the per-pair bytes saved are CONSTANT and never amortize the
     # extra panel-collect job, at any scale.  The join verify stays.
     pairs = _cosine_for_pairs_normed(candidates, corpus_n)
-    return _pairs_topk_window(pairs, k)
+    return _pairs_topk_window(pairs, k, F.desc("cosine"))
 
 
 # ---------------------------------------------------------------------------
@@ -2501,50 +2460,18 @@ def quantized_ip_topk(
     """Top-k corpus vectors per probe by INTEGER inner product over the
     int8-quantized vectors (pure-integer scoring: no float parity
     concerns at all, and the physical analogue of int8-SIMD ANN
-    scoring). Probe side broadcast; ranking ties break on corpus id.
+    scoring). Output (query_id, neighbor_id, rank, dot_q), ranked
+    dot_q DESC, ties on corpus id.
 
-    All-zero (or null) vectors quantize to NULL elements (the
-    symmetric scale divides by vmax, NULLIF-guarded), which would make
-    the Arrow batch an object array and crash ``np.stack`` — they
-    carry no direction anyway, so both sides drop rows with
-    scale 0/NULL before the pair join (the oracle applies the same
-    predicate)."""
-    nonzero = F.col("scale").isNotNull() & (F.col("scale") != 0)
-    qc = (
-        quantize_int8(vectors, id_col, vec_col)
-        .filter(nonzero)
-        .select(F.col("vid").alias("cid"), F.col("qvec").alias("cq"))
-    )
-    qp = (
-        quantize_int8(probes, id_col, vec_col)
-        .filter(nonzero)
-        .select(F.col("vid").alias("qid"), F.col("qvec").alias("pq"))
-    )
-
-    @pandas_udf("long")
-    def qdot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        am = np.stack(a.to_numpy()).astype(np.int64)
-        bm = np.stack(b.to_numpy()).astype(np.int64)
-        return pd.Series((am * bm).sum(axis=1))
-
-    scored = (
-        qc.join(F.broadcast(qp))
-        .filter(F.col("qid") != F.col("cid"))
-        .select("qid", "cid", qdot_udf(F.col("pq"), F.col("cq")).alias("dot_q"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("dot_q"), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("cid").alias("neighbor_id"),
-            "rank",
-            "dot_q",
-        )
-    )
+    The probe panel is collected and quantized once on the driver; the
+    corpus is quantized in-task (:func:`_int8`, :func:`quantize_int8`'s
+    arithmetic) inside ONE MapInArrow scoring pass
+    (:func:`_panel_topk`).  All-zero vectors have a NULL scale and
+    carry no direction, so both sides drop them (the oracle applies
+    the same predicate)."""
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    scan = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    return _panel_topk(scan, _int8_scorer(panel), k)
 
 
 def semantic_dedup_pairs(
@@ -2610,72 +2537,18 @@ def brute_force_l2_topk(
     """Exact squared-L2 top-k (snapped, ascending, ties on id) — the
     same-metric exact baseline for the PQ/ADC family (cosine top-k is
     the wrong yardstick for an L2 quantizer; recall must compare like
-    with like). Broadcast-probe map-side pass, no shuffle before the
-    per-probe rank."""
-    p = probes.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-    )
-    c = vectors.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-    )
-    pairs = c.join(F.broadcast(p)).filter(F.col("qid") != F.col("cid")).select(
-        "qid",
-        "cid",
-        (
-            l2_dec_batch(F.col("qvec"), F.col("cvec")).cast("double")
-            / DOT_SCALE
-        ).alias("dist"),
-    )
-    w = W.partitionBy("qid").orderBy("dist", F.col("cid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("cid").alias("neighbor_id"),
-            "rank",
-            "dist",
-        )
-    )
+    with like). Output (query_id, neighbor_id, rank, dist): the probe
+    panel is held in-task and the corpus scored in ONE MapInArrow
+    pass (:func:`_panel_topk`), no shuffle before the per-probe
+    rank."""
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    scan = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    return _panel_topk(scan, _l2_scorer(panel), k)
 
 
 # ---------------------------------------------------------------------------
-# 1-bit (sign) quantization + packed Hamming top-k
+# 1-bit (sign) quantization + Hamming top-k
 # ---------------------------------------------------------------------------
-
-_SIGN_WORD_BITS = 32
-
-
-def sign_pack(
-    vectors: DataFrame,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """1-bit quantization: each dimension's sign packs into one bit,
-    32 bits per BIGINT word — (vid, w0, w1, ...) for ``dim`` dims.
-
-    The extreme end of the quantization ladder (float32 -> int8 ->
-    1 bit): a 64-dim vector becomes 8 BYTES, and distance becomes two
-    XOR+popcounts — pure integer ops, bit-identical cross-engine, and
-    a ~32x memory-bandwidth cut over float scans. Packing is a
-    map-side HOF over the bound array (bounded 32-element lambdas;
-    sub-word shifts only, so no sign-bit overflow), no shuffle.
-    """
-    if dim % _SIGN_WORD_BITS != 0:
-        raise ValueError(f"dim={dim} must be a multiple of {_SIGN_WORD_BITS}")
-    words = [
-        F.expr(
-            f"aggregate(transform(slice({vec_col}, {w * _SIGN_WORD_BITS + 1},"
-            f" {_SIGN_WORD_BITS}),"
-            " (x, i) -> IF(x >= 0, shiftleft(CAST(1 AS BIGINT), i),"
-            " CAST(0 AS BIGINT))),"
-            " CAST(0 AS BIGINT), (a, b) -> a + b)"
-        ).alias(f"w{w}")
-        for w in range(dim // _SIGN_WORD_BITS)
-    ]
-    return vectors.select(F.col(id_col).alias("vid"), *words)
-
 
 def hamming_topk(
     vectors: DataFrame,
@@ -2685,48 +2558,29 @@ def hamming_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k nearest corpus vectors per probe under packed sign-bit
-    Hamming distance, with the exact cosine of each surfaced pair as
+    """Top-k nearest corpus vectors per probe under sign-bit Hamming
+    distance over the first ``dim`` components (a multiple of 32, the
+    packed-word width), with the exact cosine of each surfaced pair as
     the rerank annotation (the standard binary-quantization serving
     shape: Hamming shortlist, float rerank).
 
-    Plan: both sides pack map-side; the |probes| packed rows broadcast
-    (the brute-force-cosine join shape at ~1/32 the bytes); ranking is
-    a per-probe window; the cosine rerank joins the k*|probes|
-    shortlist back through ``cosine_for_pairs`` — O(shortlist), not
-    O(corpus). Ordering: hamming ASC, corpus id ASC (total order).
+    1-bit quantization is the extreme end of the quantization ladder
+    (float32 -> int8 -> 1 bit): a 64-dim vector becomes 8 bytes and
+    distance becomes a count of differing sign bits — pure integer
+    ops, bit-identical cross-engine.
+
+    Plan: the probe panel is held in-task and the corpus scored in ONE
+    MapInArrow pass (:func:`_panel_topk`); each task computes the
+    snapped cosine of its own Hamming survivors only, so the rerank is
+    O(shortlist) with no join back.  Output (query_id, neighbor_id,
+    hamming, rank, cosine), ordered hamming ASC, corpus id ASC.
     """
-    n_words = dim // _SIGN_WORD_BITS
-    c = sign_pack(vectors, dim, id_col, vec_col)
-    p = sign_pack(probes, dim, id_col, vec_col).select(
-        F.col("vid").alias("qid"),
-        *[F.col(f"w{w}").alias(f"pw{w}") for w in range(n_words)],
-    )
-    hamming = None
-    for w in range(n_words):
-        t = F.bit_count(F.col(f"w{w}").bitwiseXOR(F.col(f"pw{w}")))
-        hamming = t if hamming is None else hamming + t
-    pairs = (
-        c.join(F.broadcast(p))
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", F.col("vid").alias("cid"), hamming.alias("hamming"))
-    )
-    w_rank = W.partitionBy("qid").orderBy("hamming", "cid")
-    short = (
-        pairs.withColumn("rank", F.row_number().over(w_rank).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-    return (
-        cosine_for_pairs(short.select("qid", "cid"), vectors, id_col, vec_col)
-        .join(short, ["qid", "cid"])
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("cid").alias("neighbor_id"),
-            "hamming",
-            "rank",
-            "cosine",
-        )
-    )
+    if dim % 32 != 0:
+        raise ValueError(f"dim={dim} must be a multiple of 32")
+    panel = _collect_normed(_normed(probes, id_col, vec_col))
+    return _panel_topk(
+        _normed(vectors, id_col, vec_col), _hamming_scorer(panel, dim), k
+    ).select("query_id", "neighbor_id", "hamming", "rank", "cosine")
 
 
 # ---------------------------------------------------------------------------

@@ -521,7 +521,7 @@ _PQ_K = 10
 # codebook ~256 entries at ANY corpus scale, so the encode join is
 # O(N·m·256).  The r1–r7 stride-25 codebook grew as N/25 and made the
 # encode quadratic — a measured 4 GiB-heap OOM at 60k vectors (x30
-# ramp data) in the round-8 ramp (operators/similarity._pq_codes).
+# ramp data) in the round-8 ramp (operators/similarity._pq_encoded).
 _O_CBPAR = """
 cbpar AS (
   SELECT GREATEST(1, CAST(FLOOR(CAST(COUNT(*) AS DOUBLE) / 256) AS BIGINT))
@@ -663,7 +663,6 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=4,
         codebook_size=_PQ_CB,
         n=table_count(spark, sf_dir, "embeddings"),
-        codes_tag=sf_dir,
     ).orderBy("query_id", "rank")
 
 
@@ -750,7 +749,6 @@ def sim_ann_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=_trained_nprobe(n),
         codebook_size=_PQ_CB,
         n=n,
-        codes_tag=sf_dir,
     ).orderBy("query_id", "rank")
 
 
@@ -824,7 +822,7 @@ def sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unnormalized vectors, at a cost that stays constant as the corpus
     grows — the reason every production IVFADC deployment reranks.
 
-    Shares the memoized PQ family encode (codes_tag) and the fixed
+    Shares the memoized PQ family encode and the fixed
     50-probe panel, so the battery timing isolates the rerank stage's
     marginal cost over sim_ann_ivfpq_fixed."""
     import math
@@ -848,7 +846,6 @@ def sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=_trained_nprobe(n),
         codebook_size=_PQ_CB,
         n=n,
-        codes_tag=sf_dir,
     ).select(
         F.col("query_id").alias("qid"), F.col("neighbor_id").alias("cid")
     )
@@ -969,7 +966,7 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact subtree has two consumers (hit semi-join + the
     # n_probes aggregate) but they read IDENTICAL exchanges up through
     # the per-probe rank window, so ReuseExchange already shares the
-    # expensive UDF distance pass — a pin measured as pure overhead
+    # distance pass — a pin measured as pure overhead
     # (sf0.1 interleaved best-of-3: 4.33s unpinned vs 5.24s pinned),
     # the same negative result as the MinHash band join
     exact = brute_force_l2_topk(emb, probes, _PQ_K).select(
@@ -1056,12 +1053,13 @@ ORDER BY query_id, rank
 """,
 )
 def sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-bit sign quantization + packed-word Hamming top-10 with exact
-    cosine rerank annotation: a 64-dim float vector becomes two BIGINT
-    words (8 bytes — a ~32x bandwidth cut over float scans) and
-    distance becomes two XOR+popcounts, pure integer ops that
+    """1-bit sign quantization + Hamming top-10 with exact cosine
+    rerank annotation: a 64-dim float vector becomes 64 sign bits (8
+    bytes — a ~32x bandwidth cut over float scans) and distance
+    becomes a count of differing bits, pure integer ops that
     hash-match cross-engine with no snapping at all
-    (operators/similarity.py sign_pack / hamming_topk)."""
+    (operators/similarity.hamming_topk; the oracle packs the bits into
+    two BIGINT words and XOR+popcounts them)."""
     from ..operators.similarity import hamming_topk
 
     emb = load_table(spark, sf_dir, "embeddings")

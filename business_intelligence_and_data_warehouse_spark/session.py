@@ -155,9 +155,10 @@ def get_spark(
         # NOTE (r12, measured negative): preferSortMergeJoin=false +
         # adaptive.maxShuffledHashJoinLocalMapThreshold (the guide §9
         # "allow shuffled hash join" pair) co-measured ~6% SLOWER
-        # geomean on the SMJ-carrying battery subset at sf0.1
-        # (tools/co_measure.py, 3 interleaved passes vs the r12 base
-        # tree; worst sim_ann_ivfpq 1.51x) — at local shuffle sizes the
+        # geomean on the SMJ-carrying battery subset at sf0.1 (3
+        # interleaved passes vs the r12 base tree, a measurement
+        # `benchmark/run.py --compare` now repeats; worst
+        # sim_ann_ivfpq 1.51x) — at local shuffle sizes the
         # sorts SHJ avoids are cheaper than its per-partition hash-map
         # builds.  Left at Spark defaults; on a real cluster with
         # 100 MB+ post-shuffle partitions the trade reverses and the

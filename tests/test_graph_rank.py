@@ -104,12 +104,11 @@ def test_hamming_topk_bounds_and_rank_order(spark):
 def test_sign_pack_words_match_python(spark):
     """Packed words must equal a bit-exact Python repack of the same
     vectors (the map-side HOF has no other ground truth)."""
-    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
-        sign_pack,
-    )
     from business_intelligence_and_data_warehouse_spark.sources.testdata import (
         load_table,
     )
+
+    from .ann_reference import sign_pack
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(20)
     vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}

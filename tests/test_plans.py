@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from business_intelligence_and_data_warehouse_spark.plans.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -110,6 +112,125 @@ def test_brute_force_topk_broadcasts_probes(spark):
     )
 
 
+def _scorer_paths(plan: str) -> list[list[str]]:
+    """For each MapInArrow node of a formatted plan's tree: the nodes
+    below it, then its ancestors up to the nearest Window (the shared
+    exact rank) — the scorer subtree of an in-task top-k operator."""
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    col = [len(line) - len(line.lstrip(" :+-")) for line in tree]
+    paths = []
+    for i, line in enumerate(tree):
+        if "MapInArrow" not in line:
+            continue
+        nodes = []
+        j = i + 1
+        while j < len(tree) and col[j] > col[i]:
+            nodes.append(tree[j].lstrip(" :+-"))
+            j += 1
+        c = col[i]
+        for j in range(i - 1, -1, -1):
+            if col[j] < c:
+                c = col[j]
+                nodes.append(tree[j].lstrip(" :+-"))
+                if nodes[-1].startswith("Window ("):
+                    break
+        paths.append(nodes)
+    return paths
+
+
+# the in-task top-k entries beyond cosine: L2 (inside the recall
+# report), int8, Hamming, PQ and IVF-PQ
+_KERNEL_ENTRIES = (
+    "sim_quantized_topk",
+    "sim_binary_hamming",
+    "sim_ann_pq",
+    "sim_ann_ivfpq",
+    "sim_ann_ivfpq_fixed",
+    "sim_ann_ivfpq_rerank",
+    "sim_pq_recall_report",
+)
+
+
+@pytest.mark.parametrize("name", _KERNEL_ENTRIES)
+def test_topk_kernel_entries_score_in_one_arrow_pass(spark, name):
+    """Every scorer of these entries is one MapInArrow pass feeding the
+    shared rank window: no join below it or between it and the rank
+    (the probe join, the ADC distance-table join and the Hamming
+    rerank join are gone)."""
+    plan = plan_of(spark, name)
+    paths = _scorer_paths(plan)
+    assert paths, plan
+    for nodes in paths:
+        assert not any("Join" in n for n in nodes), (name, nodes)
+        assert any(n.startswith("Window (") for n in nodes), (name, nodes)
+
+
+def _kernel_cases(corpus, probes, k, dim, m, cell_stride, nprobe):
+    """[(kernel frame, reference frame)] for the L2, int8, Hamming, PQ
+    and IVF-PQ top-k kernels over one corpus and probe panel, with the
+    registered 256-row codebook rule."""
+    from business_intelligence_and_data_warehouse_spark.operators import (
+        similarity as sim,
+    )
+
+    from . import ann_reference as ref
+
+    hdim = max(32, dim // 32 * 32)
+    cb_stride = max(1, corpus.count() // 256)
+    return [
+        (
+            sim.brute_force_l2_topk(corpus, probes, k),
+            ref.brute_force_l2_topk(corpus, probes, k),
+        ),
+        (
+            sim.quantized_ip_topk(corpus, probes, k),
+            ref.quantized_ip_topk(corpus, probes, k),
+        ),
+        (
+            sim.hamming_topk(corpus, probes, k, dim=hdim),
+            ref.hamming_topk(corpus, probes, k, dim=hdim),
+        ),
+        (
+            sim.pq_topk(corpus, probes, k, dim, num_subspaces=m),
+            ref.pq_topk(corpus, probes, k, dim, m, cb_stride),
+        ),
+        (
+            sim.ivf_pq_topk(
+                corpus, probes, k, dim, num_subspaces=m,
+                centroid_stride=cell_stride, nprobe=nprobe,
+                codebook_size=256,
+            ),
+            ref.ivf_pq_topk(
+                corpus, probes, k, dim, m, cell_stride, cb_stride, nprobe
+            ),
+        ),
+    ]
+
+
+def test_topk_kernels_match_reference_forms(spark):
+    """The L2, int8, Hamming, PQ and IVF-PQ kernels return exactly the
+    rows of their join/window reference forms — with the registered
+    parameters at the registered 1% panel over the embeddings (m = 8,
+    25-row cells, the 256-row codebook rule), and at 1,100 probes."""
+    from business_intelligence_and_data_warehouse_spark.sources.testdata import (
+        load_table,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    corpus, big = _large_panel(spark)
+    for args in (
+        (emb, emb.filter("vec_id % 100 = 0"), 10, 64, 8, 25, 4),
+        (corpus, big, 3, 8, 2, 10, 4),
+    ):
+        for fast, slow in _kernel_cases(*args):
+            plan = _explain(fast)
+            assert "MapInArrow" in plan, plan
+            got = sorted(tuple(r) for r in fast.collect())
+            assert got
+            assert got == sorted(tuple(r) for r in slow.collect())
+    assert len({r[0] for r in got}) == 1100
+
+
 def test_jaccard_df_cap_broadcasts_stop_set(spark):
     plan = plan_of(spark, "dedup_ngram_jaccard")
     # the df-cap must be a broadcast LEFT ANTI against the tiny
@@ -169,8 +290,11 @@ def test_asof_join_has_no_range_join(spark):
 
 
 def test_quantized_topk_broadcasts_probes(spark):
+    # the quantized probe panel is held in-task: one MapInArrow corpus
+    # pass, no probe join of any kind
     plan = plan_of(spark, "sim_quantized_topk")
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert "Join" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
@@ -361,8 +485,6 @@ def test_label_centroids_partial_aggregate_before_shuffle(spark):
 import json
 import os
 
-import pytest
-
 _BUDGETS = json.load(
     open(os.path.join(os.path.dirname(__file__), "plan_exchange_budgets.json"))
 )
@@ -518,16 +640,15 @@ def test_no_collect_in_query_code_paths():
         # and ingest load label folds in
         ("operators/similarity.py", "row = fp_agg.collect()[0]"),
         # bounded: the ANN scorers' one driver copy of a probe panel
-        # (the fixed 50-id panel or the 1% vec_id % 100 stride) or a
-        # centroid set (≈√N trained cells; N/stride stride cells) —
-        # the rows every in-task scoring/assignment pass holds
+        # (the fixed 50-id panel or the 1% vec_id % 100 stride), a
+        # centroid set (≈√N trained cells; N/stride stride cells) or
+        # a PQ codebook (~256 rows under the production codebook_size
+        # sizing) — the rows every in-task scoring/assignment/encode
+        # pass holds
         (
             "operators/similarity.py",
             'normed.select("vid", "vec", "norm").collect()',
         ),
-        # bounded: the PQ codebook (~256 entries under the production
-        # codebook_size sizing) every encode task holds
-        ("operators/similarity.py", "vectors, cb_src.collect(), num_subspaces"),
     }
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
