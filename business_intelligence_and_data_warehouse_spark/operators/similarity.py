@@ -547,13 +547,12 @@ def _pq_encoded(
     codebook_stride: int,
     id_col: str,
     vec_col: str,
-    memo: bool,
 ):
     """(codebook, encoded) — what :func:`pq_topk` and
     :func:`ivf_pq_topk` share: the codebook rows ``vid % stride == 0``
     collected once (:func:`_collect_normed`), and the normed corpus
     (vid, vec, norm, codes) encoded against them (:func:`_pq_encode`).
-    ``memo`` serves both from ``_PQ_CODES_MEMO``: the first call in a
+    Both are served from ``_PQ_CODES_MEMO``: the first call in a
     session writes the encoded corpus to parquet, later calls on the
     same corpus content and parameters read it and skip the codebook
     collect.
@@ -575,14 +574,6 @@ def _pq_encoded(
             f"dim {dim} not divisible by num_subspaces {num_subspaces}"
         )
     sd = dim // num_subspaces
-    corpus_n = _normed(vectors, id_col, vec_col)
-
-    def build():
-        cb = _collect_normed(corpus_n.filter(F.col("vid") % codebook_stride == 0))
-        return cb, _pq_encode(corpus_n, cb[1], num_subspaces, sd)
-
-    if not memo:
-        return build()
     spark = vectors.sparkSession
     key = (
         spark.sparkContext.applicationId,
@@ -594,9 +585,12 @@ def _pq_encoded(
         vec_col,
     )
     if key not in _PQ_CODES_MEMO:
-        cb, encoded = build()
+        corpus_n = _normed(vectors, id_col, vec_col)
+        cb = _collect_normed(corpus_n.filter(F.col("vid") % codebook_stride == 0))
         path = _pq_memo_dir()
-        encoded.write.mode("overwrite").parquet(path)
+        _pq_encode(corpus_n, cb[1], num_subspaces, sd).write.mode(
+            "overwrite"
+        ).parquet(path)
         _PQ_CODES_MEMO[key] = (cb, path)
     cb, path = _PQ_CODES_MEMO[key]
     return cb, spark.read.parquet(path)
@@ -647,7 +641,6 @@ def pq_topk(
     n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codes_tag: str | None = None,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al., "Product Quantization
     for Nearest Neighbor Search"): split each vector into m subspaces,
@@ -665,11 +658,10 @@ def pq_topk(
     use stride 1 for the lossless-codebook identity); a FIXED stride
     makes the codebook N/stride entries and the encode quadratic —
     the round-8 ramp OOM, see :func:`_pq_encoded`.  ``n`` short-circuits
-    the corpus count when the caller already knows it.  ``codes_tag``
-    (a stable corpus identity, e.g. the sf_dir) opts the corpus encode
-    into the per-process parquet memo so a family of queries over the
-    same corpus shares ONE encode pass (see ``_PQ_CODES_MEMO``; the
-    memo is keyed by corpus content, so any tag serves).
+    the corpus count when the caller already knows it.  The corpus
+    encode is served from the per-process parquet memo, so a family
+    of queries over the same corpus content shares ONE encode pass
+    (see ``_PQ_CODES_MEMO``).
 
     Output: (query_id, neighbor_id, rank, approx_dist) — approx
     squared-L2, ascending, ties on neighbor id. Distances snap
@@ -690,8 +682,7 @@ def pq_topk(
             n = vectors.count()
         centroid_stride = max(1, n // codebook_size)
     cb, encoded = _pq_encoded(
-        vectors, dim, num_subspaces, centroid_stride, id_col, vec_col,
-        memo=codes_tag is not None,
+        vectors, dim, num_subspaces, centroid_stride, id_col, vec_col
     )
     panel = _collect_normed(_normed(probes, id_col, vec_col))
     scorer = _adc_scorer(panel, cb[1], num_subspaces, dim // num_subspaces)
@@ -743,7 +734,7 @@ def ivf_pq_topk(
             n = vectors.count()
         cb_stride = max(1, n // codebook_size)
     cb, encoded = _pq_encoded(
-        vectors, dim, num_subspaces, cb_stride, id_col, vec_col, memo=True
+        vectors, dim, num_subspaces, cb_stride, id_col, vec_col
     )
     cents = _collect_normed(encoded.filter(F.col("vid") % centroid_stride == 0))
     panel = _collect_normed(_normed(probes, id_col, vec_col))
@@ -1028,7 +1019,10 @@ def _cosine_scorer(panel) -> _Scorer:
         cos, isnull = _snapped_cos(
             qmat[p][:, None, :], qnorms[p][:, None], b["vec"][None], b["norm"][None]
         )
-        return np.where(isnull, np.nan, -cos)
+        # in place: no (probes, rows) array beyond the cosine itself
+        np.negative(cos, out=cos)
+        cos[isnull] = np.nan
+        return cos
 
     return _Scorer(
         qids, ("vec", "norm"), key,
@@ -2466,11 +2460,14 @@ def quantized_ip_topk(
     The probe panel is collected and quantized once on the driver; the
     corpus is quantized in-task (:func:`_int8`, :func:`quantize_int8`'s
     arithmetic) inside ONE MapInArrow scoring pass
-    (:func:`_panel_topk`).  All-zero vectors have a NULL scale and
-    carry no direction, so both sides drop them (the oracle applies
-    the same predicate)."""
-    panel = _collect_normed(_normed(probes, id_col, vec_col))
-    scan = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    (:func:`_panel_topk`).  NULL and all-zero vectors have a NULL
+    scale and carry no direction, so both sides drop them (the oracle
+    applies the same predicate)."""
+    present = F.col(vec_col).isNotNull()
+    panel = _collect_normed(_normed(probes.filter(present), id_col, vec_col))
+    scan = vectors.filter(present).select(
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+    )
     return _panel_topk(scan, _int8_scorer(panel), k)
 
 

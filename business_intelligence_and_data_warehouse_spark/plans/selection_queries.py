@@ -611,7 +611,6 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_subspaces=_PQ_M,
         codebook_size=_PQ_CB,
         n=table_count(spark, sf_dir, "embeddings"),
-        codes_tag=sf_dir,
     ).orderBy("query_id", "rank")
 
 
@@ -976,7 +975,6 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, probes, k=_PQ_K, dim=64,
         num_subspaces=_PQ_M, codebook_size=_PQ_CB,
         n=table_count(spark, sf_dir, "embeddings"),
-        codes_tag=sf_dir,
     ).select("query_id", "neighbor_id")
     hit = exact.join(
         approx, ["query_id", "neighbor_id"], "left_semi"

@@ -1377,10 +1377,10 @@ def test_ann_empty_inputs_return_empty_frames(spark, tmp_path):
 def test_topk_kernels_match_reference_on_edge_cases(spark):
     """The L2, int8, Hamming, PQ and IVF-PQ kernels against their
     join/window reference forms (tests/ann_reference.py) on the edges:
-    an all-zero vector (NULL int8 scale, dropped; NULL cosine),
-    duplicate vectors (every distance ties, so the id must break it),
-    k larger than the candidate set, and an empty probe set (an empty
-    frame with the same schema)."""
+    an all-zero vector (NULL int8 scale, dropped; NULL cosine), a NULL
+    vector (dropped by int8), duplicate vectors (every distance ties,
+    so the id must break it), k larger than the candidate set, and an
+    empty probe set (an empty frame with the same schema)."""
     from business_intelligence_and_data_warehouse_spark.operators import (
         similarity as sim,
     )
@@ -1439,6 +1439,14 @@ def test_topk_kernels_match_reference_on_edge_cases(spark):
     assert all(2 not in r[:2] for r in rows_of(sim.quantized_ip_topk(vecs, probes, k)))
     ham = rows_of(sim.hamming_topk(vecs, probes, k, dim=32))
     assert all(r[4] is None for r in ham if 2 in r[:2])
+    # a NULL vector has a NULL int8 scale too: dropped on both sides
+    nulled = vecs.unionByName(
+        spark.createDataFrame([(8, None)], "vec_id long, embedding array<float>")
+    )
+    nprobes = nulled.filter("vec_id in (1, 2, 4, 8)")
+    got = rows_of(sim.quantized_ip_topk(nulled, nprobes, k))
+    assert got == rows_of(ref.quantized_ip_topk(nulled, nprobes, k))
+    assert got == rows_of(sim.quantized_ip_topk(vecs, probes, k))
 
 
 def test_ivf_cells_stay_vid_disjoint_across_append(spark, tmp_path):

@@ -449,12 +449,13 @@ def test_artifact_memo_keys_are_content_aware(spark):
     ids) silently served stale codes/centroids for the rest of the
     process.  The key now folds in a bit_xor(xxhash64(id, vec))
     content fingerprint, so an in-place embedding rewrite under the
-    SAME tag and SAME ids must re-encode/retrain, not replay."""
+    SAME ids must re-encode/retrain, not replay."""
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
         pq_topk,
         train_ivf_centroids,
         trained_centroids_cached,
     )
+    from . import ann_reference as ref
 
     rows_a = [
         (i, [float((i * 3 + j * 5) % 11) for j in range(8)])
@@ -468,26 +469,23 @@ def test_artifact_memo_keys_are_content_aware(spark):
     va, vb = _vecs(spark, rows_a), _vecs(spark, rows_b)
     tag = "memo-staleness-regression"
 
-    # populate the PQ codes memo with corpus A under the tag ...
+    # populate the PQ codes memo with corpus A ...
     pq_topk(
         va, va.filter(F.col("vec_id") == 0), k=5, dim=8,
-        num_subspaces=2, centroid_stride=1, codes_tag=tag,
+        num_subspaces=2, centroid_stride=1,
     ).collect()
-    # ... then query corpus B under the SAME tag: results must equal
-    # the un-memoized (tag-free) encode of B, not A's stale codes
+    # ... then query corpus B (same ids, same parameters): results
+    # must equal the relational encode of B, not A's stale codes
     probe_b = vb.filter(F.col("vec_id") == 0)
     got = sorted(
         (r.neighbor_id, r.approx_dist)
         for r in pq_topk(
-            vb, probe_b, k=5, dim=8, num_subspaces=2,
-            centroid_stride=1, codes_tag=tag,
+            vb, probe_b, k=5, dim=8, num_subspaces=2, centroid_stride=1,
         ).collect()
     )
     want = sorted(
         (r.neighbor_id, r.approx_dist)
-        for r in pq_topk(
-            vb, probe_b, k=5, dim=8, num_subspaces=2, centroid_stride=1,
-        ).collect()
+        for r in ref.pq_topk(vb, probe_b, 5, 8, 2, 1).collect()
     )
     assert got == want
 
