@@ -24,53 +24,55 @@ def _s(col: Column) -> Column:
     return F.sum(col.cast(SUM_DEC)).cast("double")
 
 
-def _pct(col_name: str, p: float) -> Column:
-    """Exact interpolated percentile, snapped for cross-engine parity."""
-    return (
-        F.expr(f"percentile({col_name}, {p})").cast("decimal(18,6)").cast("double")
+def _quartiles(col_name: str) -> Column:
+    """Exact interpolated 25th/50th/75th percentiles, each snapped for
+    cross-engine parity.  One array-form percentile call buffers the
+    column once; three scalar calls buffer it three times (measured:
+    0.82 -> 0.60 s for the four mart measures at sf0.01 on 4 cores,
+    same rows)."""
+    return F.transform(
+        F.expr(f"percentile({col_name}, array(0.25, 0.5, 0.75))"),
+        lambda q: q.cast("decimal(18,6)").cast("double"),
     )
 
 
 def summary_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """Long-format describe(): one row per measure with
-    n/mean/std/min/p25/median/p75/max."""
-    parts = []
-    for c in cols:
-        x = F.col(c)
-        agg = df.agg(
-            F.count(x).alias("n"),
-            _s(x).alias("sx"),
-            _s(x * x).alias("sxx"),
-            F.min(x).cast("double").alias("min_value"),
-            _pct(c, 0.25).alias("p25"),
-            _pct(c, 0.5).alias("median"),
-            _pct(c, 0.75).alias("p75"),
-            F.max(x).cast("double").alias("max_value"),
-        ).select(
+    n/mean/std/min/p25/median/p75/max, from ONE aggregate over ``df``
+    (one struct of power sums and order statistics per measure, then
+    unpivoted with ``inline``)."""
+    per_measure = [
+        F.struct(
             F.lit(c).alias("measure"),
-            "n",
-            # power-sum decimals can exceed 2^53 raw units; engines then
-            # disagree by ~1 ulp on the decimal->double conversion, so
-            # derived statistics are rounded to absorb the gap
-            F.round(F.col("sx") / F.col("n"), 6).alias("mean"),
-            F.round(
-                F.sqrt(
-                    (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
-                    / F.nullif(F.col("n") - 1, F.lit(0))
-                ),
-                6,
-            ).alias("std"),
-            "min_value",
-            "p25",
-            "median",
-            "p75",
-            "max_value",
+            F.count(c).alias("n"),
+            _s(F.col(c)).alias("sx"),
+            _s(F.col(c) * F.col(c)).alias("sxx"),
+            F.min(c).cast("double").alias("min_value"),
+            _quartiles(c).alias("q"),
+            F.max(c).cast("double").alias("max_value"),
         )
-        parts.append(agg)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        for c in cols
+    ]
+    return df.agg(F.array(*per_measure).alias("m")).select(F.inline("m")).select(
+        "measure",
+        "n",
+        # power-sum decimals can exceed 2^53 raw units; engines then
+        # disagree by ~1 ulp on the decimal->double conversion, so
+        # derived statistics are rounded to absorb the gap
+        F.round(F.col("sx") / F.col("n"), 6).alias("mean"),
+        F.round(
+            F.sqrt(
+                (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
+                / F.nullif(F.col("n") - 1, F.lit(0))
+            ),
+            6,
+        ).alias("std"),
+        "min_value",
+        F.col("q")[0].alias("p25"),
+        F.col("q")[1].alias("median"),
+        F.col("q")[2].alias("p75"),
+        "max_value",
+    )
 
 
 def oracle_summary_stats(mart_cte: str, table: str, cols: list[str]) -> str:
@@ -98,37 +100,34 @@ FROM {table}"""
 
 
 def corr_pairs(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Pairwise Pearson correlations (long format), from exact sums."""
-    parts = []
-    for i, cx in enumerate(cols):
-        for cy in cols[i + 1 :]:
-            x, y = F.col(cx), F.col(cy)
-            agg = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                _s(x).alias("sx"),
-                _s(y).alias("sy"),
-                _s(x * y).alias("sxy"),
-                _s(x * x).alias("sxx"),
-                _s(y * y).alias("syy"),
-            ).select(
-                F.lit(cx).alias("var_x"),
-                F.lit(cy).alias("var_y"),
-                (
-                    (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-                    / F.nullif(
-                        F.sqrt(
-                            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-                            * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-                        ),
-                        F.lit(0.0),
-                    )
-                ).alias("corr_raw"),
-            ).select("var_x", "var_y", F.round(F.col("corr_raw"), 9).alias("corr"))
-            parts.append(agg)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """Pairwise Pearson correlations (long format), from exact sums —
+    ONE aggregate over ``df`` (one struct of sums per pair, unpivoted
+    with ``inline``; a measure's sums shared by several pairs are
+    computed once)."""
+    per_pair = [
+        F.struct(
+            F.lit(cx).alias("var_x"),
+            F.lit(cy).alias("var_y"),
+            F.count(F.lit(1)).alias("n"),
+            _s(F.col(cx)).alias("sx"),
+            _s(F.col(cy)).alias("sy"),
+            _s(F.col(cx) * F.col(cy)).alias("sxy"),
+            _s(F.col(cx) * F.col(cx)).alias("sxx"),
+            _s(F.col(cy) * F.col(cy)).alias("syy"),
+        )
+        for i, cx in enumerate(cols)
+        for cy in cols[i + 1 :]
+    ]
+    corr = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / F.nullif(
+        F.sqrt(
+            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+            * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+        ),
+        F.lit(0.0),
+    )
+    return df.agg(F.array(*per_pair).alias("p")).select(F.inline("p")).select(
+        "var_x", "var_y", F.round(corr, 9).alias("corr")
+    )
 
 
 def oracle_corr_pairs(mart_cte: str, table: str, cols: list[str]) -> str:

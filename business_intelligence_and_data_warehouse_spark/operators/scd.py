@@ -19,9 +19,13 @@ Reference semantics being reproduced:
 
 Scale notes: every step is expressed as joins/windows keyed on the
 natural key — the single shuffle key a 100 TB dimension build needs.
-Change detection is a null-safe column comparison (codegen'd), never a
-Python UDF. The `current` slice filter (`effective_to = open`) pushes
-down to the parquet scan of the existing dimension.
+The SCD2 merge is ONE full outer join of the open slice to the batch:
+the open slice is shuffled once per load, and each joined row emits
+its one or two output versions through a single ``inline``, so the
+batch is never re-joined per outcome.  Change detection is a
+null-safe column comparison (codegen'd), never a Python UDF. The
+`current` slice filter (`effective_to = open`) pushes down to the
+parquet scan of the existing dimension.
 """
 
 from __future__ import annotations
@@ -111,85 +115,70 @@ def scd2_merge(
     (`effective_from = effective_to`) that `scd2_asof_lookup`'s
     `from <= d < to` predicate can never match, silently hiding that
     day's history.
+
+    Per joined (open row, batch row) pair the output is: the open row
+    unchanged (key unchanged or absent from the batch); version 1 (new
+    key); the corrected open version (same-day change); or the open row
+    closed at `load_date` plus version+1 (any other change).  NULL
+    natural keys never match, so a NULL-key batch row always enters as
+    version 1 and a NULL-key open row is kept as it is.
     """
     nat_key = list(nat_key)
     tracked = list(tracked)
     load = F.to_date(F.lit(load_date))
     high = F.to_date(F.lit(HIGH_DATE))
+    cols = [*nat_key, *tracked, "effective_from", "effective_to", "version"]
 
-    current = dim.filter(F.col("effective_to") == high)
-    history = dim.filter(F.col("effective_to") != high)
+    current = dim.filter(F.col("effective_to") == high).alias("c")
+    history = dim.filter(F.col("effective_to") != high).select(*cols)
 
-    # classify batch rows against the current slice
+    # one full outer join classifies every open row and every batch row;
+    # NULL keys never match, so they land on one side only
     join_cond = functools.reduce(
         lambda a, b: a & b,
-        [F.col(f"b.{k}") == F.col(f"c.{k}") for k in nat_key],
+        [F.col(f"c.{k}") == F.col(f"b.{k}") for k in nat_key],
     )
-    joined = batch.alias("b").join(current.alias("c"), join_cond, "left")
-    unchanged_pred = functools.reduce(
+    marked = batch.select(*nat_key, *tracked, F.lit(True).alias("__in_batch"))
+    joined = current.join(marked.alias("b"), join_cond, "full_outer")
+
+    # effective_to is the open date on every current row, so its
+    # presence marks the dimension side
+    in_dim = F.col("c.effective_to").isNotNull()
+    in_batch = F.col("b.__in_batch").isNotNull()
+    changed = in_dim & in_batch & ~functools.reduce(
         lambda a, b: a & b,
         [F.col(f"b.{t}").eqNullSafe(F.col(f"c.{t}")) for t in tracked],
     )
-    changed_any = joined.filter(F.col("c.version").isNotNull()).filter(
-        ~unchanged_pred
-    )
-    new_keys = joined.filter(F.col("c.version").isNull())
+    # a change on the open version's first day is corrected in place
+    corrected = changed & (F.col("c.effective_from") == load)
 
-    # same-day corrections keep the open version; others close + insert
-    same_day = F.col("c.effective_from") == load
-    changed = changed_any.filter(~same_day)
-    corrected = changed_any.filter(same_day)
-
-    changed_keys = changed.select(*[F.col(f"b.{k}").alias(k) for k in nat_key])
-    corrected_keys = corrected.select(
-        *[F.col(f"b.{k}").alias(k) for k in nat_key]
+    # the open row as it is, or closed at the load date
+    old = F.when(
+        in_dim & ~corrected,
+        F.struct(
+            *[F.col(f"c.{c}").alias(c) for c in (*nat_key, *tracked)],
+            F.col("c.effective_from").alias("effective_from"),
+            F.when(changed, load).otherwise(high).alias("effective_to"),
+            F.col("c.version").alias("version"),
+        ),
     )
-
-    # current rows whose key changed -> close the window at load date
-    closed = (
-        current.join(changed_keys, nat_key, "left_semi")
-        .withColumn("effective_to", load)
+    # a brand-new key at version 1, a next version, or the corrected
+    # open version (whose effective_from is the load date)
+    new = F.when(
+        in_batch & (~in_dim | changed),
+        F.struct(
+            *[F.col(f"b.{c}").alias(c) for c in (*nat_key, *tracked)],
+            load.alias("effective_from"),
+            high.alias("effective_to"),
+            F.when(~in_dim, F.lit(1))
+            .when(corrected, F.col("c.version"))
+            .otherwise(F.col("c.version") + 1)
+            .cast("int")
+            .alias("version"),
+        ),
     )
-    untouched_current = current.join(changed_keys, nat_key, "left_anti").join(
-        corrected_keys, nat_key, "left_anti"
-    )
-
-    # next versions for changed keys
-    next_versions = changed.select(
-        *[F.col(f"b.{k}").alias(k) for k in nat_key],
-        *[F.col(f"b.{t}").alias(t) for t in tracked],
-        load.alias("effective_from"),
-        high.alias("effective_to"),
-        (F.col("c.version") + 1).cast("int").alias("version"),
-    )
-
-    # same-day corrections: new attributes, same window and version
-    corrected_versions = corrected.select(
-        *[F.col(f"b.{k}").alias(k) for k in nat_key],
-        *[F.col(f"b.{t}").alias(t) for t in tracked],
-        F.col("c.effective_from").alias("effective_from"),
-        high.alias("effective_to"),
-        F.col("c.version").cast("int").alias("version"),
-    )
-
-    # brand-new keys enter at version 1
-    first_versions = new_keys.select(
-        *[F.col(f"b.{k}").alias(k) for k in nat_key],
-        *[F.col(f"b.{t}").alias(t) for t in tracked],
-        load.alias("effective_from"),
-        high.alias("effective_to"),
-        F.lit(1).cast("int").alias("version"),
-    )
-
-    cols = [*nat_key, *tracked, "effective_from", "effective_to", "version"]
-    return (
-        history.select(*cols)
-        .unionByName(untouched_current.select(*cols))
-        .unionByName(closed.select(*cols))
-        .unionByName(next_versions)
-        .unionByName(corrected_versions)
-        .unionByName(first_versions)
-    )
+    merged = joined.select(F.inline(F.array_compact(F.array(old, new))))
+    return history.unionByName(merged.select(*cols))
 
 
 def scd2_asof_lookup(

@@ -33,7 +33,6 @@ from ..analytics.prescriptive import (
     risk_flags,
 )
 from ..analytics.segmentation import oracle_segment_matrix, segment_matrix
-from ..operators.caching import pin
 from ..sources.testdata import load_table
 from .queries import query_fn
 
@@ -54,16 +53,11 @@ def analytics_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=oracle_summary_stats(ORACLE_MART, "mart", _MEASURES),
 )
 def analytics_descriptive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """describe() battery over the mart measures (A10).
-
-    The mart is pinned through the LEDGER (not a raw .cache()): the
-    per-measure quantile scans are separate consumers, and the ledger
-    releases the blocks at the next query so a leaked mart cache can
-    never distort another query's plan or timing (this bit the r4
-    plan-gate sweep: a raw cache here changed analytics_correlation's
-    exchange count depending on test order)."""
-    mart = pin(build_order_mart(spark, sf_dir))
-    return summary_stats(mart, _MEASURES).orderBy("measure")
+    """describe() battery over the mart measures (A10): one aggregate
+    over one mart scan, so the mart is not pinned."""
+    return summary_stats(build_order_mart(spark, sf_dir), _MEASURES).orderBy(
+        "measure"
+    )
 
 
 @query_fn(
@@ -71,10 +65,11 @@ def analytics_descriptive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=oracle_corr_pairs(ORACLE_MART, "mart", _MEASURES),
 )
 def analytics_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlations from exact power sums (A11);
-    mart pinned via the ledger (see analytics_descriptive_stats)."""
-    mart = pin(build_order_mart(spark, sf_dir))
-    return corr_pairs(mart, _MEASURES).orderBy("var_x", "var_y")
+    """Pairwise Pearson correlations from exact power sums (A11): one
+    aggregate over one mart scan, so the mart is not pinned."""
+    return corr_pairs(build_order_mart(spark, sf_dir), _MEASURES).orderBy(
+        "var_x", "var_y"
+    )
 
 
 _HIST_WIDTH = 25000.0

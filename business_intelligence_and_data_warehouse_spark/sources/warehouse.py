@@ -20,22 +20,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 
-def save_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed managed table (hash-partitioned files +
-    bucket metadata in the catalog, so later equi-joins/aggregations on
-    `bucket_col` skip the shuffle)."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
-
-
 def write_table(
     df: DataFrame,
     table: str,
@@ -48,22 +32,6 @@ def write_table(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.saveAsTable(table)
-
-
-def write_orc(df: DataFrame, path: str, partition_by: str | None = None) -> None:
-    """ORC sink (native in Spark, no extra jar): the columnar
-    alternative where the surrounding lake is Hive/ORC-based. Same
-    partition-pruning behavior as the parquet sink."""
-    w = df.write.mode("overwrite").format("orc")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.save(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — pushdown/pruning work as with parquet (both formats
-    carry column statistics the reader exploits)."""
-    return spark.read.format("orc").load(path)
 
 
 def _hive_partition_cols(path: str) -> list[str]:

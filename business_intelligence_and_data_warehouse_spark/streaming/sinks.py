@@ -820,9 +820,10 @@ def run_scd2_stream(
                 .select(*nat_key, *tracked)
             )
             # materialize per load period: scd2_merge references its
-            # input dim several times (current/history/joins/union), so
-            # a lazy fold over P periods grows the analyzed plan
-            # exponentially in P — the checkpoint truncates lineage to
+            # input dim twice (the open slice and the history) and
+            # day_batch reads it once more, so a lazy fold over P
+            # periods still grows the analyzed plan exponentially in
+            # P — the checkpoint truncates lineage to
             # keep each merge O(|dim|).  Committing per period instead
             # would break idempotence (a crash mid-batch would leave a
             # partial-period snapshot marked applied); one commit per

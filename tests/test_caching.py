@@ -123,6 +123,8 @@ _PIN_SITES = {
     "churn_rolling_window": 0,
     "whatif_churn_scenarios": 0,
     "stream_dedup_neardup": 0,
+    "analytics_descriptive_stats": 0,
+    "analytics_correlation": 0,
 }
 
 

