@@ -26,9 +26,10 @@ consistent. The long sums stay far under 2^53, so the final cast back
 to double is exact.
 
 Scale notes:
-* dot products, norms, and LSH signatures are computed ARRAY-NATIVE
-  (`zip_with`/`transform` + `aggregate` higher-order functions) — one
-  row per vector, evaluated map-side in the JVM with NO shuffle and no
+* dot products, norms and LSH band keys are computed map-side, one
+  row per vector: norms are array-native (`zip_with` + `aggregate`
+  higher-order functions in the JVM), and pair dot products, band
+  keys and every top-k scorer are Arrow-batched numpy passes — no
   64×-wider exploded element table. The only shuffles left are the
   joins/windows that are semantically required (candidate blocking,
   per-query top-k). On a 1000-executor cluster this is the difference
@@ -36,8 +37,8 @@ Scale notes:
 * hyperplanes are generated arithmetically from (bit, position) — no
   stored model state, identical on every executor, nothing to
   broadcast.
-* `element_table`/`norms` remain available as the long-form
-  building blocks (they define the oracle-SQL formulation).
+* `element_table` remains as the long form (it defines the oracle-SQL
+  formulation; :func:`random_projection` joins against it).
 """
 
 from __future__ import annotations
@@ -81,16 +82,6 @@ def element_table(
     return vectors.select(
         F.col(id_col).alias("vid"), F.posexplode(vec_col).alias("pos", "val")
     ).select("vid", (F.col("pos") + 1).alias("pos"), F.col("val").cast("double").alias("val"))
-
-
-def norms(elements: DataFrame) -> DataFrame:
-    """(id, l2 norm) from the long form (oracle-parity building block)."""
-    return elements.groupBy("vid").agg(
-        F.sqrt(
-            F.sum(F.floor(F.col("val") * F.col("val") * DOT_SCALE)).cast("double")
-            / DOT_SCALE
-        ).alias("norm")
-    )
 
 
 def dot_dec(a: Column, b: Column) -> Column:
@@ -144,17 +135,6 @@ def _cosine(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     return dot / F.nullif(norm_a * norm_b, F.lit(0.0))
 
 
-def _with_norm(
-    vectors: DataFrame, id_col: str, vec_col: str, prefix: str
-) -> DataFrame:
-    """(<prefix>id, <prefix>vec, <prefix>norm) — norm computed map-side."""
-    return vectors.select(
-        F.col(id_col).alias(f"{prefix}id"),
-        F.col(vec_col).alias(f"{prefix}vec"),
-        norm_dec(F.col(vec_col)).alias(f"{prefix}norm"),
-    )
-
-
 def cosine_pairs(
     probes: DataFrame,
     corpus: DataFrame,
@@ -164,8 +144,8 @@ def cosine_pairs(
     """(qid, cid, cosine) for the full probe × corpus set (self-pairs
     NOT excluded). The probe side is broadcast; each corpus row
     computes its |probes| cosines map-side — no shuffle at all."""
-    p = _with_norm(probes, id_col, vec_col, "q")
-    c = _with_norm(corpus, id_col, vec_col, "c")
+    p = _as_prefix(_normed(probes, id_col, vec_col), "q")
+    c = _as_prefix(_normed(corpus, id_col, vec_col), "c")
     return c.join(F.broadcast(p)).select(
         "qid",
         "cid",
@@ -331,33 +311,6 @@ def clustered_corpus(
     return ids.select(F.col(id_col), F.array(*comps).alias("embedding"))
 
 
-def cosine_for_pairs(
-    pairs: DataFrame,
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine for an explicit (qid, cid) pair set — cost is
-    O(|pairs| × dim), independent of corpus size (the verify step of
-    every LSH/blocking pipeline). Joins are on vector id only (narrow
-    rows); the dot product itself is a map-side array aggregate."""
-    q = _with_norm(vectors, id_col, vec_col, "q")
-    c = _with_norm(vectors, id_col, vec_col, "c")
-    return (
-        pairs.join(q, "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            _cosine(
-                dot_dec_batch(F.col("qvec"), F.col("cvec")),
-                F.col("qnorm"),
-                F.col("cnorm"),
-            ).alias("cosine"),
-        )
-    )
-
-
 def brute_force_topk(
     vectors: DataFrame,
     probes: DataFrame,
@@ -397,7 +350,8 @@ def matryoshka_topk(
 
     At 100 TB this is a first-pass retriever: prefix top-k' (k' > k)
     shortlists candidates, the full-dim rerank touches only k' rows
-    per probe (compose with `cosine_for_pairs`).
+    per probe (a window over their full-dim snapped cosine, as
+    :func:`ivf_pq_topk`'s survivors carry it).
 
     ``d`` must be a real prefix: d < 1 raises immediately, and a
     vector shorter than d fails in-scan (``raise_error``) — a silent
@@ -716,11 +670,12 @@ def ivf_pq_topk(
     centroid collect and that pass, so it is always served from the
     parquet memo (see :func:`_pq_encoded`) instead of a pin.  The
     metric mix (cosine cells, L2 scoring) is an approximation on
-    unnormalized vectors — rerank the top-k' with
-    :func:`cosine_for_pairs` when exact cosine order matters, as FAISS
-    users rerank ADC shortlists.
+    unnormalized vectors, so each survivor also carries its exact
+    snapped cosine (:func:`_with_cosine`) to rerank the top-k' by, as
+    FAISS users rerank ADC shortlists.
 
-    Output contract matches :func:`pq_topk`; a probe returns at most
+    Output (query_id, neighbor_id, rank, approx_dist, cosine), ranked
+    as :func:`pq_topk`; a probe returns at most
     min(k, candidates-in-its-cells) rows.
     """
     # cells and codebook are DIFFERENT knobs: centroid_stride shapes
@@ -738,7 +693,9 @@ def ivf_pq_topk(
     )
     cents = _collect_normed(encoded.filter(F.col("vid") % centroid_stride == 0))
     panel = _collect_normed(_normed(probes, id_col, vec_col))
-    scorer = _adc_scorer(panel, cb[1], num_subspaces, dim // num_subspaces)
+    scorer = _with_cosine(
+        _adc_scorer(panel, cb[1], num_subspaces, dim // num_subspaces), panel
+    )
     return _panel_topk(
         encoded, scorer, k, _cell_probes(panel, cents, nprobe), cents
     )
@@ -768,14 +725,15 @@ def _as_prefix(normed: DataFrame, prefix: str) -> DataFrame:
 
 
 def _cosine_for_pairs_normed(pairs: DataFrame, normed: DataFrame) -> DataFrame:
-    """:func:`cosine_for_pairs` over a pre-normed (and typically
-    persisted) vector table — both join sides are renames of the same
-    cached table, so the norm pass runs exactly once."""
-    q = _as_prefix(normed, "q").select("qid", "qvec", "qnorm")
-    c = _as_prefix(normed, "c").select("cid", "cvec", "cnorm")
+    """Exact snapped cosine of an explicit (qid, cid) pair set — the
+    verify step of every candidate-pair pipeline, O(|pairs| × dim)
+    whatever the corpus size.  Both join sides are renames of one
+    pre-normed (and typically persisted) (vid, vec, norm) table, so the
+    norm pass runs exactly once; the joins carry narrow rows and the
+    dot product is one Arrow-batched pass (:func:`dot_dec_batch`)."""
     return (
-        pairs.join(q, "qid")
-        .join(c, "cid")
+        pairs.join(_as_prefix(normed, "q"), "qid")
+        .join(_as_prefix(normed, "c"), "cid")
         .select(
             "qid",
             "cid",
@@ -1071,26 +1029,50 @@ def _int8_scorer(panel) -> _Scorer:
 def _hamming_scorer(panel, dim: int) -> _Scorer:
     """Hamming distance of the sign bits of the first ``dim``
     components, ascending, with each survivor's snapped cosine as the
-    rerank annotation — computed for the survivors only."""
-    qids, qmat, qnorms = panel
-    qsign = qmat[:, :dim] >= 0
+    rerank annotation (:func:`_with_cosine`)."""
+    qsign = panel[1][:, :dim] >= 0
 
     def block(a):
-        return {**a, "sign": a["vec"][:, :dim] >= 0, "at": np.argsort(a["vid"])}
+        return {**a, "sign": a["vec"][:, :dim] >= 0}
+
+    return _with_cosine(
+        _Scorer(
+            panel[0], ("vec",),
+            lambda p, b: (qsign[p][:, None, :] != b["sign"][None]).sum(axis=2),
+            lambda key, q, c, b: {"hamming": key.astype(np.int32)},
+            "hamming int", "hamming", block=block,
+        ),
+        panel,
+    )
+
+
+def _with_cosine(scorer: _Scorer, panel) -> _Scorer:
+    """``scorer`` plus a ``cosine`` value column: each survivor's
+    snapped cosine to its probe, computed for the per-tile survivors
+    only — their rows are found by vid in the block (``searchsorted``
+    over its vid order), so the rerank key costs O(survivors · dim)
+    and no join back to the corpus.  The scan adds (vec, norm) when
+    the scorer does not read them."""
+    qids, qmat, qnorms = panel
+
+    def block(a):
+        b = scorer.block(a)
+        return {**b, "at": np.argsort(b["vid"])}
 
     def emit(key, q, c, b):
         pi = np.searchsorted(qids, q)
         ri = b["at"][np.searchsorted(b["vid"], c, sorter=b["at"])]
         cos, isnull = _snapped_cos(qmat[pi], qnorms[pi], b["vec"][ri], b["norm"][ri])
         return {
-            "hamming": key.astype(np.int32),
+            **scorer.emit(key, q, c, b),
             "cosine": np.where(isnull, np.nan, cos),
         }
 
-    return _Scorer(
-        qids, ("vec", "norm"),
-        lambda p, b: (qsign[p][:, None, :] != b["sign"][None]).sum(axis=2),
-        emit, "hamming int, cosine double", "hamming", block=block,
+    return scorer._replace(
+        cols=scorer.cols + tuple(c for c in ("vec", "norm") if c not in scorer.cols),
+        block=block,
+        emit=emit,
+        schema=f"{scorer.schema}, cosine double",
     )
 
 
@@ -1999,9 +1981,9 @@ def _uuid_hex() -> str:
 
 def hyperplane_params(bit: int) -> tuple[int, int]:
     """(offset, stride) of hyperplane ``bit`` in the mod-1013 cycle —
-    THE single source of the hyperplane family, consumed by the Spark
-    column form, the numpy matrix form, and the SQL-oracle generator
-    so the three can never drift.
+    THE single source of the hyperplane family, consumed by the numpy
+    matrix form and the SQL-oracle generator so the two can never
+    drift.
 
     Component ``i`` of plane ``bit`` is ``((c + i·s) % 1013 % 19) − 9``
     (1-based i).  Two design rules, both ramp lessons:
@@ -2043,73 +2025,6 @@ def _hyperplane_matrix(dim: int, num_bits: int) -> np.ndarray:
     return (cs[:, 0][None, :] + pos * cs[:, 1][None, :]) % 1013 % 19 - 9
 
 
-def hyperplane_signatures(
-    vectors: DataFrame,
-    num_bits: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """num_bits sign-of-dot-product bits per vector, as one integer.
-
-    Computed as ONE Arrow-batched matrix multiply per batch: the
-    float32 batch widens to float64 (exact), floor-quantizes to scaled
-    int64 (the same `FLOOR(x*1e6)` snap as :func:`dot_dec`), and
-    multiplies against the deterministic (dim × num_bits) hyperplane
-    matrix in int64 — bit-identical to evaluating the per-bit integer
-    aggregates one at a time (which is how the DuckDB oracle states
-    it), but a single BLAS pass instead of num_bits interpreted
-    higher-order-function traversals per row. Map-side, no shuffle; the
-    hyperplane matrix is rebuilt from (bit, position) arithmetic inside
-    each task — nothing to broadcast.
-    """
-
-    @pandas_udf("long")
-    def sig_udf(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.stack(emb.to_numpy())
-        q = np.floor(mat.astype(np.float64) * DOT_SCALE).astype(np.int64)
-        h = _hyperplane_matrix(q.shape[1], num_bits)
-        dots = q @ h  # int64, exact: |term| <= 9e6, dim 64 << 2^63
-        weights = np.uint64(1) << np.arange(num_bits, dtype=np.uint64)
-        sig = ((dots > 0).astype(np.uint64) * weights).sum(axis=1)
-        return pd.Series(sig.astype(np.int64))
-
-    return vectors.select(
-        F.col(id_col).alias("vid"), sig_udf(F.col(vec_col)).alias("sig")
-    )
-
-
-def _band_rows(
-    sigs: DataFrame, num_bits: int, bands: int, key_bits: int | None = None
-) -> DataFrame:
-    """(vid, band, key) banded slices of a (vid, sig) signature table —
-    one map-side explode of bounded fan-out ``bands``; shared by the
-    symmetric pair join and the probe-panel form so the band layout
-    cannot drift between them.
-
-    ``key_bits`` masks each band key to its LOW key_bits bits — the
-    size-aware resolution knob (see :func:`lsh_key_bits`).  The slice
-    uses integer ``div``, not float division: a double round-trips
-    longs only below 2^53, so float division silently corrupts keys
-    for signatures wider than 53 bits."""
-    r = num_bits // bands
-    def key(b):
-        k = F.expr(f"sig div {2 ** (b * r)}") % (2**r)
-        return k % (2**key_bits) if key_bits is not None and key_bits < r else k
-    return sigs.select(
-        "vid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), key(b).alias("key"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vid", "bk.band", "bk.key")
-
-
 def lsh_key_bits(n: int, seg_bits: int = 15, target_log2: int = 3) -> int:
     """Band-key width for ~2^``target_log2`` expected vectors per
     bucket: the smallest w with 2^w ≥ N / 2^target_log2, clamped to
@@ -2146,16 +2061,13 @@ def banded_hyperplane_keys(
 ) -> DataFrame:
     """(vid, band, key): each band's key computed DIRECTLY from its
     own ``bits_per_band`` hyperplanes (plane index band·r + j), in one
-    Arrow matrix multiply per batch — no packed-signature word, so the
-    per-band key width is not capped by what fits in one BIGINT.
-
-    This is the ceiling :func:`_band_rows` has: a packed 60-bit long
-    gives 4 bands at most 15 key bits each, and once the corpus passes
-    ~2^18 vectors the size-aware width clamps and bucket occupancy —
-    hence candidate cost — grows linearly again (measured: the
-    15-bit-capped sized form jumped 8.4s at x100 → 125.8s at x300
-    when N=600k outgrew 2^15 keys).  30-bit bands hold occupancy
-    constant out to ~2^33 vectors — billions, the 100 TB regime.
+    Arrow matrix multiply per batch, so the per-band key width is not
+    capped by what fits in one BIGINT.  Key b is ``Σ_j bit[b·r+j]·2^j``,
+    bit-identical to slicing band b out of a packed sign word (the
+    reference in tests/ann_reference.py).  A packed 60-bit word caps 4
+    bands at 15 key bits, so the size-aware width clamps once the
+    corpus passes ~2^18 vectors (measured: 8.4s at x100 → 125.8s at
+    x300); 30-bit bands hold occupancy constant out to ~2^33 vectors.
     ``key_bits`` masks each key to its low bits (pass
     :func:`lsh_key_bits`(N, seg_bits=bits_per_band))."""
     nb = bands * bits_per_band
@@ -2191,28 +2103,13 @@ def banded_hyperplane_keys(
     return rows
 
 
-def banded_ann_pairs(
-    vectors: DataFrame,
-    bands: int = 4,
-    bits_per_band: int = 30,
-    key_bits: int | None = None,
-    min_cosine: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-neighbor pairs via per-band direct hyperplane keys + exact
-    verify — the UNCAPPED production form of :func:`lsh_ann_pairs`
-    (see :func:`banded_hyperplane_keys` for why the packed-long form
-    stops scaling at ~2^18 vectors)."""
-    from .caching import pin
-
-    band_rows = pin(
-        banded_hyperplane_keys(
-            vectors, bands, bits_per_band, key_bits, id_col, vec_col
-        )
-    )
+def _lsh_candidates(band_rows: DataFrame) -> DataFrame:
+    """(qid, cid), qid < cid: the distinct vector pairs of a (vid, band,
+    key) table that share at least one band bucket — the one candidate
+    self-join of the hyperplane-LSH pair operators (a pair sharing
+    several bands is kept once)."""
     x, y = band_rows.alias("x"), band_rows.alias("y")
-    candidates = (
+    return (
         x.join(
             y,
             (F.col("x.band") == F.col("y.band"))
@@ -2222,8 +2119,44 @@ def banded_ann_pairs(
         .select(F.col("x.vid").alias("qid"), F.col("y.vid").alias("cid"))
         .distinct()
     )
+
+
+def lsh_ann_pairs(
+    vectors: DataFrame,
+    bands: int = 4,
+    bits_per_band: int = 30,
+    key_bits: int | None = None,
+    min_cosine: float = 0.4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Near-neighbor pairs via banded hyperplane LSH + exact verify.
+
+    Candidates = pairs agreeing on all ``bits_per_band`` sign bits of
+    at least one of ``bands`` bands (:func:`banded_hyperplane_keys`);
+    verification computes the exact snapped cosine and keeps pairs
+    >= min_cosine. Recall follows 1-(1-p^r)^b with p = 1 - angle/pi.
+
+    ``key_bits`` masks each band key to its low bits — pass
+    :func:`lsh_key_bits`(N, seg_bits=bits_per_band) to hold bucket
+    occupancy (and therefore candidate cost) constant as the corpus
+    grows; a FIXED key space is quadratic in N by random collisions
+    alone (measured exponent 2.85 in the round-8 ramp, see
+    lsh_key_bits).
+    """
+    from .caching import pin
+
+    # the key table's lineage is the Arrow key UDF: pin it so the
+    # self-join does not run the UDF once per join side
+    band_rows = pin(
+        banded_hyperplane_keys(
+            vectors, bands, bits_per_band, key_bits, id_col, vec_col
+        )
+    )
+    # verify against ONE persisted normed table (both join sides are
+    # renames over the same cache — the norm pass runs once, not twice)
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    pairs = _cosine_for_pairs_normed(candidates, corpus_n)
+    pairs = _cosine_for_pairs_normed(_lsh_candidates(band_rows), corpus_n)
     return pairs.filter(F.col("cosine") >= min_cosine).select(
         F.col("qid").alias("vec_a"), F.col("cid").alias("vec_b"), "cosine"
     )
@@ -2248,12 +2181,12 @@ def banded_ann_stats(
 
     (n_vectors, key_bits, candidate_pairs, verified_pairs,
     pairs_per_vector): candidate/verified counts share ONE pinned key
-    table and ONE pinned candidate set with the production pair join
-    (two consumers through different exchanges — the pin rule), so the
-    report costs one extra aggregate over what `banded_ann_pairs`
-    already does, and a monitoring job can alert on pairs_per_vector
-    drifting above the (4, 8]·bands·occupancy envelope without
-    materializing a single pair row downstream."""
+    table and ONE pinned candidate set (two consumers through
+    different exchanges — the pin rule), built exactly as
+    :func:`lsh_ann_pairs` builds them, so the report costs one extra
+    aggregate over the pair join, and a monitoring job can alert on
+    pairs_per_vector drifting above the (4, 8]·bands·occupancy
+    envelope without materializing a single pair row downstream."""
     from .caching import pin
 
     if n is None:
@@ -2265,17 +2198,7 @@ def banded_ann_stats(
             vectors, bands, bits_per_band, key_bits, id_col, vec_col
         )
     )
-    x, y = band_rows.alias("x"), band_rows.alias("y")
-    candidates = pin(
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.vid") < F.col("y.vid")),
-        )
-        .select(F.col("x.vid").alias("qid"), F.col("y.vid").alias("cid"))
-        .distinct()
-    )
+    candidates = pin(_lsh_candidates(band_rows))
     corpus_n = pin(_normed(vectors, id_col, vec_col))
     verified = _cosine_for_pairs_normed(candidates, corpus_n).filter(
         F.col("cosine") >= min_cosine
@@ -2298,68 +2221,19 @@ def banded_ann_stats(
     )
 
 
-def lsh_ann_pairs(
-    vectors: DataFrame,
-    num_bits: int = 32,
-    bands: int = 4,
-    min_cosine: float = 0.4,
-    key_bits: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-neighbor pairs via banded hyperplane LSH + exact verify.
-
-    Candidates = pairs agreeing on all bits of at least one band
-    (num_bits/bands bits each); verification computes the exact
-    (decimal-snapped) cosine and keeps pairs >= min_cosine. Recall
-    follows 1-(1-p^r)^b with p = 1 - angle/pi.
-
-    ``key_bits`` masks each band key to its low bits — pass
-    :func:`lsh_key_bits`(N) to hold bucket occupancy (and therefore
-    candidate cost) constant as the corpus grows; a FIXED key space
-    is quadratic in N by random collisions alone (measured exponent
-    2.85 in the round-8 ramp, see lsh_key_bits).
-    """
-    # One row per vector (vid + long sig), but its lineage is the Arrow
-    # signature UDF — persist so the self-join below doesn't run the
-    # UDF once per join side.
-    from .caching import pin
-
-    sigs = pin(hyperplane_signatures(vectors, num_bits, id_col, vec_col))
-    band_rows = _band_rows(sigs, num_bits, bands, key_bits)
-    x = band_rows.alias("x")
-    y = band_rows.alias("y")
-    candidates = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.vid") < F.col("y.vid")),
-        )
-        .select(F.col("x.vid").alias("qid"), F.col("y.vid").alias("cid"))
-        .distinct()
-    )
-    # verify against ONE persisted normed table (both join sides are
-    # renames over the same cache — the norm pass runs once, not twice)
-    corpus_n = pin(_normed(vectors, id_col, vec_col))
-    pairs = _cosine_for_pairs_normed(candidates, corpus_n)
-    return pairs.filter(F.col("cosine") >= min_cosine).select(
-        F.col("qid").alias("vec_a"), F.col("cid").alias("vec_b"), "cosine"
-    )
-
-
 def lsh_ann_probe(
     vectors: DataFrame,
     probes: DataFrame,
     k: int,
-    num_bits: int = 40,
     bands: int = 4,
+    bits_per_band: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe-panel hyperplane-LSH top-k — the SERVING form of
-    :func:`lsh_ann_pairs`: a fixed probe set queries the corpus
-    instead of the corpus self-joining, so per-batch cost is
+    :func:`lsh_ann_pairs`, over the same band keys
+    (:func:`banded_hyperplane_keys`): a fixed probe set queries the
+    corpus instead of the corpus self-joining, so per-batch cost is
     O(|probes| · bucket occupancy), independent of corpus-pair count.
 
     Candidates = corpus vectors sharing at least one band key with
@@ -2369,20 +2243,20 @@ def lsh_ann_probe(
     most min(k, candidates) rows per probe — an empty bucket panel
     returns fewer, by design (LSH prunes, it does not backfill).
 
-    Plan shape at 100 TB: corpus signatures are one Arrow map pass;
+    Plan shape at 100 TB: corpus band keys are one Arrow map pass;
     the probe panel's band keys are tiny and BROADCAST against them,
     so candidate generation never shuffles the corpus; only the
     candidate pairs (bounded by bucket occupancy) reach the verify
     join."""
     from .caching import pin
 
-    sigs = pin(hyperplane_signatures(vectors, num_bits, id_col, vec_col))
-    corpus_bands = _band_rows(sigs, num_bits, bands)
-    probe_bands = _band_rows(
-        hyperplane_signatures(probes, num_bits, id_col, vec_col),
-        num_bits,
-        bands,
-    ).select(F.col("vid").alias("qid"), "band", "key")
+    def keys(df: DataFrame) -> DataFrame:
+        return banded_hyperplane_keys(
+            df, bands, bits_per_band, None, id_col, vec_col
+        )
+
+    corpus_bands = pin(keys(vectors))
+    probe_bands = keys(probes).select(F.col("vid").alias("qid"), "band", "key")
     candidates = (
         corpus_bands.join(F.broadcast(probe_bands), ["band", "key"])
         .filter(F.col("vid") != F.col("qid"))
@@ -2663,95 +2537,3 @@ def random_projection(
         .agg(F.sum(F.col("e") * F.col("sign")).alias("proj"))
     )
 
-
-def ivf_assignment_drift(
-    spark,
-    index_dir: str,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """REBUILD-DECISION metric for the incremental IVF lifecycle: how
-    far has the index drifted from what a fresh train over TODAY's
-    corpus would build?
-
-    The ingest path appends against FROZEN centroids
-    (:func:`ivf_index_append` — the FAISS add-after-train contract),
-    so assignment quality decays as the corpus distribution moves away
-    from the training snapshot.  Retraining is a REBUILD lifecycle
-    decision; this report is the measurement that decision reads:
-
-    * retrain √N Lloyd centroids over the CURRENT indexed corpus
-      (same deterministic trainer serving uses);
-    * re-assign every indexed vector to the retrained cells
-      (one in-task assignment pass, the index-build plan shape);
-    * count the vectors whose retrained cell population differs from
-      their frozen cell population — computed as a CELL-PAIR
-      confusion table so the metric is stable under arbitrary
-      centroid RENUMBERING (cells have no identity across trainings;
-      comparing raw cvid labels would report ~100% drift for a
-      bit-identical re-train).  A vector "moved" if its
-      (frozen cell, retrained cell) pair is not the dominant mapping
-      of its frozen cell — the standard clustering-agreement view
-      (one row per frozen cell keeps its majority image).
-
-    Returns ONE row: (n_vectors, n_cells_frozen, n_cells_retrained,
-    n_moved, drift_frac).  Everything is exact integer arithmetic
-    over the snapped-cosine assignments, so the report is
-    deterministic and SQL-replayable (registered as an oracled query
-    in round 11; pytest-pinned now).
-
-    Scale: the retrain is the trainer's documented bounded cost (√N
-    cells, iters in-task assign passes); the confusion table is
-    cells×cells AT MOST and in practice near-diagonal; nothing
-    corpus-sized shuffles except the one (cell,cell) keyed count.
-    """
-    cells = spark.read.parquet(index_dir.rstrip("/") + "/cells").select(
-        "vid", "vec", "norm", F.col("cvid").alias("frozen_cvid")
-    )
-    corpus_n = cells.select("vid", "vec", "norm")
-    n = corpus_n.count()
-    # retrain over the CURRENT corpus: corpus_n is already normed, and
-    # train_ivf_centroids normalizes internally from raw vectors — feed
-    # it the raw-shaped frame it expects
-    raw = corpus_n.select(
-        F.col("vid").alias(id_col), F.col("vec").alias(vec_col)
-    )
-    cents2 = train_ivf_centroids(
-        raw, iters=iters, id_col=id_col, vec_col=vec_col, n=n
-    )
-    assign2 = _assign_cells_arrow(corpus_n, _collect_normed(cents2)).select(
-        "vid", F.col("cvid").alias("retrained_cvid")
-    )
-    pairs = cells.select("vid", "frozen_cvid").join(assign2, "vid")
-    confusion = pairs.groupBy("frozen_cvid", "retrained_cvid").agg(
-        F.count(F.lit(1)).alias("n_pair")
-    )
-    # majority image per frozen cell (ties -> smaller retrained id,
-    # deterministic); everything outside the majority mapping "moved"
-    w = W.partitionBy("frozen_cvid").orderBy(
-        F.desc("n_pair"), F.col("retrained_cvid")
-    )
-    kept = (
-        confusion.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.sum("n_pair").alias("n_kept"))
-    )
-    stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.countDistinct("frozen_cvid").alias("n_cells_frozen"),
-        F.countDistinct("retrained_cvid").alias("n_cells_retrained"),
-    )
-    return (
-        stats.crossJoin(F.broadcast(kept))
-        .select(
-            "n_vectors",
-            "n_cells_frozen",
-            "n_cells_retrained",
-            (F.col("n_vectors") - F.col("n_kept")).alias("n_moved"),
-            (
-                (F.col("n_vectors") - F.col("n_kept")).cast("double")
-                / F.col("n_vectors")
-            ).alias("drift_frac"),
-        )
-    )

@@ -510,7 +510,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# hyperplane-LSH ANN (the scale path) — candidates via banded signature
+# hyperplane-LSH ANN (the scale path) — candidates via banded sign-bit keys
 # ---------------------------------------------------------------------------
 
 _ANN_BITS, _ANN_BANDS, _ANN_MIN_COS = 40, 4, 0.4
@@ -602,24 +602,23 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear by construction)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return lsh_ann_pairs(
-        emb, num_bits=_ANN_BITS, bands=_ANN_BANDS, min_cosine=_ANN_MIN_COS
+        emb,
+        bands=_ANN_BANDS,
+        bits_per_band=_ANN_BITS // _ANN_BANDS,
+        min_cosine=_ANN_MIN_COS,
     ).orderBy("vec_a", "vec_b")
 
 
-# size-aware variant: 60-bit signatures (the widest 4-band layout
-# whose per-band slice arithmetic stays in exact long/double range),
-# band keys masked to w = bitlength(N-1) - 3 bits — expected bucket
-# occupancy ~4-8 at ANY corpus size (smallest w with 2^w >= N/8
-# bounds N/2^w to (4, 8]; SCALE.md measures 4.6-7.6), so candidate
-# generation is
-# linear in N (operators/similarity.lsh_key_bits has the math and the
-# measured quadratic it replaces)
-# per-band DIRECT keys: band b's key is built from its OWN 30
-# hyperplanes (plane index b·30 + j), never packed through one
-# 60-bit signature word — the packed form caps key width at 15 bits
-# and its size-aware sizing clamps once N passes ~2^18 (measured:
-# 8.4s at x100 → 125.8s at x300); 30-bit bands hold occupancy
-# constant out to ~2^33 vectors
+# size-aware variant: 4 bands of 30 hyperplanes each (band b's key
+# is built from planes b·30 + j, as every LSH entry's keys are), masked
+# to w = bitlength(N-1) - 3 bits — expected bucket occupancy ~4-8 at
+# ANY corpus size (smallest w with 2^w >= N/8 bounds N/2^w to (4, 8];
+# SCALE.md measures 4.6-7.6), so candidate generation is linear in N
+# (operators/similarity.lsh_key_bits has the math and the measured
+# quadratic it replaces).  30-bit bands hold occupancy constant out to
+# ~2^33 vectors; the packed 60-bit signature word this replaced capped
+# keys at 15 bits and clamped once N passed ~2^18 (measured: 8.4s at
+# x100 → 125.8s at x300)
 _SZ_BANDS, _SZ_R = 4, 30
 _HP_PARAMS_SZ = [hyperplane_params(b) for b in range(_SZ_BANDS * _SZ_R)]
 _HSUMS_SZ = ",\n  ".join(
@@ -697,11 +696,11 @@ def sim_ann_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cosine verify and threshold; recall per pair follows
     1-(1-p^w)^bands — the bit budget is the recall dial, spent here
     on keeping cost linear."""
-    from ..operators.similarity import banded_ann_pairs, lsh_key_bits
+    from ..operators.similarity import lsh_key_bits
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_count(spark, sf_dir, "embeddings")
-    return banded_ann_pairs(
+    return lsh_ann_pairs(
         emb,
         bands=_SZ_BANDS,
         bits_per_band=_SZ_R,
@@ -762,9 +761,9 @@ def lsh_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pair-normalized LSH scale invariant as a FIRST-CLASS query
     (round 9): one row of (n_vectors, key_bits, candidate_pairs,
     verified_pairs, pairs_per_vector) for the sized banded LSH —
-    operators/similarity.banded_ann_stats, sharing the pinned key
-    table and candidate set the production `sim_ann_lsh_sized` pair
-    join uses.
+    operators/similarity.banded_ann_stats, whose key table and
+    candidate self-join are the ones the production
+    `sim_ann_lsh_sized` pair join (lsh_ann_pairs) runs.
 
     Why it exists: the round-9 ramp showed wall-clock exponents for
     the LSH family are dominated by integer key-width quantization
@@ -1595,14 +1594,18 @@ def sim_ann_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-panel hyperplane-LSH top-10 over the FIXED 50-id panel —
     the serving form of sim_ann_lsh (operators/similarity.
     lsh_ann_probe): panel band keys broadcast against the corpus
-    signature table, exact verify of bucket-mates only, at most k
+    band-key table, exact verify of bucket-mates only, at most k
     rows per probe (LSH prunes, it does not backfill)."""
     from ..operators.similarity import lsh_ann_probe
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(_panel_filter())
     return lsh_ann_probe(
-        emb, probes, k=_IVF_K, num_bits=_ANN_BITS, bands=_ANN_BANDS
+        emb,
+        probes,
+        k=_IVF_K,
+        bands=_ANN_BANDS,
+        bits_per_band=_ANN_BITS // _ANN_BANDS,
     ).orderBy("query_id", "rank")
 
 

@@ -662,7 +662,9 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=4,
         codebook_size=_PQ_CB,
         n=table_count(spark, sf_dir, "embeddings"),
-    ).orderBy("query_id", "rank")
+    ).select("query_id", "neighbor_id", "rank", "approx_dist").orderBy(
+        "query_id", "rank"
+    )
 
 
 # size-derived IVF cell parameters for the PRODUCTION serving form:
@@ -748,7 +750,9 @@ def sim_ann_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=_trained_nprobe(n),
         codebook_size=_PQ_CB,
         n=n,
-    ).orderBy("query_id", "rank")
+    ).select("query_id", "neighbor_id", "rank", "approx_dist").orderBy(
+        "query_id", "rank"
+    )
 
 
 # ADC shortlist width for the rerank stage: 3·k — the FAISS-practice
@@ -814,9 +818,11 @@ def sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ with EXACT RERANK — the full FAISS production serving
     shape the other ANN docstrings reference: ADC table lookups
     shortlist 3·k candidates per probe (cheap, approximate, metric-
-    mixed), then exact snapped-cosine reranks ONLY the shortlist
-    (operators/similarity.cosine_for_pairs — O(probes · 3k · dim),
-    independent of corpus size).  The rerank repairs both ADC
+    mixed), then exact snapped-cosine reranks ONLY the shortlist —
+    each ADC task computes its survivors' cosine in the same pass
+    (operators/similarity.ivf_pq_topk), so the rerank is one window
+    over the shortlist, O(probes · 3k · dim) and independent of corpus
+    size.  The rerank repairs both ADC
     quantization error and the cosine-vs-L2 metric mix on
     unnormalized vectors, at a cost that stays constant as the corpus
     grows — the reason every production IVFADC deployment reranks.
@@ -828,7 +834,7 @@ def sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    from ..operators.similarity import cosine_for_pairs, ivf_pq_topk
+    from ..operators.similarity import ivf_pq_topk
     from .pipeline_queries import _trained_nprobe
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -845,20 +851,12 @@ def sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=_trained_nprobe(n),
         codebook_size=_PQ_CB,
         n=n,
-    ).select(
-        F.col("query_id").alias("qid"), F.col("neighbor_id").alias("cid")
     )
-    reranked = cosine_for_pairs(shortlist, emb)
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.col("cid"))
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("int"))
+        shortlist.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= _PQ_K)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("cid").alias("neighbor_id"),
-            "rank",
-            "cosine",
-        )
+        .select("query_id", "neighbor_id", "rank", "cosine")
         .orderBy("query_id", "rank")
     )
 

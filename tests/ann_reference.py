@@ -12,6 +12,13 @@ distance table, candidate joins and per-probe windows — so tests can
 pin the in-task kernels against them row for row.  They are
 references, not production paths: each broadcasts the whole probe,
 centroid or codebook table and runs several exchanges.
+
+The hyperplane-LSH references key their bands the packed way: every
+sign bit of a vector in one BIGINT signature, each band sliced out of
+it with integer ``div``/``%`` (:func:`hyperplane_signatures`,
+:func:`_band_rows`).  The operators key each band directly from its
+own hyperplanes (``banded_hyperplane_keys``); the two must agree bit
+for bit wherever the signature fits one word.
 """
 
 from __future__ import annotations
@@ -27,12 +34,33 @@ from business_intelligence_and_data_warehouse_spark.operators.similarity import 
     DOT_SCALE,
     _as_prefix,
     _cosine,
+    _hyperplane_matrix,
     _normed,
     _pairs_topk_window,
     cosine_pairs,
     dot_dec_batch,
     quantize_int8,
 )
+
+
+def pair_cosine(
+    pairs: DataFrame, probes_n: DataFrame, corpus_n: DataFrame
+) -> DataFrame:
+    """``pairs`` (qid, cid, ...) plus each pair's exact snapped
+    ``cosine``: qid joined to the normed probe table, cid to the normed
+    corpus table, one per-pair dot product."""
+    return (
+        pairs.join(_as_prefix(probes_n, "q"), "qid")
+        .join(_as_prefix(corpus_n, "c"), "cid")
+        .select(
+            *pairs.columns,
+            _cosine(
+                dot_dec_batch(F.col("qvec"), F.col("cvec")),
+                F.col("qnorm"),
+                F.col("cnorm"),
+            ).alias("cosine"),
+        )
+    )
 
 
 def nearest_centroids(
@@ -103,21 +131,7 @@ def ivf_topk(
         .select("qid", "cid")
         .distinct()
     )
-    q = _as_prefix(probes_n, "q").select("qid", "qvec", "qnorm")
-    c = _as_prefix(cells.select("vid", "vec", "norm"), "c")
-    pairs = (
-        candidates.join(q, "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            _cosine(
-                dot_dec_batch(F.col("qvec"), F.col("cvec")),
-                F.col("qnorm"),
-                F.col("cnorm"),
-            ).alias("cosine"),
-        )
-    )
+    pairs = pair_cosine(candidates, probes_n, cells.select("vid", "vec", "norm"))
     return _pairs_topk_window(pairs, k, F.desc("cosine"))
 
 
@@ -251,22 +265,14 @@ def hamming_topk(
     short = pairs.withColumn("rank", F.row_number().over(w_rank).cast("int")).filter(
         F.col("rank") <= k
     )
-    q = _as_prefix(_normed(probes, id_col, vec_col), "q")
-    c = _as_prefix(_normed(vectors, id_col, vec_col), "c")
-    return (
-        short.join(q, "qid")
-        .join(c, "cid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("cid").alias("neighbor_id"),
-            "hamming",
-            "rank",
-            _cosine(
-                dot_dec_batch(F.col("qvec"), F.col("cvec")),
-                F.col("qnorm"),
-                F.col("cnorm"),
-            ).alias("cosine"),
-        )
+    return pair_cosine(
+        short, _normed(probes, id_col, vec_col), _normed(vectors, id_col, vec_col)
+    ).select(
+        F.col("qid").alias("query_id"),
+        F.col("cid").alias("neighbor_id"),
+        "hamming",
+        "rank",
+        "cosine",
     )
 
 
@@ -377,7 +383,8 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """IVF-PQ top-k: IVF candidates (stride centroids, window-ranked
     nearest cells, a cell join), joined to their codes and the probe
-    distance table, summed, per-probe window."""
+    distance table, summed, per-probe window, and each survivor joined
+    back to the probe and corpus vectors for its snapped cosine."""
     corpus_n = _normed(vectors, id_col, vec_col)
     cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
     probe_cells = nearest_centroids(
@@ -393,4 +400,134 @@ def ivf_pq_topk(
         vectors, probes, dim, num_subspaces, codebook_stride, id_col, vec_col
     )
     scored = cand.join(codes, "vid").join(F.broadcast(dtable), ["qid", "j", "code"])
-    return _adc_ranked(scored, k)
+    ranked = _adc_ranked(scored, k).select(
+        F.col("query_id").alias("qid"),
+        F.col("neighbor_id").alias("cid"),
+        "rank",
+        "approx_dist",
+    )
+    return pair_cosine(ranked, _normed(probes, id_col, vec_col), corpus_n).select(
+        F.col("qid").alias("query_id"),
+        F.col("cid").alias("neighbor_id"),
+        "rank",
+        "approx_dist",
+        "cosine",
+    )
+
+
+def hyperplane_signatures(
+    vectors: DataFrame,
+    num_bits: int = 32,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(vid, sig): ``num_bits`` (<= 63) sign-of-dot-product bits per
+    vector packed into one BIGINT, bit b = plane b — the float32 batch
+    widened to float64, floor-snapped to int64 and multiplied against
+    the integer hyperplane matrix exactly."""
+
+    @pandas_udf("long")
+    def sig_udf(emb: pd.Series) -> pd.Series:
+        if len(emb) == 0:
+            return pd.Series([], dtype="int64")
+        mat = np.stack(emb.to_numpy())
+        q = np.floor(mat.astype(np.float64) * DOT_SCALE).astype(np.int64)
+        dots = q @ _hyperplane_matrix(q.shape[1], num_bits)
+        weights = np.uint64(1) << np.arange(num_bits, dtype=np.uint64)
+        sig = ((dots > 0).astype(np.uint64) * weights).sum(axis=1)
+        return pd.Series(sig.astype(np.int64))
+
+    return vectors.select(
+        F.col(id_col).alias("vid"), sig_udf(F.col(vec_col)).alias("sig")
+    )
+
+
+def _band_rows(
+    sigs: DataFrame, num_bits: int, bands: int, key_bits: int | None = None
+) -> DataFrame:
+    """(vid, band, key): band b of a (vid, sig) table is its bits
+    b·r .. b·r + r - 1 (r = num_bits // bands), sliced with integer
+    ``sig div 2^(b·r) % 2^r`` (float division would corrupt signatures
+    wider than 53 bits) and masked to its low ``key_bits`` bits."""
+    r = num_bits // bands
+
+    def key(b):
+        k = F.expr(f"sig div {2 ** (b * r)}") % (2**r)
+        return k % (2**key_bits) if key_bits is not None and key_bits < r else k
+
+    return sigs.select(
+        "vid",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), key(b).alias("key"))
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("vid", "bk.band", "bk.key")
+
+
+def lsh_ann_pairs(
+    vectors: DataFrame,
+    num_bits: int,
+    bands: int,
+    min_cosine: float,
+    key_bits: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Banded hyperplane-LSH pairs: packed band keys, a distinct
+    (band, key) self-join with vid < vid, the snapped-cosine verify
+    against the inline-normed vectors, pairs >= ``min_cosine``."""
+    sigs = hyperplane_signatures(vectors, num_bits, id_col, vec_col)
+    rows = _band_rows(sigs, num_bits, bands, key_bits)
+    x, y = rows.alias("x"), rows.alias("y")
+    candidates = (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.key") == F.col("y.key"))
+            & (F.col("x.vid") < F.col("y.vid")),
+        )
+        .select(F.col("x.vid").alias("qid"), F.col("y.vid").alias("cid"))
+        .distinct()
+    )
+    normed = _normed(vectors, id_col, vec_col)
+    return (
+        pair_cosine(candidates, normed, normed)
+        .filter(F.col("cosine") >= min_cosine)
+        .select(F.col("qid").alias("vec_a"), F.col("cid").alias("vec_b"), "cosine")
+    )
+
+
+def lsh_ann_probe(
+    vectors: DataFrame,
+    probes: DataFrame,
+    k: int,
+    num_bits: int,
+    bands: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Probe-panel hyperplane-LSH top-k: packed band keys of both
+    sides, the broadcast probe keys joined to the corpus keys,
+    self-matches dropped, snapped-cosine verify, per-probe window."""
+    corpus, panel = (
+        _band_rows(
+            hyperplane_signatures(df, num_bits, id_col, vec_col), num_bits, bands
+        )
+        for df in (vectors, probes)
+    )
+    candidates = (
+        corpus.join(
+            F.broadcast(panel.withColumnRenamed("vid", "qid")), ["band", "key"]
+        )
+        .filter(F.col("vid") != F.col("qid"))
+        .select("qid", F.col("vid").alias("cid"))
+        .distinct()
+    )
+    pairs = pair_cosine(
+        candidates, _normed(probes, id_col, vec_col), _normed(vectors, id_col, vec_col)
+    )
+    return _pairs_topk_window(pairs, k, F.desc("cosine"))

@@ -576,11 +576,13 @@ def test_lsh_sized_keys_verify_superset_of_full_keys(spark):
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     full = {
         (r.vec_a, r.vec_b)
-        for r in lsh_ann_pairs(vecs, num_bits=60, bands=4).collect()
+        for r in lsh_ann_pairs(vecs, bands=4, bits_per_band=15).collect()
     }
     sized = {
         (r.vec_a, r.vec_b)
-        for r in lsh_ann_pairs(vecs, num_bits=60, bands=4, key_bits=4).collect()
+        for r in lsh_ann_pairs(
+            vecs, bands=4, bits_per_band=15, key_bits=4
+        ).collect()
     }
     assert full <= sized and len(sized) > 0
 
@@ -596,7 +598,7 @@ def test_lsh_ann_probe_subset_of_pairs_and_ranked(spark):
     ]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     probes = vecs.filter("vec_id in (0, 8)")
-    out = lsh_ann_probe(vecs, probes, k=5, num_bits=16, bands=4).collect()
+    out = lsh_ann_probe(vecs, probes, k=5, bands=4, bits_per_band=4).collect()
     # self-matches excluded; ranks contiguous from 1 per probe
     assert all(r.query_id != r.neighbor_id for r in out)
     for qid in {r.query_id for r in out}:
@@ -607,12 +609,85 @@ def test_lsh_ann_probe_subset_of_pairs_and_ranked(spark):
     sym = {
         (r.vec_a, r.vec_b)
         for r in lsh_ann_pairs(
-            vecs, num_bits=16, bands=4, min_cosine=-1.0
+            vecs, bands=4, bits_per_band=4, min_cosine=-1.0
         ).collect()
     }
     for r in out:
         a, b = sorted((r.query_id, r.neighbor_id))
         assert (a, b) in sym
+
+
+def test_lsh_direct_band_keys_equal_packed_signature_slices(spark):
+    """Each band key built directly from its own hyperplanes equals the
+    band sliced out of one packed signature word — at every
+    (num_bits, bands) layout that fits a word, an uneven one (33 bits,
+    4 bands: the top bit unused) included, with and without a key_bits
+    mask, on a zero vector and on negative components."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        banded_hyperplane_keys,
+    )
+
+    from .ann_reference import _band_rows, hyperplane_signatures
+
+    for dim in (3, 16):
+        rows = [(0, [0.0] * dim)] + [
+            (i, [float((i * 37 + j * 11) % 23 - 11) / 7 for j in range(dim)])
+            for i in range(1, 40)
+        ]
+        vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        for num_bits, bands in ((16, 4), (40, 4), (60, 4), (33, 4)):
+            r = num_bits // bands
+            for key_bits in (None, 3, r):
+                direct = banded_hyperplane_keys(vecs, bands, r, key_bits)
+                packed = _band_rows(
+                    hyperplane_signatures(vecs, num_bits), num_bits, bands, key_bits
+                )
+                got = sorted(tuple(x) for x in direct.collect())
+                assert len(got) == 40 * bands
+                assert got == sorted(tuple(x) for x in packed.collect()), (
+                    dim, num_bits, bands, key_bits,
+                )
+                assert (0, 0, 0) in got  # the zero vector keys to 0
+
+
+def test_lsh_operators_equal_packed_reference_at_registered_params(
+    spark, sf_dir
+):
+    """lsh_ann_pairs and lsh_ann_probe return exactly the rows of the
+    packed-signature reference composition at the registered
+    parameters (4 bands × 10 bits, cosine >= 0.4, the 50-id panel),
+    and with a corpus-sized key_bits mask."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        lsh_ann_pairs,
+        lsh_ann_probe,
+        lsh_key_bits,
+    )
+    from business_intelligence_and_data_warehouse_spark.plans.pipeline_queries import (
+        _panel_filter,
+    )
+    from business_intelligence_and_data_warehouse_spark.sources.testdata import (
+        load_table,
+    )
+
+    from . import ann_reference as ref
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    w = lsh_key_bits(emb.count(), seg_bits=10)
+    for key_bits in (None, w):
+        got = sorted(
+            tuple(r)
+            for r in lsh_ann_pairs(emb, 4, 10, key_bits, 0.4).collect()
+        )
+        assert got
+        assert got == sorted(
+            tuple(r) for r in ref.lsh_ann_pairs(emb, 40, 4, 0.4, key_bits).collect()
+        )
+    probes = emb.filter(_panel_filter())
+    got = sorted(tuple(r) for r in lsh_ann_probe(emb, probes, 10, 4, 10).collect())
+    assert got
+    assert got == sorted(
+        tuple(r) for r in ref.lsh_ann_probe(emb, probes, 10, 40, 4).collect()
+    )
 
 
 def test_multimodal_plumbing_roundtrip(spark):
@@ -952,6 +1027,107 @@ def test_containment_catches_quotes_jaccard_misses(spark):
     assert len(out) == 1 and out[0].containment == 1.0 and out[0].jaccard == 1.0
 
 
+def _ivf_assignment_drift(
+    spark,
+    index_dir: str,
+    iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+):
+    """REBUILD-DECISION metric for the incremental IVF lifecycle: how
+    far has the index drifted from what a fresh train over TODAY's
+    corpus would build?
+
+    The ingest path appends against FROZEN centroids
+    (:func:`ivf_index_append` — the FAISS add-after-train contract),
+    so assignment quality decays as the corpus distribution moves away
+    from the training snapshot.  Retraining is a REBUILD lifecycle
+    decision; this report is the measurement that decision reads:
+
+    * retrain √N Lloyd centroids over the CURRENT indexed corpus
+      (same deterministic trainer serving uses);
+    * re-assign every indexed vector to the retrained cells
+      (one in-task assignment pass, the index-build plan shape);
+    * count the vectors whose retrained cell population differs from
+      their frozen cell population — computed as a CELL-PAIR
+      confusion table so the metric is stable under arbitrary
+      centroid RENUMBERING (cells have no identity across trainings;
+      comparing raw cvid labels would report ~100% drift for a
+      bit-identical re-train).  A vector "moved" if its
+      (frozen cell, retrained cell) pair is not the dominant mapping
+      of its frozen cell — the standard clustering-agreement view
+      (one row per frozen cell keeps its majority image).
+
+    Returns ONE row: (n_vectors, n_cells_frozen, n_cells_retrained,
+    n_moved, drift_frac).  Everything is exact integer arithmetic
+    over the snapped-cosine assignments, so the report is
+    deterministic and SQL-replayable.  Only the test below reaches it,
+    so it lives here rather than in the package.
+
+    Scale: the retrain is the trainer's documented bounded cost (√N
+    cells, iters in-task assign passes); the confusion table is
+    cells×cells AT MOST and in practice near-diagonal; nothing
+    corpus-sized shuffles except the one (cell,cell) keyed count.
+    """
+    from pyspark.sql import Window as W
+
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _assign_cells_arrow,
+        _collect_normed,
+        train_ivf_centroids,
+    )
+
+    cells = spark.read.parquet(index_dir.rstrip("/") + "/cells").select(
+        "vid", "vec", "norm", F.col("cvid").alias("frozen_cvid")
+    )
+    corpus_n = cells.select("vid", "vec", "norm")
+    n = corpus_n.count()
+    # retrain over the CURRENT corpus: corpus_n is already normed, and
+    # train_ivf_centroids normalizes internally from raw vectors — feed
+    # it the raw-shaped frame it expects
+    raw = corpus_n.select(
+        F.col("vid").alias(id_col), F.col("vec").alias(vec_col)
+    )
+    cents2 = train_ivf_centroids(
+        raw, iters=iters, id_col=id_col, vec_col=vec_col, n=n
+    )
+    assign2 = _assign_cells_arrow(corpus_n, _collect_normed(cents2)).select(
+        "vid", F.col("cvid").alias("retrained_cvid")
+    )
+    pairs = cells.select("vid", "frozen_cvid").join(assign2, "vid")
+    confusion = pairs.groupBy("frozen_cvid", "retrained_cvid").agg(
+        F.count(F.lit(1)).alias("n_pair")
+    )
+    # majority image per frozen cell (ties -> smaller retrained id,
+    # deterministic); everything outside the majority mapping "moved"
+    w = W.partitionBy("frozen_cvid").orderBy(
+        F.desc("n_pair"), F.col("retrained_cvid")
+    )
+    kept = (
+        confusion.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(F.sum("n_pair").alias("n_kept"))
+    )
+    stats = pairs.agg(
+        F.count(F.lit(1)).alias("n_vectors"),
+        F.countDistinct("frozen_cvid").alias("n_cells_frozen"),
+        F.countDistinct("retrained_cvid").alias("n_cells_retrained"),
+    )
+    return (
+        stats.crossJoin(F.broadcast(kept))
+        .select(
+            "n_vectors",
+            "n_cells_frozen",
+            "n_cells_retrained",
+            (F.col("n_vectors") - F.col("n_kept")).alias("n_moved"),
+            (
+                (F.col("n_vectors") - F.col("n_kept")).cast("double")
+                / F.col("n_vectors")
+            ).alias("drift_frac"),
+        )
+    )
+
+
 def test_ivf_assignment_drift_zero_without_drift_and_positive_with(
     spark, tmp_path
 ):
@@ -962,7 +1138,6 @@ def test_ivf_assignment_drift_zero_without_drift_and_positive_with(
     never saw must report drift > 0."""
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
         build_ivf_index,
-        ivf_assignment_drift,
         ivf_index_append,
         train_ivf_centroids,
     )
@@ -976,7 +1151,7 @@ def test_ivf_assignment_drift_zero_without_drift_and_positive_with(
     # to renumbering -> drift 0
     full_dir = str(tmp_path / "full")
     build_ivf_index(vecs, full_dir, centroids_n=train_ivf_centroids(vecs, iters=2))
-    r = ivf_assignment_drift(spark, full_dir).collect()[0]
+    r = _ivf_assignment_drift(spark, full_dir).collect()[0]
     assert r.n_vectors == 16 and r.n_moved == 0 and r.drift_frac == 0.0
 
     # index trained on ONE mode, then a second mode appended against
@@ -991,11 +1166,11 @@ def test_ivf_assignment_drift_zero_without_drift_and_positive_with(
         "vec_id long, embedding array<float>",
     )
     ivf_index_append(spark, drift_dir, late)
-    r2 = ivf_assignment_drift(spark, drift_dir).collect()[0]
+    r2 = _ivf_assignment_drift(spark, drift_dir).collect()[0]
     assert r2.n_vectors == 24
     assert r2.n_moved > 0 and 0.0 < r2.drift_frac <= 1.0
     # determinism: same index, same report
-    r3 = ivf_assignment_drift(spark, drift_dir).collect()[0]
+    r3 = _ivf_assignment_drift(spark, drift_dir).collect()[0]
     assert (r2.n_moved, r2.drift_frac) == (r3.n_moved, r3.drift_frac)
 
 

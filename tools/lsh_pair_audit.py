@@ -11,7 +11,7 @@ co-measured session:
   * N, w = lsh_key_bits(N), expected occupancy N/2^w
   * the DIRECT candidate-pair count (the banded self-join before
     verify, counted through the same pinned key table)
-  * the full-query wall (banded_ann_pairs end-to-end, noop sink)
+  * the full-query wall (lsh_ann_pairs end-to-end, noop sink)
   * wall / pair — the pair-normalized cost that should stay ~flat
     across decades if candidate generation + verify are linear in
     their true workload
@@ -58,14 +58,14 @@ def main() -> None:
             for x in sys.argv[sys.argv.index("--reducers") + 1].split(",")
         ]
 
-    from pyspark.sql import functions as F
-
     from business_intelligence_and_data_warehouse_spark.operators.caching import (
+        pin,
         release_pinned,
     )
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
-        banded_ann_pairs,
+        _lsh_candidates,
         banded_hyperplane_keys,
+        lsh_ann_pairs,
         lsh_key_bits,
     )
     from business_intelligence_and_data_warehouse_spark.session import (
@@ -90,31 +90,16 @@ def main() -> None:
         release_pinned()
         spark.catalog.clearCache()
 
-        # direct candidate count through the SAME pinned key table the
-        # production query uses (pin so the count and the full run
-        # share one key build — co-measured, not re-derived)
-        from business_intelligence_and_data_warehouse_spark.operators.caching import (
-            pin,
-        )
-
+        # direct candidate count through the production query's key
+        # table and candidate self-join (pinned, so the count's key
+        # build is measured once, not re-derived)
         band_rows = pin(banded_hyperplane_keys(emb, _BANDS, _R, w))
-        x, y = band_rows.alias("x"), band_rows.alias("y")
         t0 = time.perf_counter()
-        n_pairs = (
-            x.join(
-                y,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.key") == F.col("y.key"))
-                & (F.col("x.vid") < F.col("y.vid")),
-            )
-            .select("x.vid", "y.vid")
-            .distinct()
-            .count()
-        )
+        n_pairs = _lsh_candidates(band_rows).count()
         t_cand = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        banded_ann_pairs(
+        lsh_ann_pairs(
             emb, bands=_BANDS, bits_per_band=_R, key_bits=w,
             min_cosine=_MIN_COS,
         ).write.format("noop").mode("overwrite").save()
@@ -147,7 +132,7 @@ def main() -> None:
             spark.catalog.clearCache()
             spark.conf.set("spark.sql.shuffle.partitions", str(r))
             t0 = time.perf_counter()
-            banded_ann_pairs(
+            lsh_ann_pairs(
                 emb, bands=_BANDS, bits_per_band=_R, key_bits=w,
                 min_cosine=_MIN_COS,
             ).write.format("noop").mode("overwrite").save()
